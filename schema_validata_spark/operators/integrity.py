@@ -22,9 +22,14 @@ def referential_violations(fact: DataFrame, fk_cols: list[str],
                            broadcast_dim: bool | None = None) -> DataFrame:
     """Rows of ``fact`` whose (non-null) foreign key has no match in
     ``dim``. NULL foreign keys are excluded — they are the null check's
-    business, not RI's."""
-    d = dim.select(*[qcol(c).alias(f"__d_{i}") for i, c in enumerate(dim_cols)]) \
-           .dropDuplicates()
+    business, not RI's.
+
+    The dimension is NOT deduplicated: a left-anti join only asks
+    whether a matching key exists, so duplicate dim keys cannot change
+    the result, and a ``dropDuplicates`` would cost a shuffle of the
+    dimension on every call."""
+    d = dim.select(*[qcol(c).alias(f"__d_{i}")
+                     for i, c in enumerate(dim_cols)])
     if broadcast_dim is None:
         # cheap heuristic: let Catalyst/AQE decide unless caller insists;
         # hint only when dim is known-small (avoids a count() job on big dims)

@@ -263,10 +263,13 @@ def decode_jpeg(data: bytes):
             for i in range(nc):
                 cid, hv, tq = body[6 + 3 * i:9 + 3 * i]
                 comps.append((cid, hv >> 4, hv & 0x0F, tq))
+            # every factor, not just the maxima: a 0 factor divides by
+            # zero in the upsampling
+            if not all(1 <= hi <= 4 and 1 <= vi <= 4
+                       for _cid, hi, vi, _tq in comps):
+                raise ValueError("bad sampling factors")
             hmax = max(c[1] for c in comps)
             vmax = max(c[2] for c in comps)
-            if not (1 <= hmax <= 4 and 1 <= vmax <= 4):
-                raise ValueError("bad sampling factors")
             mcux = (w + 8 * hmax - 1) // (8 * hmax)
             mcuy = (h + 8 * vmax - 1) // (8 * vmax)
             dims = {}

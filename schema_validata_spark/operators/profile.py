@@ -3,31 +3,39 @@
 
 The reference loops columns in pandas, calling ``duplicated()``,
 ``nunique()``, ``to_numeric()`` per column (O(cols) passes, single
-node). Here:
+node). Here two input scans produce every stat:
 
-* **Melt pass** — ONE scan: every cell becomes ``(column, na_flag,
-  value_string)`` via an ``explode`` generator, per-cell features
-  (length, numeric cast, type probes) are computed ONCE per cell behind
-  the generator barrier, then a two-stage aggregate produces every stat
-  for every column: stage 1 groups by ``(column, prefix32, xxhash64)``
-  — long text never travels, map-side partial aggregation collapses hot
-  values so a skewed value (one role in 10^11 rows) reaches the reducer
-  as one partial row per map task — and stage 2 re-aggregates the
-  per-value rows per column (exact distinct count, exact pandas
-  ``duplicated(keep=False)`` duplicate-member count, min/max/length/
-  type-probe tallies).
+* **Feature aggregate** — per-column scalar stats (non-null count,
+  lengths, numeric range, type-probe tallies, an HLL distinct
+  estimate). Narrow tables (≤ ``WIDE_PROFILE_MAX_COLS``) take ONE wide
+  global aggregate that lands through an ``Observation`` on a ``noop``
+  write (``functions.scalars.collect_scalars``): one job, no
+  single-partition reduce. Wider tables melt every cell into
+  ``(column, na_flag, features)`` rows via an ``explode`` generator and
+  group by column — a single ``df.agg`` with ~16 expressions × N
+  columns generates code past the JVM JIT method limit (interpreted
+  fallback, ~30× slower), so the melt keeps generated methods
+  constant-size regardless of column count.
 
-  This replaced a 3-scan design (wide agg + null agg + melt): a single
-  ``df.agg`` with ~10 heavy expressions × N columns generated code past
-  the JVM JIT method limit, and execution fell back to the interpreter
-  (~30× slower, non-deterministically). The melt keeps generated
-  methods small and constant-size regardless of column count.
+* **Value aggregate** — exact distinct and pandas
+  ``duplicated(keep=False)`` duplicate-member counts, in two stages:
+  stage 1 groups by ``(column, prefix32, xxhash64, v)`` — long text
+  never travels, and map-side partial aggregation collapses hot values
+  so a skewed value (one role in 10^11 rows) reaches the reducer as one
+  partial row per map task — and stage 2 re-aggregates per column.
+  ``v`` is the value itself only for columns whose HLL estimate is
+  ≤ 2 × ``max_unique_vals`` (NULL elsewhere), so stage 2's
+  ``sort_array(collect_list(v))`` is the allowed-value capture at no
+  extra scan, while high-cardinality values never shuffle.
 
-* **Pass C** — allowed-value capture (``sort_array(collect_set)``), run
-  ONLY for columns whose exact distinct count ≤ ``max_unique_vals`` —
-  low-cardinality by construction, so the collect is tiny.
+An HLL underestimate can leave an allowed-list candidate (exact
+distinct ≤ ``max_unique_vals``) uncaptured; only then does the
+``_pass_c`` fallback collect its values in one more observed pass.
+String columns whose values all look date-like get the real datetime
+parse battery in one small observed confirmation pass.
 
-At 10^12 rows this is 2 jobs total, independent of column count.
+On a narrow table the profile is 4 Spark jobs (feature aggregate 1,
+value aggregate 3), independent of row and column count.
 """
 
 from __future__ import annotations
@@ -41,6 +49,7 @@ from ..config import MAX_UNIQUE_VALS
 from ..functions.datetimes import dateish_shape_expr, datetime_probe_expr
 from ..functions.colref import qcol
 from ..functions.nulls import canonicalize_na, is_na_expr
+from ..functions.scalars import collect_scalars
 from ..functions.typing import (decide_logical_type, safe_bigint,
                                 safe_double, spark_type_to_logical)
 
@@ -75,11 +84,10 @@ WIDE_PROFILE_MAX_COLS = 16
 # order must match every branch's `per` construction below
 _WIDE_KEYS = ["nonnull", "na_like", "maxlen_raw", "maxlen_int", "num_min",
               "num_max", "allint", "bool_min", "bool_max", "int_ok",
-              "float_ok", "bool_ok", "ts_ok", "lead0"]
+              "float_ok", "bool_ok", "ts_ok", "lead0", "approx_distinct"]
 
 
 def _wide_feat_rows(df: DataFrame, na_values, na_patterns,
-                    want_hll: bool,
                     content_out: dict | None = None,
                     extra_aggs: list[tuple] | None = None,
                     extra_out: dict | None = None) -> list[dict]:
@@ -235,11 +243,9 @@ def _wide_feat_rows(df: DataFrame, na_values, na_patterns,
                      .alias("ts_ok"),
                     F.coalesce(F.max(zero), zero).alias("lead0"),
                 ]
-        if want_hll:
-            per.append(F.approx_count_distinct(F.when(nn, c))
-                        .alias("approx_distinct"))
-        keys = _WIDE_KEYS + (["approx_distinct"] if want_hll else [])
-        aggs.extend(col.alias(f"{i}__{k}") for k, col in zip(keys, per))
+        per.append(F.approx_count_distinct(F.when(nn, c))
+                    .alias("approx_distinct"))
+        aggs.extend(col.alias(f"{i}__{k}") for k, col in zip(_WIDE_KEYS, per))
     if content_out is not None:
         src = src.withColumn("__rh", F.xxhash64(
             F.struct(*[qcol(f.name) for f in df.schema.fields])))
@@ -249,7 +255,7 @@ def _wide_feat_rows(df: DataFrame, na_values, na_patterns,
     if extra_aggs:
         aggs.extend(col.alias(f"__extra_{j}")
                     for j, (_, col) in enumerate(extra_aggs))
-    row = src.agg(*aggs).collect()[0].asDict()
+    row = collect_scalars(src, *aggs)
     if extra_aggs and extra_out is not None:
         for j, (nm, _) in enumerate(extra_aggs):
             extra_out[nm] = row[f"__extra_{j}"]
@@ -258,10 +264,9 @@ def _wide_feat_rows(df: DataFrame, na_values, na_patterns,
         content_out["token"] = \
             f"fp:{total}:{row['__rh_xor']}:{row['__rh_sum']}"
     out = []
-    keys = _WIDE_KEYS + (["approx_distinct"] if want_hll else [])
     for i, name in enumerate(names):
         rec = {"cname": name, "total": total}
-        for k in keys:
+        for k in _WIDE_KEYS:
             rec[k] = row[f"{i}__{k}"]
         out.append(rec)
     return out
@@ -274,11 +279,12 @@ def _melt_stats(df: DataFrame, na_values=None, na_patterns=None,
                 extra_aggs: list[tuple] | None = None,
                 extra_out: dict | None = None
                 ) -> tuple[dict[str, Any], dict[str, dict[str, int]],
-                           dict[str, int], int]:
+                           dict[str, int], int, dict[str, list[str]]]:
     """One-scan stats for all columns. Returns ``(a, b, nulls_row,
-    total)`` where ``a`` holds per-column scalar stats keyed
-    ``{col}__{stat}``, ``b`` holds distinct/duplicate counts and
-    ``nulls_row`` the raw null-likeness flags.
+    total, values)`` where ``a`` holds per-column scalar stats keyed
+    ``{col}__{stat}``, ``b`` holds distinct/duplicate counts,
+    ``nulls_row`` the raw null-likeness flags and ``values`` the sorted
+    distinct canonical values of every HLL-screened column.
 
     ``exact_unique_cols`` gates the EXACT value aggregate (the only part
     of profiling whose shuffle grows with distinct-value count — a
@@ -289,48 +295,45 @@ def _melt_stats(df: DataFrame, na_values=None, na_patterns=None,
     the allowed-list cap — low-cardinality by construction, so their
     exact pass collapses map-side and costs ~nothing. Other columns get
     ``distinct`` = HLL estimate and ``dup_members`` = None (unmeasured).
+    The same HLL screen, in both modes, picks the columns whose values
+    ride the value aggregate for the allowed-value capture.
     """
     from ..plans.parallelism import ensure_min_parallelism
     df = ensure_min_parallelism(df)
 
-    # HLL machinery (per-cell hash + sketch) only exists in screened
-    # mode; exact mode keeps the lean round-1 melt.
-    want_hll = exact_unique_cols is not None
-
     if len(df.schema.fields) <= WIDE_PROFILE_MAX_COLS:
-        feat_rows = _wide_feat_rows(df, na_values, na_patterns, want_hll,
+        feat_rows = _wide_feat_rows(df, na_values, na_patterns,
                                     content_out, extra_aggs=extra_aggs,
                                     extra_out=extra_out)
     else:
-        feat_rows = _melt_feat_rows(df, na_values, na_patterns, want_hll,
-                                    content_out)
+        feat_rows = _melt_feat_rows(df, na_values, na_patterns, content_out)
         if extra_aggs and extra_out is not None:
             # the melt explodes columns away, so rider expressions can't
             # share its scan — pay ONE compact agg job for all extras
             # (status quo for >WIDE_PROFILE_MAX_COLS tables; the narrow
             # fast path above is the zero-extra-scan case)
-            row = df.agg(*[col.alias(f"__extra_{j}")
-                           for j, (_, col) in enumerate(extra_aggs)]
-                         ).collect()[0]
+            row = collect_scalars(df, *[
+                col.alias(f"__extra_{j}")
+                for j, (_, col) in enumerate(extra_aggs)])
             for j, (nm, _) in enumerate(extra_aggs):
                 extra_out[nm] = row[f"__extra_{j}"]
 
     # Which columns get the EXACT value aggregate (see docstring): all of
     # them in oracle/parity mode, else requested ∪ HLL-screened.
-    if want_hll:
-        approx_d = {r["cname"]: int(r["approx_distinct"] or 0)
-                    for r in feat_rows}
-        exact_set = set(exact_unique_cols) | {
-            c for c, est in approx_d.items() if est <= 2 * max_unique_vals}
-    else:
-        approx_d = {}
+    approx_d = {r["cname"]: int(r["approx_distinct"] or 0)
+                for r in feat_rows}
+    screened = {c for c, est in approx_d.items()
+                if est <= 2 * max_unique_vals}
+    if exact_unique_cols is None:
         exact_set = {f.name for f in df.schema.fields}
+    else:
+        exact_set = set(exact_unique_cols) | screened
     return _value_agg_and_assemble(df, na_values, na_patterns, feat_rows,
-                                   exact_set, approx_d)
+                                   exact_set, approx_d, screened)
 
 
 def _melt_feat_rows(df: DataFrame, na_values, na_patterns,
-                    want_hll: bool, content_out: dict | None = None) -> list:
+                    content_out: dict | None = None) -> list:
     """Melt path: explode to (cell, features) rows, group by column —
     column-count-independent generated code; the wide path above is the
     narrow-table fast lane (see WIDE_PROFILE_MAX_COLS).
@@ -420,8 +423,7 @@ def _melt_feat_rows(df: DataFrame, na_values, na_patterns,
                 ]
         # value hash for the HLL distinct estimate (sketches merge
         # map-side; the exact value-agg below is gated on this estimate)
-        if want_hll:
-            feats.append(F.when(~na, F.xxhash64(c)).alias("h"))
+        feats.append(F.when(~na, F.xxhash64(c)).alias("h"))
         return F.struct(F.lit(f.name).alias("cname"), na.alias("na"),
                         *feats)
 
@@ -438,7 +440,7 @@ def _melt_feat_rows(df: DataFrame, na_values, na_patterns,
     cell = m.select(
         "cname", "na",
         *(["__rh"] if content_out is not None else []),
-        *(["h"] if want_hll else []),
+        "h",
         *[F.when(~na_col, F.col(k)).alias(k)
           for k in ("len_raw", "len_int", "d", "allint", "b",
                     "int_ok", "float_ok", "bool_ok", "ts_ok", "lead0")],
@@ -465,8 +467,7 @@ def _melt_feat_rows(df: DataFrame, na_values, na_patterns,
         F.coalesce(F.sum("bool_ok"), F.lit(0)).alias("bool_ok"),
         F.coalesce(F.sum("ts_ok"), F.lit(0)).alias("ts_ok"),
         F.coalesce(F.max("lead0"), F.lit(0)).alias("lead0"),
-        *([F.approx_count_distinct("h").alias("approx_distinct")]
-          if want_hll else []),
+        F.approx_count_distinct("h").alias("approx_distinct"),
         *([F.expr("bit_xor(__rh)").alias("__rh_xor"),
            F.sum(F.pmod(F.col("__rh"), F.lit(1 << 20))).alias("__rh_sum")]
           if content_out is not None else []),
@@ -484,10 +485,13 @@ def _melt_feat_rows(df: DataFrame, na_values, na_patterns,
 
 
 def _value_agg_and_assemble(df, na_values, na_patterns, feat_rows,
-                            exact_set, approx_d):
+                            exact_set, approx_d, capture):
     # Value aggregate: exact distinct + duplicate-member counts. Group
-    # key (cname, prefix32, hash64) — long values never shuffle; a hot
-    # value collapses map-side to one partial row per task.
+    # key (cname, prefix32, hash64, v) — long values never shuffle; a hot
+    # value collapses map-side to one partial row per task. ``v`` is the
+    # value itself for the HLL-screened ``capture`` columns only (NULL
+    # elsewhere), so stage 2 also yields their allowed-value lists
+    # without another input scan.
     pairs = [(f, vv)
              for f, vv in _canonical_values(df, na_values, na_patterns)
              if f.name in exact_set]
@@ -498,16 +502,19 @@ def _value_agg_and_assemble(df, na_values, na_patterns, feat_rows,
                 F.lit(f.name).alias("cname"),
                 F.substring(vv, 1, 32).alias("p"),
                 # xxhash64(NULL) yields the seed, not NULL — gate explicitly
-                F.when(vv.isNotNull(), F.xxhash64(vv)).alias("h"))
+                F.when(vv.isNotNull(), F.xxhash64(vv)).alias("h"),
+                (vv if f.name in capture
+                 else F.lit(None).cast("string")).alias("v"))
             for f, vv in pairs
         ])).alias("k")).select("k.*").where(F.col("h").isNotNull())
-        dup = (vkeys.groupBy("cname", "p", "h")
+        dup = (vkeys.groupBy("cname", "p", "h", "v")
                     .agg(F.count(F.lit(1)).alias("cnt"))
                     .groupBy("cname")
                     .agg(F.count(F.lit(1)).alias("distinct"),
                          F.coalesce(F.sum(F.when(F.col("cnt") > 1,
                                                  F.col("cnt"))), F.lit(0))
-                          .alias("dup_members")))
+                          .alias("dup_members"),
+                         F.sort_array(F.collect_list("v")).alias("values")))
         dup_rows = dup.collect()
 
     a: dict[str, Any] = {}
@@ -531,9 +538,12 @@ def _value_agg_and_assemble(df, na_values, na_patterns, feat_rows,
         a[f"{name}__ts_ok"] = r["ts_ok"]
         a[f"{name}__lead0"] = r["lead0"]
         nulls_row[name] = r["na_like"]
+    values: dict[str, list[str]] = {}
     for r in dup_rows:
         b[r["cname"]] = {"distinct": r["distinct"],
                          "dup_members": r["dup_members"]}
+        if r["cname"] in capture:
+            values[r["cname"]] = list(r["values"])
     # HLL-only columns: distinct is the estimate, dup count unmeasured
     for name, est in approx_d.items():
         if name not in exact_set and name not in b:
@@ -549,18 +559,19 @@ def _value_agg_and_assemble(df, na_values, na_patterns, feat_rows,
         b.setdefault(f.name, {"distinct": 0, "dup_members": 0})
         nulls_row.setdefault(f.name, 0)
     a["__total"] = total
-    return a, b, nulls_row, total
+    return a, b, nulls_row, total, values
 
 
 def _pass_c(df: DataFrame, cols: list[str]) -> dict[str, list[str]]:
-    """Distinct values for known-low-cardinality columns (≤ max_unique_vals
-    by the pass-B gate) — one small agg."""
+    """Fallback allowed-value capture for columns whose values did not
+    ride the value aggregate (an HLL underestimate put a column the
+    exact count admits outside the capture screen) — one small agg."""
     if not cols:
         return {}
-    aggs = [F.sort_array(F.collect_set(qcol(c).cast("string"))).alias(c)
-            for c in cols]
-    row = df.agg(*aggs).collect()[0].asDict()
-    return {c: list(row[c]) for c in cols}
+    row = collect_scalars(df, *[
+        F.sort_array(F.collect_set(qcol(c).cast("string"))).alias(f"__v{i}")
+        for i, c in enumerate(cols)])
+    return {c: list(row[f"__v{i}"]) for i, c in enumerate(cols)}
 
 
 def _downcast(v):
@@ -615,7 +626,7 @@ def profile(df: DataFrame,
     # allow_null (observed) is measured on the RAW column with the extended
     # null vocabulary (reference series_hasNull on the unconverted column);
     # the melt carries that flag alongside the canonicalized value.
-    a, b, nulls_row, total = _melt_stats(
+    a, b, nulls_row, total, captured = _melt_stats(
         df, na_values, na_patterns,
         exact_unique_cols=exact_unique_cols,
         max_unique_vals=max_unique_vals,
@@ -639,11 +650,11 @@ def profile(df: DataFrame,
                     and a.get(f"{f.name}__bool_ok") != nn):
                 cand.append(f.name)
         if cand:
-            row = df.agg(*[
+            row = collect_scalars(df, *[
                 F.coalesce(F.sum(datetime_probe_expr(qcol(c))), F.lit(0))
-                 .alias(c) for c in cand]).collect()[0]
-            for c in cand:
-                a[f"{c}__ts_ok"] = int(row[c])
+                 .alias(f"__ts{i}") for i, c in enumerate(cand)])
+            for i, c in enumerate(cand):
+                a[f"{c}__ts_ok"] = int(row[f"__ts{i}"])
     if out_distincts is not None:
         out_distincts.update(
             {c: int(info["distinct"]) for c, info in b.items()})
@@ -723,7 +734,9 @@ def profile(df: DataFrame,
             info["__int_like"] = int_like
         out[name] = info
 
-    values = _pass_c(canon, cand_allowed)
+    values = {c: captured[c] for c in cand_allowed if c in captured}
+    values.update(_pass_c(canon, [c for c in cand_allowed
+                                  if c not in captured]))
     for name, vals in values.items():
         int_like = out[name].pop("__int_like", False)
         if int_like:

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.colref import qcol
+from ..functions.scalars import collect_scalars
 
 
 def adaptive_salt_width(df: DataFrame, skew_stats: DataFrame | None = None,
@@ -92,10 +93,12 @@ def duplicate_stats(df: DataFrame, key_cols: list[str],
     phase2 = (phase1.groupBy(*[qcol(c) for c in key_cols])
                     .agg(F.sum("__c").alias("cnt"))
                     .where(F.col("cnt") > 1))
-    row = phase2.agg(
+    # the totals land through an Observation on the phase-2 output:
+    # no single-partition exchange after the two keyed shuffles
+    row = collect_scalars(
+        phase2,
         F.coalesce(F.count(F.lit(1)), F.lit(0)).alias("duplicate_keys"),
-        F.coalesce(F.sum("cnt"), F.lit(0)).alias("duplicate_rows"),
-    ).collect()[0]
+        F.coalesce(F.sum("cnt"), F.lit(0)).alias("duplicate_rows"))
     return {"duplicate_keys": row["duplicate_keys"] or 0,
             "duplicate_rows": row["duplicate_rows"] or 0}
 

@@ -45,6 +45,7 @@ from ..functions.colref import qcol
 from ..functions.nulls import is_na_expr
 from ..functions.typing import safe_double
 from ..rules import Rules
+from .expectations import conditional_violation_expr
 
 VIOLATION_FIELDS = ["error_type", "column_name", "error_value"]
 
@@ -154,6 +155,64 @@ def _check_condition(df: DataFrame, spec: CheckSpec,
         return c.isNotNull() & ~re_match_expr(s, spec.param), \
             ERROR_TYPE_LABELS["regex_pattern"]
     raise ValueError(f"not a per-row check: {spec.check}")
+
+
+def rule_specs(df: DataFrame, rules: Rules) -> list[CheckSpec]:
+    """Every per-row check the rules declare on a column of ``df``,
+    ungated by verdicts — the check set of the partition and streaming
+    verdicts and of the streaming violations listing."""
+    specs: list[CheckSpec] = []
+    for fr in rules:
+        if fr.field_name not in df.columns:
+            continue
+        c = fr.field_name
+        if fr.allow_null is False:
+            specs.append(CheckSpec(c, "allow_null"))
+        if fr.length is not None:
+            specs.append(CheckSpec(c, "length", fr.length))
+        if fr.range_min is not None:
+            specs.append(CheckSpec(c, "range_min", fr.range_min))
+        if fr.range_max is not None:
+            specs.append(CheckSpec(c, "range_max", fr.range_max))
+        if fr.allowed_value_list:
+            specs.append(CheckSpec(c, "allowed_value_list",
+                                   fr.allowed_value_list))
+        if fr.regex_pattern:
+            specs.append(CheckSpec(c, "regex_pattern", fr.regex_pattern))
+    return specs
+
+
+def verdict_count_aggs(df: DataFrame, rules: Rules
+                       ) -> tuple[list[Column], list[tuple[str, str, str]]]:
+    """Violation-count aggregates for a grouped verdict frame: one
+    ``count(when(violation))`` per ``rule_specs`` check and per
+    conditional rule, aliased ``v{i}``/``cv{j}``. Returns the aggregate
+    Columns and ``(alias, column_name, check)`` triples for
+    ``verdict_stack``."""
+    aggs, names = [], []
+    for i, sp in enumerate(rule_specs(df, rules)):
+        cond, _ = _check_condition(df, sp)
+        aggs.append(F.count(F.when(cond, 1)).alias(f"v{i}"))
+        names.append((f"v{i}", sp.column, sp.check))
+    for j, cr in enumerate(getattr(rules, "conditional", None) or []):
+        aggs.append(F.count(F.when(conditional_violation_expr(cr), 1))
+                    .alias(f"cv{j}"))
+        names.append((f"cv{j}", cr.name, "conditional"))
+    return aggs, names
+
+
+def verdict_stack(names: list[tuple[str, str, str]]) -> str:
+    """SQL unpivoting a ``verdict_count_aggs`` row into
+    ``(column_name, check, violation_count)`` rows. Names become SQL
+    string literals with any quote doubled, so a column or rule named
+    ``it's`` parses. ``names`` must be non-empty (``stack(0)`` is a
+    parse error)."""
+    def lit(s: str) -> str:
+        return "'" + s.replace("'", "''") + "'"
+    body = ", ".join(f"{lit(col)}, {lit(chk)}, cast(`{alias}` as bigint)"
+                     for alias, col, chk in names)
+    return (f"stack({len(names)}, {body})"
+            " as (column_name, check, violation_count)")
 
 
 def _is_string(df: DataFrame, col: str) -> bool:

@@ -68,7 +68,12 @@ def get_spreadsheet_metadata(file_path: str) -> dict:
         from .readers import detect_file_encoding
         enc = detect_file_encoding(file_path)
         with open(file_path, newline="", encoding=enc) as fh:
-            rows = list(csv.reader(fh))
+            # pandas read_csv (skip_blank_lines=True, the reference's
+            # reader) drops empty and whitespace-only lines; csv.reader
+            # yields them as [] / ['   ']. A quoted empty field ('""')
+            # is a record in both.
+            rows = [r for r in csv.reader(fh)
+                    if r and not (len(r) == 1 and r[0] and not r[0].strip())]
         n_cols = len(rows[0]) if rows else 0
         sheets[base_name] = (max(0, len(rows) - 1), n_cols)
     else:

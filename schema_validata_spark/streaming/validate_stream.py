@@ -24,29 +24,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.colref import qcol
-from ..operators.violations import CheckSpec, _check_condition
+from ..operators.violations import (_check_condition, rule_specs,
+                                    verdict_count_aggs, verdict_stack)
 from ..rules import Rules
-
-
-def _specs_from_rules(df: DataFrame, rules: Rules) -> list[CheckSpec]:
-    specs: list[CheckSpec] = []
-    for fr in rules:
-        if fr.field_name not in df.columns:
-            continue
-        c = fr.field_name
-        if fr.allow_null is False:
-            specs.append(CheckSpec(c, "allow_null"))
-        if fr.length is not None:
-            specs.append(CheckSpec(c, "length", fr.length))
-        if fr.range_min is not None:
-            specs.append(CheckSpec(c, "range_min", fr.range_min))
-        if fr.range_max is not None:
-            specs.append(CheckSpec(c, "range_max", fr.range_max))
-        if fr.allowed_value_list:
-            specs.append(CheckSpec(c, "allowed_value_list", fr.allowed_value_list))
-        if fr.regex_pattern:
-            specs.append(CheckSpec(c, "regex_pattern", fr.regex_pattern))
-    return specs
 
 
 def stream_validate(stream_df: DataFrame, rules: Rules,
@@ -56,7 +36,7 @@ def stream_validate(stream_df: DataFrame, rules: Rules,
     layer, so each micro-batch does one pass. ``rules.conditional``
     (cross-column IF/THEN rules) ride the same projection — their
     predicates are pure Column expressions too."""
-    specs = _specs_from_rules(stream_df, rules)
+    specs = rule_specs(stream_df, rules)
     structs = []
     for sp in specs:
         cond, label = _check_condition(stream_df, sp)
@@ -140,25 +120,13 @@ def stream_partition_verdicts(stream_df: DataFrame, rules: Rules,
     """Windowed per-check violation counts with late-data watermark —
     the streaming analog of batch partition_verdicts. Complete rows per
     (window, column, check) emit once the watermark passes."""
-    specs = _specs_from_rules(stream_df, rules)
-    aggs, names = [], []
-    for i, sp in enumerate(specs):
-        cond, _ = _check_condition(stream_df, sp)
-        aggs.append(F.count(F.when(cond, 1)).alias(f"v{i}"))
-        names.append((f"v{i}", sp.column, sp.check))
-    for j, cr in enumerate(getattr(rules, "conditional", None) or []):
-        from ..operators.expectations import conditional_violation_expr
-        aggs.append(F.count(F.when(conditional_violation_expr(cr), 1))
-                    .alias(f"cv{j}"))
-        names.append((f"cv{j}", cr.name, "conditional"))
+    aggs, names = verdict_count_aggs(stream_df, rules)
     wdf = (stream_df.withWatermark(ts_col, watermark)
            .groupBy(F.window(F.col(ts_col), window).alias("w"))
            .agg(*aggs))
-    stack_expr = ", ".join(f"'{col}', '{chk}', cast(`{a}` as bigint)"
-                           for a, col, chk in names)
     return wdf.selectExpr(
         "w.start as window_start", "w.end as window_end",
-        f"stack({len(names)}, {stack_expr}) as (column_name, check, violation_count)"
+        verdict_stack(names)
     ).withColumn("status",
                  F.when(F.col("violation_count") > 0, "fail").otherwise("pass"))
 
@@ -181,28 +149,14 @@ def stream_rate_verdicts(stream_df: DataFrame, rules: Rules,
     ``budgets`` and ``default_budget`` behave as in the batch gate
     (0.0 default = strict, identical verdicts to
     ``stream_partition_verdicts``)."""
-    specs = _specs_from_rules(stream_df, rules)
-    aggs, names = [], []
-    for i, sp in enumerate(specs):
-        cond, _ = _check_condition(stream_df, sp)
-        aggs.append(F.count(F.when(cond, 1)).alias(f"v{i}"))
-        names.append((f"v{i}", sp.column, sp.check))
-    for j, cr in enumerate(getattr(rules, "conditional", None) or []):
-        from ..operators.expectations import conditional_violation_expr
-        aggs.append(F.count(F.when(conditional_violation_expr(cr), 1))
-                    .alias(f"cv{j}"))
-        names.append((f"cv{j}", cr.name, "conditional"))
+    aggs, names = verdict_count_aggs(stream_df, rules)
     aggs.append(F.count(F.lit(1)).cast("bigint").alias("__n_rows"))
     wdf = (stream_df.withWatermark(ts_col, watermark)
            .groupBy(F.window(F.col(ts_col), window).alias("w"))
            .agg(*aggs))
-    stack_expr = ", ".join(f"'{col}', '{chk}', cast(`{a}` as bigint)"
-                           for a, col, chk in names)
     long = wdf.selectExpr(
         "w.start as window_start", "w.end as window_end",
-        "__n_rows as n_rows",
-        f"stack({len(names)}, {stack_expr})"
-        " as (column_name, check, violation_count)")
+        "__n_rows as n_rows", verdict_stack(names))
     budget = F.lit(float(default_budget))
     for (c, k), b in budgets.items():
         budget = F.when((F.col("column_name") == c)

@@ -3,20 +3,30 @@ the reference's ``validate_dataset`` (src/schema_validata.py:2607-2712).
 
 Where the reference reads the file four times and loops rows in Python,
 this entry runs a fixed small number of distributed jobs regardless of
-table width or row count:
+table width or row count. Global scalar aggregates land through an
+``Observation`` on a ``noop`` write (``functions.scalars``), so none
+ends in a single-partition reduce. Jobs for the transcripts fixture
+(one composite key, one foreign key, narrow table):
 
-  1. profile         — 1 wide agg + 1 melt shuffle; conditional-rule
-                       counts ride the same wide aggregate on narrow
-                       tables (operators/profile.py)
-  2. verdicts        — driver-side dict comparison over collected stats
-                       (operators/verdicts.py)
-  3. uniqueness      — salted two-phase aggregate per composite key
+  1. profile         — 4 jobs: observed wide feature aggregate (1) +
+                       two-stage value aggregate (3) that also captures
+                       allowed values; conditional-rule counts ride the
+                       wide aggregate (operators/profile.py)
+  2. verdicts        — dict comparison over the collected stats, no
+                       job (operators/verdicts.py)
+  3. uniqueness      — 3 jobs per composite key: salted two-phase
+                       aggregate, totals observed on its output
                        (operators/uniqueness.py)
-  4. referential     — left_anti join per foreign key
-                       (operators/integrity.py)
+  4. referential     — 2 jobs per foreign key: dimension broadcast +
+                       observed left_anti count; the dimension is not
+                       deduplicated (operators/integrity.py)
   5. violations      — ONE combined column-pruned scan for all flagged
                        per-row checks (+ one agg+join per duplicate
-                       check) (operators/violations.py)
+                       check), persisted: ``violations.count()`` 3 jobs,
+                       ``report()`` 2 (operators/violations.py)
+
+Profile, uniqueness and referential run concurrently; a whole lap
+(validate, count, report) is 14 jobs.
 
 The result dict mirrors the reference's structure:
 ``{uid: {run_metadata, dataset_metadata, data_dict_metadata,
@@ -37,6 +47,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .functions.colref import qcol
+from .functions.scalars import collect_scalars
 
 from .config import DEFAULT_IGNORE_ERRORS
 from .manifest import Manifest, timed
@@ -308,9 +319,12 @@ def validate(spark: SparkSession, df: DataFrame, rules: Rules,
         for fk_col, dim_name, dim_col in rules.foreign_keys:
             dim = (dims or {}).get(dim_name)
             if dim is not None and fk_col in df.columns:
+                orphans = referential_violations(df, [fk_col], dim,
+                                                 [dim_col],
+                                                 broadcast_dim=True)
                 referential[f"{fk_col}->{dim_name}.{dim_col}"] = \
-                    referential_violations(df, [fk_col], dim, [dim_col],
-                                           broadcast_dim=True).count()
+                    collect_scalars(orphans,
+                                    F.count(F.lit(1)).alias("n"))["n"]
 
     preferred = next((f.field_name for f in rules if f.unique_value), None)
     if key_cols is None:
@@ -713,52 +727,17 @@ def partition_verdicts(df: DataFrame, rules: Rules, partition_col: str,
     RI adds one anti-join + re-count. Output:
     ``(partition_key, column_name, check, violation_count, status)``.
     """
-    from .operators.violations import CheckSpec, _check_condition
+    from .operators.violations import verdict_count_aggs, verdict_stack
 
-    specs: list[CheckSpec] = []
-    for fr in rules:
-        if fr.field_name not in df.columns:
-            continue
-        c = fr.field_name
-        if fr.allow_null is False:
-            specs.append(CheckSpec(c, "allow_null"))
-        if fr.length is not None:
-            specs.append(CheckSpec(c, "length", fr.length))
-        if fr.range_min is not None:
-            specs.append(CheckSpec(c, "range_min", fr.range_min))
-        if fr.range_max is not None:
-            specs.append(CheckSpec(c, "range_max", fr.range_max))
-        if fr.allowed_value_list:
-            specs.append(CheckSpec(c, "allowed_value_list", fr.allowed_value_list))
-        if fr.regex_pattern:
-            specs.append(CheckSpec(c, "regex_pattern", fr.regex_pattern))
-
-    aggs, names = [], []
-    for i, sp in enumerate(specs):
-        cond, _ = _check_condition(df, sp)
-        alias = f"v{i}"
-        aggs.append(F.count(F.when(cond, 1)).alias(alias))
-        names.append((alias, sp.column, sp.check))
-    # cross-column conditional rules: one more count expression each in
-    # the SAME per-partition aggregate (no extra scan)
-    for j, cr in enumerate(getattr(rules, "conditional", None) or []):
-        from .operators.expectations import conditional_violation_expr
-        alias = f"cv{j}"
-        aggs.append(F.count(F.when(conditional_violation_expr(cr), 1))
-                    .alias(alias))
-        names.append((alias, cr.name, "conditional"))
+    # every per-row check and conditional rule: one count expression
+    # each in ONE per-partition aggregate
+    aggs, names = verdict_count_aggs(df, rules)
     frames = []
     if names:   # zero aggs is an agg() error and stack(0,) is a parse error
         per_part = df.groupBy(qcol(partition_col).cast("string")
                               .alias("partition_key")).agg(*aggs)
-        stack_expr = ", ".join(
-            "'{}', '{}', cast(`{}` as bigint)".format(
-                col.replace("'", "''"), chk.replace("'", "''"), alias)
-            for alias, col, chk in names)
-        frames.append(per_part.selectExpr(
-            "partition_key",
-            f"stack({len(names)}, {stack_expr})"
-            " as (column_name, check, violation_count)"))
+        frames.append(per_part.selectExpr("partition_key",
+                                          verdict_stack(names)))
     spark = df.sparkSession
     for key in rules.composite_unique:
         if not all(k in df.columns for k in key):

@@ -94,8 +94,8 @@ def main(argv=None):
                     help='file mode mapping as JSON, e.g. '
                          '[{"dataset": "movies", "data_dict": '
                          '"MOVIES_SCHEMA"}]; default maps the dataset '
-                         "file's base name to the dictionary's first "
-                         "qualifying sheet")
+                         "file's base name (a workbook's first sheet) "
+                         "to the dictionary's first qualifying sheet")
     args = ap.parse_args(argv)
 
     from pyspark.sql import SparkSession
@@ -122,8 +122,12 @@ def main(argv=None):
         if args.schema_mapping:
             mapping = json.loads(args.schema_mapping)
         else:
-            base = os.path.splitext(
-                os.path.basename(args.dataset_file))[0]
+            # validate_files keys datasets like the file metadata: a
+            # CSV by its base name, a workbook by its sheet names — so
+            # the default maps the first of those keys
+            from schema_validata_spark.sources.tableio import \
+                get_spreadsheet_metadata
+            base = next(iter(get_spreadsheet_metadata(args.dataset_file)))
             sheets = Rules.from_xlsx(args.data_dict)
             mapping = [{"dataset": base,
                         "data_dict": next(iter(sheets))}]

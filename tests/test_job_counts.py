@@ -1,0 +1,200 @@
+"""Spark job budget of validate() and profile(), and the Observation
+path that keeps it small.
+
+Global scalar aggregates (the wide profile aggregate, duplicate totals,
+the RI count, the datetime confirmation) land through one unnamed
+``Observation`` on a ``noop`` write, the allowed-value capture rides the
+value aggregate, and the RI anti-join no longer deduplicates its
+dimension. The counts below pin that plan: each extra single-partition
+reduce or input pass shows up as a job.
+
+Jobs are counted the way ``perfbench`` counts them: the application's
+jobs that carry no job group, after the listener bus has delivered
+every event. validate() runs its phases on pool threads, which do not
+inherit a caller's job group, so a group-scoped count would miss them.
+"""
+
+import importlib
+
+import pytest
+from pyspark.sql import functions as F
+
+from schema_validata_spark import validate, validate_datasets
+from schema_validata_spark.datagen import (gen_conversations,
+                                           gen_transcripts, transcript_rules)
+from schema_validata_spark.functions.scalars import collect_scalars
+from schema_validata_spark.operators.profile import profile
+
+# the package re-exports profile(), which shadows the module name
+profile_mod = importlib.import_module(
+    "schema_validata_spark.operators.profile")
+
+N_ROWS = 2000
+
+
+def _jobs(spark) -> set:
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup())
+
+
+def _count_jobs(spark, fn):
+    before = _jobs(spark)
+    out = fn()
+    return out, len(_jobs(spark) - before)
+
+
+@pytest.fixture(scope="module")
+def tables(spark, tmp_path_factory):
+    d = tmp_path_factory.mktemp("job_counts")
+    gen_transcripts(spark, N_ROWS, seed=7).drop("ts_date") \
+        .write.parquet(str(d / "t"))
+    gen_conversations(spark, N_ROWS, seed=7).write.parquet(str(d / "c"))
+    return spark.read.parquet(str(d / "t")), spark.read.parquet(str(d / "c"))
+
+
+def _validate(spark, t, c, rules=None):
+    return validate(spark, t, rules or transcript_rules(),
+                    dataset_name="transcripts", dims={"conversations": c},
+                    key_cols=["conv_id", "turn_idx"], ignore_errors=[])
+
+
+def test_validate_lap_runs_14_jobs(spark, tables):
+    """validate() + violations.count() + report(): profile 4 (wide
+    aggregate 1, value aggregate 3), duplicate_stats 3, RI count 2
+    (dim broadcast, anti-join scan), violations count 3, report 2.
+    The plan before the Observation path ran 20."""
+    t, c = tables
+
+    def lap():
+        res = _validate(spark, t, c)
+        res.violations.count()
+        res.report()
+        res.unpersist()
+        return res
+
+    res, n = _count_jobs(spark, lap)
+    assert n == 14
+    assert res.composite_uniqueness["conv_id+turn_idx"]["duplicate_rows"] > 0
+    assert res.referential["conv_id->conversations.conv_id"] > 0
+
+
+def test_parity_profile_runs_4_jobs(spark, tables):
+    """Parity-mode profile(df) (exact counts for every column): one
+    observed wide aggregate plus the three-job value aggregate, which
+    also carries the allowed values (the separate pass C took 2)."""
+    t, _ = tables
+    prof, n = _count_jobs(spark, lambda: profile(t))
+    assert n == 4
+    assert {"assistant", "system", "tool", "user"} <= \
+        set(prof["role"]["allowed_value_list"])
+
+
+def test_collect_scalars_is_one_job_and_matches_agg(spark, tables):
+    t, _ = tables
+    aggs = [F.count(F.lit(1)).alias("n"),
+            F.approx_count_distinct("role").alias("roles"),
+            F.max(F.length("text")).alias("maxlen")]
+    got, n = _count_jobs(spark, lambda: collect_scalars(t, *aggs))
+    assert n == 1
+    assert got == t.agg(*aggs).collect()[0].asDict()
+
+
+def test_collect_scalars_concurrent_callers_read_their_own_metrics(spark):
+    """More threads than cores, each observing a different frame at
+    once: every caller gets its own frame's aggregates."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    def one(i):
+        n = 1000 + 37 * i
+        return i, collect_scalars(spark.range(0, n, 1, 3),
+                                  F.count(F.lit(1)).alias("n"),
+                                  F.sum("id").alias("s"))
+
+    with ThreadPoolExecutor(max_workers=12) as pool:
+        futures = [pool.submit(one, i) for i in range(24)]
+        results = [f.result(timeout=300) for f in futures]
+    for i, got in results:
+        n = 1000 + 37 * i
+        assert got == {"n": n, "s": n * (n - 1) // 2}
+
+
+def test_pass_c_fallback_keeps_observed_schema(spark, tables, monkeypatch):
+    """With no values captured by the value aggregate (what an HLL
+    underestimate would cause), the pass-C fallback fills every
+    allowed-value list and the observed schema is unchanged."""
+    t, c = tables
+    want = _validate(spark, t, c)
+    want.unpersist()
+    real = profile_mod._melt_stats
+
+    def no_capture(*a, **k):
+        a_, b_, nulls, total, _values = real(*a, **k)
+        return a_, b_, nulls, total, {}
+
+    monkeypatch.setattr(profile_mod, "_melt_stats", no_capture)
+    got = _validate(spark, t, c)
+    got.unpersist()
+    assert got.observed_schema == want.observed_schema
+    assert got.uid == want.uid
+    assert got.observed_schema["role"]["allowed_value_list"] not in (None,
+                                                                     [])
+    _, n = _count_jobs(spark, lambda: profile(t))
+    assert n == 5      # the fallback adds exactly one observed pass
+
+
+# uids of the same empty inputs before the Observation path: the
+# content token of an empty frame ('fp:0:None:None') is unchanged
+EMPTY_UID = ("f6860214d9d2a3e06cacbc9b0f717d8a"
+             "_5a023a8a14b66e90dc77025b3445451e")
+
+
+@pytest.mark.parametrize("kind", ["where_false", "empty_rdd"])
+def test_empty_inputs_count_zero(spark, tables, kind):
+    t, c = tables
+    if kind == "where_false":
+        e = t.where("1=0")
+    else:
+        e = spark.createDataFrame(spark.sparkContext.emptyRDD(), t.schema)
+        assert e.rdd.getNumPartitions() == 0
+    res = _validate(spark, e, c)
+    try:
+        assert res.composite_uniqueness == {
+            "conv_id+turn_idx": {"duplicate_keys": 0, "duplicate_rows": 0}}
+        assert res.referential == {"conv_id->conversations.conv_id": 0}
+        assert res.violations.count() == 0
+        assert res.uid == EMPTY_UID
+    finally:
+        res.unpersist()
+
+
+def test_validate_datasets_concurrent_counts_stay_apart(spark, tables):
+    """Two datasets validated concurrently: each result carries its own
+    duplicate and RI counts (unique Observation names, no cross-talk)."""
+    t, c = tables
+    half = t.where(F.col("turn_idx") % 2 == 0)
+    rules = transcript_rules()
+    multi = validate_datasets(
+        spark, {"all": t, "half": half}, {"TRANSCRIPTS_SCHEMA": rules},
+        [{"dataset": "all", "data_dict": "TRANSCRIPTS_SCHEMA"},
+         {"dataset": "half", "data_dict": "TRANSCRIPTS_SCHEMA"}],
+        dims={"conversations": c},
+        key_cols={"all": ["conv_id", "turn_idx"],
+                  "half": ["conv_id", "turn_idx"]})
+    try:
+        for name, frame in (("all", t), ("half", half)):
+            res = multi.results[name]
+            dup = (frame.groupBy("conv_id", "turn_idx").count()
+                        .where("count > 1"))
+            want_rows = dup.agg(F.sum("count")).collect()[0][0] or 0
+            orphans = frame.where(F.col("conv_id").isNotNull()).join(
+                c, "conv_id", "left_anti").count()
+            assert res.composite_uniqueness["conv_id+turn_idx"] == {
+                "duplicate_keys": dup.count(), "duplicate_rows": want_rows}
+            assert res.referential["conv_id->conversations.conv_id"] \
+                == orphans
+        counts = {n: r.referential["conv_id->conversations.conv_id"]
+                  for n, r in multi.results.items()}
+        assert counts["all"] > counts["half"] > 0
+    finally:
+        multi.unpersist()

@@ -7,7 +7,7 @@ organization). No Spark session needed — pure codec properties."""
 import struct
 
 import numpy as np
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from schema_validata_spark.operators.jpegcodec import (
     decode_jpeg, encode_jpeg)
@@ -86,6 +86,7 @@ def test_truncation_never_crashes_or_hangs(seed, cut):
 
 @settings(max_examples=30, deadline=None)
 @given(seed=st.integers(0, 10**6), n_flips=st.integers(1, 12))
+@example(seed=106978, n_flips=8)     # a chroma sampling factor of 0
 def test_random_corruption_never_crashes(seed, n_flips):
     rng = np.random.default_rng(seed)
     arr = rng.integers(0, 256, (24, 24, 3)).astype(np.uint8)

@@ -163,3 +163,52 @@ def test_rate_verdicts_null_partition_survives(spark):
     # NULL partition keeps its verdict (null-safe totals join)
     assert out[None] == (10, 0.4, "pass")
     assert out["A"] == (10, 0.0, "pass")
+
+
+# ------------------------------------------- quoted names in stack() SQL
+
+def test_stream_verdicts_quote_apostrophe_names(spark, tmp_path):
+    """A column and a conditional rule named ``it's`` become SQL string
+    literals in the verdict unpivot; unescaped, the quote broke the
+    stack() parse. Streaming verdicts equal the batch partition
+    verdicts over the same rows."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    from schema_validata_spark.operators.expectations import ConditionalRule
+    from schema_validata_spark.rules import FieldRule, Rules
+    from schema_validata_spark.streaming import (stream_partition_verdicts,
+                                                 stream_rate_verdicts)
+    from schema_validata_spark.validate import partition_verdicts
+
+    t0 = dt.datetime(2026, 1, 1)
+    vals = [1, 3, 6, 7, 3]
+    df = spark.createDataFrame(
+        [(t0 + dt.timedelta(minutes=i), v) for i, v in enumerate(vals)],
+        ["ts", "it's"])
+    src = str(tmp_path / "quoted_src")
+    df.write.parquet(src)
+    rules = Rules(name="Q", fields=[FieldRule("it's", range_max=5.0)],
+                  conditional=[ConditionalRule("it's", "`it's` > 2",
+                                               "`it's` < 7")])
+    want = {("it's", "range_max"): 2, ("it's", "conditional"): 1}
+
+    stream = spark.readStream.schema(df.schema).parquet(src)
+    got = {}
+    for name, out in (
+            ("quoted_pv_mem", stream_partition_verdicts(
+                stream, rules, ts_col="ts", window="24 hours")),
+            ("quoted_rate_mem", stream_rate_verdicts(
+                stream, rules, {}, ts_col="ts", window="24 hours"))):
+        q = (out.writeStream.format("memory").queryName(name)
+             .outputMode("complete").trigger(availableNow=True).start())
+        q.awaitTermination(120)
+        got[name] = {(r["column_name"], r["check"]): r["violation_count"]
+                     for r in spark.sql(f"SELECT * FROM {name}").collect()}
+    assert got["quoted_pv_mem"] == want
+    assert got["quoted_rate_mem"] == want
+    batch = {(r["column_name"], r["check"]): r["violation_count"]
+             for r in partition_verdicts(
+                 df.withColumn("p", F.lit("x")), rules, "p").collect()}
+    assert batch == want

@@ -78,3 +78,63 @@ def test_file_mode_requires_data_dict(spark, tmp_path):
 def test_table_mode_still_requires_transcripts(spark, tmp_path):
     code = _run(["--out", str(tmp_path / "o")])
     assert code not in (0, None)
+
+
+def _write_movie_dictionary(path):
+    """A one-sheet XLSX data dictionary (MOVIES_SCHEMA) in the
+    reference template's column layout."""
+    from schema_validata_spark.config import DATA_DICT_SCHEMA
+    from schema_validata_spark.sources.xlsx import write_xlsx
+    header = list(DATA_DICT_SCHEMA)
+    spec = [
+        {"field_name": "id", "required": "True", "data_type": "Integer",
+         "allow_null": "False", "unique_value": "True"},
+        {"field_name": "title", "required": "True", "data_type": "String",
+         "allow_null": "False", "length": 40},
+        {"field_name": "release_year", "required": "True",
+         "data_type": "Integer", "range_min": 1900, "range_max": 2030},
+    ]
+    write_xlsx(path, {"MOVIES_SCHEMA": [header] + [
+        [row.get(h) for h in header] for row in spec]})
+
+
+def test_file_mode_workbook_default_mapping_uses_first_sheet(spark,
+                                                             tmp_path):
+    """No --schema-mapping on an XLSX workbook: the dataset key is the
+    workbook's first sheet name (how validate_files keys workbook
+    datasets), not the file's base name, which used to end in a bare
+    KeyError."""
+    from schema_validata_spark.sources.xlsx import write_xlsx
+    dd = str(tmp_path / "dictionary.xlsx")
+    _write_movie_dictionary(dd)
+    ds = str(tmp_path / "catalog.xlsx")
+    write_xlsx(ds, {
+        "movies": [["id", "title", "release_year"],
+                   [1, "Heat", 1995], [2, "Late", 2300]],
+        "extra": [["a"], [1]],
+    })
+    out = str(tmp_path / "out")
+    code = _run(["--dataset-file", ds, "--data-dict", dd,
+                 "--out", out, "--name", "catalog"])
+    assert code == 1                    # release_year 2300 > range_max
+    arts = os.listdir(out)
+    with open(os.path.join(out, arts[0])) as f:
+        rep = json.load(f)
+    res = rep[next(iter(rep))]["results"]
+    assert set(res) == {"movies"}
+    assert "release_year" in res["movies"]["schema_violations"]
+
+
+def test_csv_record_qty_skips_blank_lines_like_pandas(tmp_path):
+    """record_qty counts records as pandas read_csv does: empty and
+    whitespace-only interior lines are skipped; a row of empty fields
+    (',,') and a quoted empty field are records."""
+    pd = pytest.importorskip("pandas")
+    from schema_validata_spark.sources.tableio import get_spreadsheet_metadata
+    path = str(tmp_path / "blanky.csv")
+    with open(path, "w", newline="") as f:
+        f.write("a,b,c\n1,2,3\n\n4,5,6\n   \n,,\n\t\n\"\"\n7,8,9\n\n")
+    meta = get_spreadsheet_metadata(path)["blanky"]
+    assert meta["record_qty"] == "5"
+    assert int(meta["record_qty"]) == len(pd.read_csv(path))
+    assert meta["column_qty"] == "3"
