@@ -1783,41 +1783,6 @@ def q_source_share_caps(spark, sf_dir):
             .orderBy(F.col("source").asc_nulls_first()))
 
 
-def q_pack_shards(spark, sf_dir):
-    """Sequence packing (operators/packing.py:shard_stats): per-source
-    cumulative-sum binning of documents into 4096-token shards — one
-    window per group key, deterministic across partitionings; the
-    audit view is per-(source, shard) doc count + token mass."""
-    from schema_validata_spark.operators.packing import shard_stats
-    return (shard_stats(_t(spark, sf_dir, "documents"),
-                        "doc_id", "n_chars", 4096, group_col="source")
-            .orderBy("source", "shard_idx"))
-
-
-def q_boilerplate_ngrams(spark, sf_dir):
-    """Corpus boilerplate discovery (operators/boilerplate.py): word
-    3-grams present in ≥5 distinct documents. Map-side per-doc dedup
-    (array_distinct before explode); the shuffle carries distinct
-    (gram, doc) pairs only."""
-    from schema_validata_spark.operators.boilerplate import \
-        boilerplate_ngrams
-    return (boilerplate_ngrams(_t(spark, sf_dir, "documents"),
-                               "text", "doc_id", n=3, min_docs=5)
-            .orderBy("ngram"))
-
-
-def q_boilerplate_ratio(spark, sf_dir):
-    """Per-document boilerplate share (operators/boilerplate.py):
-    fraction of each doc's 3-gram occurrences that are corpus-frequent
-    (≥5 docs) — the C4-style cleaning signal, scored not dropped so the
-    threshold stays a policy knob."""
-    from schema_validata_spark.operators.boilerplate import \
-        boilerplate_ratio
-    return (boilerplate_ratio(_t(spark, sf_dir, "documents"),
-                              "text", "doc_id", n=3, min_docs=5)
-            .orderBy("doc_id"))
-
-
 def q_fd_check(spark, sf_dir):
     """Functional-dependency audit (operators/integrity.py:fd_check):
     does l_orderkey determine l_returnflag / l_linestatus, does
@@ -1860,16 +1825,6 @@ def q_mixture_sample(spark, sf_dir):
     return (kept.groupBy("source")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_kept"))
             .orderBy("source"))
-
-
-def q_padding_waste(spark, sf_dir):
-    """Length-bucket batching audit (operators/packing.py:
-    padding_waste): per 128-token bucket, real vs pad-to-ceiling token
-    mass and the wasted share — one hash aggregate."""
-    from schema_validata_spark.operators.packing import padding_waste
-    return (padding_waste(_t(spark, sf_dir, "documents"),
-                          "n_chars", 128)
-            .orderBy("bucket"))
 
 
 def q_encoding_qa(spark, sf_dir):
@@ -2089,22 +2044,6 @@ def q_duplicate_conversations(spark, sf_dir):
             .orderBy("example_conv"))
 
 
-def q_context_budget(spark, sf_dir):
-    """Context-window truncation audit (operators/packing.py:
-    context_budget_stats): per-conversation cumulative bpe-ish token
-    mass over turn order vs a 400-token budget — what a
-    truncate-at-budget pass keeps, where the cut lands, how much
-    overflows. One running-sum window + one hash aggregate."""
-    from schema_validata_spark.functions.text import bpe_ish_token_count
-    from schema_validata_spark.operators.packing import (
-        context_budget_stats)
-    ev = (_t(spark, sf_dir, "events")
-          .select("user_id", "ts",
-                  bpe_ish_token_count("props").alias("n_tok")))
-    return (context_budget_stats(ev, "user_id", ["ts"], "n_tok", 400)
-            .orderBy("user_id"))
-
-
 def q_incremental_near_dedup(spark, sf_dir):
     """Cross-snapshot NEAR dedup (operators/dedup.py:
     incremental_near_dedup): the seen artifact is every 5th doc's
@@ -2299,27 +2238,6 @@ def q_vocab_drift(spark, sf_dir):
     return vocab_drift(a, b, "text", k=25)
 
 
-def q_template_openings(spark, sf_dir):
-    """Template-response detection (operators/boilerplate.py:
-    template_openings): every 4th doc gains a fixed support-letter
-    opening; groups of ≥20 docs sharing the same first-6-token
-    normalized prefix must surface with exemplar ids. Bounded group
-    key (≤200 chars), one hash aggregate."""
-    from schema_validata_spark.operators.boilerplate import (
-        template_openings)
-    docs = _t(spark, sf_dir, "documents")
-    opener = F.lit("Thank you for contacting support. We have received "
-                   "your request and ")
-    messy = (F.when(F.col("doc_id") % 4 == 0,
-                    F.concat(opener, F.col("text")))
-              .otherwise(F.col("text")))
-    return (template_openings(docs.select("doc_id",
-                                          messy.alias("text")),
-                              "text", "doc_id",
-                              k_tokens=6, min_docs=20)
-            .orderBy("prefix"))
-
-
 def q_derived_consistency(spark, sf_dir):
     """Stored-vs-recomputed derived column audit (operators/
     expectations.py:derived_mismatches): n_chars is corrupted (+7) for
@@ -2502,20 +2420,6 @@ def q_quality_trend(spark, sf_dir):
     return (quality_trend(_t(spark, sf_dir, "events"),
                           "event_type", "ts", "value")
             .orderBy("group"))
-
-
-def q_compression_signals(spark, sf_dir):
-    """zlib compressibility QA (operators/compression.py:
-    compression_signals): per-document compressed/uncompressed ratio
-    with too_repetitive / suspicious_entropy verdicts — Arrow-batched
-    pandas UDF (zlib is Python-side), map-only. DuckDB has no zlib,
-    so this is a rows-only check by design (deterministic: zlib at a
-    fixed level is stable; the repo's pytest asserts the verdicts)."""
-    from schema_validata_spark.operators.compression import \
-        compression_signals
-    return (compression_signals(_t(spark, sf_dir, "documents"),
-                                "doc_id", "text")
-            .orderBy("id"))
 
 
 def q_mask_stability(spark, sf_dir):
@@ -2952,95 +2856,6 @@ def q_rolling_active_users_sketch(spark, sf_dir):
             .orderBy("bucket"))
 
 
-def q_media_features(spark, sf_dir):
-    """REAL multimodal decode over deterministic synthetic media (no
-    external data, BASELINE.json input contract): PNG / baseline-JPEG
-    (4:4:4 + 4:2:0) / PCM-WAV payloads built by the engine's OWN
-    encoders (multimodal.encode_png/encode_wav, jpegcodec.encode_jpeg),
-    decoded for real through the Arrow mapInPandas path
-    (fake_decode=False), plus progressive (SOF2) JPEGs, an MJPEG-AVI
-    video (sampled frames fully decoded), and seeded poison blobs
-    that must land in the error channel. Rows-only:
-    huffman/IDCT/zlib decoding is not SQL-expressible; the output
-    frame is fully deterministic."""
-    import numpy as np
-    from schema_validata_spark.operators.jpegcodec import encode_jpeg
-    from schema_validata_spark.operators.multimodal import (
-        MEDIA_SCHEMA, encode_png, encode_wav, extract_features)
-    rows = []
-    for i in range(24):
-        g = ((np.add.outer(np.arange(16 + i % 3),
-                           np.arange(20 + i % 5) * 2) * (i + 3))
-             % 256).astype(np.uint8)
-        rgb = np.stack([g, 255 - g, g // 2], axis=-1)
-        if i % 4 == 0:
-            payload = encode_png(g)
-        elif i % 4 == 1:
-            payload = encode_png(rgb)
-        elif i % 4 == 2:
-            payload = encode_jpeg(g, quality=85)
-        else:
-            payload = encode_jpeg(rgb, quality=85, subsampling="420")
-        rows.append((i, "image", None, None, None, None,
-                     bytearray(payload)))
-    for i in range(24, 30):
-        t = np.sin(np.linspace(0, (i - 20) * np.pi, 800))
-        rows.append((i, "audio", None, None, None, None,
-                     bytearray(encode_wav(t))))
-    # progressive (SOF2) JPEGs — decoded for real since r5
-    g = (np.add.outer(np.arange(24), np.arange(28) * 3)
-         % 256).astype(np.uint8)
-    rows.append((30, "image", None, None, None, None,
-                 bytearray(encode_jpeg(g, quality=85,
-                                       progressive=True))))
-    rows.append((31, "image", None, None, None, None,
-                 bytearray(encode_jpeg(
-                     np.stack([g, 255 - g, g // 2], axis=-1),
-                     quality=85, subsampling="420",
-                     progressive=True))))
-    # MJPEG-AVI video — sampled frames fully JPEG-decoded (r5)
-    from schema_validata_spark.operators.multimodal import \
-        encode_avi_mjpeg
-    vid = [np.clip(np.add.outer(np.arange(16) * 4,
-                                np.arange(20) * 2) + t * 10, 0,
-                   255).astype(np.uint8) for t in range(12)]
-    rows.append((32, "video", None, None, None, None,
-                 bytearray(encode_avi_mjpeg(vid, fps=4))))
-    rows.append((33, "image", None, None, None, None,
-                 bytearray(b"\xff\xd8truncated")))
-    rows.append((34, "image", None, None, None, None,
-                 bytearray(b"not media at all")))
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return (extract_features(df, fake_decode=False)
-            .select("media_id", "kind", "n_bytes",
-                    F.col("error").isNull().alias("ok"),
-                    F.element_at("feature", 1).alias("width"),
-                    F.element_at("feature", 2).alias("height"),
-                    F.element_at("feature", 4).alias("channels"))
-            .orderBy("media_id"))
-
-
-def q_media_frame_plan(spark, sf_dir):
-    """Video frame-sampling PLAN (multimodal.frame_sample_plan): one
-    row per planned frame timestamp per video — the decode-free half
-    of the video pipeline (sequence explode, map-only), over a
-    deterministic synthetic media-metadata frame."""
-    from schema_validata_spark.operators.multimodal import \
-        frame_sample_plan
-    media = spark.range(40).select(
-        F.col("id").alias("media_id"),
-        F.when(F.col("id") % 3 == 0, "video")
-         .when(F.col("id") % 3 == 1, "image")
-         .otherwise("audio").alias("kind"),
-        F.lit(None).cast("string").alias("mime"),
-        F.lit(None).cast("int").alias("width"),
-        F.lit(None).cast("int").alias("height"),
-        ((F.col("id") % 5 + 1) * 1000).cast("int").alias("duration_ms"),
-        F.lit(None).cast("binary").alias("payload"))
-    return (frame_sample_plan(media, every_ms=400)
-            .orderBy("media_id", "frame_ts_ms"))
-
-
 def q_scd2_history(spark, sf_dir):
     """SCD2 validity intervals from the event log
     (selection.scd2_history): per-user event_type state history —
@@ -3162,7 +2977,7 @@ def q_transition_latency(spark, sf_dir):
 
 def q_turn_count_histogram(spark, sf_dir):
     """Conversation-size histogram on power-of-two bands
-    (sequence.turn_count_histogram): the packing planner's input and
+    (sequence.turn_count_histogram): the length distribution and
     the skew summary at a glance; one count-per-key shuffle + a log2
     rollup of the key-counts frame."""
     from schema_validata_spark.operators.sequence import \
@@ -3342,39 +3157,6 @@ def q_readability(spark, sf_dir):
             .orderBy("group"))
 
 
-def q_degree_profile(spark, sf_dir):
-    """Per-tool degree/strength of the transition graph
-    (graphs.degree_profile): one lag window + one aggregate reduce the
-    corpus to an |alphabet|2 edge frame; everything after is tiny."""
-    from schema_validata_spark.operators.graphs import (degree_profile,
-                                                        transition_edges)
-    e = transition_edges(_t(spark, sf_dir, "events"), "user_id",
-                         ["ts", "event_id"], "event_type")
-    return degree_profile(e).orderBy("node")
-
-
-def q_graph_reciprocity(spark, sf_dir):
-    """Edge reciprocity + traffic imbalance per unordered tool pair
-    (graphs.graph_reciprocity): missing reverse edges on
-    request/response pairs are protocol smells."""
-    from schema_validata_spark.operators.graphs import (graph_reciprocity,
-                                                        transition_edges)
-    e = transition_edges(_t(spark, sf_dir, "events"), "user_id",
-                         ["ts", "event_id"], "event_type")
-    return graph_reciprocity(e).orderBy("node_a", "node_b")
-
-
-def q_graph_triangles(spark, sf_dir):
-    """Triangle participation per node of the undirected transition
-    graph (graphs.graph_triangles): the a<b<c triangle join, safe
-    because it runs on the post-aggregation label graph."""
-    from schema_validata_spark.operators.graphs import (graph_triangles,
-                                                        transition_edges)
-    e = transition_edges(_t(spark, sf_dir, "events"), "user_id",
-                         ["ts", "event_id"], "event_type")
-    return graph_triangles(e).orderBy("node")
-
-
 def q_theil_sen(spark, sf_dir):
     """Theil-Sen robust daily-volume trend per event type
     (statqa.theil_sen_trend): median of pairwise slopes on the
@@ -3408,41 +3190,6 @@ def q_quality_calibration(spark, sf_dir):
             .orderBy("group"))
 
 
-def q_pagerank(spark, sf_dir):
-    """Fixed-iteration weighted PageRank of the tool-transition graph
-    (graphs.pagerank): 5 power-method rounds with dangling
-    redistribution on the label graph; the oracle unrolls the same 5
-    rounds as chained CTEs."""
-    from schema_validata_spark.operators.graphs import (pagerank,
-                                                        transition_edges)
-    e = transition_edges(_t(spark, sf_dir, "events"), "user_id",
-                         ["ts", "event_id"], "event_type")
-    return pagerank(e, damping=0.85, iterations=5).orderBy("node")
-
-
-def q_k_core(spark, sf_dir):
-    """2-core of the undirected transition graph after 10 fixed peel
-    rounds (graphs.k_core) — the load-bearing skeleton; DuckDB twin is
-    a recursive-CTE peel."""
-    from schema_validata_spark.operators.graphs import (k_core,
-                                                        transition_edges)
-    e = transition_edges(_t(spark, sf_dir, "events"), "user_id",
-                         ["ts", "event_id"], "event_type")
-    return k_core(e, k=2, peels=10).orderBy("node")
-
-
-def q_assortativity(spark, sf_dir):
-    """Degree assortativity of the transition graph
-    (graphs.assortativity): Pearson over edge-endpoint degrees from
-    explicit moment sums (NULL on regular graphs, matching SQL corr
-    semantics)."""
-    from schema_validata_spark.operators.graphs import (assortativity,
-                                                        transition_edges)
-    e = transition_edges(_t(spark, sf_dir, "events"), "user_id",
-                         ["ts", "event_id"], "event_type")
-    return assortativity(e)
-
-
 def q_file_skew(spark, sf_dir):
     """Rows-per-file layout audit (sources/layout.file_skew_profile)
     over the lineitem scan — the small-file-problem detector. Rows-only
@@ -3451,17 +3198,6 @@ def q_file_skew(spark, sf_dir):
     from schema_validata_spark.sources.layout import file_skew_profile
     return file_skew_profile(_t(spark, sf_dir, "lineitem"),
                              small_file_rows=10_000)
-
-
-def q_transition_entropy(spark, sf_dir):
-    """Per-tool outgoing-transition entropy + corpus entropy-rate
-    contribution (graphs.transition_entropy): the how-predictable-is-
-    the-next-step screen; two aggregates on the label-graph frame."""
-    from schema_validata_spark.operators.graphs import (transition_edges,
-                                                        transition_entropy)
-    e = transition_edges(_t(spark, sf_dir, "events"), "user_id",
-                         ["ts", "event_id"], "event_type")
-    return transition_entropy(e).orderBy("node")
 
 
 def q_sampling_table(spark, sf_dir):
@@ -3567,17 +3303,6 @@ def q_zorder_preview(spark, sf_dir):
                            "user_id", 0.0, 500.0, 0.0, 15.0,
                            bits=8, buckets_log2=4)
             .orderBy("zbucket"))
-
-
-def q_transition_lift(spark, sf_dir):
-    """Markov lift per transition (graphs.transition_lift):
-    P(dst|src)/P(dst) — the error-cascade / broken-protocol screen on
-    the label graph; two tiny totals joined onto the edge frame."""
-    from schema_validata_spark.operators.graphs import (transition_edges,
-                                                        transition_lift)
-    e = transition_edges(_t(spark, sf_dir, "events"), "user_id",
-                         ["ts", "event_id"], "event_type")
-    return transition_lift(e).orderBy("src", "dst")
 
 
 def q_daily_percentiles(spark, sf_dir):
@@ -3911,13 +3636,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pq_ann_topk": q_pq_ann_topk,
         "ivf_pq_topk": q_ivf_pq_topk,
         "lsh_ann_topk": q_lsh_ann_topk,
-        "pack_shards": q_pack_shards,
-        "boilerplate_ngrams": q_boilerplate_ngrams,
-        "boilerplate_ratio": q_boilerplate_ratio,
         "fd_check": q_fd_check,
         "quality_percentiles": q_quality_percentiles,
         "mixture_sample": q_mixture_sample,
-        "padding_waste": q_padding_waste,
         "encoding_qa": q_encoding_qa,
         "markup_stats": q_markup_stats,
         "incremental_dedup": q_incremental_dedup,
@@ -3929,7 +3650,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "assemble_conversations": q_assemble_conversations,
         "duplicate_conversations": q_duplicate_conversations,
         "conversation_forks": q_conversation_forks,
-        "context_budget": q_context_budget,
         "vocab_stats": q_vocab_stats,
         "novelty_stats": q_novelty,
         "incremental_near_dedup": q_incremental_near_dedup,
@@ -3942,7 +3662,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ngram_diversity": q_ngram_diversity,
         "embedding_dim_qa": q_embedding_dim_qa,
         "vocab_drift": q_vocab_drift,
-        "template_openings": q_template_openings,
         "derived_consistency": q_derived_consistency,
         "role_share": q_role_share,
         "centroid_drift": q_centroid_drift,
@@ -3955,7 +3674,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "candidate_keys": q_candidate_keys,
         "dup_cluster_sizes": q_dup_cluster_sizes,
         "quality_trend": q_quality_trend,
-        "compression_signals": q_compression_signals,
         "mask_stability": q_mask_stability,
         "fd_repair": q_fd_repair,
         "verdict_flips": q_verdict_flips,
@@ -4001,8 +3719,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "crosstab_residuals": q_crosstab_residuals,
         "rolling_active_users": q_rolling_active_users,
         "rolling_active_users_sketch": q_rolling_active_users_sketch,
-        "media_features": q_media_features,
-        "media_frame_plan": q_media_frame_plan,
         "weighted_k_per_lang": q_weighted_k_per_lang,
         "script_mix_stats": q_script_mix_stats,
         "coercion_failures": q_coercion_failures,
@@ -4018,17 +3734,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hourly_profile": q_hourly_profile,
         "histogram_movers": q_histogram_movers,
         "readability": q_readability,
-        "degree_profile": q_degree_profile,
-        "graph_reciprocity": q_graph_reciprocity,
-        "graph_triangles": q_graph_triangles,
         "theil_sen": q_theil_sen,
         "ewma_volume": q_ewma_volume,
         "quality_calibration": q_quality_calibration,
-        "pagerank": q_pagerank,
-        "k_core": q_k_core,
-        "assortativity": q_assortativity,
         "file_skew": q_file_skew,
-        "transition_entropy": q_transition_entropy,
         "sampling_table": q_sampling_table,
         "mixture_weights": q_mixture_weights,
         "reliability_bins": q_reliability_bins,
@@ -4038,7 +3747,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "calibration_error": q_calibration_error,
         "salted_join": q_salted_join,
         "zorder_preview": q_zorder_preview,
-        "transition_lift": q_transition_lift,
         "daily_percentiles": q_daily_percentiles,
         "rolling_psi": q_rolling_psi,
         "concurrency_profile": q_concurrency_profile,
@@ -6705,67 +6413,6 @@ def oracle_sql() -> dict[str, str]:
                                      4294967295))
         GROUP BY d.source ORDER BY d.source NULLS FIRST"""
 
-    sql["pack_shards"] = """
-        WITH packed AS (
-          SELECT source, doc_id,
-                 greatest(coalesce(CAST(n_chars AS DOUBLE), 0.0), 0.0)
-                   AS tok,
-                 sum(greatest(coalesce(CAST(n_chars AS DOUBLE), 0.0), 0.0))
-                   OVER (PARTITION BY source ORDER BY doc_id) AS cum
-          FROM documents)
-        SELECT source,
-               CAST(floor((cum - tok) / 4096.0) AS BIGINT) AS shard_idx,
-               count(*)::bigint AS n_docs,
-               CAST(sum(tok) AS BIGINT) AS token_mass
-        FROM packed GROUP BY source, shard_idx
-        ORDER BY source, shard_idx"""
-
-    # shared n-gram expansion for the two boilerplate oracles: word
-    # 3-grams via list_transform over an index range (DuckDB's unnest
-    # of a NULL list yields no rows, matching Spark explode of NULL)
-    _grams_cte = r"""
-        w AS (
-          SELECT doc_id,
-                 CASE WHEN text IS NOT NULL AND length(trim(text)) > 0
-                      THEN regexp_split_to_array(lower(trim(text)), '\s+')
-                 END AS ws
-          FROM documents),
-        g AS (
-          SELECT doc_id,
-                 CASE WHEN len(ws) >= 3
-                      THEN list_transform(range(1, len(ws) - 1),
-                             i -> array_to_string(
-                                    list_slice(ws, i, i + 2), ' '))
-                 END AS ng
-          FROM w),
-        occ AS (SELECT doc_id, unnest(ng) AS ngram FROM g)"""
-
-    sql["boilerplate_ngrams"] = f"""
-        WITH {_grams_cte}
-        SELECT ngram, count(*)::bigint AS n_docs
-        FROM (SELECT DISTINCT doc_id, ngram FROM occ)
-        GROUP BY ngram HAVING count(*) >= 5
-        ORDER BY ngram"""
-
-    sql["boilerplate_ratio"] = f"""
-        WITH {_grams_cte},
-        freq AS (
-          SELECT ngram FROM (SELECT DISTINCT doc_id, ngram FROM occ)
-          GROUP BY ngram HAVING count(*) >= 5),
-        hits AS (
-          SELECT o.doc_id, count(*)::bigint AS n_ngrams,
-                 count(f.ngram)::bigint AS n_boiler
-          FROM occ o LEFT JOIN freq f ON o.ngram = f.ngram
-          GROUP BY o.doc_id)
-        SELECT d.doc_id,
-               coalesce(h.n_ngrams, 0)::bigint AS n_ngrams,
-               coalesce(h.n_boiler, 0)::bigint AS n_boiler,
-               CASE WHEN coalesce(h.n_ngrams, 0) > 0
-                    THEN round(h.n_boiler / h.n_ngrams::double, 6)
-               END AS boiler_ratio
-        FROM documents d LEFT JOIN hits h ON d.doc_id = h.doc_id
-        ORDER BY d.doc_id"""
-
     def _fd_sql(name: str, det: str, dep: str) -> str:
         return f"""
           SELECT '{name}' AS fd,
@@ -6822,21 +6469,6 @@ def oracle_sql() -> dict[str, str]:
                             least(CAST(round(r.r * 4294967296.0) AS BIGINT),
                                   4294967295)))
         GROUP BY d.source ORDER BY d.source"""
-
-    sql["padding_waste"] = """
-        WITH base AS (
-          SELECT CAST(floor(CAST(n_chars AS DOUBLE) / 128.0) AS BIGINT)
-                   AS bucket,
-                 CAST(n_chars AS DOUBLE) AS tok
-          FROM documents
-          WHERE n_chars IS NOT NULL AND n_chars >= 0)
-        SELECT bucket,
-               count(*)::bigint AS n_seqs,
-               CAST(sum(tok) AS BIGINT) AS token_mass,
-               CAST(sum((bucket + 1) * 128) AS BIGINT) AS padded_mass,
-               round(1.0 - sum(tok) / sum((bucket + 1) * 128), 6)
-                 AS waste_ratio
-        FROM base GROUP BY bucket ORDER BY bucket"""
 
     # The SAME pattern strings the Spark operators compile (verified
     # count-identical under Java regex and RE2) — imported, not copied,
@@ -7094,25 +6726,6 @@ def oracle_sql() -> dict[str, str]:
         FROM per_conv GROUP BY seq HAVING count(*) > 1
         ORDER BY example_conv"""
 
-    sql["context_budget"] = r"""
-        WITH t AS (
-          SELECT user_id, ts,
-                 len(regexp_extract_all(props,
-                     '[A-Za-z]{1,4}|\d|[^\sA-Za-z\d]'))::double AS tok
-          FROM events),
-        c AS (
-          SELECT user_id, ts, tok,
-                 sum(tok) OVER (PARTITION BY user_id ORDER BY ts
-                                ROWS UNBOUNDED PRECEDING) AS cum
-          FROM t)
-        SELECT user_id, count(*)::bigint AS n_turns,
-               sum(tok)::bigint AS total_tokens,
-               sum(CASE WHEN cum <= 400 THEN 1 ELSE 0 END)::bigint
-                 AS n_turns_within,
-               min(CASE WHEN cum > 400 THEN ts END) AS first_over_order,
-               greatest(sum(tok) - 400, 0)::bigint AS overflow_tokens
-        FROM c GROUP BY user_id ORDER BY user_id"""
-
     sql["vocab_stats"] = r"""
         WITH counts AS (
           SELECT token, count(*)::bigint AS n
@@ -7340,26 +6953,6 @@ def oracle_sql() -> dict[str, str]:
                            - CASE WHEN ta > 0 THEN n_a / ta::double
                                   ELSE 0.0 END, 6)) DESC, token ASC
         LIMIT 25"""
-
-    sql["template_openings"] = r"""
-        WITH m AS (
-          SELECT doc_id,
-                 CASE WHEN doc_id % 4 = 0
-                      THEN 'Thank you for contacting support. We have '
-                           || 'received your request and ' || text
-                      ELSE text END AS text
-          FROM documents),
-        p AS (
-          SELECT doc_id,
-                 substr(array_to_string(
-                     regexp_split_to_array(lower(trim(text)),
-                                           '\s+')[1:6], ' '),
-                     1, 200) AS prefix
-          FROM m WHERE text IS NOT NULL AND length(trim(text)) > 0)
-        SELECT prefix, count(*)::bigint AS n_docs,
-               min(doc_id) AS example_id
-        FROM p GROUP BY prefix HAVING count(*) >= 20
-        ORDER BY prefix"""
 
     sql["derived_consistency"] = """
         WITH m AS (
@@ -7589,10 +7182,6 @@ def oracle_sql() -> dict[str, str]:
                       / 1000000.0
                END AS slope_per_week
         FROM g ORDER BY "group" """
-
-    # compression_signals: rows-only by design — zlib has no DuckDB
-    # counterpart; determinism + verdicts covered by
-    # tests/test_round3d_ops.py.
 
     _msk = ("regexp_replace(regexp_replace(regexp_replace("
             "substr({c}, 1, 24), '[A-Z]', 'A', 'g'), "
@@ -9234,74 +8823,6 @@ def oracle_sql() -> dict[str, str]:
                      - 15.59, 6) AS fk_grade
         FROM per ORDER BY "group" """
 
-    _edges_cte = """
-        WITH seq AS (
-          SELECT user_id, event_type,
-                 lag(event_type) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id) AS prev
-          FROM events),
-        edges AS (
-          SELECT prev AS src, event_type AS dst, count(*)::bigint AS n
-          FROM seq
-          WHERE prev IS NOT NULL AND event_type IS NOT NULL
-          GROUP BY 1, 2)"""
-
-    sql["degree_profile"] = _edges_cte + """,
-        outs AS (
-          SELECT src AS node, count(DISTINCT dst)::bigint AS out_degree,
-                 sum(n)::bigint AS out_strength,
-                 sum(CASE WHEN dst = src THEN n ELSE 0 END)::bigint
-                   AS self_loops
-          FROM edges GROUP BY 1),
-        ins AS (
-          SELECT dst AS node, count(DISTINCT src)::bigint AS in_degree,
-                 sum(n)::bigint AS in_strength
-          FROM edges GROUP BY 1)
-        SELECT coalesce(outs.node, ins.node) AS node,
-               coalesce(out_degree, 0)::bigint AS out_degree,
-               coalesce(in_degree, 0)::bigint AS in_degree,
-               coalesce(out_strength, 0)::bigint AS out_strength,
-               coalesce(in_strength, 0)::bigint AS in_strength,
-               coalesce(self_loops, 0)::bigint AS self_loops
-        FROM outs FULL OUTER JOIN ins ON outs.node = ins.node
-        ORDER BY node"""
-
-    sql["graph_reciprocity"] = _edges_cte + """,
-        fwd AS (
-          SELECT src AS node_a, dst AS node_b, n AS n_ab
-          FROM edges WHERE src < dst),
-        rev AS (
-          SELECT dst AS node_a, src AS node_b, n AS n_ba
-          FROM edges WHERE src > dst)
-        SELECT coalesce(fwd.node_a, rev.node_a) AS node_a,
-               coalesce(fwd.node_b, rev.node_b) AS node_b,
-               coalesce(n_ab, 0)::bigint AS n_ab,
-               coalesce(n_ba, 0)::bigint AS n_ba,
-               (coalesce(n_ab, 0) > 0 AND coalesce(n_ba, 0) > 0)
-                 AS reciprocal,
-               round(abs(coalesce(n_ab, 0) - coalesce(n_ba, 0))::double
-                     / (coalesce(n_ab, 0) + coalesce(n_ba, 0))::double,
-                     6) AS imbalance
-        FROM fwd FULL OUTER JOIN rev
-          ON fwd.node_a = rev.node_a AND fwd.node_b = rev.node_b
-        ORDER BY node_a, node_b"""
-
-    sql["graph_triangles"] = _edges_cte + """,
-        und AS (
-          SELECT DISTINCT least(src, dst) AS lo, greatest(src, dst) AS hi
-          FROM edges WHERE src <> dst),
-        tri AS (
-          SELECT ab.lo AS x, ab.hi AS y, bc.hi AS z
-          FROM und ab
-          JOIN und bc ON bc.lo = ab.hi
-          JOIN und ac ON ac.lo = ab.lo AND ac.hi = bc.hi),
-        nodes AS (
-          SELECT x AS node FROM tri
-          UNION ALL SELECT y FROM tri
-          UNION ALL SELECT z FROM tri)
-        SELECT node, count(*)::bigint AS triangles
-        FROM nodes GROUP BY 1 ORDER BY node"""
-
     sql["theil_sen"] = """
         WITH daily AS (
           SELECT event_type AS g,
@@ -9387,177 +8908,8 @@ def oracle_sql() -> dict[str, str]:
                round(max(abs(sp - gp)), 6) AS ks_stat
         FROM ranked GROUP BY 1 ORDER BY "group" """
 
-    sql["pagerank"] = """
-        WITH seq AS (
-          SELECT user_id, event_type,
-                 lag(event_type) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id) AS prev
-          FROM events),
-        edges AS (
-          SELECT prev AS src, event_type AS dst, count(*)::bigint AS n
-          FROM seq
-          WHERE prev IS NOT NULL AND event_type IS NOT NULL
-          GROUP BY 1, 2),
-        nodes AS (
-          SELECT src AS node FROM edges
-          UNION SELECT dst FROM edges),
-        wout AS (
-          SELECT src, sum(n::double) AS w FROM edges GROUP BY 1),
-        share AS (
-          SELECT edges.src, edges.dst, edges.n::double / wout.w AS share
-          FROM edges JOIN wout ON wout.src = edges.src),
-        p0 AS (
-          SELECT node, 1.0 / (SELECT count(*) FROM nodes) AS pr
-          FROM nodes),
-        p1 AS (
-          SELECT nd.node,
-                 0.15 / (SELECT count(*) FROM nodes)
-                 + 0.85 * (coalesce(c.contrib, 0.0)
-                     + (SELECT coalesce(sum(pr), 0.0) FROM p0
-                        WHERE node NOT IN (SELECT src FROM wout))
-                       / (SELECT count(*) FROM nodes)) AS pr
-          FROM nodes nd LEFT JOIN (
-            SELECT sh.dst AS node, sum(p.pr * sh.share) AS contrib
-            FROM share sh JOIN p0 p ON p.node = sh.src
-            GROUP BY 1) c ON c.node = nd.node),
-        p2 AS (
-          SELECT nd.node,
-                 0.15 / (SELECT count(*) FROM nodes)
-                 + 0.85 * (coalesce(c.contrib, 0.0)
-                     + (SELECT coalesce(sum(pr), 0.0) FROM p1
-                        WHERE node NOT IN (SELECT src FROM wout))
-                       / (SELECT count(*) FROM nodes)) AS pr
-          FROM nodes nd LEFT JOIN (
-            SELECT sh.dst AS node, sum(p.pr * sh.share) AS contrib
-            FROM share sh JOIN p1 p ON p.node = sh.src
-            GROUP BY 1) c ON c.node = nd.node),
-        p3 AS (
-          SELECT nd.node,
-                 0.15 / (SELECT count(*) FROM nodes)
-                 + 0.85 * (coalesce(c.contrib, 0.0)
-                     + (SELECT coalesce(sum(pr), 0.0) FROM p2
-                        WHERE node NOT IN (SELECT src FROM wout))
-                       / (SELECT count(*) FROM nodes)) AS pr
-          FROM nodes nd LEFT JOIN (
-            SELECT sh.dst AS node, sum(p.pr * sh.share) AS contrib
-            FROM share sh JOIN p2 p ON p.node = sh.src
-            GROUP BY 1) c ON c.node = nd.node),
-        p4 AS (
-          SELECT nd.node,
-                 0.15 / (SELECT count(*) FROM nodes)
-                 + 0.85 * (coalesce(c.contrib, 0.0)
-                     + (SELECT coalesce(sum(pr), 0.0) FROM p3
-                        WHERE node NOT IN (SELECT src FROM wout))
-                       / (SELECT count(*) FROM nodes)) AS pr
-          FROM nodes nd LEFT JOIN (
-            SELECT sh.dst AS node, sum(p.pr * sh.share) AS contrib
-            FROM share sh JOIN p3 p ON p.node = sh.src
-            GROUP BY 1) c ON c.node = nd.node),
-        p5 AS (
-          SELECT nd.node,
-                 0.15 / (SELECT count(*) FROM nodes)
-                 + 0.85 * (coalesce(c.contrib, 0.0)
-                     + (SELECT coalesce(sum(pr), 0.0) FROM p4
-                        WHERE node NOT IN (SELECT src FROM wout))
-                       / (SELECT count(*) FROM nodes)) AS pr
-          FROM nodes nd LEFT JOIN (
-            SELECT sh.dst AS node, sum(p.pr * sh.share) AS contrib
-            FROM share sh JOIN p4 p ON p.node = sh.src
-            GROUP BY 1) c ON c.node = nd.node)
-        SELECT node, round(pr, 6) AS pagerank FROM p5 ORDER BY node"""
-
-    sql["k_core"] = """
-        WITH RECURSIVE seq AS (
-          SELECT user_id, event_type,
-                 lag(event_type) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id) AS prev
-          FROM events),
-        edges AS (
-          SELECT prev AS src, event_type AS dst, count(*)::bigint AS n
-          FROM seq
-          WHERE prev IS NOT NULL AND event_type IS NOT NULL
-          GROUP BY 1, 2),
-        und AS (
-          SELECT src AS x, dst AS y FROM edges WHERE src <> dst
-          UNION
-          SELECT dst, src FROM edges WHERE src <> dst),
-        s AS (
-          SELECT 0 AS it, x AS node FROM und
-          UNION
-          SELECT it + 1, node FROM (
-            SELECT s1.it, s1.node, count(*) AS deg
-            FROM s s1 JOIN und ON und.x = s1.node
-            WHERE s1.it < 10
-              AND und.y IN (SELECT node FROM s s2 WHERE s2.it = s1.it)
-            GROUP BY s1.it, s1.node) WHERE deg >= 2)
-        SELECT node FROM s WHERE it = 10 ORDER BY node"""
-
     # file_skew: rows-only by design - the DuckDB views cannot
     # observe input_file_name(); the pytest covers the math.
-
-    sql["assortativity"] = """
-        WITH seq AS (
-          SELECT user_id, event_type,
-                 lag(event_type) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id) AS prev
-          FROM events),
-        edges AS (
-          SELECT prev AS src, event_type AS dst, count(*)::bigint AS n
-          FROM seq
-          WHERE prev IS NOT NULL AND event_type IS NOT NULL
-          GROUP BY 1, 2),
-        und AS (
-          SELECT DISTINCT least(src, dst) AS lo, greatest(src, dst) AS hi
-          FROM edges WHERE src <> dst),
-        sym AS (
-          SELECT lo, hi FROM und UNION ALL SELECT hi, lo FROM und),
-        deg AS (
-          SELECT lo AS node, count(*)::double AS deg FROM sym GROUP BY 1),
-        j AS (
-          SELECT sym.lo, dx.deg AS dx, dy.deg AS dy
-          FROM sym JOIN deg dx ON dx.node = sym.lo
-                   JOIN deg dy ON dy.node = sym.hi),
-        a AS (
-          SELECT count(DISTINCT lo)::bigint AS n_nodes,
-                 (count(*) / 2)::bigint AS n_edges,
-                 count(*)::double AS n,
-                 sum(dx) AS sx, sum(dy) AS sy,
-                 sum(dx * dx) AS sxx, sum(dy * dy) AS syy,
-                 sum(dx * dy) AS sxy
-          FROM j)
-        SELECT n_nodes, n_edges,
-               round(CASE WHEN (n * sxx - sx * sx) > 0
-                           AND (n * syy - sy * sy) > 0
-                     THEN (n * sxy - sx * sy)
-                          / sqrt((n * sxx - sx * sx)
-                                 * (n * syy - sy * sy)) END, 6) AS r
-        FROM a"""
-
-    sql["transition_entropy"] = """
-        WITH seq AS (
-          SELECT user_id, event_type,
-                 lag(event_type) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id) AS prev
-          FROM events),
-        edges AS (
-          SELECT prev AS src, event_type AS dst, count(*)::bigint AS n
-          FROM seq
-          WHERE prev IS NOT NULL AND event_type IS NOT NULL
-          GROUP BY 1, 2),
-        outs AS (
-          SELECT src, sum(n::double) AS w FROM edges GROUP BY 1),
-        tot AS (SELECT sum(w) AS t FROM outs),
-        per AS (
-          SELECT edges.src AS node, sum(edges.n)::bigint AS out_strength,
-                 sum(-(edges.n::double / outs.w)
-                     * log2(edges.n::double / outs.w)) AS h
-          FROM edges JOIN outs ON outs.src = edges.src
-          GROUP BY 1)
-        SELECT node, out_strength, round(h, 6) AS h_out,
-               round(out_strength::double / t, 6) AS traffic_share,
-               round((out_strength::double / t) * h, 6)
-                 AS rate_contribution
-        FROM per, tot ORDER BY node"""
 
     sql["sampling_table"] = r"""
         WITH counts AS (
@@ -9770,31 +9122,6 @@ def oracle_sql() -> dict[str, str]:
                round(min(x), 6) AS x_min, round(max(x), 6) AS x_max,
                round(min(y), 6) AS y_min, round(max(y), 6) AS y_max
         FROM z GROUP BY 1 ORDER BY 1"""
-
-    sql["transition_lift"] = """
-        WITH seq AS (
-          SELECT user_id, event_type,
-                 lag(event_type) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id) AS prev
-          FROM events),
-        edges AS (
-          SELECT prev AS src, event_type AS dst, count(*)::bigint AS n
-          FROM seq
-          WHERE prev IS NOT NULL AND event_type IS NOT NULL
-          GROUP BY 1, 2),
-        outs AS (SELECT src, sum(n::double) AS st FROM edges GROUP BY 1),
-        ins AS (SELECT dst, sum(n::double) AS dt FROM edges GROUP BY 1),
-        tot AS (SELECT sum(n::double) AS t FROM edges)
-        SELECT e.src, e.dst, e.n,
-               round(e.n::double / outs.st, 6) AS p_cond,
-               round(ins.dt / tot.t, 6) AS p_dst,
-               round((e.n::double / outs.st) / (ins.dt / tot.t), 6)
-                 AS lift
-        FROM edges e
-        JOIN outs ON outs.src = e.src
-        JOIN ins ON ins.dst = e.dst
-        CROSS JOIN tot
-        ORDER BY e.src, e.dst"""
 
     sql["daily_percentiles"] = """
         SELECT CAST(ts AS DATE) AS day, count(*)::bigint AS n,
@@ -10449,14 +9776,6 @@ def oracle_sql() -> dict[str, str]:
     # HLL sparse regime), where the op's output EQUALS the exact
     # method — so the exact oracle SQL applies verbatim (see the
     # q_* docstrings for the contracts).
-    sql["media_frame_plan"] = """
-        WITH m AS (SELECT range AS media_id,
-                          ((range % 5) + 1) * 1000 AS dur
-                   FROM range(40) WHERE range % 3 = 0)
-        SELECT media_id,
-               unnest(generate_series(0, dur, 400))::int AS frame_ts_ms
-        FROM m ORDER BY media_id, frame_ts_ms"""
-
     sql["rolling_active_users_sketch"] = sql["rolling_active_users"]
     sql["quantile_normalize_equidepth"] = sql["quantile_normalize"]
 

@@ -1,5 +1,4 @@
-"""Sliding-window document chunking with character offsets — the
-RAG/embedding-prep counterpart of the packing operator (a training
+"""Sliding-window document chunking with character offsets (a training
 pipeline chunks long documents into overlapping windows before
 embedding or indexing them; retrieval needs the offsets to map a hit
 back into the source document). No reference counterpart (the
@@ -19,8 +18,7 @@ SCALE: pure generated-column work — ``sequence`` + ``posexplode`` +
 ``substr`` inside whole-stage codegen; map-only (zero shuffles, no
 UDF). Output size is input size × (1 + overlap/step) in characters;
 the explode multiplies rows before any downstream shuffle, so chunk
-first, shuffle after reduction (e.g. embed → drop text) — same
-contract as the packing operator.
+first, shuffle after reduction (e.g. embed → drop text).
 """
 
 from __future__ import annotations

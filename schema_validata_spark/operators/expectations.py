@@ -120,24 +120,11 @@ def conditional_violations(df: DataFrame, rules: list[ConditionalRule],
     if refd is not None:
         needed = set(refd) | set(key_cols)
         df = df.select(*[qcol(c) for c in df.columns if c in needed])
-    structs = [
-        F.when(conditional_violation_expr(r), F.struct(
-            F.lit(f"{CONDITIONAL_ERROR_PREFIX} {r.name}").alias("error_type"),
-            F.lit(r.name).alias("column_name"),
-            F.lit(r.then_sql).alias("error_value"),
-        ))
-        for r in rules
-    ]
-    arr = F.filter(F.array(*structs), lambda x: x.isNotNull())
-    hits = (df.withColumn("__cv", arr)
-              .where(F.size("__cv") > 0)
-              .select(*[qcol(k) for k in key_cols],
-                      F.explode("__cv").alias("v")))
+    from .violations import row_check_hits
+    hits = row_check_hits(df, [], [qcol(k) for k in key_cols], rules)
     return hits.select(
         *[qcol(k) for k in key_cols],
-        F.col("v.error_type").alias("error_type"),
-        F.col("v.column_name").alias("column_name"),
-        F.col("v.error_value").alias("error_value"),
+        "error_type", "column_name", "error_value",
         F.lit(None).cast("string").alias("lookup_column"),
         F.lit(None).cast("string").alias("lookup_value"))
 

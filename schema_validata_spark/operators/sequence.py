@@ -1102,9 +1102,8 @@ def transition_latency(df: DataFrame, part_col: str,
 def turn_count_histogram(df: DataFrame, part_col: str) -> DataFrame:
     """Conversation-size histogram on power-of-two buckets: how many
     conversations have 1, 2–3, 4–7, … turns, and what share of the
-    ROW mass each band carries — the packing/padding planner's input
-    (``padding_waste`` scores a chosen max_len; this says what the
-    length distribution IS), and the mega-conversation skew summary
+    ROW mass each band carries — what the length distribution IS
+    before a max_len is chosen, and the mega-conversation skew summary
     at a glance.
 
     Output per band: bucket (=⌊log2 n⌋), min_turns, max_turns,
@@ -1480,8 +1479,7 @@ def label_entropy_per_key(df: DataFrame, part_col: str,
                           value_col: str) -> DataFrame:
     """Per-entity label entropy: how varied is each user's /
     conversation's behavior MIX (bits over its own label
-    distribution)? The per-key complement of the corpus-level
-    ``transition_entropy``: a scripted bot is low-entropy even when
+    distribution)? A scripted bot is low-entropy even when
     the corpus is diverse, and a key whose entropy jumps between
     snapshots changed behavior class. NULL keys are excluded; NULL
     labels count as a label (SQL grouping).

@@ -45,7 +45,8 @@ from ..functions.colref import qcol
 from ..functions.nulls import is_na_expr
 from ..functions.typing import safe_double
 from ..rules import Rules
-from .expectations import conditional_violation_expr
+from .expectations import (CONDITIONAL_ERROR_PREFIX,
+                           conditional_violation_expr)
 
 VIOLATION_FIELDS = ["error_type", "column_name", "error_value"]
 
@@ -236,6 +237,39 @@ def _display_str(df: DataFrame, col: str) -> Column:
     return c.cast("string")
 
 
+def row_check_hits(df: DataFrame, specs: list[CheckSpec],
+                   keep: list[Column], conditional=(),
+                   parity_nulls: bool = False) -> DataFrame:
+    """One row per (row, failed check): ``[*keep, error_type,
+    column_name, error_value]``. Every per-row ``specs`` check and every
+    ``conditional`` rule contributes one ``when(cond, struct)`` to an
+    array in a SINGLE projection; ``filter(size > 0) → explode`` lists
+    the hits. The shared listing shape of the batch violations, the
+    conditional-rule listing and the streaming twin, so all three render
+    ``error_value`` the same way (``_display_str``)."""
+    structs = []
+    for sp in specs:
+        cond, label = _check_condition(df, sp, parity_nulls)
+        val = _display_str(df, sp.column)
+        if parity_nulls and sp.check == "length":
+            val = F.coalesce(qcol(sp.column).cast("string"), F.lit("nan"))
+        structs.append(F.when(cond, F.struct(
+            F.lit(label).alias("error_type"),
+            F.lit(sp.column).alias("column_name"),
+            val.alias("error_value"))))
+    for cr in conditional:
+        structs.append(F.when(conditional_violation_expr(cr), F.struct(
+            F.lit(f"{CONDITIONAL_ERROR_PREFIX} {cr.name}")
+             .alias("error_type"),
+            F.lit(cr.name).alias("column_name"),
+            F.lit(cr.then_sql).alias("error_value"))))
+    arr = F.filter(F.array(*structs), lambda x: x.isNotNull())
+    hits = (df.withColumn("__v", arr)
+              .where(F.size("__v") > 0)
+              .select(*keep, F.explode("__v").alias("v")))
+    return hits.select(*[qcol(c) for c in hits.columns[:-1]], "v.*")
+
+
 def value_errors_df(df: DataFrame, specs: list[CheckSpec],
                     key_cols: list[str],
                     lookup_col: str | None = None,
@@ -264,31 +298,15 @@ def value_errors_df(df: DataFrame, specs: list[CheckSpec],
 
     out_frames = []
     if row_specs:
-        structs = []
-        for sp in row_specs:
-            cond, label = _check_condition(base, sp, parity_nulls)
-            val = _display_str(base, sp.column)
-            if parity_nulls and sp.check == "length":
-                val = F.coalesce(qcol(sp.column).cast("string"),
-                                 F.lit("nan"))
-            structs.append(F.when(cond, F.struct(
-                F.lit(label).alias("error_type"),
-                F.lit(sp.column).alias("column_name"),
-                val.alias("error_value"),
-            )))
-        arr = F.filter(F.array(*structs), lambda x: x.isNotNull())
-        hits = (base
-                .withColumn("__v", arr)
-                .where(F.size("__v") > 0)
-                .select(*[qcol(k) for k in key_cols],
-                        *( [qcol(lookup_col).cast("string").alias("__lk")]
-                           if lookup_col else [F.lit(None).cast("string").alias("__lk")]),
-                        F.explode("__v").alias("v")))
+        lk = (qcol(lookup_col).cast("string") if lookup_col
+              else F.lit(None).cast("string"))
+        hits = row_check_hits(base, row_specs,
+                              [*[qcol(k) for k in key_cols],
+                               lk.alias("__lk")],
+                              parity_nulls=parity_nulls)
         out_frames.append(hits.select(
             *[qcol(k) for k in key_cols],
-            F.col("v.error_type").alias("error_type"),
-            F.col("v.column_name").alias("column_name"),
-            F.col("v.error_value").alias("error_value"),
+            "error_type", "column_name", "error_value",
             F.lit(lookup_col).cast("string").alias("lookup_column"),
             F.col("__lk").alias("lookup_value")))
 
@@ -370,8 +388,6 @@ def quarantine(df: DataFrame, rules: Rules,
         cond, label = _check_condition(df, sp)
         reasons.append(F.when(cond, F.lit(label)))
     for cr in getattr(rules, "conditional", None) or []:
-        from .expectations import (CONDITIONAL_ERROR_PREFIX,
-                                   conditional_violation_expr)
         reasons.append(F.when(conditional_violation_expr(cr),
                               F.lit(f"{CONDITIONAL_ERROR_PREFIX} {cr.name}")))
     if not reasons:

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.colref import qcol
-from ..operators.violations import (_check_condition, rule_specs,
+from ..operators.violations import (row_check_hits, rule_specs,
                                     verdict_count_aggs, verdict_stack)
 from ..rules import Rules
 
@@ -36,29 +36,9 @@ def stream_validate(stream_df: DataFrame, rules: Rules,
     layer, so each micro-batch does one pass. ``rules.conditional``
     (cross-column IF/THEN rules) ride the same projection — their
     predicates are pure Column expressions too."""
-    specs = rule_specs(stream_df, rules)
-    structs = []
-    for sp in specs:
-        cond, label = _check_condition(stream_df, sp)
-        structs.append(F.when(cond, F.struct(
-            F.lit(label).alias("error_type"),
-            F.lit(sp.column).alias("column_name"),
-            qcol(sp.column).cast("string").alias("error_value"))))
-    for cr in getattr(rules, "conditional", None) or []:
-        from ..operators.expectations import (CONDITIONAL_ERROR_PREFIX,
-                                              conditional_violation_expr)
-        structs.append(F.when(conditional_violation_expr(cr), F.struct(
-            F.lit(f"{CONDITIONAL_ERROR_PREFIX} {cr.name}").alias("error_type"),
-            F.lit(cr.name).alias("column_name"),
-            F.lit(cr.then_sql).alias("error_value"))))
-    arr = F.filter(F.array(*structs), lambda x: x.isNotNull())
-    return (stream_df
-            .withColumn("__v", arr)
-            .where(F.size("__v") > 0)
-            .select(*[qcol(k) for k in key_cols],
-                    F.explode("__v").alias("v"))
-            .select(*[qcol(k) for k in key_cols],
-                    "v.error_type", "v.column_name", "v.error_value"))
+    return row_check_hits(stream_df, rule_specs(stream_df, rules),
+                          [qcol(k) for k in key_cols],
+                          getattr(rules, "conditional", None) or [])
 
 
 MONO_OUT_SCHEMA = ("conv_id string, turn_idx int, ts timestamp, "

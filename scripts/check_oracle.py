@@ -4,6 +4,7 @@ the same sf dir, compare row count, sorted column names, and an
 order-insensitive multiset of row values.
 
 Usage: python scripts/check_oracle.py [sf_dir] [query ...]
+A query name that is not in ``queries()`` exits 1 before anything runs.
 """
 
 from __future__ import annotations
@@ -65,6 +66,10 @@ def main():
     else:
         sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
         only = set(argv[1:])
+    qs = entrymod.queries()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        sys.exit(f"unknown query names: {', '.join(unknown)}")
 
     from pyspark.sql import SparkSession
     spark = (SparkSession.builder.master("local[8]")
@@ -80,7 +85,6 @@ def main():
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM "
                 f"'{sf_dir}/{t}.parquet'")
 
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
     for name, fn in qs.items():

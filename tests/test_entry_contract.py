@@ -47,6 +47,12 @@ ROWS_ONLY = sorted(set(entrymod.queries()) - set(entrymod.oracle_sql())
                    - SLOW_ROWS_ONLY)
 
 
+def test_every_oracle_has_a_query():
+    """ORACLED is an intersection, so an oracle left behind by a deleted
+    query would otherwise be skipped without a word."""
+    assert set(entrymod.oracle_sql()) <= set(entrymod.queries())
+
+
 @pytest.mark.parametrize("name", ORACLED)
 def test_query_matches_oracle(spark, sf_dir, con, name):
     df = entrymod.queries()[name](spark, sf_dir)

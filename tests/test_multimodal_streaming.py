@@ -1,144 +1,12 @@
-"""Multimodal plumbing (stubbed decode, real Spark mechanics) and
-Structured-Streaming validation parity."""
+"""Structured-Streaming validation parity: row checks, windowed
+verdicts, watermark dedup, drift and sketch summaries."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from schema_validata_spark.datagen import gen_transcripts, transcript_rules
-from schema_validata_spark.operators.multimodal import (decode_image_batch,
-                                                        extract_features,
-                                                        frame_sample_plan,
-                                                        gen_media)
 from schema_validata_spark.streaming import (stream_partition_verdicts,
                                              stream_validate)
-
-
-def test_media_schema_and_features(spark):
-    m = gen_media(spark, 50)
-    feats = extract_features(m, fake_decode=True).collect()
-    assert len(feats) == 50
-    ok = [r for r in feats if r["error"] is None]
-    assert len(ok) == 50
-    assert all(len(r["feature"]) == 8 for r in ok)
-    assert all(abs(sum(r["feature"]) - 1.0) < 1e-5 for r in ok)
-    # deterministic: same media_id → same feature
-    again = extract_features(gen_media(spark, 50), fake_decode=True).collect()
-    assert {r["media_id"]: r["feature"] for r in feats} == \
-        {r["media_id"]: r["feature"] for r in again}
-
-
-def _encode_png(width, height, pixels, color_type=2, filters=None):
-    """Minimal PNG encoder for test fixtures (filters per row, default
-    all-0/None) — independent of the decoder under test."""
-    import struct
-    import zlib
-    channels = {0: 1, 2: 3, 4: 2, 6: 4}[color_type]
-    filters = filters or [0] * height
-    raw = bytearray()
-    prev = [0] * (width * channels)
-    for y in range(height):
-        row = [pixels[y][x][c] if channels > 1 else pixels[y][x]
-               for x in range(width) for c in range(channels)] \
-            if channels > 1 else [pixels[y][x] for x in range(width)]
-        ft = filters[y]
-        raw.append(ft)
-        bpp = channels
-        if ft == 0:
-            raw += bytes(row)
-        elif ft == 1:      # Sub
-            raw += bytes((row[i] - (row[i - bpp] if i >= bpp else 0)) & 0xFF
-                         for i in range(len(row)))
-        elif ft == 2:      # Up
-            raw += bytes((row[i] - prev[i]) & 0xFF for i in range(len(row)))
-        elif ft == 3:      # Average
-            raw += bytes((row[i] - (((row[i - bpp] if i >= bpp else 0)
-                                     + prev[i]) >> 1)) & 0xFF
-                         for i in range(len(row)))
-        elif ft == 4:      # Paeth
-            def paeth(a, b, c):
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                return a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-            raw += bytes((row[i] - paeth(row[i - bpp] if i >= bpp else 0,
-                                         prev[i],
-                                         prev[i - bpp] if i >= bpp else 0))
-                         & 0xFF for i in range(len(row)))
-        prev = row
-
-    def chunk(ctype, body):
-        return (struct.pack(">I", len(body)) + ctype + body
-                + struct.pack(">I", zlib.crc32(ctype + body) & 0xFFFFFFFF))
-
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, color_type, 0, 0, 0)
-    return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(bytes(raw)))
-            + chunk(b"IEND", b""))
-
-
-def test_png_decode_real():
-    """Stdlib PNG decode (VERDICT r2 #4): dims/depth/channels + channel
-    means, across all five scanline filter types."""
-    # 2×2 RGB: known means R=(10+30+50+70)/4=40, G=80, B=120
-    px = [[(10, 60, 100), (30, 70, 110)], [(50, 90, 130), (70, 100, 140)]]
-    for filters in ([0, 0], [1, 2], [3, 4]):
-        blob = _encode_png(2, 2, px, color_type=2, filters=filters)
-        (feat, err), = decode_image_batch([blob], fake=False)
-        assert err is None, (filters, err)
-        assert feat[:4] == [2.0, 2.0, 8.0, 3.0]
-        assert abs(feat[4] - 40 / 255) < 1e-6
-        assert abs(feat[5] - 80 / 255) < 1e-6
-        assert abs(feat[6] - 120 / 255) < 1e-6
-        assert feat[7] == 0.0                   # no alpha channel
-    # grayscale
-    g = _encode_png(3, 1, [[0, 128, 255]], color_type=0)
-    (feat, err), = decode_image_batch([g], fake=False)
-    assert err is None and feat[:4] == [3.0, 1.0, 8.0, 1.0]
-    assert abs(feat[4] - (383 / 3) / 255) < 1e-6
-
-
-def test_png_decode_poison_blobs():
-    """Poison blobs land in the error slot, never raise: non-PNG,
-    CRC-corrupted, and truncated payloads."""
-    good = _encode_png(2, 2, [[(1, 2, 3), (4, 5, 6)],
-                              [(7, 8, 9), (10, 11, 12)]])
-    corrupt = bytearray(good)
-    corrupt[-17] ^= 0xFF                        # flip a byte inside IDAT
-    got = decode_image_batch(
-        [b"x", None, bytes(corrupt), good[:20], good], fake=False)
-    assert got[0][0] is None and "unsupported format" in got[0][1]
-    assert got[1] == (None, "null payload")
-    assert got[2][0] is None and "corrupt PNG" in got[2][1]
-    assert got[3][0] is None and "corrupt PNG" in got[3][1]
-    assert got[4][1] is None and got[4][0][:2] == [2.0, 2.0]
-
-
-def test_real_decode_path_channels_errors(spark):
-    """fake_decode=False must not kill the job: non-PNG blobs land in
-    the error column (poison-blob resilience), PNG blobs decode — in the
-    same Spark pass."""
-    m = gen_media(spark, 5)
-    rows = extract_features(m, fake_decode=False).collect()
-    assert len(rows) == 5
-    assert all(r["error"] and "unsupported format" in r["error"]
-               for r in rows)                   # gen_media blobs aren't PNG
-    assert all(r["feature"] is None for r in rows)
-    # a real PNG through the same mapInPandas path decodes
-    blob = _encode_png(4, 2, [[(i * 10, 0, 255) for i in range(4)]] * 2)
-    png_df = spark.createDataFrame(
-        [(99, "image", "image/png", 4, 2, 0, bytearray(blob))],
-        gen_media(spark, 1).schema)
-    row, = extract_features(png_df, fake_decode=False).collect()
-    assert row["error"] is None
-    assert row["feature"][:4] == [4.0, 2.0, 8.0, 3.0]
-
-
-def test_frame_sample_plan(spark):
-    m = gen_media(spark, 30)
-    plan = frame_sample_plan(m, every_ms=500)
-    rows = plan.collect()
-    vids = m.where("kind = 'video'").count()
-    assert len(rows) == vids * 3  # 0, 500, 1000
-    assert set(r["frame_ts_ms"] for r in rows) == {0, 500, 1000}
 
 
 def test_stream_validate_matches_batch(spark, tmp_path):
@@ -159,6 +27,24 @@ def test_stream_validate_matches_batch(spark, tmp_path):
     batch = stream_validate(spark.read.parquet(src), rules,
                             ["conv_id", "turn_idx"]).count()
     assert got == batch > 0
+
+
+def test_stream_validate_error_value_matches_batch(spark):
+    """Both listings render error_value through the same display cast:
+    a whole-number double lists as '150' on the batch AND the
+    streaming path (the streaming twin used to list '150.0')."""
+    from schema_validata_spark import FieldRule, Rules, validate
+    df = spark.createDataFrame([(1, 150.0), (2, 2.5), (3, 50.0)],
+                               "k int, x double")
+    rules = Rules("R", fields=[FieldRule("x", range_max=100,
+                                         range_min=2.9)])
+    cols = ["k", "error_type", "column_name", "error_value"]
+    batch = validate(spark, df, rules, key_cols=["k"],
+                     ignore_errors=[]).violations.select(*cols)
+    stream = stream_validate(df, rules, ["k"]).select(*cols)
+    got = sorted(tuple(r) for r in stream.collect())
+    assert got == sorted(tuple(r) for r in batch.collect())
+    assert [r[3] for r in got] == ["150", "2.5"]
 
 
 def test_stream_windowed_verdicts(spark, tmp_path):
@@ -315,69 +201,6 @@ def test_stream_drift_empty_baseline_raises(spark):
     import pytest as pt
     with pt.raises(ValueError):
         stream_drift_scores(df, "v", empty, 0.0, 1.0)
-
-
-def _encode_wav(rate=8000, channels=1, bits=16, samples=None):
-    """Minimal PCM WAV encoder for tests (stdlib struct only)."""
-    import struct
-    if samples is None:
-        samples = [0, 8000, -8000, 16000, -16000, 0]
-    if bits == 16:
-        pcm = b"".join(struct.pack("<h", s) for s in samples)
-    else:
-        pcm = bytes((s + 128) & 0xFF for s in samples)
-    block = channels * bits // 8
-    fmt = struct.pack("<HHIIHH", 1, channels, rate, rate * block,
-                      block, bits)
-    chunks = b"fmt " + struct.pack("<I", len(fmt)) + fmt \
-        + b"data" + struct.pack("<I", len(pcm)) + pcm
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-
-
-def test_decode_wav_real_path(spark):
-    from schema_validata_spark.operators.multimodal import (decode_wav,
-                                                            extract_features,
-                                                            gen_media)
-    import math
-    blob = _encode_wav(rate=8000, samples=[0, 16384, -16384, 0])
-    feat = decode_wav(blob)
-    rate, ch, bits, n, dur, rms, peak = feat[:7]
-    assert (rate, ch, bits, n) == (8000.0, 1.0, 16.0, 4.0)
-    assert abs(dur - 4 / 8000) < 1e-9
-    assert abs(peak - 0.5) < 1e-3
-    assert abs(rms - math.sqrt(2 * 0.5 ** 2 / 4)) < 1e-3
-    # through the mapInPandas path alongside non-WAV blobs
-    m = gen_media(spark, 3)
-    wav_df = spark.createDataFrame(
-        [(42, "audio", "audio/wav", 0, 0, 500, bytearray(blob))],
-        gen_media(spark, 1).schema)
-    rows = extract_features(m.unionByName(wav_df),
-                            fake_decode=False).collect()
-    by_id = {r.media_id: r for r in rows}
-    assert by_id[42].error is None
-    assert by_id[42].feature[:4] == [8000.0, 1.0, 16.0, 4.0]
-    assert all(r.error is not None for i, r in by_id.items() if i != 42)
-
-
-def test_decode_wav_poison_blobs(spark):
-    import pytest as pt
-    from schema_validata_spark.operators.multimodal import (
-        decode_image_batch, decode_wav)
-    good = _encode_wav()
-    # truncated data chunk / non-PCM format / empty data
-    with pt.raises(ValueError):
-        decode_wav(good[:-3])
-    import struct
-    nonpcm = bytearray(good)
-    nonpcm[20:22] = struct.pack("<H", 3)       # IEEE float format
-    with pt.raises(ValueError):
-        decode_wav(bytes(nonpcm))
-    # batch path: errors routed, never raised
-    out = decode_image_batch([good, good[:-3], bytes(nonpcm), None])
-    assert out[0][1] is None and out[0][0][0] == 8000.0
-    assert "corrupt WAV" in out[1][1]
-    assert "corrupt WAV" in out[2][1]
-    assert out[3][1] == "null payload"
 
 
 def test_stream_distinct_estimates_windows_and_merge(spark, tmp_path):

@@ -1,138 +1,11 @@
-"""Unit tests for sequence packing, boilerplate detection, FD audit,
-and within-group percentile calibration (round-3 pipeline operators)."""
+"""Unit tests for the FD audit, within-group percentile calibration
+and mixture sampling (round-3 pipeline operators)."""
 
 import pytest
 from pyspark.sql import Row, functions as F
 
-from schema_validata_spark.operators.boilerplate import (boilerplate_ngrams,
-                                                         boilerplate_ratio)
 from schema_validata_spark.operators.integrity import fd_check
-from schema_validata_spark.operators.packing import (pack_sequences,
-                                                     shard_stats)
 from schema_validata_spark.operators.selection import group_percent_rank
-
-
-# ---------------------------------------------------------------- packing
-
-def _docs(spark, toks, group="g"):
-    return spark.createDataFrame(
-        [Row(doc_id=i, grp=group, tok=t) for i, t in enumerate(toks)])
-
-
-def test_pack_cumsum_binning(spark):
-    # budget 10; tokens 4,4,4,4 -> starts at 0,4,8,12 -> shards 0,0,0,1
-    out = pack_sequences(_docs(spark, [4, 4, 4, 4]), "doc_id", "tok",
-                         10, group_col="grp")
-    got = {r.doc_id: r.shard_idx for r in out.collect()}
-    assert got == {0: 0, 1: 0, 2: 0, 3: 1}
-
-
-def test_pack_oversized_doc_gets_own_bins(spark):
-    # a 25-token doc under budget 10 starts shard 0; next doc starts
-    # at offset 25 -> shard 2 (bins 0-1 swallowed by the big doc)
-    out = pack_sequences(_docs(spark, [25, 3]), "doc_id", "tok", 10,
-                         group_col="grp")
-    got = {r.doc_id: r.shard_idx for r in out.collect()}
-    assert got == {0: 0, 1: 2}
-
-
-def test_pack_null_and_negative_tokens_clamped(spark):
-    df = spark.createDataFrame(
-        [Row(doc_id=0, grp="g", tok=None),
-         Row(doc_id=1, grp="g", tok=-7),
-         Row(doc_id=2, grp="g", tok=5)])
-    out = pack_sequences(df, "doc_id", "tok", 10, group_col="grp")
-    got = {r.doc_id: r.shard_idx for r in out.collect()}
-    # NULL/negative occupy no budget but stay in the output
-    assert got == {0: 0, 1: 0, 2: 0}
-
-
-def test_pack_deterministic_across_partitionings(spark):
-    df = _docs(spark, list(range(1, 40)))
-    a = pack_sequences(df.repartition(1), "doc_id", "tok", 50,
-                       group_col="grp").collect()
-    b = pack_sequences(df.repartition(7, "doc_id"), "doc_id", "tok", 50,
-                       group_col="grp").collect()
-    assert sorted((r.doc_id, r.shard_idx) for r in a) \
-        == sorted((r.doc_id, r.shard_idx) for r in b)
-
-
-def test_pack_global_when_no_group(spark):
-    out = pack_sequences(_docs(spark, [6, 6, 6]), "doc_id", "tok", 10,
-                         allow_global_order=True)
-    got = {r.doc_id: r.shard_idx for r in out.collect()}
-    assert got == {0: 0, 1: 0, 2: 1}
-
-
-def test_pack_ungrouped_requires_explicit_opt_in(spark):
-    """VERDICT r4 #3: the single-reducer global window is opt-in."""
-    with pytest.raises(ValueError, match="allow_global_order"):
-        pack_sequences(_docs(spark, [6, 6, 6]), "doc_id", "tok", 10)
-
-
-def test_pack_rejects_bad_budget(spark):
-    with pytest.raises(ValueError):
-        pack_sequences(_docs(spark, [1]), "doc_id", "tok", 0)
-
-
-def test_shard_stats_mass_conserved(spark):
-    df = _docs(spark, [4, 4, 4, 4])
-    stats = shard_stats(df, "doc_id", "tok", 10, "grp").collect()
-    assert sum(r.token_mass for r in stats) == 16
-    assert sum(r.n_docs for r in stats) == 4
-
-
-# ------------------------------------------------------------ boilerplate
-
-def _corpus(spark):
-    boiler = "all rights reserved"
-    rows = [Row(doc_id=i, text=f"unique{i} second{i} third{i} {boiler}")
-            for i in range(5)]
-    rows.append(Row(doc_id=5, text="totally fresh content stream"))
-    rows.append(Row(doc_id=6, text="too short"))       # < 3 words
-    rows.append(Row(doc_id=7, text=None))
-    rows.append(Row(doc_id=8, text="   "))
-    return spark.createDataFrame(rows)
-
-
-def test_boilerplate_ngrams_finds_frequent(spark):
-    out = boilerplate_ngrams(_corpus(spark), "text", "doc_id",
-                             n=3, min_docs=5).collect()
-    grams = {r.ngram: r.n_docs for r in out}
-    assert grams == {"all rights reserved": 5}
-
-
-def test_boilerplate_ngrams_counts_docs_not_occurrences(spark):
-    # one doc repeating a gram 10x counts once
-    rows = [Row(doc_id=0, text=" ".join(["spam ham eggs"] * 10)),
-            Row(doc_id=1, text="spam ham eggs only once")]
-    out = boilerplate_ngrams(spark.createDataFrame(rows), "text",
-                             "doc_id", n=3, min_docs=2).collect()
-    got = {r.ngram: r.n_docs for r in out}
-    assert got["spam ham eggs"] == 2
-
-
-def test_boilerplate_ratio_scores_and_nulls(spark):
-    out = boilerplate_ratio(_corpus(spark), "text", "doc_id",
-                            n=3, min_docs=5).collect()
-    by_id = {r.doc_id: r for r in out}
-    # every doc appears exactly once, including gram-less ones
-    assert set(by_id) == set(range(9))
-    # "uniqueI secondI thirdI all rights reserved": 4 grams, 1 frequent
-    assert by_id[0].n_ngrams == 4 and by_id[0].n_boiler == 1
-    assert by_id[0].boiler_ratio == 0.25
-    assert by_id[5].n_boiler == 0
-    for i in (6, 7, 8):   # short / NULL / blank -> no grams, NULL ratio
-        assert by_id[i].n_ngrams == 0
-        assert by_id[i].boiler_ratio is None
-
-
-def test_boilerplate_ratio_accepts_precomputed_frequent(spark):
-    df = _corpus(spark)
-    freq = boilerplate_ngrams(df, "text", "doc_id", n=3, min_docs=5)
-    out = boilerplate_ratio(df, "text", "doc_id", n=3,
-                            frequent=freq).collect()
-    assert {r.doc_id: r.n_boiler for r in out}[0] == 1
 
 
 # -------------------------------------------------------------- fd_check
@@ -228,57 +101,3 @@ def test_mixture_sample_validates_targets(spark):
         mixture_sample(df, "doc_id", "src", {})
     with pytest.raises(ValueError):
         mixture_sample(df, "doc_id", "src", {"a": 0.9, "b": 0.3})
-
-
-# ---------------------------------------------------------- padding_waste
-
-def test_padding_waste_buckets_and_exclusions(spark):
-    from schema_validata_spark.operators.packing import padding_waste
-    df = spark.createDataFrame(
-        [Row(i=0, tok=10), Row(i=1, tok=120), Row(i=2, tok=130),
-         Row(i=3, tok=None), Row(i=4, tok=-5)])
-    out = {r.bucket: r for r in padding_waste(df, "tok", 128).collect()}
-    assert set(out) == {0, 1}
-    b0 = out[0]
-    assert (b0.n_seqs, b0.token_mass, b0.padded_mass) == (2, 130, 256)
-    assert abs(b0.waste_ratio - (1.0 - 130.0 / 256.0)) < 1e-6
-    assert out[1].padded_mass == 256
-
-
-def test_padding_waste_rejects_bad_width(spark):
-    from schema_validata_spark.operators.packing import padding_waste
-    with pytest.raises(ValueError):
-        padding_waste(spark.range(1), "id", 0)
-
-
-def test_template_openings(spark):
-    from schema_validata_spark.operators.boilerplate import (
-        template_openings)
-    rows = [
-        (1, "Thank you for your ORDER today friend"),
-        (2, "thank  you FOR your order yesterday pal"),   # same 5-prefix
-        (3, "completely different text here entirely now"),
-        (4, None), (5, ""),
-        (6, "short one"), (7, "short one"),               # < k tokens: whole text
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r["prefix"]: r
-           for r in template_openings(df, "text", "doc_id",
-                                      k_tokens=5, min_docs=2).collect()}
-    assert got["thank you for your order"]["n_docs"] == 2
-    assert got["thank you for your order"]["example_id"] == 1
-    assert got["short one"]["n_docs"] == 2
-    assert len(got) == 2  # the unique doc and empty/NULL never group
-
-
-def test_template_openings_bounded_key(spark):
-    """A pathological single 'token' longer than max_chars is clipped,
-    so the group key is bounded."""
-    from schema_validata_spark.operators.boilerplate import (
-        template_openings)
-    big = "x" * 10_000
-    df = spark.createDataFrame([(1, big), (2, big)],
-                               "doc_id long, text string")
-    got = template_openings(df, "text", "doc_id", k_tokens=3,
-                            min_docs=2, max_chars=64).collect()
-    assert len(got) == 1 and len(got[0]["prefix"]) == 64

@@ -134,49 +134,6 @@ def _tree(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_pack_shard_stats_single_exchange(spark, tmp_path):
-    """pack_sequences + per-shard agg must reuse the window's
-    hash-partitioning on the group key: the groupBy keys (group,
-    shard_idx) are clustered by the window's Exchange on group alone,
-    so the whole shard_stats plan carries exactly ONE shuffle."""
-    from schema_validata_spark.operators.packing import shard_stats
-    src = str(tmp_path / "docs")
-    spark.range(10_000).select(
-        F.col("id").alias("doc_id"),
-        (F.col("id") % 16).cast("string").alias("source"),
-        (F.col("id") % 700 + 1).alias("n_chars")) \
-        .write.parquet(src)
-    stats = shard_stats(spark.read.parquet(src), "doc_id", "n_chars",
-                        4096, group_col="source")
-    plan = _tree(stats)
-    n_exchanges = plan.count("Exchange hashpartitioning")
-    assert n_exchanges == 1, plan
-
-
-def test_boilerplate_expansion_is_map_side(spark, tmp_path):
-    """boilerplate_ngrams must expand + dedup n-grams inside the scan
-    stage, never shuffle raw text: below the first Exchange (later in
-    the root-first tree string) sit the Generate AND a partial
-    aggregate, so the shuffle carries (ngram-hash, count) pairs; no
-    global Sort anywhere."""
-    from schema_validata_spark.operators.boilerplate import \
-        boilerplate_ngrams
-    src = str(tmp_path / "bdocs")
-    spark.range(2_000).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("alpha beta gamma delta epsilon zeta doc"),
-                 F.col("id").cast("string")).alias("text")) \
-        .write.parquet(src)
-    freq = boilerplate_ngrams(spark.read.parquet(src), "text", "doc_id",
-                              n=3, min_docs=2)
-    plan = _tree(freq)
-    first_exchange = plan.index("Exchange hashpartitioning")
-    below = plan[first_exchange:]
-    assert "Generate" in below, plan
-    assert "partial" in below, plan
-    assert "Sort [" not in plan.split("Exchange")[0], plan
-
-
 def test_mixture_sample_no_row_shuffle(spark):
     """mixture_sample's corpus side must stay map-only: the only
     hash-partitioned exchanges belong to the tiny counts/rates frame
@@ -252,23 +209,6 @@ def test_role_conformance_one_shuffle(spark):
         if "Sort [" in line:
             assert ", false, 0" in line, line   # partition-local only
     assert "NestedLoop" not in plan and "Cartesian" not in plan, plan
-
-
-def test_context_budget_one_shuffle(spark):
-    """context_budget_stats shares the same single-exchange window+agg
-    shape as role_conformance."""
-    from schema_validata_spark.operators.packing import (
-        context_budget_stats)
-    df = spark.range(2_000).select(
-        (F.col("id") % 40).alias("conv"), F.col("id").alias("turn"),
-        (F.col("id") % 9).alias("tok"))
-    out = context_budget_stats(df, "conv", ["turn"], "tok", 20)
-    plan = _tree(out)
-    assert plan.count("Exchange") == 1, plan
-    for line in plan.splitlines():
-        if "Sort [" in line:
-            assert ", false, 0" in line, line
-    assert "NestedLoop" not in plan, plan
 
 
 def test_duplicate_conversations_two_hash_aggs_no_sort(spark):
@@ -391,23 +331,6 @@ def test_derived_mismatches_map_only(spark, tmp_path):
                              "n_chars", F.length("text").cast("bigint"))
     plan = _tree(out)
     assert "Exchange" not in plan, plan
-
-
-def test_template_openings_single_exchange(spark, tmp_path):
-    """template_openings: prefix assembles in the scan; ONE Exchange
-    (the groupBy on the bounded prefix key), no Generate/explode."""
-    from schema_validata_spark.operators.boilerplate import (
-        template_openings)
-    src = str(tmp_path / "docs")
-    spark.range(5_000).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("opening words here body "), F.col("id"))
-         .alias("text")).write.parquet(src)
-    out = template_openings(spark.read.parquet(src), "text", "doc_id",
-                            k_tokens=3, min_docs=2)
-    plan = _tree(out)
-    assert plan.count("Exchange") == 1, plan
-    assert "Generate" not in plan, plan
 
 
 def test_bucketed_incremental_dedup_zero_shuffle(spark, tmp_path):

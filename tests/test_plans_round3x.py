@@ -25,12 +25,6 @@ def docs(spark):
         "/root/testdata/sf0.001/documents.parquet")
 
 
-def _edges(ev):
-    from schema_validata_spark.operators.graphs import transition_edges
-    return transition_edges(ev, "user_id", ["ts", "event_id"],
-                            "event_type")
-
-
 def test_reliability_and_ece_plans(ev):
     from schema_validata_spark.operators.statqa import (
         expected_calibration_error, reliability_bins)
@@ -49,19 +43,6 @@ def test_daily_percentiles_plan(ev):
     from schema_validata_spark.plans import assert_scalable
     assert_scalable(daily_value_percentiles(ev, "ts", "value"),
                     max_exchanges=2)
-
-
-def test_transition_metric_plans(ev):
-    from schema_validata_spark.operators.graphs import (degree_profile,
-                                                        transition_entropy,
-                                                        transition_lift)
-    from schema_validata_spark.plans import assert_scalable
-    e = _edges(ev)
-    # label-graph metrics: everything after the one row-level window
-    # runs on alphabet-sized frames; the total broadcasts print as BNLJ
-    assert_scalable(degree_profile(e), allow_nested_loop=True)
-    assert_scalable(transition_entropy(e), allow_nested_loop=True)
-    assert_scalable(transition_lift(e), allow_nested_loop=True)
 
 
 def test_readability_and_mixture_plans(docs):

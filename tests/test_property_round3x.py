@@ -114,42 +114,3 @@ def test_quality_calibration_matches_python_percent_rank(spark, data):
         assert r["ks_stat"] == pytest.approx(
             max(abs(s - gl) for s, gl in zip(sp, gps)), abs=1e-5)
         assert -0.5 <= r["calibration_gap"] <= 0.5
-
-
-# ------------------------------------------------------ graph sanity
-
-@settings(max_examples=5, deadline=None,
-          suppress_health_check=list(HealthCheck))
-@given(edges=st.lists(
-    st.tuples(st.sampled_from("abcde"), st.sampled_from("abcde"),
-              st.integers(1, 9)),
-    min_size=1, max_size=15, unique_by=lambda t: (t[0], t[1])))
-def test_pagerank_is_a_distribution(spark, edges):
-    from schema_validata_spark.operators.graphs import pagerank
-    df = spark.createDataFrame(
-        [Row(src=a, dst=b, n=n) for a, b, n in edges],
-        "src string, dst string, n bigint")
-    got = pagerank(df, iterations=3).collect()
-    total = sum(r["pagerank"] for r in got)
-    assert total == pytest.approx(1.0, abs=1e-4)
-    assert all(r["pagerank"] > 0 for r in got)
-
-
-@settings(max_examples=5, deadline=None,
-          suppress_health_check=list(HealthCheck))
-@given(edges=st.lists(
-    st.tuples(st.sampled_from("abcdef"), st.sampled_from("abcdef")),
-    min_size=1, max_size=15, unique=True))
-def test_k_core_is_subgraph_with_min_degree(spark, edges):
-    from schema_validata_spark.operators.graphs import k_core
-    df = spark.createDataFrame(
-        [Row(src=a, dst=b, n=1) for a, b in edges],
-        "src string, dst string, n bigint")
-    core = sorted(r["node"] for r in k_core(df, k=2, peels=10).collect())
-    und = {frozenset((a, b)) for a, b in edges if a != b}
-    # defining property: inside the returned set, every node has >= 2
-    # neighbors also in the set
-    for v in core:
-        deg = sum(1 for e in und if v in e
-                  and next(iter(e - {v})) in core)
-        assert deg >= 2, (v, core, und)

@@ -1,11 +1,10 @@
 """Round-3d additions: FD violation listing, candidate-key discovery,
-dup-cluster-size histogram, per-slice quality trend, compression QA."""
+dup-cluster-size histogram, per-slice quality trend."""
 
 import datetime as dt
 
 import pytest
 
-from schema_validata_spark.operators.compression import compression_signals
 from schema_validata_spark.operators.dedup import dup_cluster_sizes
 from schema_validata_spark.operators.integrity import (candidate_keys,
                                                        fd_violations)
@@ -90,31 +89,6 @@ def test_quality_trend_exact_slope(spark):
     assert out["flat"]["overall_avg"] == pytest.approx(6.0)
 
 
-def test_compression_signals_verdicts(spark):
-    import random
-    rng = random.Random(7)
-    noisy = "".join(chr(rng.randrange(0x21, 0x7f)) for _ in range(4000))
-    df = spark.createDataFrame(
-        [(1, "ab" * 4000),   # highly repetitive
-         (2, noisy),         # high-entropy
-         (3, None),
-         (4, "")],
-        "doc_id bigint, text string")
-    out = {r["id"]: r for r in
-           compression_signals(df, "doc_id", "text",
-                               max_ratio=0.8).collect()}
-    assert out[1]["verdict"] == "too_repetitive"
-    assert out[1]["ratio"] < 0.05
-    assert out[2]["verdict"] == "suspicious_entropy"
-    assert out[3]["verdict"] == "missing"
-    assert out[3]["n_bytes"] is None
-    assert out[4]["verdict"] == "empty"
-    # determinism: zlib at a fixed level is stable across runs
-    again = {r["id"]: r["n_compressed"]
-             for r in compression_signals(df, "doc_id", "text").collect()}
-    assert again[1] == out[1]["n_compressed"]
-
-
 def _tree(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
@@ -151,23 +125,6 @@ def test_quality_trend_plan_shape(spark, tmp_path):
     plan = _tree(out)
     assert plan.count("Exchange") == 2, plan
     assert "Join" not in plan and "Window" not in plan, plan
-
-
-def test_compression_signals_map_only(spark, tmp_path):
-    """compression_signals is a map-only pandas-UDF pass: ZERO
-    Exchanges — the text column never shuffles."""
-    from pyspark.sql import functions as F
-    from schema_validata_spark.operators.compression import \
-        compression_signals
-    src = str(tmp_path / "cz")
-    spark.range(2_000).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("body "), F.col("id")).alias("text")) \
-        .write.parquet(src)
-    out = compression_signals(spark.read.parquet(src), "doc_id", "text")
-    plan = _tree(out)
-    assert "Exchange" not in plan, plan
-    assert "ArrowEvalPython" in plan or "Python" in plan, plan
 
 
 def test_mask_stability_flags_format_flip(spark):

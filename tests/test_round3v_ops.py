@@ -1,78 +1,10 @@
-"""Round-3 continuation batch: transition-graph metrics (degree /
-reciprocity / triangles), Theil-Sen robust volume trend, EWMA anomaly
-screen, corpus readability, cross-source score calibration."""
+"""Round-3 continuation batch: Theil-Sen robust volume trend, EWMA
+anomaly screen, corpus readability, cross-source score calibration."""
 
 import datetime as dt
 
 import pytest
 from pyspark.sql import Row, functions as F
-
-
-# ------------------------------------------------------------ graph metrics
-
-def _edges(spark, triples):
-    return spark.createDataFrame(
-        [Row(src=a, dst=b, n=n) for a, b, n in triples],
-        "src string, dst string, n bigint")
-
-
-def test_degree_profile_directions_and_self_loops(spark):
-    from schema_validata_spark.operators.graphs import degree_profile
-    e = _edges(spark, [("a", "b", 3), ("a", "c", 2), ("b", "a", 1),
-                       ("a", "a", 5)])
-    rows = {r["node"]: r for r in degree_profile(e).collect()}
-    assert rows["a"]["out_degree"] == 3          # b, c, a(self)
-    assert rows["a"]["in_degree"] == 2           # b, a(self)
-    assert rows["a"]["out_strength"] == 10       # 3+2+5
-    assert rows["a"]["in_strength"] == 6         # 1+5
-    assert rows["a"]["self_loops"] == 5
-    # c is sink-only: out side all zero via the full-outer coalesce
-    assert rows["c"]["out_degree"] == 0 and rows["c"]["in_degree"] == 1
-    assert rows["c"]["self_loops"] == 0
-
-
-def test_reciprocity_missing_reverse_edge(spark):
-    from schema_validata_spark.operators.graphs import graph_reciprocity
-    e = _edges(spark, [("a", "b", 4), ("b", "a", 4), ("a", "c", 7),
-                       ("a", "a", 9)])  # loop must be ignored
-    rows = {(r["node_a"], r["node_b"]): r
-            for r in graph_reciprocity(e).collect()}
-    assert set(rows) == {("a", "b"), ("a", "c")}
-    ab = rows[("a", "b")]
-    assert ab["reciprocal"] and ab["n_ab"] == 4 and ab["n_ba"] == 4
-    assert ab["imbalance"] == 0.0
-    ac = rows[("a", "c")]
-    assert not ac["reciprocal"] and ac["n_ba"] == 0
-    assert ac["imbalance"] == 1.0
-
-
-def test_triangles_four_clique(spark):
-    from schema_validata_spark.operators.graphs import graph_triangles
-    # K4 (directions/weights/loops must not matter): C(3,2)=3 per node
-    nodes = ["a", "b", "c", "d"]
-    e = _edges(spark, [(x, y, 1) for x in nodes for y in nodes if x != y]
-               + [("a", "a", 2)])
-    rows = {r["node"]: r["triangles"]
-            for r in graph_triangles(e).collect()}
-    assert rows == {"a": 3, "b": 3, "c": 3, "d": 3}
-
-
-def test_triangles_none_on_a_path(spark):
-    from schema_validata_spark.operators.graphs import graph_triangles
-    e = _edges(spark, [("a", "b", 1), ("b", "c", 1)])
-    assert graph_triangles(e).count() == 0
-
-
-def test_transition_edges_from_events(spark):
-    from schema_validata_spark.operators.graphs import transition_edges
-    df = spark.createDataFrame(
-        [Row(u=1, i=1, v="x"), Row(u=1, i=2, v="y"), Row(u=1, i=3, v="x"),
-         Row(u=2, i=1, v="y"), Row(u=2, i=2, v=None), Row(u=2, i=3, v="y")],
-        "u int, i int, v string")
-    rows = {(r["src"], r["dst"]): r["n"]
-            for r in transition_edges(df, "u", ["i"], "v").collect()}
-    # openers and NULL endpoints excluded; NULL-adjacent pairs dropped
-    assert rows == {("x", "y"): 1, ("y", "x"): 1}
 
 
 # ------------------------------------------------------------ theil-sen

@@ -1,100 +1,8 @@
-"""Round-3 continuation: iterative graph ops (fixed-iteration PageRank,
-k-core peeling, degree assortativity) and the file-layout skew profile."""
+"""Round-3 continuation: the file-layout skew profile and the
+statistical, text and curation QA operators that followed it."""
 
 import pytest
 from pyspark.sql import Row, functions as F
-
-
-def _edges(spark, triples):
-    return spark.createDataFrame(
-        [Row(src=a, dst=b, n=n) for a, b, n in triples],
-        "src string, dst string, n bigint")
-
-
-# ------------------------------------------------------------ pagerank
-
-def _ref_pagerank(edges, d=0.85, iters=5):
-    """Plain-Python replica of the documented update rule."""
-    nodes = sorted({a for a, _, _ in edges} | {b for _, b, _ in edges})
-    n = len(nodes)
-    wout = {}
-    for a, _, w in edges:
-        wout[a] = wout.get(a, 0.0) + float(w)
-    pr = {v: 1.0 / n for v in nodes}
-    for _ in range(iters):
-        contrib = {v: 0.0 for v in nodes}
-        for a, b, w in edges:
-            contrib[b] += pr[a] * float(w) / wout[a]
-        dangling = sum(pr[v] for v in nodes if v not in wout)
-        pr = {v: (1.0 - d) / n + d * (contrib[v] + dangling / n)
-              for v in nodes}
-    return pr
-
-
-def test_pagerank_matches_reference_iteration(spark):
-    from schema_validata_spark.operators.graphs import pagerank
-    triples = [("a", "b", 2), ("b", "a", 1), ("a", "c", 1),
-               ("c", "b", 3)]
-    got = {r["node"]: r["pagerank"]
-           for r in pagerank(_edges(spark, triples)).collect()}
-    want = _ref_pagerank(triples)
-    assert set(got) == set(want)
-    for v in want:
-        assert got[v] == pytest.approx(round(want[v], 6), abs=2e-6)
-    assert sum(got.values()) == pytest.approx(1.0, abs=1e-5)
-
-
-def test_pagerank_dangling_mass_redistributed(spark):
-    from schema_validata_spark.operators.graphs import pagerank
-    # b has no out-edges: its mass must be redistributed, total stays 1
-    got = {r["node"]: r["pagerank"]
-           for r in pagerank(_edges(spark, [("a", "b", 1)])).collect()}
-    assert sum(got.values()) == pytest.approx(1.0, abs=1e-5)
-    assert got["b"] > got["a"]      # sink accumulates
-    with pytest.raises(ValueError):
-        pagerank(_edges(spark, []), iterations=0)
-
-
-# ------------------------------------------------------------ k-core
-
-def test_k_core_path_peels_triangle_stays(spark):
-    from schema_validata_spark.operators.graphs import k_core
-    e = _edges(spark, [("1", "2", 1), ("2", "3", 1), ("4", "5", 1),
-                       ("5", "6", 1), ("4", "6", 1)])
-    assert sorted(r["node"] for r in k_core(e, k=2).collect()) \
-        == ["4", "5", "6"]
-    # k=1: every node with at least one non-loop edge survives
-    assert len(k_core(e, k=1).collect()) == 6
-    # k=3: triangle degrees are 2 -> everything peels
-    assert k_core(e, k=3).count() == 0
-
-
-def test_k_core_cascade_needs_multiple_peels(spark):
-    from schema_validata_spark.operators.graphs import k_core
-    # chain hanging off a triangle: c1-c2-c3 all peel, one per round
-    e = _edges(spark, [("a", "b", 1), ("b", "c", 1), ("a", "c", 1),
-                       ("c", "c1", 1), ("c1", "c2", 1), ("c2", "c3", 1)])
-    assert sorted(r["node"] for r in k_core(e, k=2).collect()) \
-        == ["a", "b", "c"]
-    with pytest.raises(ValueError):
-        k_core(e, k=0)
-
-
-# ------------------------------------------------------- assortativity
-
-def test_assortativity_star_is_minus_one(spark):
-    from schema_validata_spark.operators.graphs import assortativity
-    star = _edges(spark, [("hub", x, 1) for x in ("a", "b", "c", "d")])
-    r = assortativity(star).collect()[0]
-    assert (r["n_nodes"], r["n_edges"]) == (5, 4)
-    assert r["r"] == pytest.approx(-1.0)
-
-
-def test_assortativity_regular_graph_is_null(spark):
-    from schema_validata_spark.operators.graphs import assortativity
-    # triangle: all degrees 2 -> zero variance -> NULL, no ANSI error
-    tri = _edges(spark, [("a", "b", 1), ("b", "c", 1), ("c", "a", 1)])
-    assert assortativity(tri).collect()[0]["r"] is None
 
 
 # ------------------------------------------------------------ file skew
@@ -120,20 +28,6 @@ def test_file_skew_profile_empty_input(spark, tmp_path):
     r = file_skew_profile(spark.read.parquet(d)).collect()[0]
     # zero data rows: no per-file groups at all
     assert r["n_files"] == 0 and r["total_rows"] is None
-
-
-# --------------------------------------------------- transition entropy
-
-def test_transition_entropy_hand_case(spark):
-    from schema_validata_spark.operators.graphs import transition_entropy
-    e = _edges(spark, [("a", "b", 1), ("a", "c", 1), ("b", "b", 4)])
-    rows = {r["node"]: r for r in transition_entropy(e).collect()}
-    assert set(rows) == {"a", "b"}          # c has no out-edges
-    assert rows["a"]["h_out"] == pytest.approx(1.0)      # fair coin
-    assert rows["b"]["h_out"] == pytest.approx(0.0)      # deterministic
-    assert rows["a"]["traffic_share"] == pytest.approx(2 / 6, abs=1e-6)
-    total_rate = sum(r["rate_contribution"] for r in rows.values())
-    assert total_rate == pytest.approx(1.0 / 3, abs=1e-5)
 
 
 # ------------------------------------------------------- sampling table
@@ -377,24 +271,6 @@ def test_expected_calibration_error_rollup(spark):
     assert r["share_in_bad_bins"] == pytest.approx(0.5)
     assert expected_calibration_error(
         df.limit(0), "s", F.col("f")).count() == 0
-
-
-# ------------------------------------------------------ transition lift
-
-def test_transition_lift_cascade_detection(spark):
-    from schema_validata_spark.operators.graphs import transition_lift
-    # errors follow errors 3x their base destination rate
-    e = _edges(spark, [("err", "err", 6), ("err", "ok", 2),
-                       ("ok", "ok", 10), ("ok", "err", 2)])
-    out = {(r["src"], r["dst"]): r for r in
-           transition_lift(e).collect()}
-    ee = out[("err", "err")]
-    assert ee["p_cond"] == pytest.approx(0.75)
-    assert ee["p_dst"] == pytest.approx(0.4)
-    assert ee["lift"] == pytest.approx(0.75 / 0.4)
-    # min_count filter
-    from schema_validata_spark.operators.graphs import transition_lift as tl
-    assert len(tl(e, min_count=5).collect()) == 2
 
 
 # ------------------------------------------------- daily percentiles

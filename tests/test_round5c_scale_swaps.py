@@ -7,8 +7,6 @@ mode kwargs with equivalence/accuracy tests and plan guards.
 * rolling_active_users(method="sketch") — replaces the
   window_days × |user, day| exact expansion with per-day HLL sketches
   merged by hll_union_agg (the sketches.py contract).
-* pack_sequences ungrouped opt-in lives in
-  test_packing_boilerplate.py.
 """
 
 import pytest

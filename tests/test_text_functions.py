@@ -224,13 +224,11 @@ def test_long_doc_shingle_paths_are_linear(spark):
     from pyspark.sql import functions as F
     from schema_validata_spark.functions.text import (ngram_diversity,
                                                       shingles)
-    from schema_validata_spark.operators.boilerplate import _ngram_col
     doc = " ".join(f"w{i % 977}x{i % 31}" for i in range(400))
     df = spark.range(2000).select(F.lit("g").alias("src"),
                                   F.lit(doc).alias("text"))
     t0 = time.time()
     df.select(F.sum(F.size(shingles("text", 3)))).collect()
-    df.select(F.sum(F.size(_ngram_col("text", 3)))).collect()
     ngram_diversity(df, "text", "src").collect()
     assert time.time() - t0 < 20.0
 

@@ -1,14 +1,9 @@
 """Transcript-shape operators: role-transition conformance
-(operators/sequence.py:role_conformance), whole-conversation dedup
-(operators/dedup.py:duplicate_conversations) and the context-window
-truncation audit (operators/packing.py:context_budget_stats)."""
-
-import pytest
-from pyspark.sql import functions as F
+(operators/sequence.py:role_conformance) and whole-conversation dedup
+(operators/dedup.py:duplicate_conversations)."""
 
 from schema_validata_spark.operators.dedup import (
     conversation_fingerprints, duplicate_conversations)
-from schema_validata_spark.operators.packing import context_budget_stats
 from schema_validata_spark.operators.sequence import role_conformance
 
 TRANS = {("system", "user"), ("user", "assistant"),
@@ -111,48 +106,3 @@ def test_duplicate_conversations_partition_independent(spark):
                                    "text").collect()
     key = lambda r: r["example_conv"]
     assert sorted(one, key=key) == sorted(many, key=key)
-
-
-def _toks(spark, rows):
-    return spark.createDataFrame(rows, "conv string, turn int, tok int")
-
-
-def test_context_budget_truncation_point(spark):
-    df = _toks(spark, [
-        ("a", 1, 50), ("a", 2, 40), ("a", 3, 20), ("a", 4, 1),
-        ("b", 1, 30), ("b", 2, 30),
-    ])
-    got = {r["conv"]: r for r in
-           context_budget_stats(df, "conv", ["turn"], "tok",
-                                100).collect()}
-    a = got["a"]
-    assert (a["n_turns"], a["total_tokens"]) == (4, 111)
-    assert a["n_turns_within"] == 2          # 50, 90 fit; 110 breaks
-    assert a["first_over_order"] == 3
-    assert a["overflow_tokens"] == 11
-    b = got["b"]
-    assert b["n_turns_within"] == 2
-    assert b["first_over_order"] is None
-    assert b["overflow_tokens"] == 0
-
-
-def test_context_budget_null_and_negative_clamp(spark):
-    df = _toks(spark, [("a", 1, None), ("a", 2, -5), ("a", 3, 7)])
-    got = context_budget_stats(df, "conv", ["turn"], "tok", 10).collect()
-    r = got[0]
-    # NULL/negative occupy no budget but stay counted as turns
-    assert (r["n_turns"], r["total_tokens"]) == (3, 7)
-    assert r["n_turns_within"] == 3
-    assert r["first_over_order"] is None
-
-
-def test_context_budget_rejects_bad_budget(spark):
-    df = _toks(spark, [("a", 1, 1)])
-    with pytest.raises(ValueError):
-        context_budget_stats(df, "conv", ["turn"], "tok", 0)
-
-
-def test_context_budget_exact_boundary_fits(spark):
-    df = _toks(spark, [("a", 1, 10)])
-    r = context_budget_stats(df, "conv", ["turn"], "tok", 10).collect()[0]
-    assert r["n_turns_within"] == 1 and r["overflow_tokens"] == 0
