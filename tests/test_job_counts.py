@@ -1,5 +1,5 @@
-"""Spark job budget of validate() and profile(), and the Observation
-path that keeps it small.
+"""Spark job budget of validate(), profile() and validate_partitioned(),
+and the Observation path and single manifest read that keep it small.
 
 Global scalar aggregates (the wide profile aggregate, duplicate totals,
 the RI count, the datetime confirmation) land through one unnamed
@@ -198,3 +198,85 @@ def test_validate_datasets_concurrent_counts_stay_apart(spark, tables):
         assert counts["all"] > counts["half"] > 0
     finally:
         multi.unpersist()
+
+
+# --- validate_partitioned: one shuffle-free manifest read per run ------
+
+RUN_ID = "jobs"
+
+
+@pytest.fixture(scope="module")
+def partitioned(spark, tmp_path_factory):
+    """A ts_date-partitioned transcripts table and the manifest of a
+    cold validate_partitioned run over it."""
+    import shutil
+
+    from schema_validata_spark.validate import validate_partitioned
+    d = tmp_path_factory.mktemp("job_counts_partitioned")
+    gen_transcripts(spark, N_ROWS, seed=7).write.parquet(str(d / "t"))
+    gen_conversations(spark, N_ROWS, seed=7).write.parquet(str(d / "c"))
+    t, c = spark.read.parquet(str(d / "t")), spark.read.parquet(str(d / "c"))
+
+    def run(df, manifest):
+        return validate_partitioned(
+            spark, df, transcript_rules(), "ts_date", manifest,
+            run_id=RUN_ID, dims={"conversations": c}).collect()
+
+    cold = str(d / "cold")
+    run(t, cold)
+
+    def fresh_copy(name):
+        m = str(d / name)
+        shutil.copytree(cold, m)
+        return m
+
+    return t, run, cold, fresh_copy
+
+
+def test_manifest_reads_are_one_job_each(spark, partitioned):
+    """done_identities, metrics, completed and latest each read the
+    manifest in one job: the latest-row window runs on one partition,
+    so no shuffle is planned."""
+    from schema_validata_spark.manifest import Manifest
+    _, _, cold, _ = partitioned
+    m = Manifest(spark, cold)
+    for name in ("done_identities", "metrics", "completed", "latest"):
+        got, n = _count_jobs(spark, lambda: getattr(m, name)(RUN_ID))
+        assert n == 1, name
+        assert len(got) > 1
+
+
+def test_manifest_read_plans_no_exchange(spark, partitioned):
+    from schema_validata_spark.manifest import Manifest
+    _, _, cold, _ = partitioned
+    latest = Manifest(spark, cold)._latest_done(RUN_ID)
+    assert len(latest.collect()) > 1
+    plan = latest._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+
+
+def test_noop_rerun_runs_4_jobs(spark, partitioned):
+    """Nothing changed: manifest read 1, content fingerprints 2, result
+    collect 1."""
+    t, run, _, fresh_copy = partitioned
+    m = fresh_copy("noop")
+    rows_before = spark.read.parquet(m).count()
+    _, n = _count_jobs(spark, lambda: run(t, m))
+    assert n == 4
+    assert spark.read.parquet(m).count() == rows_before
+
+
+def test_resume_one_changed_partition_runs_12_jobs(spark, partitioned):
+    """One partition's content changed, so one batch: manifest read 1,
+    fingerprints 2, partition_verdicts 7, commit 1, result collect 1."""
+    t, run, _, fresh_copy = partitioned
+    key = F.col("ts_date").cast("string")
+    victim = sorted(str(r[0]) for r in t.select(key).distinct().collect())[0]
+    changed = t.withColumn("text", F.when(key == victim,
+                                          F.concat("text", F.lit("!")))
+                           .otherwise(F.col("text")))
+    m = fresh_copy("resume")
+    rows_before = spark.read.parquet(m).count()
+    _, n = _count_jobs(spark, lambda: run(changed, m))
+    assert n == 12
+    assert spark.read.parquet(m).count() == rows_before + 1
