@@ -40,7 +40,6 @@ value aggregate 3), independent of row and column count.
 
 from __future__ import annotations
 
-import math
 from typing import Any
 
 from pyspark.sql import DataFrame, functions as F
@@ -52,6 +51,7 @@ from ..functions.nulls import canonicalize_na, is_na_expr
 from ..functions.scalars import collect_scalars
 from ..functions.typing import (decide_logical_type, safe_bigint,
                                 safe_double, spark_type_to_logical)
+from .verdicts import downcast_ints
 
 _PROBES = ["nonnull", "int_ok", "float_ok", "bool_ok", "ts_ok", "lead0"]
 
@@ -574,17 +574,6 @@ def _pass_c(df: DataFrame, cols: list[str]) -> dict[str, list[str]]:
     return {c: list(row[f"__v{i}"]) for i, c in enumerate(cols)}
 
 
-def _downcast(v):
-    """Reference downcast_ints (src/schema_validata.py:304-324): 12.0 → 12.
-    Guard on isfinite, not just isnan — ``int(float('inf'))`` raises
-    OverflowError, and safe_double deliberately admits 'inf'/'Infinity'
-    strings (pandas to_numeric parity), so ±inf can reach a num_min/max
-    stat."""
-    if isinstance(v, float) and math.isfinite(v) and v == int(v):
-        return int(v)
-    return v
-
-
 def profile(df: DataFrame,
             max_unique_vals: int = MAX_UNIQUE_VALS,
             false_val="False", true_val="True", na_val=None,
@@ -689,8 +678,8 @@ def profile(df: DataFrame,
         if dtype == "Boolean" and f.dataType.simpleString() == "boolean":
             rmin, rmax = a[f"{name}__bool_min"], a[f"{name}__bool_max"]
         elif all_numeric:
-            rmin = _downcast(a[f"{name}__num_min"])
-            rmax = _downcast(a[f"{name}__num_max"])
+            rmin = downcast_ints(a[f"{name}__num_min"])
+            rmax = downcast_ints(a[f"{name}__num_max"])
         else:
             rmin = rmax = na_val
         if rmin is None:

@@ -37,7 +37,8 @@ from ..rules import Rules
 
 
 def downcast_ints(value):
-    """12.0 → 12 (reference src/schema_validata.py:304-324)."""
+    """12.0 → 12 (reference src/schema_validata.py:304-324). ±inf and
+    NaN, which a profile's num_min/max can carry, stay floats."""
     try:
         if isinstance(value, float) and value == int(value):
             return int(value)

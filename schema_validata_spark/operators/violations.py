@@ -17,6 +17,16 @@ from the verdicts, then:
   join back — broadcast when the duplicate key set is small (the common
   case), shuffle-hash with AQE skew handling otherwise.
 
+One compiler turns rules into checks: ``rule_specs`` is the only code
+that maps ``FieldRule`` attributes to ``CheckSpec``s. It int-downcasts
+length and range params as the verdict diff does (``50.0`` labels
+``(50)`` on every path) and keeps a regex only when it is a ``str``
+outside ``NA_VALUES`` (an NA-token cell is no pattern, :2584-2593).
+``violation_plan_for`` is the verdict gate over it (``validate``);
+``row_specs`` drops ``unique_value`` for the paths that never join
+(quarantine, partition and streaming verdict counts, the streaming
+listing). Every path therefore gives one answer per rule.
+
 Check semantics preserved from the reference:
 * nulls:      extended NA vocabulary (:2158-2195)
 * duplicates: every member of every duplicate group, nulls excluded
@@ -34,6 +44,7 @@ Check semantics preserved from the reference:
 
 from __future__ import annotations
 
+from collections.abc import Sequence
 from dataclasses import dataclass
 from typing import Any
 
@@ -47,6 +58,7 @@ from ..functions.typing import safe_double
 from ..rules import Rules
 from .expectations import (CONDITIONAL_ERROR_PREFIX,
                            conditional_violation_expr)
+from .verdicts import downcast_ints
 
 VIOLATION_FIELDS = ["error_type", "column_name", "error_value"]
 
@@ -58,38 +70,56 @@ class CheckSpec:
     param: Any = None    # max_length / range bound / allowed list / pattern
 
 
+def rule_specs(columns: list[str], rules: Rules,
+               ignore_errors: Sequence[str] = ()) -> list[CheckSpec]:
+    """The one rules→checks compiler: every row-level check the rules
+    declare on one of ``columns``, ungated by verdicts, minus the checks
+    named in ``ignore_errors``. Length and range params are int-downcast
+    as the verdict diff records its ``expected`` (so labels read
+    ``(50)``, never ``(50.0)``); an allowed list counts only as a list,
+    and a regex only as a ``str`` outside ``NA_VALUES`` (:2584-2593)."""
+    specs: list[CheckSpec] = []
+    for fr in rules:
+        c = fr.field_name
+        if c not in columns:
+            continue
+        declared = [
+            ("allow_null", fr.allow_null is False, None),
+            ("unique_value", bool(fr.unique_value), None),
+            ("length", fr.length is not None, fr.length),
+            ("range_min", fr.range_min is not None, fr.range_min),
+            ("range_max", fr.range_max is not None, fr.range_max),
+            ("allowed_value_list", isinstance(fr.allowed_value_list, list),
+             fr.allowed_value_list),
+            ("regex_pattern", isinstance(fr.regex_pattern, str)
+             and fr.regex_pattern not in NA_VALUES, fr.regex_pattern),
+        ]
+        specs += [CheckSpec(c, chk, downcast_ints(param))
+                  for chk, on, param in declared
+                  if on and chk not in ignore_errors]
+    return specs
+
+
+def row_specs(columns: list[str], rules: Rules,
+              ignore_errors: Sequence[str] = ()) -> list[CheckSpec]:
+    """``rule_specs`` without ``unique_value``: the checks a single row
+    can fail, for the paths that never join (quarantine, verdict counts,
+    streaming)."""
+    return [sp for sp in rule_specs(columns, rules, ignore_errors)
+            if sp.check != "unique_value"]
+
+
 def violation_plan_for(rules: Rules, schema_violations: dict,
                        data_columns: list[str],
                        ignore_errors: list[str] | None = None) -> list[CheckSpec]:
-    """Build the flagged-check plan the way the reference's
-    get_value_errors does (:2534-2593): verdict-flagged checks only,
-    except regex which is always on for rule columns with a pattern."""
+    """The flagged-check plan of the reference's get_value_errors
+    (:2534-2593): the ``rule_specs`` checks the column's verdict flags,
+    plus every regex, which runs independent of verdicts."""
     ignore = DEFAULT_IGNORE_ERRORS if ignore_errors is None else ignore_errors
-    specs: list[CheckSpec] = []
-    for col, errors in (schema_violations or {}).items():
-        if col not in data_columns:
-            continue
-        flagged = set(errors.keys())
-        if "allow_null" in flagged and "allow_null" not in ignore:
-            specs.append(CheckSpec(col, "allow_null"))
-        if "unique_value" in flagged and "unique_value" not in ignore:
-            specs.append(CheckSpec(col, "unique_value"))
-        if "length" in flagged and "length" not in ignore:
-            specs.append(CheckSpec(col, "length", errors["length"]["expected"]))
-        if "range_max" in flagged and "range_max" not in ignore:
-            specs.append(CheckSpec(col, "range_max", errors["range_max"]["expected"]))
-        if "range_min" in flagged and "range_min" not in ignore:
-            specs.append(CheckSpec(col, "range_min", errors["range_min"]["expected"]))
-        if "allowed_value_list" in flagged and "allowed_value_list" not in ignore:
-            specs.append(CheckSpec(col, "allowed_value_list",
-                                   errors["allowed_value_list"]["expected"]))
-    if "regex_pattern" not in ignore:
-        for fr in rules:
-            if (fr.field_name in data_columns and isinstance(fr.regex_pattern, str)
-                    and fr.regex_pattern not in NA_VALUES):
-                specs.append(CheckSpec(fr.field_name, "regex_pattern",
-                                       fr.regex_pattern))
-    return specs
+    flagged = schema_violations or {}
+    return [sp for sp in rule_specs(data_columns, rules, ignore)
+            if sp.check == "regex_pattern"
+            or sp.check in flagged.get(sp.column, {})]
 
 
 def _check_condition(df: DataFrame, spec: CheckSpec,
@@ -158,40 +188,15 @@ def _check_condition(df: DataFrame, spec: CheckSpec,
     raise ValueError(f"not a per-row check: {spec.check}")
 
 
-def rule_specs(df: DataFrame, rules: Rules) -> list[CheckSpec]:
-    """Every per-row check the rules declare on a column of ``df``,
-    ungated by verdicts — the check set of the partition and streaming
-    verdicts and of the streaming violations listing."""
-    specs: list[CheckSpec] = []
-    for fr in rules:
-        if fr.field_name not in df.columns:
-            continue
-        c = fr.field_name
-        if fr.allow_null is False:
-            specs.append(CheckSpec(c, "allow_null"))
-        if fr.length is not None:
-            specs.append(CheckSpec(c, "length", fr.length))
-        if fr.range_min is not None:
-            specs.append(CheckSpec(c, "range_min", fr.range_min))
-        if fr.range_max is not None:
-            specs.append(CheckSpec(c, "range_max", fr.range_max))
-        if fr.allowed_value_list:
-            specs.append(CheckSpec(c, "allowed_value_list",
-                                   fr.allowed_value_list))
-        if fr.regex_pattern:
-            specs.append(CheckSpec(c, "regex_pattern", fr.regex_pattern))
-    return specs
-
-
 def verdict_count_aggs(df: DataFrame, rules: Rules
                        ) -> tuple[list[Column], list[tuple[str, str, str]]]:
     """Violation-count aggregates for a grouped verdict frame: one
-    ``count(when(violation))`` per ``rule_specs`` check and per
+    ``count(when(violation))`` per ``row_specs`` check and per
     conditional rule, aliased ``v{i}``/``cv{j}``. Returns the aggregate
     Columns and ``(alias, column_name, check)`` triples for
     ``verdict_stack``."""
     aggs, names = [], []
-    for i, sp in enumerate(rule_specs(df, rules)):
+    for i, sp in enumerate(row_specs(df.columns, rules)):
         cond, _ = _check_condition(df, sp)
         aggs.append(F.count(F.when(cond, 1)).alias(f"v{i}"))
         names.append((f"v{i}", sp.column, sp.check))
@@ -214,6 +219,26 @@ def verdict_stack(names: list[tuple[str, str, str]]) -> str:
                      for alias, col, chk in names)
     return (f"stack({len(names)}, {body})"
             " as (column_name, check, violation_count)")
+
+
+def rate_status(verdicts: DataFrame, budgets: dict[tuple[str, str], float],
+                default_budget: float = 0.0) -> DataFrame:
+    """Judge ``(column_name, check, violation_count, n_rows)`` verdict
+    rows against error budgets: adds ``budget`` (the ``budgets`` entry
+    for the row's (column, check), else ``default_budget``), ``rate``
+    (6dp, display only) and ``status`` (pass iff the unrounded rate is
+    within budget). One ``when`` chain, no budget frame or join — the
+    shared gate of the batch and streaming rate verdicts."""
+    budget = F.lit(float(default_budget))
+    for (c, k), b in budgets.items():
+        budget = F.when((F.col("column_name") == c) & (F.col("check") == k),
+                        F.lit(float(b))).otherwise(budget)
+    rate = F.col("violation_count") / F.col("n_rows")
+    return (verdicts.withColumn("budget", budget)
+                    .withColumn("rate", F.round(rate, 6))
+                    .withColumn("status",
+                                F.when(rate <= F.col("budget"), "pass")
+                                 .otherwise("fail")))
 
 
 def _is_string(df: DataFrame, col: str) -> bool:
@@ -263,6 +288,11 @@ def row_check_hits(df: DataFrame, specs: list[CheckSpec],
              .alias("error_type"),
             F.lit(cr.name).alias("column_name"),
             F.lit(cr.then_sql).alias("error_value"))))
+    if not structs:
+        # F.array() of nothing is array<null>, which "v.*" cannot expand
+        return df.select(*keep, *[F.lit(None).cast("string").alias(f)
+                                  for f in VIOLATION_FIELDS]) \
+                 .where(F.lit(False))
     arr = F.filter(F.array(*structs), lambda x: x.isNotNull())
     hits = (df.withColumn("__v", arr)
               .where(F.size("__v") > 0)
@@ -359,29 +389,8 @@ def quarantine(df: DataFrame, rules: Rules,
     production sink, ``quarantined`` to a review table, one input scan
     each (or persist the projected frame for a single scan total).
     """
-    from .verdicts import downcast_ints
     ignore = DEFAULT_IGNORE_ERRORS if ignore_errors is None else ignore_errors
-    specs: list[CheckSpec] = []
-    for fr in rules:
-        c = fr.field_name
-        if c not in df.columns:
-            continue
-        if fr.allow_null is False and "allow_null" not in ignore:
-            specs.append(CheckSpec(c, "allow_null"))
-        if fr.length is not None and "length" not in ignore:
-            specs.append(CheckSpec(c, "length", downcast_ints(fr.length)))
-        if fr.range_min is not None and "range_min" not in ignore:
-            specs.append(CheckSpec(c, "range_min",
-                                   downcast_ints(fr.range_min)))
-        if fr.range_max is not None and "range_max" not in ignore:
-            specs.append(CheckSpec(c, "range_max",
-                                   downcast_ints(fr.range_max)))
-        if fr.allowed_value_list and "allowed_value_list" not in ignore:
-            specs.append(CheckSpec(c, "allowed_value_list",
-                                   fr.allowed_value_list))
-        if isinstance(fr.regex_pattern, str) \
-                and "regex_pattern" not in ignore:
-            specs.append(CheckSpec(c, "regex_pattern", fr.regex_pattern))
+    specs = row_specs(df.columns, rules, ignore)
 
     reasons = []
     for sp in specs:

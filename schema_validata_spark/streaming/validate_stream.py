@@ -24,8 +24,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.colref import qcol
-from ..operators.violations import (row_check_hits, rule_specs,
-                                    verdict_count_aggs, verdict_stack)
+from ..operators.violations import (rate_status, row_check_hits,
+                                    row_specs, verdict_count_aggs,
+                                    verdict_stack)
 from ..rules import Rules
 
 
@@ -36,7 +37,7 @@ def stream_validate(stream_df: DataFrame, rules: Rules,
     layer, so each micro-batch does one pass. ``rules.conditional``
     (cross-column IF/THEN rules) ride the same projection — their
     predicates are pure Column expressions too."""
-    return row_check_hits(stream_df, rule_specs(stream_df, rules),
+    return row_check_hits(stream_df, row_specs(stream_df.columns, rules),
                           [qcol(k) for k in key_cols],
                           getattr(rules, "conditional", None) or [])
 
@@ -137,20 +138,9 @@ def stream_rate_verdicts(stream_df: DataFrame, rules: Rules,
     long = wdf.selectExpr(
         "w.start as window_start", "w.end as window_end",
         "__n_rows as n_rows", verdict_stack(names))
-    budget = F.lit(float(default_budget))
-    for (c, k), b in budgets.items():
-        budget = F.when((F.col("column_name") == c)
-                        & (F.col("check") == k),
-                        F.lit(float(b))).otherwise(budget)
-    rate = F.col("violation_count") / F.col("n_rows")
-    return (long.withColumn("budget", budget)
-                .withColumn("rate", F.round(rate, 6))
-                .withColumn("status",
-                            F.when(rate <= F.col("budget"), "pass")
-                             .otherwise("fail"))
-                .select("window_start", "window_end", "column_name",
-                        "check", "violation_count", "n_rows", "rate",
-                        "budget", "status"))
+    return rate_status(long, budgets, default_budget).select(
+        "window_start", "window_end", "column_name", "check",
+        "violation_count", "n_rows", "rate", "budget", "status")
 
 
 def stream_dedup(stream_df: DataFrame, key_cols: list[str] | None = None,

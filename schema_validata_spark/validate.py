@@ -55,8 +55,10 @@ from .operators.integrity import referential_violations
 from .operators.profile import profile
 from .operators.uniqueness import duplicate_stats
 from .operators.verdicts import verdicts_for
-from .operators.violations import (CheckSpec, get_best_uid_column,
-                                   value_errors_df, violation_plan_for)
+from .operators.violations import (CheckSpec, _check_condition,
+                                   get_best_uid_column, rate_status,
+                                   rule_specs, value_errors_df,
+                                   violation_plan_for)
 from .rules import Rules
 
 # Default-on scale gate for composed entry points: forbid global
@@ -70,52 +72,6 @@ from .rules import Rules
 # (e.g. {"allow_broadcast_nested_loop": False}) to tighten, or None
 # to opt out entirely.
 PLAN_BUDGET_DEFAULT: dict = {"allow_broadcast_nested_loop": True}
-
-
-def _speculative_specs(df: DataFrame, rules: Rules,
-                       ignore_errors: list[str]) -> list[CheckSpec]:
-    """Row-level check plan derived from the rules alone (no profile):
-    range/length params int-downcast exactly as the verdict diff would
-    (the gated plan's params flow through get_dict_diffs' downcast, and
-    the error-type label embeds the param)."""
-    from .operators.verdicts import downcast_ints
-
-    specs: list[CheckSpec] = []
-    for fr in rules:
-        c = fr.field_name
-        if c not in df.columns:
-            continue
-        if fr.allow_null is False and "allow_null" not in ignore_errors:
-            specs.append(CheckSpec(c, "allow_null"))
-        if fr.unique_value and "unique_value" not in ignore_errors:
-            specs.append(CheckSpec(c, "unique_value"))
-        if fr.length is not None and "length" not in ignore_errors:
-            specs.append(CheckSpec(c, "length", downcast_ints(fr.length)))
-        if fr.range_min is not None and "range_min" not in ignore_errors:
-            specs.append(CheckSpec(c, "range_min",
-                                   downcast_ints(fr.range_min)))
-        if fr.range_max is not None and "range_max" not in ignore_errors:
-            specs.append(CheckSpec(c, "range_max",
-                                   downcast_ints(fr.range_max)))
-        if fr.allowed_value_list and "allowed_value_list" not in ignore_errors:
-            specs.append(CheckSpec(c, "allowed_value_list",
-                                   fr.allowed_value_list))
-        if (isinstance(fr.regex_pattern, str)
-                and "regex_pattern" not in ignore_errors):
-            specs.append(CheckSpec(c, "regex_pattern", fr.regex_pattern))
-    return specs
-
-
-def _label_for(sp: CheckSpec) -> str:
-    from .config import (ERROR_TYPE_LABELS, length_error_type,
-                         range_error_type)
-    if sp.check == "length":
-        return length_error_type(sp.param)
-    if sp.check == "range_min":
-        return range_error_type("min", sp.param)
-    if sp.check == "range_max":
-        return range_error_type("max", sp.param)
-    return ERROR_TYPE_LABELS[sp.check]
 
 
 def _rules_md5(rules: Rules) -> str:
@@ -360,11 +316,12 @@ def validate(spark: SparkSession, df: DataFrame, rules: Rules,
         f_comp = pool.submit(_composites)
         f_ri = pool.submit(_referentials)
         if speculative:
-            spec_specs = _speculative_specs(df, rules, ignore_errors)
+            spec_specs = rule_specs(df.columns, rules, ignore_errors)
             violations = value_errors_df(df, spec_specs, key_cols)
             if persist_violations and violations is not None:
-                # reconcile below only stacks filters/unions ON TOP of
-                # the persisted base, so the cache stays valid;
+                # the overshoot filters and the conditional union below
+                # only stack ON TOP of the persisted base, so the cache
+                # stays valid;
                 # MEMORY_AND_DISK spills rather than OOMs if violations
                 # are pathologically numerous
                 from pyspark import StorageLevel
@@ -389,29 +346,19 @@ def validate(spark: SparkSession, df: DataFrame, rules: Rules,
     schema_violations = verdicts_for(rules, observed, dataset_name)
 
     if list_errors and speculative:
-        # reconcile the speculative plan with the verdict-gated plan:
-        # top-up scan for specs only the verdicts could reveal (rare),
-        # and filter out rows from checks the gated plan would not list
-        # (reference quirk: allowed-value listing is capped at 100
+        # the verdict-gated plan is a subset of the speculative one
+        # (both come from rule_specs), so reconciling only drops rows of
+        # checks the verdicts do not flag (reference quirks: allowed
+        # values list only on String/Integer-like columns under 100
         # distinct values; range checks skip non-all-numeric columns)
-        gated = violation_plan_for(rules, schema_violations, df.columns,
-                                   ignore_errors)
-        have = {(sp.column, sp.check) for sp in spec_specs}
-        want = {(sp.column, sp.check) for sp in gated}
-        extra = [sp for sp in gated if (sp.column, sp.check) not in have]
-        overshoot = [sp for sp in spec_specs
-                     if (sp.column, sp.check) not in want]
-        if extra:
-            # the speculative scan may have produced NO plan at all
-            # (zero speculative specs -> violations None); the gated
-            # top-up then IS the violations frame
-            extra_df = value_errors_df(df, extra, key_cols)
-            violations = (extra_df if violations is None
-                          else violations.unionByName(extra_df))
-        for sp in overshoot:
-            cond = ((F.col("column_name") == sp.column)
-                    & (F.col("error_type") == _label_for(sp)))
-            violations = violations.where(~cond)
+        want = {(sp.column, sp.check) for sp in violation_plan_for(
+            rules, schema_violations, df.columns, ignore_errors)}
+        for sp in spec_specs:
+            if (sp.column, sp.check) not in want:
+                label = _check_condition(df, sp)[1]
+                violations = violations.where(
+                    ~((F.col("column_name") == sp.column)
+                      & (F.col("error_type") == label)))
 
     if list_errors and not speculative:
         # exact distinct counts already measured by the profile — the uid
@@ -809,34 +756,23 @@ def partition_rate_verdicts(df: DataFrame, rules: Rules, partition_col: str,
     Output adds (n_rows, rate, budget) and ``status`` becomes the
     budget comparison (rate 6dp-pinned for display, compared unrounded).
 
-    SCALE: re-uses the single ``partition_verdicts`` aggregate; adds
+    SCALE: re-uses the single ``partition_verdicts`` aggregate and adds
     one count-only scan pruned to the partition column for the totals
-    frame (#partitions rows, AQE-broadcast join) and a left join
-    against the #budgets-row literal frame. Row data never re-shuffles.
+    frame (#partitions rows, AQE-broadcast join); budgets are one
+    ``when`` chain (``rate_status``). Row data never re-shuffles.
     """
     base = partition_verdicts(df, rules, partition_col, dims) \
         .drop("status")
     totals = (df.groupBy(qcol(partition_col).cast("string")
                          .alias("__pk"))
                 .agg(F.count(F.lit(1)).cast("bigint").alias("n_rows")))
-    spark = df.sparkSession
-    listed = spark.createDataFrame(
-        [(c, k, float(b)) for (c, k), b in budgets.items()],
-        schema="column_name string, check string, budget double")
-    rate = F.col("violation_count") / F.col("n_rows")
     # null-safe totals join: a NULL partition key is a real partition
     # and must keep its verdicts (the cap_group_share r2 lesson)
-    return (base.join(totals,
-                      F.col("partition_key").eqNullSafe(F.col("__pk")))
-                .join(F.broadcast(listed), ["column_name", "check"], "left")
-                .withColumn("budget",
-                            F.coalesce("budget",
-                                       F.lit(float(default_budget))))
-                .select("partition_key", "column_name", "check",
-                        "violation_count", "n_rows",
-                        F.round(rate, 6).alias("rate"), "budget",
-                        F.when(rate <= F.col("budget"), F.lit("pass"))
-                         .otherwise(F.lit("fail")).alias("status")))
+    joined = base.join(totals,
+                       F.col("partition_key").eqNullSafe(F.col("__pk")))
+    return rate_status(joined, budgets, default_budget).select(
+        "partition_key", "column_name", "check", "violation_count",
+        "n_rows", "rate", "budget", "status")
 
 
 def validate_partitioned(spark: SparkSession, df: DataFrame, rules: Rules,

@@ -68,9 +68,9 @@ def main():
         lambda: referential_violations(t, ["conv_id"], c, ["conv_id"],
                                        broadcast_dim=True).count())
 
-    from schema_validata_spark.validate import _speculative_specs
-    from schema_validata_spark.operators.violations import value_errors_df
-    specs = _speculative_specs(t, rules, [])
+    from schema_validata_spark.operators.violations import (rule_specs,
+                                                            value_errors_df)
+    specs = rule_specs(t.columns, rules, [])
     v = value_errors_df(t, specs, ["conv_id", "turn_idx"])
     lap("violations scan (no persist)", lambda: v.count())
     from pyspark import StorageLevel

@@ -13,6 +13,12 @@ def test_downcast_ints():
     assert downcast_ints(12.0) == 12 and isinstance(downcast_ints(12.0), int)
     assert downcast_ints(12.5) == 12.5
     assert downcast_ints("x") == "x"
+    # ±inf and NaN stay floats (int() raises on them; the profile's
+    # num_min/max stats can carry them)
+    assert downcast_ints(float("inf")) == float("inf")
+    assert downcast_ints(float("-inf")) == float("-inf")
+    nan = downcast_ints(float("nan"))
+    assert isinstance(nan, float) and nan != nan
 
 
 def test_dict_diffs_sorted_list_compare():
