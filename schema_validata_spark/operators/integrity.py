@@ -1,20 +1,28 @@
-"""Referential integrity: anti-join of fact foreign keys vs a dimension.
+"""Referential integrity: fact foreign keys vs a dimension.
 
 No reference counterpart (the reference validates one table at a time);
 this is the north_rule addition: ``transcripts.conv_id`` must exist in
-``conversations.conv_id``. Implemented as a ``left_anti`` join —
-broadcast when the dimension fits in memory (the planner is hinted),
-shuffle hash join with AQE skew mitigation otherwise.
+``conversations.conv_id``. Two shapes:
+
+* ``referential_violations`` lists the orphan rows with a ``left_anti``
+  join (``validate()``'s RI count and the row listing);
+* ``referential_exists`` is a per-row existence flag: a correlated
+  ``EXISTS`` that plans as a broadcast ``ExistenceJoin``, so it rides a
+  scan the caller already runs (``partition_verdicts`` counts orphans in
+  its per-partition check aggregate).
+
+Every engine path broadcasts the dimension's key projection by hint;
+none measures the dimension first, so a dimension too large to
+broadcast needs a caller-built plan. ``referential_violations`` called
+directly leaves the join strategy to the planner unless
+``broadcast_dim=True``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.colref import qcol
-
-# dimension row-count threshold below which we force a broadcast hint
-BROADCAST_DIM_MAX_ROWS = 50_000_000
 
 
 def referential_violations(fact: DataFrame, fk_cols: list[str],
@@ -30,10 +38,8 @@ def referential_violations(fact: DataFrame, fk_cols: list[str],
     dimension on every call."""
     d = dim.select(*[qcol(c).alias(f"__d_{i}")
                      for i, c in enumerate(dim_cols)])
-    if broadcast_dim is None:
-        # cheap heuristic: let Catalyst/AQE decide unless caller insists;
-        # hint only when dim is known-small (avoids a count() job on big dims)
-        broadcast_dim = False
+    # no hint unless the caller asks: the planner (and AQE at runtime)
+    # picks the join; sizing the dimension here would cost a count() job
     if broadcast_dim:
         d = F.broadcast(d)
     cond = None
@@ -45,6 +51,24 @@ def referential_violations(fact: DataFrame, fk_cols: list[str],
         c = qcol(fk).isNotNull()
         nn = c if nn is None else nn & c
     return fact.where(nn).join(d, cond, "left_anti")
+
+
+def referential_exists(fact_alias: str, fk_col: str,
+                       dim: DataFrame, dim_col: str) -> Column:
+    """Boolean Column, for a fact frame aliased ``fact_alias``: does the
+    row's foreign key match some ``dim`` key? A correlated ``EXISTS``
+    over the broadcast key projection, planned as a ``BroadcastHashJoin``
+    ``ExistenceJoin``: every fact row stays exactly once whatever the
+    dimension's duplicate or NULL keys. A NULL foreign key is False;
+    callers that follow ``referential_violations`` exclude it.
+
+    The outer reference is qualified through the alias: an unqualified
+    ``.outer()`` column of the dimension key's name resolves to the
+    dimension's own column (through the key projection) and silently
+    decorrelates the subquery into "the dimension is non-empty"."""
+    d = F.broadcast(dim.select(qcol(dim_col).alias("__d_0")))
+    outer = F.col(f"{fact_alias}.`{fk_col.replace('`', '``')}`").outer()
+    return d.where(F.col("__d_0") == outer).exists()
 
 
 def reconcile_keys(df_a: DataFrame, keys_a: list[str],

@@ -28,6 +28,11 @@ ends in a single-partition reduce. Jobs for the transcripts fixture
 Profile, uniqueness and referential run concurrently; a whole lap
 (validate, count, report) is 14 jobs.
 
+``validate_partitioned`` judges each resume batch with
+``partition_verdicts``: 6 jobs plus 1 manifest commit per batch, where
+RI is an existence flag on the per-row check scan rather than a scan of
+its own. A resume with one changed batch is 11 jobs, a no-op rerun 4.
+
 The result dict mirrors the reference's structure:
 ``{uid: {run_metadata, dataset_metadata, data_dict_metadata,
 results: {dataset: {schema_violations, value_errors}}}}`` with
@@ -51,7 +56,8 @@ from .functions.scalars import collect_scalars
 
 from .config import DEFAULT_IGNORE_ERRORS
 from .manifest import Manifest, timed
-from .operators.integrity import referential_violations
+from .operators.integrity import (referential_exists,
+                                  referential_violations)
 from .operators.profile import profile
 from .operators.uniqueness import duplicate_stats
 from .operators.verdicts import verdicts_for
@@ -666,26 +672,45 @@ def _native_value(v, dtype: str | None):
     return v
 
 
-def partition_verdicts(df: DataFrame, rules: Rules, partition_col: str,
-                       dims: dict[str, DataFrame] | None = None) -> DataFrame:
-    """Per-partition pass/fail verdicts: ONE ``groupBy(partition)``
-    aggregate counts every per-row check violation for every rule column
-    simultaneously; composite-key duplicates add one salted aggregate;
-    RI adds one anti-join + re-count. Output:
-    ``(partition_key, column_name, check, violation_count, status)``.
-    """
+def _partition_counts(df: DataFrame, rules: Rules, partition_col: str,
+                      dims: dict[str, DataFrame] | None) -> DataFrame:
+    """``(partition_key, n_rows, column_name, check, violation_count)``
+    rows behind both partition verdicts; empty (typed) when no check
+    applies.
+
+    ONE ``groupBy(partition)`` aggregate carries ``count(*)``, every
+    per-row check and conditional rule, and each foreign key's orphan
+    count over a broadcast existence flag
+    (``integrity.referential_exists``). Each composite key adds its
+    salted duplicate chain, whose last aggregate also sums the
+    partition's rows."""
     from .operators.violations import verdict_count_aggs, verdict_stack
 
+    pkey = qcol(partition_col).cast("string").alias("partition_key")
     # every per-row check and conditional rule: one count expression
     # each in ONE per-partition aggregate
     aggs, names = verdict_count_aggs(df, rules)
+    fact = df.alias("__fact")
+    flags = []
+    for fk_col, dim_name, dim_col in rules.foreign_keys:
+        dim = (dims or {}).get(dim_name)
+        if dim is None or fk_col not in df.columns:
+            continue
+        j = len(flags)
+        flags.append(referential_exists("__fact", fk_col, dim, dim_col)
+                     .alias(f"__ri{j}"))
+        aggs.append(F.count(F.when(qcol(fk_col).isNotNull()
+                                   & ~F.col(f"__ri{j}"), 1)).alias(f"ri{j}"))
+        names.append((f"ri{j}", fk_col, "referential"))
     frames = []
     if names:   # zero aggs is an agg() error and stack(0,) is a parse error
-        per_part = df.groupBy(qcol(partition_col).cast("string")
-                              .alias("partition_key")).agg(*aggs)
-        frames.append(per_part.selectExpr("partition_key",
-                                          verdict_stack(names)))
-    spark = df.sparkSession
+        per_part = (fact.select("*", *flags).groupBy(pkey)
+                        .agg(F.count(F.lit(1)).alias("n_rows"), *aggs)
+                        .selectExpr("partition_key", "n_rows",
+                                    verdict_stack(names)))
+        # RI rows, like duplicate rows, exist only where the count is > 0
+        frames.append(per_part.where((F.col("check") != "referential")
+                                     | (F.col("violation_count") > 0)))
     for key in rules.composite_unique:
         if not all(k in df.columns for k in key):
             continue
@@ -699,41 +724,47 @@ def partition_verdicts(df: DataFrame, rules: Rules, partition_col: str,
                  .agg(F.count(F.lit(1)).alias("__c"))
                  .groupBy(*[qcol(c) for c in pk])
                  .agg(F.sum("__c").alias("cnt"))
-                 .where(F.col("cnt") > 1)
-                 .groupBy(qcol(partition_col).cast("string")
-                          .alias("partition_key"))
-                 .agg(F.sum("cnt").alias("violation_count"))
-                 .select("partition_key",
+                 .groupBy(pkey)
+                 .agg(F.sum("cnt").alias("n_rows"),
+                      F.sum(F.when(F.col("cnt") > 1, F.col("cnt"))
+                             .otherwise(0)).alias("violation_count"))
+                 .where(F.col("violation_count") > 0)
+                 .select("partition_key", "n_rows",
                          F.lit("+".join(key)).alias("column_name"),
                          F.lit("unique_value").alias("check"),
                          F.col("violation_count").cast("bigint")))
         frames.append(dup)
-    for fk_col, dim_name, dim_col in rules.foreign_keys:
-        dim = (dims or {}).get(dim_name)
-        if dim is None or fk_col not in df.columns:
-            continue
-        ri = (referential_violations(df.select(qcol(partition_col), qcol(fk_col)),
-                                     [fk_col], dim, [dim_col],
-                                     broadcast_dim=True)
-              .groupBy(qcol(partition_col).cast("string")
-                       .alias("partition_key"))
-              .agg(F.count(F.lit(1)).alias("violation_count"))
-              .select("partition_key",
-                      F.lit(fk_col).alias("column_name"),
-                      F.lit("referential").alias("check"),
-                      F.col("violation_count").cast("bigint")))
-        frames.append(ri)
-
     if not frames:
         # rules with NO per-row, uniqueness, or RI checks applicable to
         # this frame: a well-typed empty verdict set, not a crash
-        return spark.createDataFrame(
-            [], "partition_key string, column_name string, check string,"
-                " violation_count bigint, status string")
+        return df.sparkSession.createDataFrame(
+            [], "partition_key string, n_rows bigint, column_name string,"
+                " check string, violation_count bigint")
     out = frames[0]
     for f2 in frames[1:]:
         out = out.unionByName(f2)
-    return out.withColumn(
+    return out
+
+
+def partition_verdicts(df: DataFrame, rules: Rules, partition_col: str,
+                       dims: dict[str, DataFrame] | None = None) -> DataFrame:
+    """Per-partition pass/fail verdicts. Output:
+    ``(partition_key, column_name, check, violation_count, status)``.
+
+    Every per-row check and conditional rule has a row for every
+    partition, passing or not. ``unique_value`` and ``referential`` rows
+    appear only for partitions whose count is above 0, so a missing row
+    means pass. The NULL partition is a NULL ``partition_key``.
+
+    SCALE: ONE ``groupBy(partition)`` aggregate counts every per-row
+    check and each foreign key's orphans (a broadcast ``ExistenceJoin``
+    flag on the same scan, no anti-join); each composite key adds one
+    salted duplicate chain, a second scan. For the transcripts fixture
+    a batch is 6 jobs: dimension broadcast 1, per-partition aggregate 1,
+    duplicate chain 3, result 1.
+    """
+    counts = _partition_counts(df, rules, partition_col, dims)
+    return counts.drop("n_rows").withColumn(
         "status", F.when(F.col("violation_count") > 0, F.lit("fail"))
                    .otherwise(F.lit("pass")))
 
@@ -756,21 +787,13 @@ def partition_rate_verdicts(df: DataFrame, rules: Rules, partition_col: str,
     Output adds (n_rows, rate, budget) and ``status`` becomes the
     budget comparison (rate 6dp-pinned for display, compared unrounded).
 
-    SCALE: re-uses the single ``partition_verdicts`` aggregate and adds
-    one count-only scan pruned to the partition column for the totals
-    frame (#partitions rows, AQE-broadcast join); budgets are one
-    ``when`` chain (``rate_status``). Row data never re-shuffles.
+    SCALE: the same scans and jobs as ``partition_verdicts``: ``n_rows``
+    rides its per-partition aggregate (and the duplicate chain's last
+    aggregate), so there is no totals scan or join; budgets are one
+    ``when`` chain (``rate_status``).
     """
-    base = partition_verdicts(df, rules, partition_col, dims) \
-        .drop("status")
-    totals = (df.groupBy(qcol(partition_col).cast("string")
-                         .alias("__pk"))
-                .agg(F.count(F.lit(1)).cast("bigint").alias("n_rows")))
-    # null-safe totals join: a NULL partition key is a real partition
-    # and must keep its verdicts (the cap_group_share r2 lesson)
-    joined = base.join(totals,
-                       F.col("partition_key").eqNullSafe(F.col("__pk")))
-    return rate_status(joined, budgets, default_budget).select(
+    counts = _partition_counts(df, rules, partition_col, dims)
+    return rate_status(counts, budgets, default_budget).select(
         "partition_key", "column_name", "check", "violation_count",
         "n_rows", "rate", "budget", "status")
 
@@ -828,10 +851,10 @@ def validate_partitioned(spark: SparkSession, df: DataFrame, rules: Rules,
       1. manifest read  — 1 job: one shuffle-free read of the latest
                           done row per partition (``Manifest.latest``)
       2. fingerprints   — 2 jobs: per-partition content aggregate
-      3. per batch      — 7 jobs (``partition_verdicts``) + 1 commit
+      3. per batch      — 6 jobs (``partition_verdicts``) + 1 commit
       4. result         — 1 job when the caller collects the frame
 
-    A no-op rerun is 4 jobs; a resume with one changed batch is 12.
+    A no-op rerun is 4 jobs; a resume with one changed batch is 11.
     ``batch_size`` below 1 raises ``ValueError`` before any job runs.
     """
     if batch_size < 1:

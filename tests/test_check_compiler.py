@@ -116,8 +116,11 @@ def _case(draw):
     spec = {"s": (S_VALS, False, True), "x": (X_VALS, True, False),
             "n": (N_VALS, True, True)}
     fields = [draw(_rule(c, *spec[c])) for c in cols]
+    # s is also a foreign key into a dimension with duplicate and NULL
+    # keys allowed
+    dim_keys = draw(st.lists(S_VALS, max_size=6))
     return ([(i, *r) for i, r in enumerate(rows)], fields,
-            draw(st.booleans()))
+            draw(st.booleans()), dim_keys)
 
 
 def _labels(fr: FieldRule) -> dict[str, str]:
@@ -146,22 +149,30 @@ def test_every_path_counts_the_same_violations(spark, case):
     allowed lists sit only where the profile captures observed values
     (String or Integer-like columns under 100 distinct values — the
     Float column ``x`` gets none, reference :1445-1460), and range rules
-    sit on numeric columns only."""
-    rows, fields, speculative = case
+    sit on numeric columns only. The foreign key's per-partition
+    ``referential`` counts sum to validate()'s RI count."""
+    rows, fields, speculative, dim_keys = case
     df = spark.createDataFrame(rows, SCHEMA)
-    rules = Rules("R", fields=fields)
+    dims = {"d": spark.createDataFrame([(v,) for v in dim_keys],
+                                       "key string")}
+    rules = Rules("R", fields=fields, foreign_keys=[("s", "d", "key")])
     labels = {fr.field_name: _labels(fr) for fr in fields}
 
     verdicts: dict[tuple[str, str], int] = {}
-    for r in partition_verdicts(df, rules, "p").collect():
+    orphans = 0
+    for r in partition_verdicts(df, rules, "p", dims).collect():
+        if r["check"] == "referential":
+            orphans += r["violation_count"]
+            continue
         key = (r["column_name"], labels[r["column_name"]][r["check"]])
         verdicts[key] = verdicts.get(key, 0) + r["violation_count"]
     want = {k: v for k, v in verdicts.items() if v}
 
     res = validate(spark, df, rules, key_cols=["k"] if speculative else None,
-                   ignore_errors=[])
+                   dims=dims, ignore_errors=[])
     assert (_listed(res.violations) if res.violations is not None
             else {}) == want
+    assert orphans == res.referential["s->d.key"]
     res.unpersist()
     assert _listed(stream_validate(df, rules, ["k"])) == want
     reasons = [quarantine(df, Rules("R", fields=[fr]), ignore_errors=[])[1]

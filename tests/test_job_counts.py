@@ -1,5 +1,6 @@
-"""Spark job budget of validate(), profile() and validate_partitioned(),
-and the Observation path and single manifest read that keep it small.
+"""Spark job budget of validate(), profile(), validate_partitioned() and
+its partition_verdicts() batches, and the Observation path, single
+manifest read and shared verdict scan that keep it small.
 
 Global scalar aggregates (the wide profile aggregate, duplicate totals,
 the RI count, the datetime confirmation) land through one unnamed
@@ -15,6 +16,8 @@ inherit a caller's job group, so a group-scoped count would miss them.
 """
 
 import importlib
+import os
+from urllib.parse import urlparse
 
 import pytest
 from pyspark.sql import functions as F
@@ -230,7 +233,7 @@ def partitioned(spark, tmp_path_factory):
         shutil.copytree(cold, m)
         return m
 
-    return t, run, cold, fresh_copy
+    return t, run, cold, fresh_copy, c
 
 
 def test_manifest_reads_are_one_job_each(spark, partitioned):
@@ -238,7 +241,7 @@ def test_manifest_reads_are_one_job_each(spark, partitioned):
     manifest in one job: the latest-row window runs on one partition,
     so no shuffle is planned."""
     from schema_validata_spark.manifest import Manifest
-    _, _, cold, _ = partitioned
+    _, _, cold, _, _ = partitioned
     m = Manifest(spark, cold)
     for name in ("done_identities", "metrics", "completed", "latest"):
         got, n = _count_jobs(spark, lambda: getattr(m, name)(RUN_ID))
@@ -248,7 +251,7 @@ def test_manifest_reads_are_one_job_each(spark, partitioned):
 
 def test_manifest_read_plans_no_exchange(spark, partitioned):
     from schema_validata_spark.manifest import Manifest
-    _, _, cold, _ = partitioned
+    _, _, cold, _, _ = partitioned
     latest = Manifest(spark, cold)._latest_done(RUN_ID)
     assert len(latest.collect()) > 1
     plan = latest._jdf.queryExecution().executedPlan().toString()
@@ -258,7 +261,7 @@ def test_manifest_read_plans_no_exchange(spark, partitioned):
 def test_noop_rerun_runs_4_jobs(spark, partitioned):
     """Nothing changed: manifest read 1, content fingerprints 2, result
     collect 1."""
-    t, run, _, fresh_copy = partitioned
+    t, run, _, fresh_copy, _ = partitioned
     m = fresh_copy("noop")
     rows_before = spark.read.parquet(m).count()
     _, n = _count_jobs(spark, lambda: run(t, m))
@@ -266,10 +269,11 @@ def test_noop_rerun_runs_4_jobs(spark, partitioned):
     assert spark.read.parquet(m).count() == rows_before
 
 
-def test_resume_one_changed_partition_runs_12_jobs(spark, partitioned):
+def test_resume_one_changed_partition_runs_11_jobs(spark, partitioned):
     """One partition's content changed, so one batch: manifest read 1,
-    fingerprints 2, partition_verdicts 7, commit 1, result collect 1."""
-    t, run, _, fresh_copy = partitioned
+    fingerprints 2, partition_verdicts 6, commit 1, result collect 1.
+    The batch ran 7 while RI had its own anti-join scan."""
+    t, run, _, fresh_copy, _ = partitioned
     key = F.col("ts_date").cast("string")
     victim = sorted(str(r[0]) for r in t.select(key).distinct().collect())[0]
     changed = t.withColumn("text", F.when(key == victim,
@@ -278,5 +282,69 @@ def test_resume_one_changed_partition_runs_12_jobs(spark, partitioned):
     m = fresh_copy("resume")
     rows_before = spark.read.parquet(m).count()
     _, n = _count_jobs(spark, lambda: run(changed, m))
-    assert n == 12
+    assert n == 11
     assert spark.read.parquet(m).count() == rows_before + 1
+
+
+# --- partition_verdicts: RI rides the per-partition check scan --------
+
+def _batch(t):
+    key = F.col("ts_date").cast("string")
+    parts = sorted(str(r[0]) for r in t.select(key).distinct().collect())
+    return t.where(key.isin(parts[:64]))
+
+
+def test_partition_verdicts_batch_runs_6_jobs(spark, partitioned):
+    """Dimension broadcast 1, the per-partition aggregate (per-row
+    checks, RI orphans and n_rows) 1, the salted duplicate chain's 3
+    exchanges, result 1. RI's own anti-join scan made it 7."""
+    from schema_validata_spark.validate import partition_verdicts
+    t, _, _, _, c = partitioned
+    batch = _batch(t)
+    rows, n = _count_jobs(spark, lambda: partition_verdicts(
+        batch, transcript_rules(), "ts_date",
+        dims={"conversations": c}).collect())
+    assert n == 6
+    assert any(r["check"] == "referential" for r in rows)
+
+
+def test_partition_rate_verdicts_runs_6_jobs(spark, partitioned):
+    """n_rows comes from the shared aggregates: no totals scan and no
+    join, so the same 6 jobs as partition_verdicts (was 9)."""
+    from schema_validata_spark.validate import partition_rate_verdicts
+    t, _, _, _, c = partitioned
+    batch = _batch(t)
+    rows, n = _count_jobs(spark, lambda: partition_rate_verdicts(
+        batch, transcript_rules(), "ts_date",
+        {("conv_id", "referential"): 0.5},
+        dims={"conversations": c}).collect())
+    assert n == 6
+    assert all(r["n_rows"] > 0 for r in rows)
+
+
+def test_partition_verdicts_plan_broadcasts_existence_join(spark,
+                                                           partitioned):
+    """With automatic broadcasts off, the dimension hint still plans
+    RI as a BroadcastHashJoin ExistenceJoin on the check scan: the fact
+    table is scanned twice (check aggregate, duplicate chain), with no
+    anti-join and no sort-merge or nested-loop join. Without the hint
+    the existence join plans as a SortMergeJoin that shuffles full-width
+    fact rows."""
+    from schema_validata_spark.validate import partition_verdicts
+    t, _, _, _, c = partitioned
+    fact_root = os.path.dirname(urlparse(t.inputFiles()[0]).path) + "]"
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        pv = partition_verdicts(_batch(t), transcript_rules(), "ts_date",
+                                dims={"conversations": c})
+        plan = pv._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+    assert "BroadcastHashJoin" in plan and "ExistenceJoin" in plan, plan
+    scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
+    assert len(scans) == 3, plan        # the dimension's is the third
+    assert sum(fact_root in ln for ln in scans) == 2, plan
+    for bad in ("LeftAnti", "SortMergeJoin", "BroadcastNestedLoopJoin"):
+        assert bad not in plan, plan

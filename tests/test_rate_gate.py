@@ -160,7 +160,7 @@ def test_rate_verdicts_null_partition_survives(spark):
     out = {r["partition_key"]: (r["n_rows"], r["rate"], r["status"])
            for r in partition_rate_verdicts(
                df, _pv_rules(), "p", {("x", "range_max"): 0.5}).collect()}
-    # NULL partition keeps its verdict (null-safe totals join)
+    # the NULL partition keeps its verdict and its own n_rows
     assert out[None] == (10, 0.4, "pass")
     assert out["A"] == (10, 0.0, "pass")
 
