@@ -2429,7 +2429,7 @@ def q_mask_stability(spark, sf_dir):
     verdict — the format-drift screen that catches an exporter
     switching ID/date shapes in one partition."""
     from pyspark.sql import functions as F
-    from schema_validata_spark.operators.statqa import mask_stability
+    from schema_validata_spark.operators.expectations import mask_stability
     ev = _t(spark, sf_dir, "events").withColumn("__pday", F.to_date("ts"))
     return (mask_stability(ev, ["event_type", "props"], "__pday")
             .orderBy("column_name"))

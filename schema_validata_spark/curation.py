@@ -29,7 +29,15 @@ from .functions.sampling import split_expr
 from .functions.text import fingerprint, quality_score
 from .operators.decontam import contamination_pairs
 from .operators.dedup import dedup_exact
-from .validate import PLAN_BUDGET_DEFAULT
+
+# curate()'s default scale gate: assert_scalable's defaults, except
+# that BroadcastNestedLoopJoin is tolerated — the library's own 1-row
+# broadcast crossJoin scorers (functions/text.py OOV/TF-IDF totals,
+# functions/sampling.py share caps) plan as BNLJ, and their output
+# cardinality is bounded by the broadcast threshold, so a caller
+# feeding an already-scored frame into curate() must not be rejected
+# for the library's own pattern. validate()'s default stays strict.
+CURATE_PLAN_BUDGET: dict = {"allow_broadcast_nested_loop": True}
 
 
 _DEFAULT_SPLITS = {"train": 0.9, "val": 0.05, "test": 0.05}
@@ -41,7 +49,7 @@ def curate(df: DataFrame, eval_set: DataFrame | None = None,
            min_overlap: int = 1,
            splits: dict[str, float] | None = _DEFAULT_SPLITS,
            split_salt: str = "",
-           plan_budget: dict | None = PLAN_BUDGET_DEFAULT) -> DataFrame:
+           plan_budget: dict | None = CURATE_PLAN_BUDGET) -> DataFrame:
     """The curated corpus: input minus duplicates (min-id
     representative kept), minus docs under ``min_quality``, minus docs
     sharing ``shingle_k``-grams with ``eval_set`` (skipped when None),
@@ -54,9 +62,10 @@ def curate(df: DataFrame, eval_set: DataFrame | None = None,
     audited with ``plans.audit.assert_scalable(**budget)`` before it
     is returned — any global sort, nested-loop join, or row-Python
     path a caller's inputs smuggled in raises ``ValueError`` with the
-    audit numbers before the first action runs. The default ``{}``
-    applies the assert_scalable defaults; pass ``None`` to opt out,
-    or a dict to add ``max_exchanges``/``max_scan_width`` caps."""
+    audit numbers before the first action runs. The default
+    ``CURATE_PLAN_BUDGET`` applies the assert_scalable defaults but
+    admits BroadcastNestedLoopJoin; pass ``None`` to opt out, or a
+    dict to add ``max_exchanges``/``max_scan_width`` caps."""
     out = dedup_exact(df, text_col, id_col)
     if min_quality > 0.0:
         out = out.where(quality_score(text_col) >= min_quality)
@@ -82,7 +91,7 @@ def curate_transcripts(df: DataFrame, part_col: str = "conv_id",
                        fractions: dict[str, float] | None = None,
                        split_salt: str = "",
                        hasher: str = "xxhash64",
-                       plan_budget: dict | None = PLAN_BUDGET_DEFAULT
+                       plan_budget: dict | None = CURATE_PLAN_BUDGET
                        ) -> DataFrame:
     """The TRANSCRIPT twin of ``curate`` — the SFT-prep pipeline over
     multi-turn conversations, as one composition of tested operators:

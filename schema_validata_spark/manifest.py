@@ -6,7 +6,8 @@ The manifest is a small append-only Parquet table (Iceberg-compatible
 layout) keyed by ``(run_id, partition_key)``:
 
     run_id        deterministic run identity (data hash + rules hash)
-    partition_key partition value as string (e.g. '2023-11-14')
+    partition_key partition value as string (e.g. '2023-11-14'); NULL
+                  for the NULL partition, so it never collides with 'None'
     status        'done'
     metrics       JSON blob of per-partition stats/violation counts
     rows          rows validated in the partition
@@ -41,7 +42,7 @@ from pyspark.sql import SparkSession, types as T
 
 MANIFEST_SCHEMA = T.StructType([
     T.StructField("run_id", T.StringType(), False),
-    T.StructField("partition_key", T.StringType(), False),
+    T.StructField("partition_key", T.StringType(), True),
     T.StructField("status", T.StringType(), False),
     T.StructField("metrics", T.StringType(), True),
     T.StructField("rows", T.LongType(), True),
@@ -154,7 +155,7 @@ class Manifest:
         a write per processed batch keeps the manifest compact while
         preserving partition-granular resume."""
         now = time.time()
-        recs = [(run_id, str(pk), "done",
+        recs = [(run_id, None if pk is None else str(pk), "done",
                  json.dumps(metrics or {}, sort_keys=True, default=str),
                  rows, wall_s, snapshot_id, now)
                 for pk, metrics, rows, wall_s, snapshot_id in entries]

@@ -1,6 +1,7 @@
 """Data-quality expectations beyond per-column schema rules: cross-column
 conditional rules, table-level aggregate expectations, freshness /
-completeness checks, and robust (IQR) outlier stats.
+completeness checks, robust (IQR) outlier stats, trend screens and
+cross-partition format (value-mask) stability.
 
 The reference validates one column at a time against a data dictionary
 (src/schema_validata.py:2045-2154); a production pipeline layer also
@@ -817,3 +818,69 @@ def value_novelty_trend(df: DataFrame, value_col: str, ts_col: str,
                 / F.col("n_values").cast("double"), 6)
          .alias("share_new"),
         "first_values")
+
+
+MASK_CLASSES = [("[A-Z]", "A"), ("[a-z]", "a"), ("[0-9]", "9")]
+
+
+def mask_stability(df: DataFrame, cols: list[str], partition_col: str,
+                   max_chars: int = 24) -> DataFrame:
+    """Cross-partition FORMAT stability: does each column's dominant
+    value mask stay the same across partitions? A value's mask maps
+    every uppercase ASCII letter to ``A``, lowercase to ``a`` and digit
+    to ``9`` (other characters pass through), so '555-0100' reads
+    '999-9999'. The screen that catches an upstream exporter
+    switching date formats, zero-padding, or ID schemes in one
+    partition — a shape change that null/range checks never see.
+
+    Per (partition, column): the dominant mask = the most frequent
+    mask, ties broken by GREATEST mask (max of the (n, mask) struct —
+    deterministic across shuffles and engines). Per column:
+
+    ``column_name, n_partitions, n_dominant_masks (distinct dominants),
+    top_mask (the dominant mask carried by the most partitions, ties
+    by greatest mask), n_conforming (partitions whose dominant ==
+    top_mask), stable (n_dominant_masks == 1)``.
+
+    NULL values have no format (excluded); a NULL partition is a real
+    partition. Masks clip to ``max_chars`` (bounded keys).
+
+    SCALE: masks compute in the scan projection (regexp chain,
+    whole-stage codegen); ONE hash aggregate keyed by (partition,
+    column, clipped mask) — map-side combined, raw values never
+    shuffle — then two aggregates over the mask-vocabulary-sized
+    frame. Output is one row per column."""
+    def _mask(c):
+        m = qcol(c).cast("string").substr(1, max_chars)
+        for pat, rep in MASK_CLASSES:
+            m = F.regexp_replace(m, pat, rep)
+        return m
+
+    frames = [df.where(qcol(c).isNotNull())
+                .select(qcol(partition_col).alias("__p"),
+                        F.lit(c).alias("column_name"),
+                        _mask(c).alias("__mask"))
+              for c in cols]
+    u = frames[0]
+    for f in frames[1:]:
+        u = u.unionByName(f)
+    counts = (u.groupBy("__p", "column_name", "__mask")
+               .agg(F.count(F.lit(1)).cast("bigint").alias("__n")))
+    dom = (counts.groupBy("__p", "column_name")
+                 .agg(F.max(F.struct(F.col("__n"), F.col("__mask")))
+                       .alias("__best"))
+                 .select("__p", "column_name",
+                         F.col("__best.__mask").alias("__dom")))
+    per_dom = (dom.groupBy("column_name", "__dom")
+                  .agg(F.count(F.lit(1)).cast("bigint").alias("__np")))
+    summary = (per_dom.groupBy("column_name")
+               .agg(F.sum("__np").cast("bigint").alias("n_partitions"),
+                    F.count(F.lit(1)).cast("bigint")
+                     .alias("n_dominant_masks"),
+                    F.max(F.struct(F.col("__np"), F.col("__dom")))
+                     .alias("__top")))
+    return summary.select(
+        "column_name", "n_partitions", "n_dominant_masks",
+        F.col("__top.__dom").alias("top_mask"),
+        F.col("__top.__np").alias("n_conforming"),
+        (F.col("n_dominant_masks") == 1).alias("stable"))

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.colref import qcol
+from ..operators.integrity import referential_violations
 from ..operators.violations import (rate_status, row_check_hits,
                                     row_specs, verdict_count_aggs,
                                     verdict_stack)
@@ -466,26 +467,19 @@ def stream_completeness(stream_df: DataFrame, cols: list[str],
 
 def stream_ri_violations(stream_df: DataFrame, dim_df: DataFrame,
                          fk_col: str, dim_col: str) -> DataFrame:
-    """Streaming referential integrity: stream rows whose foreign key
-    has no match in a STATIC dimension table — the continuous twin of
-    the batch RI anti-join (integrity.referential_violations), closing
-    the north rule's uniqueness/RI/drift triad on the streaming side
-    (uniqueness → stream_dedup, drift → stream_drift_scores, RI →
-    here).
+    """Streaming referential integrity: stream rows whose non-NULL
+    foreign key has no match in a STATIC dimension table. This is the
+    batch op ``integrity.referential_violations`` itself, so the
+    contract is the same: NULL foreign keys are not violations, and the
+    dimension is not deduplicated (an anti-join only tests key
+    existence).
 
-    Implemented as a stream-static LEFT ANTI join — one of the
-    stateless stream joins Structured Streaming supports natively, so
-    there is NO state store and no watermark requirement: each
-    micro-batch anti-joins against the (broadcastable) dimension
-    snapshot. NULL foreign keys are violations by the same contract as
-    the batch op (they reference nothing). The dimension is read fresh
-    per micro-batch under the default parquet source, so slowly-
-    changing dims are picked up on file refresh."""
-    dim_keys = dim_df.select(F.col(dim_col).alias("__dim_key")) \
-                     .where(F.col("__dim_key").isNotNull()).distinct()
-    return stream_df.join(
-        dim_keys, stream_df[fk_col] == dim_keys["__dim_key"],
-        "left_anti")
+    A stream-static LEFT ANTI join is one of the stateless stream joins
+    Structured Streaming supports natively: NO state store and no
+    watermark requirement. The dimension is read fresh per micro-batch
+    under the default parquet source, so slowly-changing dims are
+    picked up on file refresh."""
+    return referential_violations(stream_df, [fk_col], dim_df, [dim_col])
 
 
 def stream_burst_alerts(stream_df: DataFrame, key_col: str,

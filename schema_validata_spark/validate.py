@@ -49,7 +49,7 @@ import json
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from .functions.colref import qcol
 from .functions.scalars import collect_scalars
@@ -67,17 +67,11 @@ from .operators.violations import (CheckSpec, _check_condition,
                                    violation_plan_for)
 from .rules import Rules
 
-# Default-on scale gate for composed entry points: forbid global
-# sorts, CartesianProducts, and row-at-a-time Python, but tolerate
-# BroadcastNestedLoopJoin — the library's own sanctioned 1-row
-# broadcast crossJoin scorers (functions/text.py OOV/TF-IDF totals,
-# functions/sampling.py share caps) plan as BNLJ, and their output
-# cardinality is bounded by the broadcast threshold, so a caller
-# feeding an already-scored frame into validate()/curate() must not
-# be rejected for the library's own pattern. Pass a stricter dict
-# (e.g. {"allow_broadcast_nested_loop": False}) to tighten, or None
-# to opt out entirely.
-PLAN_BUDGET_DEFAULT: dict = {"allow_broadcast_nested_loop": True}
+# Default-on scale gate for validate(): assert_scalable's own defaults,
+# which forbid global sorts, nested-loop joins (BroadcastNestedLoopJoin
+# included) and row-at-a-time Python. Pass a dict of assert_scalable
+# kwargs to tighten or relax, or None to opt out entirely.
+PLAN_BUDGET_DEFAULT: dict = {}
 
 
 def _rules_md5(rules: Rules) -> str:
@@ -108,8 +102,10 @@ def _dataset_md5(df: DataFrame, dataset_name: str,
 # per row, so < 2^63 even at 10^12 rows/partition — no ANSI overflow)
 # break that symmetry. Order-independent by construction.
 def partition_fingerprints(df: DataFrame, partition_col: str
-                           ) -> dict[str, str]:
-    """{partition_key: content fingerprint} in ONE aggregate scan.
+                           ) -> dict[str | None, str]:
+    """{partition_key: content fingerprint} in ONE aggregate scan. Keys
+    are the partition values cast to string; the NULL partition's key
+    is ``None``, distinct from a real ``'None'`` value.
     The scan reads every column (it hashes full rows); at scale prefer
     passing an Iceberg ``snapshot_id`` to ``validate_partitioned`` —
     metadata-only — and fall back to this when the snapshot moved."""
@@ -121,11 +117,21 @@ def partition_fingerprints(df: DataFrame, partition_col: str
                    F.expr("bit_xor(__h)").alias("hx"),
                    F.sum(F.pmod(F.col("__h"), F.lit(1 << 20))).alias("hs"))
               .collect())
-    # str() maps a NULL partition to 'None' — the SAME key every other
-    # identity branch produces (str(r[0]) on a collected NULL), so one
-    # partition can't flip identity keys between modes (and sorted()
-    # never compares None with str)
-    return {str(r["__p"]): f"fp:{r['n']}:{r['hx']}:{r['hs']}" for r in rows}
+    return {r["__p"]: f"fp:{r['n']}:{r['hx']}:{r['hs']}" for r in rows}
+
+
+def _partition_keys(df: DataFrame, partition_col: str) -> list[str | None]:
+    """Distinct partition keys, keyed like ``partition_fingerprints``."""
+    return [r[0] for r in df.select(qcol(partition_col).cast("string"))
+                              .distinct().collect()]
+
+
+def _in_partitions(partition_col: str, keys) -> Column:
+    """Row filter selecting the partitions named by ``keys`` (a ``None``
+    key selects the NULL partition, which ``isin`` never matches)."""
+    c = qcol(partition_col)
+    cond = c.cast("string").isin([k for k in keys if k is not None])
+    return cond | c.isNull() if None in keys else cond
 
 
 @dataclass
@@ -906,23 +912,21 @@ def validate_partitioned(spark: SparkSession, df: DataFrame, rules: Rules,
                                    all(_snap_part(v) == snap_token
                                        for v in done_ids.values())):
         # same snapshot (or fresh run): partition list only, no data read
-        parts = [str(r[0]) for r in
-                 df.select(qcol(partition_col).cast("string"))
-                   .distinct().collect()]
-        current = {p: snap_token for p in parts}
+        current = {p: snap_token
+                   for p in _partition_keys(df, partition_col)}
     elif verify_content or snap_token is not None:
         fps = partition_fingerprints(df, partition_col)
         current = {p: (f"{snap_token};{fp}" if snap_token else fp)
                    for p, fp in fps.items()}
     else:
-        parts = [str(r[0]) for r in
-                 df.select(qcol(partition_col).cast("string"))
-                   .distinct().collect()]
-        current = {p: done_ids.get(p) for p in parts}  # always "matches"
+        current = {p: done_ids.get(p)  # always "matches"
+                   for p in _partition_keys(df, partition_col)}
     parts = list(current)
-    todo = sorted(p for p in parts
-                  if p not in done_ids
-                  or not _matches(done_ids[p], current[p]))
+    # the NULL partition (key None) sorts first
+    todo = sorted((p for p in parts
+                   if p not in done_ids
+                   or not _matches(done_ids[p], current[p])),
+                  key=lambda p: (p is not None, p or ""))
 
     # heal identities of SKIPPED partitions whose stored token is less
     # current than the computed one (bare fp / old snapshot prefix /
@@ -953,28 +957,22 @@ def validate_partitioned(spark: SparkSession, df: DataFrame, rules: Rules,
     for i in range(0, len(todo), batch_size):
         batch = todo[i:i + batch_size]
         t0 = timed()
-        # coalesce so the 'None' identity key actually selects the
-        # NULL-partition rows (NULL.isin([...]) is never true)
-        pkey = F.coalesce(qcol(partition_col).cast("string"),
-                          F.lit("None"))
-        sub = df.where(pkey.isin(batch))
+        sub = df.where(_in_partitions(partition_col, batch))
         pv = partition_verdicts(sub, rules, partition_col, dims=dims)
         rows = pv.collect()
         wall = timed() - t0
-        by_part: dict[str, list] = {p: [] for p in batch}
+        by_part: dict[str | None, list] = {p: [] for p in batch}
         for r in rows:
-            by_part.setdefault(str(r["partition_key"]), []).append(
+            by_part.setdefault(r["partition_key"], []).append(
                 (r["column_name"], r["check"], r["violation_count"], r["status"]))
         manifest.mark_done_many(run_id, [
             (p, {"checks": by_part.get(p, [])}, None,
              wall / max(1, len(batch)), current.get(p))
             for p in batch])
-        # same str() normalization as the manifest keys: the NULL
-        # partition is 'None' everywhere (output rows, manifest,
-        # reconstructed resume rows) — never NULL on one path and
-        # 'None' on another
+        # the NULL partition is NULL everywhere (output rows, manifest,
+        # reconstructed resume rows), never the string 'None'
         all_rows.extend(
-            (str(r["partition_key"]), r["column_name"], r["check"],
+            (r["partition_key"], r["column_name"], r["check"],
              r["violation_count"], r["status"]) for r in rows)
 
     # previously completed, still-current partitions: reconstruct verdict
@@ -1005,8 +1003,8 @@ def validate_partitioned(spark: SparkSession, df: DataFrame, rules: Rules,
 
 def _maintain_sketches(spark: SparkSession, df: DataFrame,
                        partition_col: str, sketch_cols: list[str],
-                       path: str, todo_set: set[str],
-                       all_parts: set[str]) -> None:
+                       path: str, todo_set: set[str | None],
+                       all_parts: set[str | None]) -> None:
     """Refresh the per-partition HLL sketch table beside the manifest:
     cached rows are REUSED byte-for-byte for partitions this run
     skipped (no data rescan), and a single pruned scan re-sketches the
@@ -1024,23 +1022,22 @@ def _maintain_sketches(spark: SparkSession, df: DataFrame,
     colset = set(sketch_cols)
     keep = all_parts - todo_set
     cached_rows: list = []
-    covered: set[str] = set()
+    covered: set[str | None] = set()
     if Manifest(spark, path)._exists():
         rows = [r for r in spark.read.parquet(path).collect()
                 if r["partition_key"] in keep
                 and r["column_name"] in colset]
-        cover: dict[str, set] = {}
+        cover: dict[str | None, set] = {}
         for r in rows:
             cover.setdefault(r["partition_key"], set()).add(r["column_name"])
         covered = {p for p, cs in cover.items() if cs >= colset}
         cached_rows = [r for r in rows if r["partition_key"] in covered]
-    recompute = sorted(all_parts - covered)
+    recompute = all_parts - covered
     fresh_rows: list = []
     if recompute:
-        pkey = F.coalesce(qcol(partition_col).cast("string"),
-                          F.lit("None"))
-        sub = df.where(pkey.isin(recompute)).withColumn("__pk", pkey)
-        fresh_rows = partition_sketches(sub, sketch_cols, "__pk").collect()
+        sub = df.where(_in_partitions(partition_col, recompute))
+        fresh_rows = partition_sketches(sub, sketch_cols,
+                                        partition_col).collect()
     data = [(r["partition_key"], r["column_name"], r["sketch"],
              r["n_rows"]) for r in cached_rows + fresh_rows]
     (spark.createDataFrame(data, SKETCH_SCHEMA)

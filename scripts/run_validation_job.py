@@ -215,7 +215,8 @@ def main(argv=None):
     if args.mask_cols:
         if not args.partition_col:
             raise SystemExit("--mask-cols requires --partition-col")
-        from schema_validata_spark.operators.statqa import mask_stability
+        from schema_validata_spark.operators.expectations import \
+            mask_stability
         mcols = [c.strip() for c in args.mask_cols.split(",") if c.strip()]
         ms = mask_stability(df, mcols, args.partition_col)
         ms.write.mode("overwrite").parquet(

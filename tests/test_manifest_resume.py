@@ -109,9 +109,9 @@ def test_rerun_is_idempotent(spark, tmp_path):
 
 
 def test_null_partition_resume_and_processing(spark, tmp_path):
-    """A NULL partition key must get a stable 'None' identity in every
-    mode AND actually be selected for processing (NULL.isin never
-    matches without the coalesce)."""
+    """A NULL partition key must get a stable identity in every mode
+    AND actually be selected for processing (NULL.isin never
+    matches)."""
     from schema_validata_spark.datagen import transcript_rules
     from schema_validata_spark.validate import validate_partitioned
     from pyspark.sql import functions as F
@@ -130,6 +130,50 @@ def test_null_partition_resume_and_processing(spark, tmp_path):
                                mpath, run_id="nulls1")
     assert pv2.count() == pv.count()
 
+
+
+def test_null_and_none_string_partitions_stay_distinct(spark, tmp_path):
+    """The NULL partition and a real 'None' partition are two
+    partitions: two fingerprints, two manifest keys, two verdict rows
+    per check, and changing one recomputes only that one."""
+    from schema_validata_spark.rules import Rules
+    from schema_validata_spark.validate import (partition_fingerprints,
+                                                validate_partitioned)
+    rules = Rules.from_nested_dict("R", {
+        "x": {"data_type": "String", "allow_null": False}})
+    rows = [(None, "v1"), (None, "v2"), ("None", None), ("None", "v3"),
+            ("a", "v4")]
+    t = spark.createDataFrame(rows, "p string, x string")
+    assert set(partition_fingerprints(t, "p")) == {None, "None", "a"}
+    mpath = str(tmp_path / "m")
+
+    def manifest_rows():
+        return sorted(((r["partition_key"] is None, r["partition_key"])
+                       for r in spark.read.parquet(mpath).collect()),
+                      key=str)
+
+    pv = validate_partitioned(spark, t, rules, "p", mpath, run_id="nn")
+    verdicts = sorted(((r["partition_key"], r["status"])
+                       for r in pv.where("check = 'allow_null'").collect()),
+                      key=str)
+    assert verdicts == [("None", "fail"), ("a", "pass"), (None, "pass")]
+    cold = manifest_rows()
+    assert cold == sorted([(False, "None"), (False, "a"), (True, None)],
+                          key=str)
+    # no-op rerun: nothing recomputes, no manifest row is added
+    again = validate_partitioned(spark, t, rules, "p", mpath, run_id="nn")
+    assert sorted(map(tuple, again.collect()), key=str) == \
+        sorted(map(tuple, pv.collect()), key=str)
+    assert manifest_rows() == cold
+    # change only the 'None' partition: only it recomputes
+    t2 = spark.createDataFrame(rows[:2] + [("None", "v5"), ("None", "v3")]
+                               + rows[4:], "p string, x string")
+    pv2 = validate_partitioned(spark, t2, rules, "p", mpath, run_id="nn")
+    assert manifest_rows() == sorted(cold + [(False, "None")], key=str)
+    verdicts2 = sorted(((r["partition_key"], r["status"])
+                        for r in pv2.where("check = 'allow_null'")
+                        .collect()), key=str)
+    assert verdicts2 == [("None", "pass"), ("a", "pass"), (None, "pass")]
 
 def test_snapshot_move_heals_fast_path(spark, tmp_path):
     """Snapshot moved: unchanged partitions are skipped via fingerprint

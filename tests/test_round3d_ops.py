@@ -128,7 +128,8 @@ def test_quality_trend_plan_shape(spark, tmp_path):
 
 
 def test_mask_stability_flags_format_flip(spark):
-    from schema_validata_spark.operators.statqa import mask_stability
+    from schema_validata_spark.operators.expectations import \
+        mask_stability
     rows = ([("p1", "AB-1234", "x1")] * 5          # stable id format
             + [("p2", "AB-5678", "x2")] * 5
             + [("p3", "12345678", "x3")] * 5)      # p3 flipped format
@@ -146,7 +147,8 @@ def test_mask_stability_flags_format_flip(spark):
 
 
 def test_mask_stability_null_partition_and_ties(spark):
-    from schema_validata_spark.operators.statqa import mask_stability
+    from schema_validata_spark.operators.expectations import \
+        mask_stability
     # NULL partition is a real partition; within-partition dominance
     # ties break by GREATEST mask
     rows = [(None, "aa"), (None, "99"),            # tie -> 'aa' > '99'
@@ -164,7 +166,8 @@ def test_mask_stability_plan_one_raw_shuffle(spark, tmp_path):
     (partition, column, clipped-mask) key — text/values never
     shuffle; later aggregates run on the mask-vocabulary frame."""
     from pyspark.sql import functions as F
-    from schema_validata_spark.operators.statqa import mask_stability
+    from schema_validata_spark.operators.expectations import \
+        mask_stability
     src = str(tmp_path / "ms")
     spark.range(10_000).select(
         (F.col("id") % 7).cast("string").alias("p"),

@@ -95,13 +95,19 @@ def test_scd2_single_exchange_plan(spark):
 # ------------------------------------------------- stream_ri_violations
 
 def test_stream_ri_matches_batch_anti_join(spark, tmp_path):
+    """The stream op returns exactly ``referential_violations`` on the
+    same rows: a NULL foreign key is not an orphan, and a duplicate
+    dimension key does not multiply fact rows."""
+    from schema_validata_spark.operators.integrity import \
+        referential_violations
     from schema_validata_spark.streaming.validate_stream import \
         stream_ri_violations
 
     facts = spark.createDataFrame(
-        [(i, i % 7) for i in range(50)] + [(99, None)],
+        [(i, i % 7) for i in range(50)] + [(99, None), (100, None)],
         "event_id long, fk long")
-    dim = spark.createDataFrame([(k,) for k in (0, 1, 2, 3)], "pk long")
+    dim = spark.createDataFrame([(k,) for k in (0, 1, 1, 2, 3, 3, None)],
+                                "pk long")
     src = str(tmp_path / "ri_src")
     facts.write.parquet(src)
     stream = spark.readStream.schema(facts.schema).parquet(src)
@@ -109,7 +115,10 @@ def test_stream_ri_matches_batch_anti_join(spark, tmp_path):
     q = (out.writeStream.format("memory").queryName("ri_mem")
          .outputMode("append").trigger(availableNow=True).start())
     q.awaitTermination(120)
-    got = {(r["event_id"], r["fk"])
-           for r in spark.sql("SELECT * FROM ri_mem").collect()}
-    expect = {(i, i % 7) for i in range(50) if i % 7 > 3} | {(99, None)}
-    assert got == expect
+    got = sorted((r["event_id"], r["fk"])
+                 for r in spark.sql("SELECT * FROM ri_mem").collect())
+    batch = sorted((r["event_id"], r["fk"]) for r in
+                   referential_violations(facts, ["fk"], dim,
+                                          ["pk"]).collect())
+    assert got == batch
+    assert got == sorted((i, i % 7) for i in range(50) if i % 7 > 3)

@@ -1,6 +1,8 @@
 """Round-4: default-on plan budgets for composed entry points
 (VERDICT r3 #6) — validate()/curate() run plans.audit.assert_scalable
-on the composed frames before returning; opt-out is explicit."""
+on the composed frames before returning; opt-out is explicit.
+validate()'s default budget is strict; curate()'s admits the library's
+own 1-row broadcast scorers (BroadcastNestedLoopJoin)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -67,3 +69,31 @@ def test_curate_default_budget_passes_on_clean_input(spark):
         "doc_id long, text string")
     out = curate(df, min_quality=0.0)
     assert out.count() == 30
+
+
+def test_validate_gate_catches_smuggled_global_sort(spark):
+    """A caller handing validate() a globally sorted input has a range
+    exchange in the composed plan — the 100×-killer the default budget
+    exists to catch before execution."""
+    df = _df(spark).orderBy("text")
+    with pytest.raises(ValueError, match="global-sort"):
+        validate(spark, df, _rules(), key_cols=["conv_id", "turn_idx"])
+    # explicit opt-out lets it through (and it still runs)
+    res = validate(spark, df, _rules(), key_cols=["conv_id", "turn_idx"],
+                   plan_budget=None)
+    assert res.violations.count() == 0
+    res.unpersist()
+
+
+def test_validate_gate_catches_smuggled_non_equi_broadcast_join(spark):
+    """A non-equi join against a broadcast frame plans as
+    BroadcastNestedLoopJoin, which validate()'s default budget
+    forbids."""
+    caps = spark.createDataFrame([(50,)], "cap int")
+    df = _df(spark).join(F.broadcast(caps), F.col("turn_idx") < F.col("cap"))
+    with pytest.raises(ValueError, match="BroadcastNestedLoopJoin"):
+        validate(spark, df, _rules(), key_cols=["conv_id", "turn_idx"])
+    res = validate(spark, df, _rules(), key_cols=["conv_id", "turn_idx"],
+                   plan_budget=None)
+    assert res.violations.count() == 0
+    res.unpersist()

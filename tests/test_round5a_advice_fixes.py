@@ -1,11 +1,13 @@
 """Round-5: regression tests for the ADVICE r4 findings.
 
-1. (medium) The default-on entry-point plan budget must tolerate
+1. (medium) curate()'s default plan budget must tolerate
    BroadcastNestedLoopJoin — the library's OWN sanctioned 1-row
    broadcast crossJoin scorers (functions/text.py totals,
    functions/sampling.py share caps) plan as BNLJ, so feeding a
-   scored frame into curate()/validate() must not raise — while a
+   scored frame into curate() must not raise — while a
    CartesianProduct (both sides distributed) stays forbidden.
+   validate()'s default budget is strict: it rejects BNLJ unless the
+   caller's budget dict admits it.
 2. (low) _xl_serial_to_dt must use the 1904-epoch-specific overflow
    bound: serials 2,957,004–2,958,465 under date1904 degrade per-cell
    to the raw number instead of killing the workbook read.
@@ -50,14 +52,19 @@ def test_curate_accepts_sanctioned_broadcast_nlj_lineage(spark):
     assert out.count() > 0
 
 
-def test_validate_accepts_sanctioned_broadcast_nlj_lineage(spark):
+def test_validate_rejects_broadcast_nlj_lineage(spark):
+    """validate()'s default budget forbids BroadcastNestedLoopJoin; an
+    explicit budget dict can still admit it."""
     scored = _scored(spark)
     rules = Rules.from_nested_dict("R", {
         "doc_id": {"data_type": "Integer", "allow_null": False},
         "text": {"data_type": "String", "allow_null": False,
                  "length": 40},
     })
-    res = validate(spark, scored, rules, key_cols=["doc_id"])
+    with pytest.raises(ValueError, match="BroadcastNestedLoopJoin"):
+        validate(spark, scored, rules, key_cols=["doc_id"])
+    res = validate(spark, scored, rules, key_cols=["doc_id"],
+                   plan_budget={"allow_broadcast_nested_loop": True})
     assert res.violations is not None
     res.unpersist()
 
@@ -78,8 +85,8 @@ def test_cartesian_still_forbidden_by_default_budget(spark):
 
 
 def test_assert_scalable_strict_default_still_rejects_bnlj(spark):
-    """Direct assert_scalable keeps its strict default — only the
-    composed entry points' PLAN_BUDGET_DEFAULT opts into BNLJ."""
+    """Direct assert_scalable keeps its strict default — only
+    curate()'s CURATE_PLAN_BUDGET opts into BNLJ."""
     scored = _scored(spark)
     with pytest.raises(ValueError, match="BroadcastNestedLoopJoin"):
         assert_scalable(scored)
