@@ -36,8 +36,6 @@ from schema_validata_spark.functions.sampling import (_hex_threshold,
                                                       group_split)
 from schema_validata_spark.functions.text import (PII_PATTERNS, pii_summary,
                                                   repetition_stats)
-from schema_validata_spark.operators.decontam import (contamination_pairs,
-                                                      decontaminate)
 from schema_validata_spark.operators.sequence import (consecutive_repeats,
                                                       order_regressions,
                                                       session_stats)
@@ -527,16 +525,6 @@ def q_column_entropy(spark, sf_dir):
     return out.orderBy("column_name")
 
 
-def q_chunk_documents(spark, sf_dir):
-    """Sliding-window chunking with character offsets
-    (functions/chunking.py) — map-only sequence+posexplode+substr,
-    zero shuffles (the orderBy here is oracle-compare convenience)."""
-    from schema_validata_spark.functions.chunking import chunk_documents
-    out = chunk_documents(_t(spark, sf_dir, "documents"), "text",
-                          "doc_id", chunk_size=200, overlap=50)
-    return out.orderBy("doc_id", "chunk_idx")
-
-
 def q_schema_diff(spark, sf_dir):
     """Schema-evolution diff (operators/schema_evolution.py) — pure
     metadata (catalog-call only, zero data scanned at any table size);
@@ -954,56 +942,6 @@ def q_quality_topk_per_lang(spark, sf_dir):
     df = (_t(spark, sf_dir, "documents")
           .select("doc_id", "lang", quality_score("text").alias("q")))
     return top_k_per_group(df, ["lang"], "q", 3, tiebreak_cols=["doc_id"])
-
-
-def _eval_subset(spark, sf_dir):
-    # deterministic stand-in benchmark: every 50th document
-    return _t(spark, sf_dir, "documents").where(F.col("doc_id") % 50 == 0)
-
-
-def q_contamination_pairs(spark, sf_dir):
-    """Eval-set decontamination audit (operators/decontam.py): training
-    docs sharing ≥1 distinct 5-gram with the eval subset. Hash-join on
-    xxhash64(shingle); the oracle joins on the shingle strings
-    directly (collision-free at this scale by construction)."""
-    train = _t(spark, sf_dir, "documents")
-    return contamination_pairs(train, _eval_subset(spark, sf_dir),
-                               shingle_k=5)
-
-
-def q_contamination_bloom(spark, sf_dir):
-    """Bloom-prescreened decontamination (operators/decontam.py:
-    contamination_pairs_bloom): the eval shingle set collapses to a
-    (slot, bit_or word) bitmap — bounded rows regardless of eval size —
-    probed by two broadcast joins before the exact hash join confirms.
-    Output byte-identical to `contamination_pairs`, so they share the
-    oracle; run here with a deliberately small bitmap so the
-    false-positive elimination path is what the hash check verifies."""
-    from schema_validata_spark.operators.decontam import (
-        contamination_pairs_bloom)
-    train = _t(spark, sf_dir, "documents")
-    return contamination_pairs_bloom(train, _eval_subset(spark, sf_dir),
-                                     shingle_k=5, m_bits=1 << 14)
-
-
-def q_curation_report(spark, sf_dir):
-    """Whole-pipeline curation accounting (curation.py:
-    curation_report): every document attributed to duplicate /
-    low_quality / contaminated / kept:<split> with first-failing-stage
-    precedence — the oracle chains the dedup window, quality formula,
-    shingle contamination, and md5 split fragments into one SQL."""
-    from schema_validata_spark.curation import curation_report
-    return curation_report(
-        _t(spark, sf_dir, "documents"), _eval_subset(spark, sf_dir),
-        min_quality=0.4, shingle_k=5,
-        splits={"train": 0.8, "val": 0.1, "test": 0.1})
-
-
-def q_decontaminated(spark, sf_dir):
-    """Corpus minus contaminated docs (anti-join on the flagged set)."""
-    train = _t(spark, sf_dir, "documents")
-    return decontaminate(train, _eval_subset(spark, sf_dir),
-                         shingle_k=5).select("doc_id")
 
 
 def q_pii_summary(spark, sf_dir):
@@ -1605,43 +1543,6 @@ def q_repair_cut_points(spark, sf_dir):
             .orderBy("user_id"))
 
 
-def q_curate_transcripts(spark, sf_dir):
-    """End-to-end transcript curation (curation.py:curate_transcripts):
-    structural screen (role automaton + tool pairing) → whole-
-    conversation dedup (md5 fingerprint mode) → leakage-safe split.
-    The transcript frame derives from events identically in both
-    engines: strict user/assistant alternation by per-conversation
-    row_number, corrupted to 'tool' on every event_id % 4999 == 0
-    (so ~a tenth of conversations get structurally flagged), and
-    conversations of users < 10 cloned under user_id+10000 with
-    PRE-COMPUTED roles/texts so each clone survives iff its original
-    does and dedups back to it. Output: surviving turns + split."""
-    from schema_validata_spark.curation import curate_transcripts
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("event_id")
-    base = (ev.select("user_id", "event_id",
-                      F.row_number().over(w).alias("rn"),
-                      F.col("event_type").alias("text"))
-              .withColumn("role",
-                          F.when(F.col("event_id") % 4999 == 0, "tool")
-                           .when(F.col("rn") % 2 == 1, "user")
-                           .otherwise("assistant"))
-              .withColumn("tool", F.lit(None).cast("string"))
-              .drop("rn"))
-    clones = (base.where(F.col("user_id") < 10)
-                  .withColumn("user_id", F.col("user_id") + 10000)
-                  .withColumn("event_id",
-                              F.col("event_id") + 1000000000))
-    t = base.unionByName(clones)
-    out = curate_transcripts(
-        t, part_col="user_id", order_col="event_id",
-        role_col="role", text_col="text", tool_col="tool",
-        transitions={("user", "assistant"), ("assistant", "user")},
-        first_roles={"user"}, hasher="md5")
-    return (out.select("user_id", "event_id", "role", "split")
-               .orderBy("user_id", "event_id"))
-
-
 def q_run_log_regressions(spark, sf_dir):
     """Cross-run regression diff over append_run_log's tables
     (report.py:run_log_regressions): three synthetic validation runs
@@ -1698,41 +1599,6 @@ def q_json_payload_violations(spark, sf_dir):
     return json_payload_violations(ev, "props", "event_id",
                                    required_keys=["k"],
                                    numeric_keys=["k"])
-
-
-def q_asof_state(spark, sf_dir):
-    """Point-in-time state join (operators/asof.py:asof_join): each
-    event matched to the user's most recent preceding 'signup' event —
-    union + one keyed window carry-forward (single shuffle), vs
-    DuckDB's native ASOF JOIN as the oracle."""
-    from schema_validata_spark.operators.asof import asof_join
-    ev = _t(spark, sf_dir, "events")
-    snap = (ev.where(F.col("event_type") == "signup")
-              .select("user_id", "ts",
-                      F.col("value").alias("snap_value")))
-    out = asof_join(ev.select("event_id", "user_id", "ts"), snap,
-                    "ts", ["user_id"], value_cols=["snap_value"])
-    return out.select("event_id", "user_id", "ts",
-                      F.round("snap_value", 6).alias("snap_value"),
-                      "asof_ts")
-
-
-def q_interval_counts(spark, sf_dir):
-    """Bucketized range join (operators/rangejoin.py:interval_join):
-    event values matched to overlapping bands derived from nation
-    (width 6, stride 4 — some points match 2 bands), counted per band;
-    equi-join on bucket ids + exact containment post-filter, never a
-    nested-loop plan."""
-    from schema_validata_spark.operators.rangejoin import interval_join
-    ev = _t(spark, sf_dir, "events").select("event_id", "value")
-    bands = _t(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("band_id"),
-        (F.col("n_nationkey") * 4.0).alias("lo"),
-        (F.col("n_nationkey") * 4.0 + 6.0).alias("hi"))
-    out = interval_join(ev, bands, "value", "lo", "hi", bucket_width=6.0)
-    return (out.groupBy("band_id")
-               .agg(F.count(F.lit(1)).cast("bigint").alias("n_points"))
-               .orderBy("band_id"))
 
 
 def q_topk_sample(spark, sf_dir):
@@ -1886,25 +1752,6 @@ def q_incremental_dedup(spark, sf_dir):
     seen = snapshot_fingerprints(prior, "text")
     return (incremental_dedup(new_batch, seen, "text")
             .select("doc_id", "source").orderBy("doc_id"))
-
-
-def q_split_leakage(spark, sf_dir):
-    """Cross-split exact-content leakage (operators/decontam.py:
-    split_leakage): splits assigned by doc_id % 3, plus clones of every
-    10th doc under ids that land in a DIFFERENT split — each cloned
-    content must surface as one leakage row (min-id exemplar, row
-    count, sorted split list). ONE fingerprint-keyed hash aggregate."""
-    from schema_validata_spark.operators.decontam import split_leakage
-    docs = _t(spark, sf_dir, "documents")
-    clones = (docs.where(F.col("doc_id") % 10 == 0)
-                  .withColumn("doc_id", F.col("doc_id") + F.lit(1000001)))
-    corpus = docs.unionByName(clones)
-    split = (F.when(F.col("doc_id") % 3 == 0, F.lit("train"))
-              .when(F.col("doc_id") % 3 == 1, F.lit("val"))
-              .otherwise(F.lit("test")))
-    return (split_leakage(corpus.withColumn("split", split),
-                          "text", "doc_id", "split")
-            .orderBy("example_id"))
 
 
 def q_line_dedup(spark, sf_dir):
@@ -2110,19 +1957,6 @@ def q_vocab_stats(spark, sf_dir):
     global aggregate over the vocabulary-sized counts frame."""
     from schema_validata_spark.functions.text import vocab_stats
     return vocab_stats(_t(spark, sf_dir, "documents"), "text")
-
-
-def q_novelty(spark, sf_dir):
-    """Per-document novelty vs a reference snapshot (operators/
-    decontam.py:novelty_stats): share of each doc's distinct 5-gram
-    hashes absent from the reference (every 3rd doc — those score 0 by
-    construction). 8-byte shingle-hash left join + one aggregate; the
-    oracle joins the shingle strings directly."""
-    from schema_validata_spark.operators.decontam import novelty_stats
-    docs = _t(spark, sf_dir, "documents")
-    ref = docs.where(F.col("doc_id") % 3 == 0)
-    return (novelty_stats(docs, ref, "text", "doc_id", shingle_k=5)
-            .orderBy("doc_id"))
 
 
 def q_turn_latency(spark, sf_dir):
@@ -2860,7 +2694,7 @@ def q_scd2_history(spark, sf_dir):
     """SCD2 validity intervals from the event log
     (selection.scd2_history): per-user event_type state history —
     NULL-safe change detection, one keyed window pair sharing a single
-    exchange; pairs with asof_join for state-at-time enrichment."""
+    exchange."""
     from schema_validata_spark.operators.selection import scd2_history
     return (scd2_history(_t(spark, sf_dir, "events"), ["user_id"],
                          "ts", ["event_type"])
@@ -2927,19 +2761,6 @@ def q_numeric_histogram2d(spark, sf_dir):
     return (numeric_histogram2d(df, "value", "hh", 0.0, 500.0,
                                 0.0, 24.0, 10, 12)
             .orderBy("x_bucket", "y_bucket"))
-
-
-def q_shingle_containment(spark, sf_dir):
-    """Directional quote-inclusion pairs (decontam.shingle_containment,
-    k=5, either-direction >= 0.8): the near-superset detector Jaccard
-    misses; exact baseline — 8-byte shingle-hash join, text never
-    shuffles."""
-    from schema_validata_spark.operators.decontam import \
-        shingle_containment
-    return (shingle_containment(_t(spark, sf_dir, "documents"),
-                                "text", "doc_id", shingle_k=5,
-                                threshold=0.8)
-            .orderBy("id_a", "id_b"))
 
 
 def q_value_grid_stats(spark, sf_dir):
@@ -3190,16 +3011,6 @@ def q_quality_calibration(spark, sf_dir):
             .orderBy("group"))
 
 
-def q_file_skew(spark, sf_dir):
-    """Rows-per-file layout audit (sources/layout.file_skew_profile)
-    over the lineitem scan — the small-file-problem detector. Rows-only
-    by design: the oracle's pre-registered views cannot observe
-    Spark's input_file_name()."""
-    from schema_validata_spark.sources.layout import file_skew_profile
-    return file_skew_profile(_t(spark, sf_dir, "lineitem"),
-                             small_file_rows=10_000)
-
-
 def q_sampling_table(spark, sf_dir):
     """word2vec-style negative-sampling table over the vocab head
     (text.unigram_sampling_table): count^0.75-smoothed distribution +
@@ -3275,34 +3086,6 @@ def q_calibration_error(spark, sf_dir):
     return expected_calibration_error(
         _t(spark, sf_dir, "events"), "value",
         F.col("event_type") == "error", lo=0.0, hi=500.0, n_bins=10)
-
-
-def q_salted_join(spark, sf_dir):
-    """Skew-salted equi-join (plans/salting.salted_join): events joined
-    to a per-type dim with an 8-way content-derived salt; the oracle is
-    the PLAIN join — row-identical results, only the shuffle layout
-    differs (the invariant that makes salting safe to deploy)."""
-    from schema_validata_spark.plans.salting import salted_join
-    ev = _t(spark, sf_dir, "events")
-    dim = ev.groupBy("event_type").agg(F.avg("value").alias("type_avg"))
-    j = salted_join(ev, dim, "event_type", salts=8)
-    return (j.groupBy("event_type")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n"),
-                 F.round(F.avg("value"), 6).alias("mean_val"),
-                 F.round(F.avg("type_avg"), 6).alias("type_avg"))
-            .orderBy("event_type"))
-
-
-def q_zorder_preview(spark, sf_dir):
-    """Z-order layout dry-run over (value, user_id)
-    (sources/layout.zorder_preview): per-Morton-bucket counts +
-    bounding boxes — the locality evidence before a ZORDER rewrite;
-    pure bit-arithmetic projection, one <=16-key aggregate."""
-    from schema_validata_spark.sources.layout import zorder_preview
-    return (zorder_preview(_t(spark, sf_dir, "events"), "value",
-                           "user_id", 0.0, 500.0, 0.0, 15.0,
-                           bits=8, buckets_log2=4)
-            .orderBy("zbucket"))
 
 
 def q_daily_percentiles(spark, sf_dir):
@@ -3557,7 +3340,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tool_arg_conformance": q_tool_arg_conformance,
         "benford_digits": q_benford_digits,
         "column_entropy": q_column_entropy,
-        "chunk_documents": q_chunk_documents,
         "schema_diff": q_schema_diff,
         "numeric_correlations": q_numeric_correlations,
         "value_masks": q_value_masks,
@@ -3580,10 +3362,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "quality_topk_per_lang": q_quality_topk_per_lang,
         "deterministic_sample": q_deterministic_sample,
         "transcript_split": q_transcript_split,
-        "contamination_pairs": q_contamination_pairs,
-        "contamination_bloom": q_contamination_bloom,
-        "curation_report": q_curation_report,
-        "decontaminated": q_decontaminated,
         "pii_summary": q_pii_summary,
         "repetition_stats": q_repetition_stats,
         "consecutive_repeats": q_consecutive_repeats,
@@ -3594,8 +3372,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "session_stats": q_session_stats,
         "order_regressions": q_order_regressions,
         "embedding_norm_stats": q_embedding_norm_stats,
-        "asof_state": q_asof_state,
-        "interval_counts": q_interval_counts,
         "topk_sample": q_topk_sample,
         "weighted_sample": q_weighted_sample,
         "turn_conformance": q_turn_conformance,
@@ -3626,7 +3402,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "run_log_regressions": q_run_log_regressions,
         "tool_call_pairing": q_tool_call_pairing,
         "repair_cut_points": q_repair_cut_points,
-        "curate_transcripts": q_curate_transcripts,
         "minhash_near_duplicates": q_minhash_near_duplicates,
         "simhash_near_duplicates": q_simhash_near_duplicates,
         "embedding_near_dup_lsh": q_embedding_near_dup_lsh,
@@ -3642,7 +3417,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "encoding_qa": q_encoding_qa,
         "markup_stats": q_markup_stats,
         "incremental_dedup": q_incremental_dedup,
-        "split_leakage": q_split_leakage,
         "line_dedup": q_line_dedup,
         "role_conformance": q_role_conformance,
         "sft_pairs": q_sft_pairs,
@@ -3651,7 +3425,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "duplicate_conversations": q_duplicate_conversations,
         "conversation_forks": q_conversation_forks,
         "vocab_stats": q_vocab_stats,
-        "novelty_stats": q_novelty,
         "incremental_near_dedup": q_incremental_near_dedup,
         "url_domains": q_url_domains,
         "fertility_stats": q_fertility,
@@ -3707,7 +3480,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "join_size_estimate": q_join_size_estimate,
         "transition_latency": q_transition_latency,
         "turn_count_histogram": q_turn_count_histogram,
-        "shingle_containment": q_shingle_containment,
         "value_grid_stats": q_value_grid_stats,
         "embedding_spectrum": q_embedding_spectrum,
         "heavy_hitters": q_heavy_hitters,
@@ -3737,7 +3509,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "theil_sen": q_theil_sen,
         "ewma_volume": q_ewma_volume,
         "quality_calibration": q_quality_calibration,
-        "file_skew": q_file_skew,
         "sampling_table": q_sampling_table,
         "mixture_weights": q_mixture_weights,
         "reliability_bins": q_reliability_bins,
@@ -3745,8 +3516,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rule_suggestions": q_rule_suggestions,
         "golden_records": q_golden_records,
         "calibration_error": q_calibration_error,
-        "salted_join": q_salted_join,
-        "zorder_preview": q_zorder_preview,
         "daily_percentiles": q_daily_percentiles,
         "rolling_psi": q_rolling_psi,
         "concurrency_profile": q_concurrency_profile,
@@ -5340,18 +5109,6 @@ def oracle_sql() -> dict[str, str]:
                n, round(n / tt, 6) AS share
         FROM c, e, t ORDER BY bin"""
 
-    sql["chunk_documents"] = """
-        WITH s AS (
-          SELECT doc_id, text,
-                 unnest(generate_series(0, greatest(length(text) - 1, 0),
-                                        150)) AS start_off
-          FROM documents WHERE text IS NOT NULL)
-        SELECT doc_id, (start_off // 150)::int AS chunk_idx,
-               start_off::bigint AS start_off,
-               least(start_off + 200, length(text))::bigint AS end_off,
-               substr(text, (start_off + 1)::int, 200) AS chunk
-        FROM s ORDER BY doc_id, chunk_idx"""
-
     sql["length_percentiles"] = """
         SELECT lang,
                round(quantile_cont(length(text), 0.5), 4) AS p_5,
@@ -5616,27 +5373,6 @@ def oracle_sql() -> dict[str, str]:
         SELECT doc_id FROM documents
         WHERE substr(md5(cast(doc_id as varchar)), 1, 8) < '{c30}'"""
 
-    # 5-gram contamination: oracle joins on shingle STRINGS (Spark
-    # joins on xxhash64 of the same strings — collision-free here).
-    _sh5_ctes = """
-        toks AS (
-          SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS w
-          FROM documents WHERE text IS NOT NULL),
-        sh AS (
-          SELECT doc_id,
-                 CASE WHEN len(w) < 5 THEN [array_to_string(w, ' ')]
-                 ELSE list_distinct(list_transform(
-                      range(1, len(w) - 3),
-                      i -> concat(w[i], ' ', w[i+1], ' ', w[i+2], ' ',
-                                  w[i+3], ' ', w[i+4])))
-                 END AS s
-          FROM toks),
-        ev AS (SELECT doc_id, s FROM sh WHERE doc_id % 50 = 0),
-        cp AS (
-          SELECT t.doc_id AS train_id, e.doc_id AS eval_id,
-                 len(list_intersect(t.s, e.s))::bigint AS n_shared
-          FROM sh t JOIN ev e ON len(list_intersect(t.s, e.s)) >= 1)"""
-
     c80, c90 = _hex_threshold(0.8), _hex_threshold(0.9)
     sql["transcript_split"] = f"""
         SELECT split, count(*)::bigint AS n_rows FROM (
@@ -5648,64 +5384,6 @@ def oracle_sql() -> dict[str, str]:
             ELSE 'test' END AS split
           FROM events) s
         GROUP BY split"""
-
-    # Whole-pipeline accounting: dedup window + quality formula +
-    # shingle contamination + md5 split chained with the SAME
-    # first-failing-stage precedence as curation_report.
-    sql["curation_report"] = f"""
-        WITH {_sh5_ctes},
-        bad AS (SELECT DISTINCT train_id AS doc_id FROM cp),
-        rn AS (
-          SELECT doc_id, text, row_number() OVER
-                 (PARTITION BY {_NORM_TEXT} ORDER BY doc_id) AS rn
-          FROM documents),
-        m AS (
-          SELECT doc_id, text, rn,
-                 cast(length(text) as double) AS n_chars,
-                 cast(CASE WHEN length(trim(text)) = 0 THEN 0
-                      ELSE len(regexp_split_to_array(trim(text), '\\s+'))
-                      END as double) AS n_tokens,
-                 cast(length(text) - length(regexp_replace(text,
-                      '[^\\w\\s]', '', 'g')) as double) AS n_punct,
-                 cast(len(list_intersect(
-                      regexp_split_to_array(lower(trim(text)), '\\s+'),
-                      [{stop}])) as double) AS n_stop
-          FROM rn),
-        st AS (
-          SELECT CASE
-            WHEN m.rn > 1 THEN 'duplicate'
-            WHEN (CASE WHEN m.text IS NULL OR length(trim(m.text)) = 0
-                  THEN 0.0
-                  ELSE round((least(n_chars / 500.0, 1.0)
-                    + (1.0 - least(n_punct / greatest(n_chars, 1.0)
-                                   * 5.0, 1.0))
-                    + least(n_stop / greatest(n_tokens, 1.0) * 10.0,
-                            1.0)) / 3.0, 6) END) < 0.4
-              THEN 'low_quality'
-            WHEN b.doc_id IS NOT NULL THEN 'contaminated'
-            ELSE 'kept:' || CASE
-              WHEN substr(md5(cast(m.doc_id as varchar)), 1, 8) < '{c80}'
-                THEN 'train'
-              WHEN substr(md5(cast(m.doc_id as varchar)), 1, 8) < '{c90}'
-                THEN 'val'
-              ELSE 'test' END
-            END AS stage
-          FROM m LEFT JOIN bad b USING (doc_id))
-        SELECT stage, count(*)::bigint AS n_rows
-        FROM st GROUP BY stage"""
-
-
-
-    sql["contamination_pairs"] = \
-        f"WITH {_sh5_ctes} SELECT train_id, eval_id, n_shared FROM cp"
-    # bloom prescreen is output-identical to the exact operator by
-    # construction (exact join eliminates FPs) — same oracle
-    sql["contamination_bloom"] = sql["contamination_pairs"]
-
-    sql["decontaminated"] = f"""
-        WITH {_sh5_ctes}
-        SELECT doc_id FROM documents
-        WHERE doc_id NOT IN (SELECT DISTINCT train_id FROM cp)"""
 
     pii_parts = []
     for name, pat in PII_PATTERNS.items():
@@ -6344,16 +6022,6 @@ def oracle_sql() -> dict[str, str]:
         SELECT event_id, 'non_numeric:k' AS reason FROM vals
         WHERE v IS NOT NULL AND TRY_CAST(v AS DOUBLE) IS NULL"""
 
-    sql["asof_state"] = """
-        WITH snap AS (
-          SELECT user_id, ts AS snap_ts, value AS snap_value
-          FROM events WHERE event_type = 'signup')
-        SELECT e.event_id, e.user_id, e.ts,
-               round(s.snap_value, 6) AS snap_value,
-               s.snap_ts AS asof_ts
-        FROM events e ASOF LEFT JOIN snap s
-          ON e.user_id = s.user_id AND e.ts >= s.snap_ts"""
-
     sql["topk_sample"] = """
         SELECT doc_id FROM (
           SELECT doc_id,
@@ -6370,17 +6038,6 @@ def oracle_sql() -> dict[str, str]:
            OR substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)
               < printf('%08x', least(CAST(round(r * 4294967296.0) AS BIGINT),
                                      4294967295))"""
-
-    sql["interval_counts"] = """
-        WITH bands AS (
-          SELECT n_nationkey AS band_id,
-                 n_nationkey * 4.0 AS lo,
-                 n_nationkey * 4.0 + 6.0 AS hi
-          FROM nation)
-        SELECT band_id, count(*)::bigint AS n_points
-        FROM events e JOIN bands b
-          ON e.value >= b.lo AND e.value < b.hi
-        GROUP BY band_id ORDER BY band_id"""
 
     sql["turn_conformance"] = """
         WITH agg AS (
@@ -6540,26 +6197,6 @@ def oracle_sql() -> dict[str, str]:
           SELECT 1 FROM documents s WHERE s.doc_id % 5 = 0
             AND {_norm('s')} IS NOT DISTINCT FROM {_norm('nb')})
         ORDER BY nb.doc_id"""
-
-    sql["split_leakage"] = f"""
-        WITH corpus AS (
-          SELECT doc_id, text FROM documents
-          UNION ALL
-          SELECT doc_id + 1000001, text FROM documents
-          WHERE doc_id % 10 = 0),
-        s AS (
-          SELECT doc_id,
-                 CASE doc_id % 3 WHEN 0 THEN 'train'
-                                 WHEN 1 THEN 'val'
-                                 ELSE 'test' END AS split,
-                 {_norm('corpus')} AS nt
-          FROM corpus)
-        SELECT min(doc_id) AS example_id,
-               count(DISTINCT split)::bigint AS n_splits,
-               count(*)::bigint AS n_rows,
-               string_agg(DISTINCT split, ',' ORDER BY split) AS splits
-        FROM s GROUP BY nt HAVING count(DISTINCT split) > 1
-        ORDER BY example_id"""
 
     sql["line_dedup"] = r"""
         WITH m AS (
@@ -6742,22 +6379,6 @@ def oracle_sql() -> dict[str, str]:
                      / count(*)::double, 6) AS hapax_share,
                round(max(n) / sum(n)::double, 6) AS top_share
         FROM counts"""
-
-    # reuse the toks/sh shingle CTEs (drop the contamination-specific
-    # ev/cp tail) so the novelty oracle shares the exact 5-gram recipe
-    _sh5_base = _sh5_ctes[:_sh5_ctes.index("ev AS")].rstrip().rstrip(",")
-    sql["novelty_stats"] = f"""
-        WITH {_sh5_base},
-        ref AS (SELECT DISTINCT unnest(s) AS g FROM sh
-                WHERE doc_id % 3 = 0),
-        d AS (SELECT doc_id, unnest(s) AS g FROM sh),
-        j AS (SELECT d.doc_id, r.g IS NOT NULL AS seen
-              FROM d LEFT JOIN ref r ON d.g = r.g)
-        SELECT doc_id, count(*)::bigint AS n_shingles,
-               sum(CASE WHEN seen THEN 0 ELSE 1 END)::bigint AS n_novel,
-               round(sum(CASE WHEN seen THEN 0 ELSE 1 END)
-                     / count(*)::double, 6) AS novelty_ratio
-        FROM j GROUP BY doc_id ORDER BY doc_id"""
 
     sql["url_domains"] = f"""
         WITH m AS (
@@ -8211,38 +7832,6 @@ def oracle_sql() -> dict[str, str]:
                round(n_rows::double / tr::double, 6) AS share_rows
         FROM bands, tot ORDER BY bucket"""
 
-    # same string-shingle replay as contamination (Spark joins on
-    # xxhash64 of the same strings — collision-free here)
-    sql["shingle_containment"] = """
-        WITH toks AS (
-          SELECT doc_id,
-                 regexp_split_to_array(lower(trim(text)), '\\s+') AS w
-          FROM documents WHERE text IS NOT NULL),
-        sh AS (
-          SELECT doc_id,
-                 CASE WHEN len(w) < 5 THEN [array_to_string(w, ' ')]
-                 ELSE list_distinct(list_transform(
-                      range(1, len(w) - 3),
-                      i -> concat(w[i], ' ', w[i+1], ' ', w[i+2], ' ',
-                                  w[i+3], ' ', w[i+4])))
-                 END AS s
-          FROM toks),
-        pairs AS (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                 len(list_intersect(a.s, b.s))::bigint AS n_common,
-                 len(a.s)::bigint AS size_a, len(b.s)::bigint AS size_b
-          FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-          WHERE len(list_intersect(a.s, b.s)) >= 1)
-        SELECT id_a, id_b, n_common, size_a, size_b,
-               round(n_common::double / size_a::double, 6)
-                 AS containment_a,
-               round(n_common::double / size_b::double, 6)
-                 AS containment_b
-        FROM pairs
-        WHERE n_common::double / size_a::double >= 0.8
-           OR n_common::double / size_b::double >= 0.8
-        ORDER BY id_a, id_b"""
-
     _grid_steps = (0.01, 0.25, 0.5, 1.0, 5.0, 10.0, 100.0)
     _grid_rows = " UNION ALL ".join(
         f"SELECT CAST({s} AS DOUBLE) AS step, n, g{i} AS n_on_grid, "
@@ -8908,9 +8497,6 @@ def oracle_sql() -> dict[str, str]:
                round(max(abs(sp - gp)), 6) AS ks_stat
         FROM ranked GROUP BY 1 ORDER BY "group" """
 
-    # file_skew: rows-only by design - the DuckDB views cannot
-    # observe input_file_name(); the pytest covers the math.
-
     sql["sampling_table"] = r"""
         WITH counts AS (
           SELECT token, count(*)::bigint AS n
@@ -9079,49 +8665,6 @@ def oracle_sql() -> dict[str, str]:
                round(sum(CASE WHEN abs(pr - ms) > 0.1 THEN n
                          ELSE 0 END) / sum(n), 6) AS share_in_bad_bins
         FROM r"""
-
-    sql["salted_join"] = """
-        WITH dim AS (
-          SELECT event_type, avg(value) AS type_avg
-          FROM events GROUP BY 1)
-        SELECT e.event_type, count(*)::bigint AS n,
-               round(avg(e.value), 6) AS mean_val,
-               round(avg(d.type_avg), 6) AS type_avg
-        FROM events e JOIN dim d ON d.event_type = e.event_type
-        GROUP BY 1 ORDER BY 1"""
-
-    sql["zorder_preview"] = """
-        WITH q AS (
-          SELECT least(greatest(floor(((value - 0.0) / 500.0) * 256)
-                       ::bigint, 0), 255) AS xq,
-                 least(greatest(floor(((user_id - 0.0) / 15.0) * 256)
-                       ::bigint, 0), 255) AS yq,
-                 value::double AS x, user_id::double AS y
-          FROM events
-          WHERE value IS NOT NULL AND user_id IS NOT NULL),
-        z AS (
-          SELECT x, y,
-                 ((((xq >> 0) % 2) << 0)
-               | (((yq >> 0) % 2) << 1)
-               | (((xq >> 1) % 2) << 2)
-               | (((yq >> 1) % 2) << 3)
-               | (((xq >> 2) % 2) << 4)
-               | (((yq >> 2) % 2) << 5)
-               | (((xq >> 3) % 2) << 6)
-               | (((yq >> 3) % 2) << 7)
-               | (((xq >> 4) % 2) << 8)
-               | (((yq >> 4) % 2) << 9)
-               | (((xq >> 5) % 2) << 10)
-               | (((yq >> 5) % 2) << 11)
-               | (((xq >> 6) % 2) << 12)
-               | (((yq >> 6) % 2) << 13)
-               | (((xq >> 7) % 2) << 14)
-               | (((yq >> 7) % 2) << 15)) AS zv
-          FROM q)
-        SELECT (zv >> 12)::int AS zbucket, count(*)::bigint AS n,
-               round(min(x), 6) AS x_min, round(max(x), 6) AS x_max,
-               round(min(y), 6) AS y_min, round(max(y), 6) AS y_max
-        FROM z GROUP BY 1 ORDER BY 1"""
 
     sql["daily_percentiles"] = """
         SELECT CAST(ts AS DATE) AS day, count(*)::bigint AS n,
@@ -9609,59 +9152,6 @@ def oracle_sql() -> dict[str, str]:
         WHERE role = 'assistant' AND tool IS NOT NULL
           AND next_role IS DISTINCT FROM 'tool'
         ORDER BY user_id, ts, event_id, issue"""
-
-    sql["curate_transcripts"] = """
-        WITH base AS (
-          SELECT user_id, event_id, event_type AS text,
-                 CASE WHEN event_id % 4999 = 0 THEN 'tool'
-                      WHEN (row_number() OVER (
-                              PARTITION BY user_id
-                              ORDER BY event_id)) % 2 = 1 THEN 'user'
-                      ELSE 'assistant' END AS role,
-                 CAST(NULL AS VARCHAR) AS tool
-          FROM events),
-        allr AS (
-          SELECT * FROM base
-          UNION ALL
-          SELECT user_id + 10000, event_id + 1000000000, text, role,
-                 tool
-          FROM base WHERE user_id < 10),
-        wnd AS (
-          SELECT user_id, event_id, role, tool,
-                 lag(role) OVER w AS prev_role,
-                 lag(tool) OVER w AS prev_tool,
-                 lead(role) OVER w AS next_role
-          FROM allr
-          WINDOW w AS (PARTITION BY user_id
-                       ORDER BY event_id ASC NULLS FIRST)),
-        badconv AS (
-          SELECT DISTINCT user_id FROM wnd
-          WHERE (prev_role IS NULL AND role != 'user')
-             OR (prev_role IS NOT NULL AND NOT (
-                   (prev_role = 'user' AND role = 'assistant')
-                   OR (prev_role = 'assistant' AND role = 'user')))
-             OR (role = 'tool'
-                 AND NOT (prev_role IS NOT DISTINCT FROM 'assistant'
-                          AND prev_tool IS NOT NULL))
-             OR (role = 'assistant' AND tool IS NOT NULL
-                 AND next_role IS DISTINCT FROM 'tool')),
-        clean AS (
-          SELECT * FROM allr
-          WHERE user_id NOT IN (SELECT user_id FROM badconv)),
-        fps AS (
-          SELECT user_id,
-                 md5(string_agg(md5(coalesce(text, '__NULL__')),
-                                ',' ORDER BY event_id)) AS fp
-          FROM clean GROUP BY user_id),
-        keep AS (SELECT min(user_id) AS user_id FROM fps GROUP BY fp)
-        SELECT c.user_id, c.event_id, c.role,
-               CASE WHEN substr(md5(cast(c.user_id as varchar)), 1, 8)
-                         < 'cccccccd' THEN 'train'
-                    WHEN substr(md5(cast(c.user_id as varchar)), 1, 8)
-                         < 'e6666666' THEN 'val'
-                    ELSE 'test' END AS split
-        FROM clean c JOIN keep k ON c.user_id = k.user_id
-        ORDER BY c.user_id, c.event_id"""
 
     sql["repair_cut_points"] = """
         WITH t AS (

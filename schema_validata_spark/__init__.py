@@ -6,8 +6,15 @@ DataFrame plans, Catalyst optimization, vectorized Arrow UDF islands).
 Public API:
     profile(df)                      -> observed schema dict (reference shape)
     validate(spark, df, rules, ...)  -> ValidationResult (verdicts, violations, report)
+    validate_datasets / validate_files / validate_partitioned /
+    partition_verdicts               -> multi-dataset, file-mode, resumable
+                                        and per-partition runs
     Rules / FieldRule                -> rule-table model
-    gen_transcripts / gen_conversations / transcript_rules -> fixtures
+    datagen.gen_transcripts / gen_conversations / transcript_rules -> fixtures
+
+The dedup, similarity, text, sampling, sequence, selection and
+semistructured re-exports below are training-data operators outside the
+validation core.
 """
 
 from .config import (ALLOWED_CASTING, DATA_DICT_SCHEMA, NA_PATTERNS,
@@ -36,11 +43,6 @@ from .functions.sampling import (cap_group_share, deterministic_sample,
                                  sample_expr, split_expr, weighted_sample)
 from .functions.text import (gopher_rules, pii_scan, pii_summary,
                              repetition_stats, top_tokens)
-from .operators.asof import asof_join
-from .operators.rangejoin import interval_join
-from .operators.decontam import (contamination_pairs,
-                                 contamination_pairs_bloom, decontaminate)
-from .curation import curate, curation_report
 from .operators.semistructured import (json_is_valid, json_payload_stats,
                                        json_payload_violations)
 from .operators.sequence import (consecutive_repeats, order_regressions,
@@ -78,10 +80,10 @@ __all__ = [
     "simhash_near_duplicates", "top_k_per_group",
     "deterministic_sample", "deterministic_topk_sample", "group_split",
     "sample_expr", "split_expr", "weighted_sample",
-    "pii_scan", "pii_summary", "contamination_pairs", "decontaminate",
+    "pii_scan", "pii_summary",
     "consecutive_repeats", "order_regressions", "sessionize",
     "session_stats", "repetition_stats", "top_tokens", "gopher_rules",
-    "turn_conformance", "cap_group_share", "asof_join", "interval_join",
+    "turn_conformance", "cap_group_share",
     "json_is_valid", "json_payload_stats", "json_payload_violations",
     "embedding_norm_stats",
     "brute_force_topk", "lsh_ann_topk",

@@ -146,9 +146,7 @@ def scd2_history(df: DataFrame, key_cols: list[str], ts_col: str,
     and emit validity INTERVALS — `(key, valid_from, valid_to,
     *tracked)` with ``valid_to`` NULL on the current row. The
     warehouse-standard "what was this entity's state at time T" table
-    that ``latest_per_key`` (current snapshot only) can't answer;
-    pairs with ``asof_join`` to enrich facts with the state in force
-    at their timestamp.
+    that ``latest_per_key`` (current snapshot only) can't answer.
 
     Change detection is NULL-safe (``<=>`` per tracked column): a
     NULL→value or value→NULL transition IS a change, NULL→NULL is

@@ -67,10 +67,11 @@ from .operators.violations import (CheckSpec, _check_condition,
                                    violation_plan_for)
 from .rules import Rules
 
-# Default-on scale gate for validate(): assert_scalable's own defaults,
-# which forbid global sorts, nested-loop joins (BroadcastNestedLoopJoin
-# included) and row-at-a-time Python. Pass a dict of assert_scalable
-# kwargs to tighten or relax, or None to opt out entirely.
+# Default-on scale gate for validate() and the package's one plan
+# budget: assert_scalable's own defaults, which forbid global sorts,
+# nested-loop joins (BroadcastNestedLoopJoin included) and row-at-a-time
+# Python. Pass a dict of assert_scalable kwargs to tighten or relax, or
+# None to opt out entirely.
 PLAN_BUDGET_DEFAULT: dict = {}
 
 
@@ -216,9 +217,7 @@ def validate(spark: SparkSession, df: DataFrame, rules: Rules,
              ignore_errors: list[str] | None = None,
              key_cols: list[str] | None = None,
              partition_col: str | None = None,
-             manifest_path: str | None = None,
              snapshot_id: str | None = None,
-             persist_violations: bool = True,
              plan_budget: dict | None = PLAN_BUDGET_DEFAULT
              ) -> ValidationResult:
     """Validate ``df`` against ``rules``; see module docstring for the
@@ -235,13 +234,12 @@ def validate(spark: SparkSession, df: DataFrame, rules: Rules,
     or a dict of ``assert_scalable`` kwargs to tighten/relax. The
     audit is static (plan strings — no job runs).
 
-    ``persist_violations`` caches the speculative violations scan
-    (MEMORY_AND_DISK) so every consuming action — count, report,
-    sink — reads the (≪ input) violation rows instead of re-scanning
-    the full table: at 100 TB that is 1 input scan instead of k. The
-    cache write costs ~5% locally for a single-consumer run; pass
-    False to keep the scan fully lazy. ``ValidationResult.unpersist()``
-    releases the cache.
+    The speculative violations scan is persisted (MEMORY_AND_DISK) so
+    every consuming action — count, report, sink — reads the (≪ input)
+    violation rows instead of re-scanning the full table: at 100 TB
+    that is 1 input scan instead of k. ``ValidationResult.unpersist()``
+    releases the cache. Resumable runs take their manifest path
+    through :func:`validate_partitioned`.
     ``key_cols`` are the stable row-address columns carried on violation
     rows (defaults to the first composite_unique key or the uid column).
     ``snapshot_id`` (Iceberg) feeds the run uid's content token; without
@@ -330,7 +328,7 @@ def validate(spark: SparkSession, df: DataFrame, rules: Rules,
         if speculative:
             spec_specs = rule_specs(df.columns, rules, ignore_errors)
             violations = value_errors_df(df, spec_specs, key_cols)
-            if persist_violations and violations is not None:
+            if violations is not None:
                 # the overshoot filters and the conditional union below
                 # only stack ON TOP of the persisted base, so the cache
                 # stays valid;
@@ -407,7 +405,6 @@ def validate(spark: SparkSession, df: DataFrame, rules: Rules,
     if partition_col:
         result.partition_verdicts = partition_verdicts(
             df, rules, partition_col, dims=dims)
-    _ = manifest_path  # partitioned/resumable runs: validate_partitioned
     if plan_budget is not None:
         from .plans.audit import assert_scalable
         for frame in (result.violations, result.partition_verdicts):

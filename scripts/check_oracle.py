@@ -10,10 +10,11 @@ A query name that is not in ``queries()`` exits 1 before anything runs.
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 
@@ -41,17 +42,17 @@ def rows_to_multiset(colnames, rows):
 
 
 # sf0.1 STRESS SUBSET (VERDICT r4 #6): the heaviest oracle queries —
-# curation compositions, the near-dup families, funnel/sequence
-# windows, snapshot/sketch merges — promoted from the sf0.01 battery
+# the near-dup families, funnel/sequence windows, snapshot/sketch
+# merges and the validation core — promoted from the sf0.01 battery
 # to a 10x-input run. `python scripts/check_oracle.py --stress` runs
 # exactly these at /root/testdata/sf0.1; runtimes are recorded in
-# BENCH/BASELINE.md.
+# BENCH/BASELINE.md. Every name must be a queries() entry (pinned by
+# tests/test_tooling_lists.py).
 STRESS_QUERIES = [
-    "curation_report", "curate_transcripts", "dedup_near",
+    "dedup_near",
     "minhash_near_duplicates", "simhash_near_duplicates",
     "embedding_near_dup_lsh", "semantic_near_dup", "near_dup_clusters",
-    "dedup_keep_best", "near_dup_safe_split", "contamination_pairs",
-    "decontaminated", "shingle_containment", "winnow_overlap_share",
+    "dedup_keep_best", "near_dup_safe_split", "winnow_overlap_share",
     "funnel_stats", "session_stats", "conversation_forks",
     "snapshot_diff", "quantile_sketch_merge", "validate_events",
     "composite_duplicates", "profile_stats",

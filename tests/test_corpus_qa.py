@@ -1,6 +1,6 @@
 """Corpus-QA operators added in round 3: encoding/mojibake QA, markup
-density, incremental (cross-snapshot) dedup, cross-split leakage and
-CCNet-style line-level dedup."""
+density, incremental (cross-snapshot) dedup and CCNet-style line-level
+dedup."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 from schema_validata_spark.functions.text import (encoding_qa,
                                                   encoding_summary,
                                                   markup_stats)
-from schema_validata_spark.operators.decontam import split_leakage
 from schema_validata_spark.operators.dedup import (dedup_lines,
                                                    frequent_lines,
                                                    incremental_dedup,
@@ -109,30 +108,6 @@ def test_incremental_dedup_keeps_within_batch_dups(spark):
     assert incremental_dedup(new, seen, "text").count() == 2
 
 
-# --- split leakage -------------------------------------------------------------
-
-def test_split_leakage_detects_cross_split_dups(spark):
-    df = spark.createDataFrame(
-        [(1, "shared doc", "train"),
-         (2, "shared doc", "test"),
-         (3, "train-only dup", "train"),
-         (4, "train-only dup", "train"),
-         (5, "unique", "val")],
-        ["doc_id", "text", "split"])
-    rows = split_leakage(df, "text", "doc_id", "split").collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert r["example_id"] == 1 and r["n_splits"] == 2
-    assert r["n_rows"] == 2 and r["splits"] == "test,train"
-
-
-def test_split_leakage_null_split_not_leakage(spark):
-    df = spark.createDataFrame(
-        [(1, "doc", "train"), (2, "doc", None)],
-        "doc_id int, text string, split string")
-    assert split_leakage(df, "text", "doc_id", "split").count() == 0
-
-
 # --- line-level dedup -----------------------------------------------------------
 
 def _mk_docs(spark, n=6):
@@ -221,38 +196,6 @@ def test_vocab_stats_empty_corpus(spark):
     assert (r["n_tokens"], r["n_types"], r["n_hapax"]) == (0, 0, 0)
     assert r["type_token_ratio"] is None
     assert r["top_share"] is None
-
-
-# --- novelty_stats -----------------------------------------------------------
-
-def test_novelty_stats_planted(spark):
-    from schema_validata_spark.operators.decontam import novelty_stats
-    mk = " ".join  # build texts with known 3-gram structure
-    df = spark.createDataFrame(
-        [(1, mk(["w1", "w2", "w3", "w4"])),    # shingles: w1w2w3, w2w3w4
-         (2, mk(["w1", "w2", "w3"])),          # shingle: w1w2w3
-         (3, mk(["x1", "x2", "x3"])),          # novel entirely
-         (4, None)],                           # excluded
-        "doc_id long, text string")
-    ref = df.where("doc_id = 2")               # covers only w1w2w3
-    got = {r["doc_id"]: r for r in
-           novelty_stats(df, ref, "text", "doc_id",
-                         shingle_k=3).collect()}
-    assert set(got) == {1, 2, 3}
-    assert (got[1]["n_shingles"], got[1]["n_novel"]) == (2, 1)
-    assert got[1]["novelty_ratio"] == 0.5
-    assert (got[2]["n_shingles"], got[2]["n_novel"]) == (1, 0)
-    assert (got[3]["n_shingles"], got[3]["n_novel"]) == (1, 1)
-
-
-def test_novelty_stats_short_doc_whole_text_shingle(spark):
-    from schema_validata_spark.operators.decontam import novelty_stats
-    df = spark.createDataFrame([(1, "tiny doc")],
-                               "doc_id long, text string")
-    ref = spark.createDataFrame([(9, "tiny doc")],
-                                "doc_id long, text string")
-    r = novelty_stats(df, ref, "text", "doc_id", shingle_k=8).collect()
-    assert (r[0]["n_shingles"], r[0]["n_novel"]) == (1, 0)
 
 
 # --- incremental_near_dedup --------------------------------------------------

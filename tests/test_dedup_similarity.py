@@ -272,31 +272,6 @@ def test_top_k_per_group_with_ties(spark):
     assert got == {("en", 1, 1), ("en", 2, 2), ("de", 6, 1), ("de", 5, 2)}
 
 
-# --- decontamination -------------------------------------------------------
-
-def test_contamination_and_decontaminate(spark):
-    from schema_validata_spark.operators.decontam import (
-        contamination_pairs, decontaminate)
-    train = spark.createDataFrame([
-        (1, "the quick brown fox jumps over the lazy dog tonight"),
-        (2, "completely unrelated text about spark shuffles and joins"),
-        (3, "short"),
-        (4, None),
-    ], "doc_id long, text string")
-    eval_set = spark.createDataFrame([
-        (100, "we saw the quick brown fox jumps over the lazy dog"),
-        (101, "short"),
-    ], "doc_id long, text string")
-    pairs = {(r["train_id"], r["eval_id"]): r["n_shared"] for r in
-             contamination_pairs(train, eval_set, shingle_k=5).collect()}
-    assert (1, 100) in pairs and pairs[(1, 100)] >= 1   # 5-gram overlap
-    assert (3, 101) in pairs                             # whole-short-doc match
-    assert not any(t == 2 for t, _ in pairs)
-    kept = sorted(r["doc_id"] for r in
-                  decontaminate(train, eval_set, shingle_k=5).collect())
-    assert kept == [2, 4]    # null-text doc has no shingles → never flagged
-
-
 def test_duplicate_share_by_group(spark):
     from schema_validata_spark.operators.dedup import (
         duplicate_share_by_group)
@@ -400,53 +375,6 @@ def test_ivf_assign_null_and_mixed_dim(spark):
     assert by_id[3] is None and by_id[4] is None
     assert by_id[2] == by_id[5] is not None
     assert by_id[1] is not None and by_id[1] != by_id[2]
-
-
-def test_contamination_bloom_identical_to_exact(spark, sf_dir):
-    """Bloom prescreen is a pure candidate filter: output must be
-    byte-identical to the exact operator, even with the bitmap squeezed
-    to 512 bits (near-total false-positive pressure — the exact join
-    must eliminate every FP the bloom lets through)."""
-    from schema_validata_spark.operators.decontam import (
-        contamination_pairs, contamination_pairs_bloom)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    ev = docs.where("doc_id % 29 = 0")
-    exact = set(map(tuple,
-                    contamination_pairs(docs, ev, shingle_k=5).collect()))
-    assert exact, "fixture must produce contaminated pairs"
-    for m in (1 << 20, 1 << 9):
-        got = set(map(tuple, contamination_pairs_bloom(
-            docs, ev, shingle_k=5, m_bits=m).collect()))
-        assert got == exact, m
-
-
-def test_contamination_bloom_prescreen_filters(spark):
-    """With a roomy bitmap, a train doc sharing no shingles with the
-    eval set must be dropped BY THE BLOOM (probe rows filtered before
-    the exact join) — checked via the survivor count of the probe
-    stage, not just the final output."""
-    from pyspark.sql import functions as F
-    from schema_validata_spark.operators.decontam import (
-        _bloom_bitmap, _bloom_positions, _shingle_hashes)
-    train = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta eta theta"),
-         (2, "one two three four five six seven eight")],
-        "doc_id long, text string")
-    ev = spark.createDataFrame(
-        [(9, "alpha beta gamma delta epsilon zeta eta theta")],
-        "doc_id long, text string")
-    m = 1 << 20
-    e = _shingle_hashes(ev, "text", "doc_id", "eval_id", 5)
-    bitmap = _bloom_bitmap(e.select("sh").distinct(), m).collect()
-    words = {r["slot"]: r["word"] for r in bitmap}
-    t = _shingle_hashes(train, "text", "doc_id", "train_id", 5)
-    p1, p2 = _bloom_positions(F.col("sh"), m)
-    probes = t.select("train_id", p1.alias("p1"), p2.alias("p2")).collect()
-    def hits(r):
-        return all(words.get(p >> 6, 0) & (1 << (p % 64))
-                   for p in (r["p1"], r["p2"]))
-    assert all(hits(r) for r in probes if r["train_id"] == 1)
-    assert not any(hits(r) for r in probes if r["train_id"] == 2)
 
 
 def test_pq_train_encode_deterministic(vecs, spark):

@@ -70,30 +70,3 @@ def test_rolling_psi_plan(ev):
     # frame (the tiny cross join of day and bucket lists is by design)
     assert_scalable(rolling_psi(ev, "ts", "value", 0.0, 500.0),
                     allow_nested_loop=True)
-
-
-def test_zorder_and_file_skew_plans(ev):
-    from schema_validata_spark.plans import assert_scalable
-    from schema_validata_spark.sources.layout import (file_skew_profile,
-                                                      zorder_preview)
-    a = assert_scalable(
-        zorder_preview(ev, "value", "user_id", 0.0, 500.0, 0.0, 15.0),
-        max_exchanges=2)
-    assert a.n_python_evals == 0            # bit math stays JVM-side
-    assert_scalable(file_skew_profile(ev), max_exchanges=3)
-
-
-def test_salted_join_no_extra_shuffle_stage(spark, ev):
-    from schema_validata_spark.plans import assert_scalable, plan_audit
-    from schema_validata_spark.plans.salting import salted_join
-    dim = ev.groupBy("event_type").agg(F.avg("value").alias("a"))
-    plain = plan_audit(ev.join(dim, ["event_type"]))
-    salted = plan_audit(salted_join(ev, dim, "event_type", salts=8))
-    # salting must not add a JOIN STRATEGY regression: still a hash
-    # join family, no nested loop, no global sort
-    assert salted.n_nested_loop_joins == 0
-    assert not salted.has_global_sort
-    assert (salted.n_broadcast_hash_joins + salted.n_shuffle_joins) \
-        >= (plain.n_broadcast_hash_joins + plain.n_shuffle_joins)
-    assert_scalable(salted_join(ev, dim, "event_type", salts=8),
-                    max_exchanges=6)

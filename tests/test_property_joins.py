@@ -1,197 +1,16 @@
-"""Property-based tests for the join family (VERDICT r2 #9): randomized
-frames through ``asof_join`` (directions × exact-match × tolerance ×
-ties) and ``interval_join`` (bucket-width sweep), re-checked against a
-plain-Python oracle and DuckDB in-process — the same strategy
-test_property_invariants uses for the violation predicates. Frames stay
-tiny (≤ 25 rows); the point is edge coverage (NULL timestamps, equal
-timestamps, empty right side, boundary containment), not volume."""
+"""Property-based test of the conversation-assembly span contract:
+randomized conversations (NULL texts, duplicate order values) through
+``assemble_conversations`` and ``span_offsets``. Frames stay tiny
+(≤ 25 rows); the point is edge coverage, not volume."""
 
 from __future__ import annotations
 
-import datetime as dt
-
-import duckdb
-import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
-from pyspark.sql import functions as F
-
-from schema_validata_spark.operators.asof import asof_join
-from schema_validata_spark.operators.rangejoin import interval_join
-
-BASE = dt.datetime(2024, 1, 1)
-
-
-def _ts(seconds):
-    return None if seconds is None else BASE + dt.timedelta(seconds=seconds)
-
-
-KEYS = st.integers(0, 2)
-SECS = st.one_of(st.none(), st.integers(0, 40))
-
-
-@settings(max_examples=15, deadline=None,
-          suppress_health_check=list(HealthCheck))
-@given(data=st.data())
-def test_asof_join_matches_python_oracle(spark, data):
-    left_rows = data.draw(st.lists(st.tuples(KEYS, SECS),
-                                   min_size=1, max_size=25))
-    right_rows = data.draw(st.lists(st.tuples(KEYS, SECS,
-                                              st.integers(0, 99)),
-                                    min_size=0, max_size=25))
-    direction = data.draw(st.sampled_from(["backward", "forward"]))
-    exact = data.draw(st.booleans())
-    tol = data.draw(st.one_of(st.none(), st.integers(0, 15)))
-
-    left = spark.createDataFrame(
-        [(i, k, _ts(s)) for i, (k, s) in enumerate(left_rows)],
-        "id int, k int, ts timestamp")
-    right = spark.createDataFrame(
-        [(k, _ts(s), float(v), i) for i, (k, s, v) in enumerate(right_rows)],
-        "k int, ts timestamp, val double, seq int") if right_rows else \
-        spark.createDataFrame([], "k int, ts timestamp, val double, seq int")
-
-    out = asof_join(left, right, "ts", ["k"], value_cols=["val"],
-                    direction=direction, allow_exact_matches=exact,
-                    tolerance_s=tol, tiebreak_col="seq")
-    got = {r["id"]: (r["val"], r["asof_ts"]) for r in out.collect()}
-    assert len(got) == len(left_rows)          # left rows preserved exactly
-
-    for i, (lk, ls) in enumerate(left_rows):
-        cands = []
-        if ls is not None:
-            for seq, (rk, rs, rv) in enumerate(right_rows):
-                if rk != lk or rs is None:
-                    continue
-                if direction == "backward":
-                    ok = (rs <= ls) if exact else (rs < ls)
-                    dist = ls - rs
-                else:
-                    ok = (rs >= ls) if exact else (rs > ls)
-                    dist = rs - ls
-                if ok and (tol is None or dist <= tol):
-                    cands.append((rs, seq, rv))
-        if not cands:
-            assert got[i] == (None, None), (i, left_rows[i], got[i])
-        else:
-            best_ts = (max if direction == "backward" else min)(
-                c[0] for c in cands)
-            # greatest tiebreak among equal-ts candidates wins
-            _, _, val = max(c for c in cands if c[0] == best_ts)
-            assert got[i] == (float(val), _ts(best_ts)), \
-                (i, left_rows[i], got[i], cands)
-
-
-def test_asof_join_matches_duckdb_native(spark):
-    """Backward/exact (DuckDB's native ASOF JOIN shape) on seeded random
-    frames — engine-vs-engine, not engine-vs-reimplementation."""
-    import random
-    rng = random.Random(1234)
-    left_rows = [(i, rng.randint(0, 4), rng.randint(0, 500))
-                 for i in range(120)]
-    # unique (k, ts) on the right so both engines' tie handling is moot
-    seen, right_rows = set(), []
-    while len(right_rows) < 80:
-        k, s = rng.randint(0, 4), rng.randint(0, 500)
-        if (k, s) not in seen:
-            seen.add((k, s))
-            right_rows.append((k, s, float(rng.randint(0, 999))))
-    left = spark.createDataFrame(
-        [(i, k, _ts(s)) for i, k, s in left_rows], "id int, k int, ts timestamp")
-    right = spark.createDataFrame(
-        [(k, _ts(s), v) for k, s, v in right_rows],
-        "k int, ts timestamp, val double")
-    got = {r["id"]: (r["val"], r["asof_ts"]) for r in
-           asof_join(left, right, "ts", ["k"], value_cols=["val"]).collect()}
-
-    con = duckdb.connect()
-    con.execute("CREATE TABLE l(id int, k int, ts timestamp)")
-    con.executemany("INSERT INTO l VALUES (?, ?, ?)",
-                    [(i, k, _ts(s)) for i, k, s in left_rows])
-    con.execute("CREATE TABLE r(k int, ts timestamp, val double)")
-    con.executemany("INSERT INTO r VALUES (?, ?, ?)",
-                    [(k, _ts(s), v) for k, s, v in right_rows])
-    want = {row[0]: (row[1], row[2]) for row in con.execute(
-        """SELECT l.id, r.val, r.ts
-           FROM l ASOF LEFT JOIN r ON l.k = r.k AND l.ts >= r.ts"""
-    ).fetchall()}
-    con.close()
-    assert got == want
-
-
-INTS = st.integers(-20, 60)
-
-
-@settings(max_examples=15, deadline=None,
-          suppress_health_check=list(HealthCheck))
-@given(data=st.data())
-def test_interval_join_matches_duckdb(spark, data):
-    pts = data.draw(st.lists(
-        st.tuples(st.one_of(st.none(), INTS)), min_size=1, max_size=25))
-    ivs = data.draw(st.lists(
-        st.tuples(st.one_of(st.none(), INTS), st.integers(0, 30)),
-        min_size=0, max_size=15))
-    width = data.draw(st.sampled_from([0.5, 1.0, 2.5, 7.0, 40.0, None]))
-
-    points = spark.createDataFrame(
-        [(i, None if (v,) == (None,) else float(v))
-         for i, (v,) in enumerate(pts)], "pid int, v double")
-    intervals = spark.createDataFrame(
-        [(j, None if lo is None else float(lo),
-          None if lo is None else float(lo + ln))
-         for j, (lo, ln) in enumerate(ivs)],
-        "iid int, lo double, hi double") if ivs else \
-        spark.createDataFrame([], "iid int, lo double, hi double")
-
-    got = {(r["pid"], r["iid"]) for r in
-           interval_join(points, intervals, "v", "lo", "hi",
-                         bucket_width=width).collect()}
-
-    con = duckdb.connect()
-    con.execute("CREATE TABLE p(pid int, v double)")
-    con.executemany("INSERT INTO p VALUES (?, ?)",
-                    [(i, None if (v,) == (None,) else float(v))
-                     for i, (v,) in enumerate(pts)])
-    con.execute("CREATE TABLE iv(iid int, lo double, hi double)")
-    if ivs:
-        con.executemany("INSERT INTO iv VALUES (?, ?, ?)",
-                        [(j, None if lo is None else float(lo),
-                          None if lo is None else float(lo + ln))
-                         for j, (lo, ln) in enumerate(ivs)])
-    want = {(row[0], row[1]) for row in con.execute(
-        "SELECT p.pid, iv.iid FROM p JOIN iv ON p.v >= iv.lo AND p.v < iv.hi"
-    ).fetchall()}
-    con.close()
-    assert got == want, (width, pts, ivs)
-
 
 WORDS = st.lists(st.sampled_from(
     ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta"]),
     min_size=0, max_size=14).map(" ".join)
 TEXTS = st.one_of(st.none(), WORDS)
-
-
-@settings(max_examples=10, deadline=None,
-          suppress_health_check=list(HealthCheck))
-@given(data=st.data())
-def test_bloom_contamination_matches_exact(spark, data):
-    """contamination_pairs_bloom is output-identical to the exact
-    operator on random corpora, across bitmap sizes down to
-    pathological (256-bit) ones."""
-    from schema_validata_spark.operators.decontam import (
-        contamination_pairs, contamination_pairs_bloom)
-    train_rows = data.draw(st.lists(TEXTS, min_size=1, max_size=20))
-    eval_rows = data.draw(st.lists(TEXTS, min_size=1, max_size=6))
-    k = data.draw(st.integers(1, 4))
-    m = data.draw(st.sampled_from([1 << 8, 1 << 16]))
-    train = spark.createDataFrame(list(enumerate(train_rows)),
-                                  "doc_id long, text string")
-    ev = spark.createDataFrame(list(enumerate(eval_rows)),
-                               "doc_id long, text string")
-    exact = set(map(tuple,
-                    contamination_pairs(train, ev, shingle_k=k).collect()))
-    bloom = set(map(tuple, contamination_pairs_bloom(
-        train, ev, shingle_k=k, m_bits=m).collect()))
-    assert bloom == exact
 
 
 @settings(max_examples=10, deadline=None,

@@ -1,5 +1,4 @@
-"""Round-3p: shingle containment pairs, value grid-snap profile,
-embedding covariance spectrum."""
+"""Round-3p: value grid-snap profile, embedding covariance spectrum."""
 
 from __future__ import annotations
 
@@ -8,53 +7,8 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from schema_validata_spark.operators.decontam import shingle_containment
 from schema_validata_spark.operators.similarity import embedding_spectrum
 from schema_validata_spark.operators.statqa import value_grid_stats
-
-
-# -------------------------------------------------- shingle_containment
-
-def _docs(spark, rows):
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_containment_quote_inclusion(spark):
-    short = "alpha beta gamma delta epsilon zeta"
-    longd = ("intro words here now then " + short
-             + " and a very long tail of unrelated content follows "
-             + "with many more distinct tokens after the quote")
-    df = _docs(spark, [(1, longd), (2, short), (3, "nothing shared")])
-    got = shingle_containment(df, "text", "doc_id", shingle_k=5,
-                              threshold=0.9).collect()
-    assert len(got) == 1
-    r = got[0]
-    assert (r["id_a"], r["id_b"]) == (1, 2)
-    # every 5-shingle of the short doc appears in the long doc
-    assert r["containment_b"] == 1.0
-    assert r["n_common"] == r["size_b"] == 2   # 6 tokens -> 2 shingles
-    assert r["containment_a"] < 0.9            # asymmetric by design
-
-
-def test_containment_jaccard_blindspot(spark):
-    """The pair above is invisible to symmetric Jaccard at the same
-    bar: |common| / |union| is small."""
-    short = "alpha beta gamma delta epsilon zeta"
-    longd = ("intro words here now then " + short
-             + " and a very long tail of unrelated content follows "
-             + "with many more distinct tokens after the quote")
-    df = _docs(spark, [(1, longd), (2, short)])
-    r = shingle_containment(df, "text", "doc_id", shingle_k=5,
-                            threshold=0.9).collect()[0]
-    jaccard = r["n_common"] / (r["size_a"] + r["size_b"] - r["n_common"])
-    assert jaccard < 0.2 and r["containment_b"] == 1.0
-
-
-def test_containment_null_text_and_validation(spark):
-    df = _docs(spark, [(1, "a b c d e f"), (2, None)])
-    assert shingle_containment(df).count() == 0
-    with pytest.raises(ValueError):
-        shingle_containment(df, threshold=0.0)
 
 
 # ------------------------------------------------------ value_grid_stats

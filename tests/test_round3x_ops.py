@@ -1,33 +1,7 @@
-"""Round-3 continuation: the file-layout skew profile and the
-statistical, text and curation QA operators that followed it."""
+"""Round-3 continuation: the statistical and text QA operators."""
 
 import pytest
 from pyspark.sql import Row, functions as F
-
-
-# ------------------------------------------------------------ file skew
-
-def test_file_skew_profile_two_files(spark, tmp_path):
-    from schema_validata_spark.sources.layout import file_skew_profile
-    d = str(tmp_path / "t")
-    spark.range(900).coalesce(1).write.parquet(d)
-    spark.range(100).coalesce(1).write.mode("append").parquet(d)
-    r = file_skew_profile(spark.read.parquet(d),
-                          small_file_rows=500).collect()[0]
-    assert r["n_files"] == 2 and r["total_rows"] == 1000
-    assert (r["min_rows"], r["max_rows"]) == (100, 900)
-    assert r["skew_ratio"] == pytest.approx(1.8)
-    assert r["small_files"] == 1
-    assert r["small_file_share"] == pytest.approx(0.5)
-
-
-def test_file_skew_profile_empty_input(spark, tmp_path):
-    from schema_validata_spark.sources.layout import file_skew_profile
-    d = str(tmp_path / "e")
-    spark.range(0).coalesce(1).write.parquet(d)
-    r = file_skew_profile(spark.read.parquet(d)).collect()[0]
-    # zero data rows: no per-file groups at all
-    assert r["n_files"] == 0 and r["total_rows"] is None
 
 
 # ------------------------------------------------------- sampling table

@@ -1,14 +1,11 @@
-"""Round-4: default-on plan budgets for composed entry points
-(VERDICT r3 #6) — validate()/curate() run plans.audit.assert_scalable
-on the composed frames before returning; opt-out is explicit.
-validate()'s default budget is strict; curate()'s admits the library's
-own 1-row broadcast scorers (BroadcastNestedLoopJoin)."""
+"""Round-4: default-on plan budget for validate() (VERDICT r3 #6) —
+it runs plans.audit.assert_scalable on the composed frames before
+returning; opt-out is explicit. The default budget is strict."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from schema_validata_spark import validate
-from schema_validata_spark.curation import curate
 from schema_validata_spark.rules import Rules
 
 
@@ -48,27 +45,6 @@ def test_validate_budget_opt_out(spark):
                    key_cols=["conv_id", "turn_idx"], plan_budget=None)
     assert res.violations is not None
     res.unpersist()
-
-
-def test_curate_gate_catches_smuggled_global_sort(spark):
-    """A caller handing curate() a globally-sorted input has a range
-    exchange in the composed plan — the 100×-killer the default
-    budget exists to catch before execution."""
-    df = spark.createDataFrame(
-        [(i, f"text {i}") for i in range(50)],
-        "doc_id long, text string").orderBy("text")
-    with pytest.raises(ValueError, match="global-sort"):
-        curate(df)
-    # explicit opt-out lets it through (and it still runs)
-    assert curate(df, plan_budget=None).count() == 50
-
-
-def test_curate_default_budget_passes_on_clean_input(spark):
-    df = spark.createDataFrame(
-        [(i, f"text {i % 30}") for i in range(60)],
-        "doc_id long, text string")
-    out = curate(df, min_quality=0.0)
-    assert out.count() == 30
 
 
 def test_validate_gate_catches_smuggled_global_sort(spark):

@@ -1,13 +1,10 @@
 """Round-5: regression tests for the ADVICE r4 findings.
 
-1. (medium) curate()'s default plan budget must tolerate
-   BroadcastNestedLoopJoin — the library's OWN sanctioned 1-row
-   broadcast crossJoin scorers (functions/text.py totals,
-   functions/sampling.py share caps) plan as BNLJ, so feeding a
-   scored frame into curate() must not raise — while a
-   CartesianProduct (both sides distributed) stays forbidden.
-   validate()'s default budget is strict: it rejects BNLJ unless the
-   caller's budget dict admits it.
+1. (medium) the library's 1-row broadcast crossJoin scorers
+   (functions/text.py totals, functions/sampling.py share caps) plan
+   as BroadcastNestedLoopJoin. validate()'s default budget is strict:
+   it rejects BNLJ unless the caller's budget dict admits it, and a
+   CartesianProduct (both sides distributed) stays forbidden even then.
 2. (low) _xl_serial_to_dt must use the 1904-epoch-specific overflow
    bound: serials 2,957,004–2,958,465 under date1904 degrade per-cell
    to the raw number instead of killing the workbook read.
@@ -24,7 +21,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from schema_validata_spark import validate
-from schema_validata_spark.curation import curate
 from schema_validata_spark.plans.audit import assert_scalable, plan_audit
 from schema_validata_spark.rules import Rules
 from schema_validata_spark.sources.xls import _xl_serial_to_dt
@@ -42,14 +38,6 @@ def _scored(spark):
     tot = df.agg(F.count("*").alias("n_total"))
     return df.crossJoin(F.broadcast(tot)).withColumn(
         "quality", F.length("text") / F.col("n_total"))
-
-
-def test_curate_accepts_sanctioned_broadcast_nlj_lineage(spark):
-    scored = _scored(spark)
-    # pre-condition: the lineage really does plan as BNLJ
-    assert plan_audit(scored).n_broadcast_nested_loop_joins >= 1
-    out = curate(scored.drop("n_total"), min_quality=0.0)
-    assert out.count() > 0
 
 
 def test_validate_rejects_broadcast_nlj_lineage(spark):
@@ -85,8 +73,8 @@ def test_cartesian_still_forbidden_by_default_budget(spark):
 
 
 def test_assert_scalable_strict_default_still_rejects_bnlj(spark):
-    """Direct assert_scalable keeps its strict default — only
-    curate()'s CURATE_PLAN_BUDGET opts into BNLJ."""
+    """Direct assert_scalable keeps its strict default; only an
+    explicit flag admits BNLJ."""
     scored = _scored(spark)
     with pytest.raises(ValueError, match="BroadcastNestedLoopJoin"):
         assert_scalable(scored)

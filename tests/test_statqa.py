@@ -1,13 +1,11 @@
 """Unit tests for the statistical QA screens (operators/statqa.py,
-ks_drift in operators/drift.py) and sliding-window chunking
-(functions/chunking.py)."""
+ks_drift in operators/drift.py)."""
 
 import math
 
 import pytest
 from pyspark.sql import Row, functions as F
 
-from schema_validata_spark.functions.chunking import chunk_documents
 from schema_validata_spark.operators.drift import ks_drift
 from schema_validata_spark.operators.statqa import (benford_digits,
                                                     column_entropy)
@@ -111,60 +109,6 @@ def test_column_entropy_basics(spark):
     # NULL counts as its own category
     assert out["c"]["n_distinct"] == 2
     assert out["c"]["n_rows"] == 8
-
-
-# --------------------------------------------------------- chunk_documents
-
-def test_chunk_offsets_and_reconstruction(spark):
-    texts = ["abcdefghij" * 7,   # 70 chars
-             "short",
-             "x" * 20,           # exactly chunk_size
-             ""]
-    df = spark.createDataFrame(
-        [Row(doc_id=i, text=t) for i, t in enumerate(texts)])
-    out = chunk_documents(df, "text", "doc_id", chunk_size=20, overlap=5)
-    rows = sorted(out.collect(), key=lambda r: (r["doc_id"], r["chunk_idx"]))
-    by_doc = {}
-    for r in rows:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    step = 15
-    for i, t in enumerate(texts):
-        chunks = by_doc[i]
-        # start offsets are the arithmetic progression 0, step, ...
-        for j, r in enumerate(chunks):
-            assert r["chunk_idx"] == j
-            assert r["start_off"] == j * step
-            assert r["end_off"] == min(j * step + 20, len(t))
-            assert r["chunk"] == t[r["start_off"]:r["end_off"]]
-            assert len(r["chunk"]) == r["end_off"] - r["start_off"]
-        # consecutive chunks share exactly `overlap` chars (full chunks)
-        for a, b in zip(chunks, chunks[1:]):
-            if a["end_off"] - a["start_off"] == 20:
-                assert t[b["start_off"]:b["start_off"] + 5] == \
-                    a["chunk"][-5:][:max(0, a["end_off"] - b["start_off"])] \
-                    or a["end_off"] <= b["start_off"] + 5
-        # reconstruction: concatenating each chunk's non-overlapping
-        # prefix plus the final chunk's tail yields the document
-        rebuilt = "".join(c["chunk"][:step] for c in chunks[:-1])
-        rebuilt += chunks[-1]["chunk"]
-        assert rebuilt == t
-    # empty doc yields a single empty chunk at offset 0
-    assert len(by_doc[3]) == 1 and by_doc[3][0]["chunk"] == ""
-
-
-def test_chunk_param_validation(spark):
-    df = spark.createDataFrame([Row(doc_id=1, text="abc")])
-    with pytest.raises(ValueError):
-        chunk_documents(df, "text", "doc_id", chunk_size=0)
-    with pytest.raises(ValueError):
-        chunk_documents(df, "text", "doc_id", chunk_size=10, overlap=10)
-
-
-def test_chunk_is_map_only(spark):
-    df = spark.createDataFrame([Row(doc_id=1, text="abcdef" * 100)])
-    plan = chunk_documents(df, "text", "doc_id") \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
 
 
 # ----------------------------------------------------- numeric_correlations
