@@ -3,15 +3,13 @@
 ``entry(spark)``      — flagship: full validation run (profile → verdicts →
                         violations) over the sf0.001 ``events`` table.
 ``queries()``         — one entry per implemented operator from SURVEY.md §2
-                        plus the training-data ops (dedup / similarity /
-                        text-analysis / drift).
+                        plus the training-data ops (dedup / text-analysis /
+                        drift).
 ``oracle_sql()``      — DuckDB-runnable ANSI SQL equivalent for every
-                        SQL-expressible query (same column names/aliases).
+                        query (same column names/aliases).
 
-Approximate / hash-based operators (MinHash LSH, SimHash, hyperplane ANN)
-intentionally have NO oracle entry — the driver records a rows-only check
-for them; their exact counterparts (``ngram_jaccard``, ``similarity_topk``)
-ARE oracle-checked.
+The hash-based near-dup operators (MinHash LSH, SimHash) are oracle-checked
+too: their oracles replay the same md5 hashes and band buckets in SQL.
 """
 
 from __future__ import annotations
@@ -39,15 +37,12 @@ from schema_validata_spark.functions.text import (PII_PATTERNS, pii_summary,
 from schema_validata_spark.operators.sequence import (consecutive_repeats,
                                                       order_regressions,
                                                       session_stats)
-from schema_validata_spark.operators.similarity import embedding_norm_stats
 from schema_validata_spark.operators.drift import (drift_scores,
                                                    drift_scores_pandas,
                                                    numeric_histogram,
                                                    text_length_histogram)
 from schema_validata_spark.operators.integrity import referential_violations
 from schema_validata_spark.operators.profile import profile_stats_df
-from schema_validata_spark.operators.similarity import (brute_force_topk,
-                                                        lsh_ann_topk)
 from schema_validata_spark.operators.uniqueness import composite_duplicates
 from schema_validata_spark.operators.violations import (CheckSpec,
                                                         value_errors_df)
@@ -588,28 +583,6 @@ def q_variance_explained(spark, sf_dir):
                               "value", "event_type")
 
 
-def q_pooled_embeddings(spark, sf_dir):
-    """Group-level mean-pooled embeddings (operators/similarity.py:
-    pool_embeddings): per-label centroid vectors, 6dp-pinned — the
-    lift from chunk vectors to slice vectors the ANN/drift layer then
-    consumes; shuffle carries (#groups x dims) partial means, raw
-    vectors never shuffle."""
-    from schema_validata_spark.operators.similarity import pool_embeddings
-    return pool_embeddings(_t(spark, sf_dir, "embeddings"), "label")
-
-
-def q_centroid_matrix(spark, sf_dir):
-    """Pairwise slice-centroid cosine matrix (operators/similarity.py:
-    centroid_similarity_matrix): which labels say the same things
-    semantically — the embedding companion of slice_similarity's
-    content-overlap matrix (catches paraphrased redundancy content
-    hashing cannot). Self-join of the #groups-sized centroid frame."""
-    from schema_validata_spark.operators.similarity import (
-        centroid_similarity_matrix)
-    return centroid_similarity_matrix(_t(spark, sf_dir, "embeddings"),
-                                      "label")
-
-
 def q_k_anonymity(spark, sf_dir):
     """Release-readiness k-anonymity screen (operators/uniqueness.py:
     k_anonymity): quasi-identifier class sizes over (source, lang) —
@@ -834,24 +807,6 @@ def q_length_percentiles(spark, sf_dir):
                      F.round("p_99", 4).alias("p_99"))
 
 
-def q_embedding_near_duplicates(spark, sf_dir):
-    """Embedding-cosine near-dup pairs (exact baseline,
-    operators/dedup.py); LSH buckets are the scale path."""
-    from schema_validata_spark.operators.dedup import embedding_near_duplicates
-    emb = _t(spark, sf_dir, "embeddings")
-    pairs = embedding_near_duplicates(emb, threshold=0.45)
-    return pairs.select("id_a", "id_b", F.round("cos", 4).alias("cos"))
-
-
-def q_similarity_topk(spark, sf_dir):
-    """Brute-force cosine top-k (exact ANN baseline,
-    operators/similarity.py): broadcast query set × one corpus scan."""
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.where("vec_id < 10")
-    return brute_force_topk(emb, queries, k=5).select(
-        "query_id", "neighbor_id", F.round("cos", 4).alias("cos"))
-
-
 def q_ngram_jaccard(spark, sf_dir):
     """Exact n-gram Jaccard pairs within language groups
     (operators/dedup.py) — the verification oracle for LSH candidates."""
@@ -920,18 +875,6 @@ def q_per_group_sample(spark, sf_dir):
     df = _t(spark, sf_dir, "documents")
     return sample_n_per_group(df, "doc_id", "source", 10) \
         .select("doc_id", "source")
-
-
-def q_embedding_dispersion(spark, sf_dir):
-    """Per-slice semantic dispersion (operators/similarity.py:
-    embedding_dispersion): cosine of each vector to its label's
-    mean-pooled centroid → (n_vectors, mean_cos, min_cos, n_low) per
-    label; centroid frame is #groups-sized (AQE-broadcast join back),
-    raw vectors never shuffle."""
-    from schema_validata_spark.operators.similarity import (
-        embedding_dispersion)
-    return embedding_dispersion(_t(spark, sf_dir, "embeddings"), "label",
-                                low_cos=0.5)
 
 
 def q_quality_topk_per_lang(spark, sf_dir):
@@ -1011,12 +954,6 @@ def q_order_regressions(spark, sf_dir):
     return out.select("event_id", "user_id", "ts", "prev_max_ts")
 
 
-def q_embedding_norm_stats(spark, sf_dir):
-    """Embedding corpus QA (operators/similarity.py): one aggregate —
-    norm min/max/mean, null/zero-vector counts."""
-    return embedding_norm_stats(_t(spark, sf_dir, "embeddings"))
-
-
 def q_repetition_stats(spark, sf_dir):
     """Boilerplate detection (functions/text.py:repetition_stats):
     top-token fraction via two-stage agg + duplicate-trigram fraction
@@ -1044,13 +981,12 @@ def q_transcript_split(spark, sf_dir):
             .groupBy("split").agg(F.count(F.lit(1)).alias("n_rows")))
 
 
-# --- LSH near-dup family: md5/expr signature modes (VERDICT r3 #1) ---------
+# --- LSH near-dup family: md5 signature mode (VERDICT r3 #1) ---------------
 # These queries run the SAME banding/bucketing pipeline as the scale
-# defaults, with the hash swapped to the engine-portable md5 mode
-# (or the expr plane fold) so the ENTIRE candidate-generation +
-# verification path is replayed in the DuckDB oracle — not rows-only.
-# xxhash64 / the numpy matmul stay the production defaults and keep
-# their recall/property pytests.
+# defaults, with the hash swapped to the engine-portable md5 mode so the
+# ENTIRE candidate-generation + verification path is replayed in the
+# DuckDB oracle — not rows-only. xxhash64 stays the production default
+# and keeps its recall/property pytests.
 
 def q_minhash_near_duplicates(spark, sf_dir):
     """MinHash+LSH near-dup candidates verified by exact Jaccard —
@@ -1073,112 +1009,6 @@ def q_simhash_near_duplicates(spark, sf_dir):
     df = _t(spark, sf_dir, "documents")
     return simhash_near_duplicates(df, "text", "doc_id", max_hamming=3,
                                    shingle_k=2, hasher="md5")
-
-
-def q_embedding_near_dup_lsh(spark, sf_dir):
-    """Corpus-wide embedding near-dup SCALE path: hyperplane-bucketed
-    candidates + exact cosine verify (operators/dedup.py:
-    embedding_near_duplicates_lsh). Expr plane mode: the fixed-seed
-    Gaussian planes are embedded as literals and each projection is a
-    sequential double fold (similarity.hyperplane_codes_expr), so the
-    oracle replays bucket codes, candidate join, and cosine verify
-    exactly; the numpy matmul stays the scale default."""
-    from schema_validata_spark.operators.dedup import \
-        embedding_near_duplicates_lsh
-    emb = _t(spark, sf_dir, "embeddings")
-    pairs = embedding_near_duplicates_lsh(emb, threshold=0.45,
-                                          n_planes=4, n_tables=16,
-                                          plane_mode="expr", dim=64)
-    return pairs.select("id_a", "id_b", F.round("cos", 4).alias("cos"))
-
-
-def q_ivf_route(spark, sf_dir):
-    """IVF-style deterministic coarse routing (operators/similarity.py:
-    ivf_route): bucket = argmax |component|; per-bucket vector counts."""
-    from schema_validata_spark.operators.similarity import ivf_route
-    emb = _t(spark, sf_dir, "embeddings")
-    return (ivf_route(emb)
-            .groupBy("ivf_bucket")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_vectors")))
-
-
-def q_lsh_ann_topk(spark, sf_dir):
-    """Hyperplane-LSH bucketed approximate top-k — expr plane mode
-    (similarity.hyperplane_codes_expr) so the oracle replays bucket
-    codes, the candidate join, cosine scoring, and the top-k window
-    exactly; the numpy matmul stays the scale default (recall
-    pytests cover it)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.where("vec_id < 10")
-    return lsh_ann_topk(emb, queries, k=5, n_planes=8, n_tables=4,
-                        plane_mode="expr", dim=64).select(
-        "query_id", "neighbor_id", F.round("cos", 4).alias("cos"))
-
-
-def q_ivf_ann_topk(spark, sf_dir):
-    """Trained-IVF ANN (operators/similarity.py: deterministic k-means
-    train → map-only assign → broadcast probe routing → exact cosine
-    top-k on probed clusters). Run in the EXACT mode (n_probe ==
-    n_clusters, every cluster probed) so the full train/assign/route/
-    score plumbing is hash-checkable against the brute-force SQL
-    oracle; approximate recall (n_probe < n_clusters) is pytest-covered
-    (tests/test_dedup_similarity.py)."""
-    from schema_validata_spark.operators.similarity import ivf_topk
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.where("vec_id >= 10 AND vec_id < 18")
-    return ivf_topk(emb, queries, k=4, n_clusters=5, n_probe=5,
-                    n_iters=3).select(
-        "query_id", "neighbor_id", F.round("cos", 4).alias("cos"))
-
-
-def q_ann_auto_topk(spark, sf_dir):
-    """Auto-routing ANN façade (operators/similarity.py:ann_topk,
-    VERDICT r3 #3): corpus-size routing picks the index — at fixture
-    scale the small-corpus route (exact brute force) fires, so the
-    façade's routing + scoring is hash-checkable against the
-    cross-join SQL oracle; the ivf/ivf_pq routes and the audited LSH
-    gate are pytest-covered (tests/test_round4c_ann_facade.py)."""
-    from schema_validata_spark.operators.similarity import ann_topk
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.where("vec_id >= 20 AND vec_id < 27")
-    return ann_topk(emb, queries, k=4).select(
-        "query_id", "neighbor_id", F.round("cos", 4).alias("cos"))
-
-
-def q_pq_ann_topk(spark, sf_dir):
-    """Product-quantization ANN (operators/similarity.py: PQ codebooks
-    → byte codes → ADC scan via mapInPandas per-batch beam → exact
-    cosine rerank). EXACT MODE for the oracle (the ivf_ann_topk
-    precedent): beam ≥ corpus keeps every candidate, so the full
-    train→encode→ADC→rerank pipeline must reproduce brute-force top-k
-    byte-identically — hash equality proves the plumbing loses no
-    candidate. The LOSSY beam (the production trade) keeps its
-    deterministic recall-floor pytests
-    (tests/test_dedup_similarity.py, 0.92 at beam=100)."""
-    from schema_validata_spark.operators.similarity import (pq_topk,
-                                                            train_pq_codebooks)
-    emb = _t(spark, sf_dir, "embeddings")
-    books = train_pq_codebooks(emb, m=8, k=16, n_iters=3)
-    q = emb.where("vec_id < 10")
-    return pq_topk(emb, q, books, k=5, batch_k=1000).select(
-        "query_id", "neighbor_id", F.round("cos", 4).alias("cos"))
-
-
-def q_ivf_pq_topk(spark, sf_dir):
-    """Composed IVF×PQ ANN (operators/similarity.py: ivf_pq_topk) —
-    coarse routing over PQ byte codes, ADC beam per probed cluster,
-    exact rerank, distributed query join (query_mode='join' default).
-    EXACT MODE for the oracle: every cluster probed + beam ≥ corpus →
-    output must equal brute-force top-k byte-identically (routing +
-    encoding + the bucket join lose no candidate). The lossy
-    configuration (n_probe < k_clusters, small beam) keeps its
-    recall-floor pytests (0.88 full-probe on this fixture)."""
-    from schema_validata_spark.operators.similarity import ivf_pq_topk
-    emb = _t(spark, sf_dir, "embeddings")
-    q = emb.where("vec_id < 10")
-    return ivf_pq_topk(emb, q, k=5, n_clusters=5, n_probe=5, m=8,
-                       pq_k=16, batch_k=1000).select(
-        "query_id", "neighbor_id", F.round("cos", 4).alias("cos"))
 
 
 def q_datetime_inference(spark, sf_dir):
@@ -2026,31 +1856,6 @@ def q_ngram_diversity(spark, sf_dir):
             .orderBy("source"))
 
 
-def q_embedding_dim_qa(spark, sf_dir):
-    """Embedding-shape QA (operators/similarity.py:embedding_dim_qa):
-    corruption is injected deterministically (every 53rd vec gains a
-    NaN head, every 59th becomes all-zero, every 61st NULL — WHEN
-    order wins on overlap) and the operator must bucket vectors by
-    dimension and count NaN / NULL-element / zero pathologies per
-    bucket. Pure array lambdas in the scan + one tiny-key aggregate."""
-    from schema_validata_spark.operators.similarity import (
-        embedding_dim_qa)
-    emb = _t(spark, sf_dir, "embeddings")
-    v = F.col("embedding")
-    nan_head = F.concat(
-        F.array(F.lit(float("nan")).cast("float")),
-        F.slice(v, 2, F.size(v) - 1))
-    corrupted = (F.when(F.col("vec_id") % 53 == 0, nan_head)
-                  .when(F.col("vec_id") % 59 == 0,
-                        F.transform(v, lambda x: F.lit(0.0)
-                                     .cast("float")))
-                  .when(F.col("vec_id") % 61 == 0,
-                        F.lit(None).cast("array<float>"))
-                  .otherwise(v))
-    return (embedding_dim_qa(emb.select(corrupted.alias("embedding")))
-            .orderBy(F.col("dim").asc_nulls_first()))
-
-
 def q_vocab_drift(spark, sf_dir):
     """Snapshot vocabulary movers (operators/drift.py:vocab_drift):
     snapshot A = even docs, B = odd docs with ' driftmarker
@@ -2103,26 +1908,6 @@ def q_role_share(spark, sf_dir):
             .orderBy("user_id"))
 
 
-def q_centroid_drift(spark, sf_dir):
-    """Embedding centroid drift (operators/similarity.py:
-    embedding_centroid_drift): snapshot A = even vec_ids, B = odd with
-    dimension 1 shifted +0.5 on every 3rd — the shift must move the
-    centroid cosine off 1.0 identically in both engines. Two map-side
-    avg aggregates + a dims-sized join; vectors never shuffle."""
-    from schema_validata_spark.operators.similarity import (
-        embedding_centroid_drift)
-    emb = _t(spark, sf_dir, "embeddings")
-    vd = F.col("embedding").cast("array<double>")
-    a = emb.where(F.col("vec_id") % 2 == 0)
-    shifted = F.concat(
-        F.array(F.element_at(vd, 1) + F.lit(0.5)),
-        F.slice(vd, 2, F.size(vd) - 1))
-    b = (emb.where(F.col("vec_id") % 2 == 1)
-            .select(F.when(F.col("vec_id") % 3 == 0, shifted)
-                     .otherwise(vd).alias("embedding")))
-    return embedding_centroid_drift(a, b)
-
-
 def q_unigram_scores(spark, sf_dir):
     """Unigram-LM perplexity proxy (functions/text.py:
     unigram_logprob_scores): per-doc mean negative log-prob under an
@@ -2133,26 +1918,6 @@ def q_unigram_scores(spark, sf_dir):
     return unigram_logprob_scores(_t(spark, sf_dir, "documents"),
                                   "text", "doc_id",
                                   vocab_size=200).orderBy("id")
-
-
-def q_semantic_near_dup(spark, sf_dir):
-    """SemDeDup-style semantic near-dup pairs (operators/dedup.py:
-    semantic_near_duplicates): cluster buckets as candidates + exact
-    cosine verify. Run with FIXED one-hot centroids (0.25·e_j, j<4) so
-    assignment is argmax over the first 4 components with exact
-    single-term dot products — no float-summation ambiguity — making
-    the cluster→pair→verify pipeline hash-checkable in DuckDB; the
-    trained-k-means path (the production route) keeps its
-    no-false-positives + recall pytests (tests/test_semantic_dedup.py)
-    and the training machinery is oracle-covered via ivf_ann_topk."""
-    from schema_validata_spark.operators.dedup import \
-        semantic_near_duplicates
-    emb = _t(spark, sf_dir, "embeddings")
-    cents = [[0.25 if i == j else 0.0 for i in range(64)]
-             for j in range(4)]
-    pairs = semantic_near_duplicates(emb, threshold=0.45,
-                                     n_clusters=4, centroids=cents)
-    return pairs.select("id_a", "id_b", F.round("cos", 4).alias("cos"))
 
 
 _WINNOW_BLOCK = ("this shared boilerplate paragraph is planted into "
@@ -2525,18 +2290,6 @@ def q_time_weighted_avg(spark, sf_dir):
             .orderBy("user_id"))
 
 
-def q_normalized_embeddings(spark, sf_dir):
-    """L2 normalization (similarity.normalize_embeddings): unit
-    vectors with zero/NULL guarded to NULL, 6dp-rounded elements —
-    map-only JVM aggregate+transform, byte-stable across engines."""
-    from schema_validata_spark.operators.similarity import \
-        normalize_embeddings
-    df = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    return (normalize_embeddings(df, "embedding", out_col="unit")
-            .select("vec_id", "unit")
-            .orderBy("vec_id"))
-
-
 def q_record_linkage(spark, sf_dir):
     """Blocking-based record linkage (dedup.record_linkage_pairs):
     customers blocked by nation, scored on (segment, balance band) —
@@ -2770,17 +2523,6 @@ def q_value_grid_stats(spark, sf_dir):
     from schema_validata_spark.operators.statqa import value_grid_stats
     return (value_grid_stats(_t(spark, sf_dir, "events"), "value")
             .orderBy("step"))
-
-
-def q_embedding_spectrum(spark, sf_dir):
-    """Covariance spectrum + effective rank of the embedding cloud
-    (similarity.embedding_spectrum): collapsed-encoder detector;
-    streaming numpy-gram partials, driver eigendecomposition —
-    rows-only (no SQL eigensolver)."""
-    from schema_validata_spark.operators.similarity import \
-        embedding_spectrum
-    return embedding_spectrum(_t(spark, sf_dir, "embeddings"),
-                              "embedding", top_k=8)
 
 
 def q_transition_latency(spark, sf_dir):
@@ -3227,24 +2969,6 @@ def q_dedup_impact(spark, sf_dir):
         .orderBy("group")
 
 
-def q_ann_recall(spark, sf_dir):
-    """Recall@k of the LSH ANN path vs exact brute force per query
-    (similarity.ann_recall_audit) — expr plane mode, so BOTH sides
-    (the brute-force ground truth AND the hyperplane approximate set)
-    replay in the DuckDB oracle and the recall numbers themselves are
-    hash-checked. On this fixture's RANDOM embedding cloud recall is
-    legitimately near zero (best neighbors sit at cos~0.35, below
-    hyperplane-collision range) — exactly the data-dependence the
-    audit exists to surface; the tight-cluster pytest proves the 1.0
-    end."""
-    from schema_validata_spark.operators.similarity import \
-        ann_recall_audit
-    emb = _t(spark, sf_dir, "embeddings")
-    qs = emb.where(F.col("vec_id") % 25 == 0)
-    return (ann_recall_audit(emb, qs, k=10, plane_mode="expr", dim=64)
-            .orderBy("query_id"))
-
-
 def q_label_entropy(spark, sf_dir):
     """Per-user behavior-mix entropy (sequence.label_entropy_per_key):
     the scripted-bot screen — low-entropy keys in a diverse corpus;
@@ -3323,7 +3047,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lang_id_counts": q_lang_id_counts,
         "quality_scores": q_quality_scores,
         "length_percentiles": q_length_percentiles,
-        "embedding_near_duplicates": q_embedding_near_duplicates,
         "text_length_histogram": q_text_length_histogram,
         "drift_scores": q_drift_scores,
         "drift_scores_arrow": q_drift_scores_arrow,
@@ -3351,14 +3074,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "turn_echo": q_turn_echo,
         "winsorized_stats": q_winsorized_stats,
         "equidepth_histogram": q_equidepth_histogram,
-        "similarity_topk": q_similarity_topk,
         "ngram_jaccard": q_ngram_jaccard,
         "near_dup_clusters": q_near_dup_clusters,
         "dedup_near": q_dedup_near,
         "near_dup_safe_split": q_near_dup_safe_split,
         "dedup_keep_best": q_dedup_keep_best,
         "per_group_sample": q_per_group_sample,
-        "embedding_dispersion": q_embedding_dispersion,
         "quality_topk_per_lang": q_quality_topk_per_lang,
         "deterministic_sample": q_deterministic_sample,
         "transcript_split": q_transcript_split,
@@ -3371,7 +3092,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "partition_rate_verdicts": q_partition_rate_verdicts,
         "session_stats": q_session_stats,
         "order_regressions": q_order_regressions,
-        "embedding_norm_stats": q_embedding_norm_stats,
         "topk_sample": q_topk_sample,
         "weighted_sample": q_weighted_sample,
         "turn_conformance": q_turn_conformance,
@@ -3386,8 +3106,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sketch_overlap": q_sketch_overlap,
         "summary_drift": q_summary_drift,
         "variance_explained": q_variance_explained,
-        "pooled_embeddings": q_pooled_embeddings,
-        "centroid_matrix": q_centroid_matrix,
         "k_anonymity": q_k_anonymity,
         "l_diversity": q_l_diversity,
         "terminal_turns": q_terminal_turns,
@@ -3404,13 +3122,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "repair_cut_points": q_repair_cut_points,
         "minhash_near_duplicates": q_minhash_near_duplicates,
         "simhash_near_duplicates": q_simhash_near_duplicates,
-        "embedding_near_dup_lsh": q_embedding_near_dup_lsh,
-        "ivf_route": q_ivf_route,
-        "ivf_ann_topk": q_ivf_ann_topk,
-        "ann_auto_topk": q_ann_auto_topk,
-        "pq_ann_topk": q_pq_ann_topk,
-        "ivf_pq_topk": q_ivf_pq_topk,
-        "lsh_ann_topk": q_lsh_ann_topk,
         "fd_check": q_fd_check,
         "quality_percentiles": q_quality_percentiles,
         "mixture_sample": q_mixture_sample,
@@ -3433,12 +3144,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tool_chain_ngrams": q_tool_chain_ngrams,
         "dup_share_by_source": q_dup_share_by_source,
         "ngram_diversity": q_ngram_diversity,
-        "embedding_dim_qa": q_embedding_dim_qa,
         "vocab_drift": q_vocab_drift,
         "derived_consistency": q_derived_consistency,
         "role_share": q_role_share,
-        "centroid_drift": q_centroid_drift,
-        "semantic_near_dup": q_semantic_near_dup,
         "unigram_scores": q_unigram_scores,
         "winnow_fingerprints": q_winnow_fingerprints,
         "winnow_overlap": q_winnow_overlap,
@@ -3481,7 +3189,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "transition_latency": q_transition_latency,
         "turn_count_histogram": q_turn_count_histogram,
         "value_grid_stats": q_value_grid_stats,
-        "embedding_spectrum": q_embedding_spectrum,
         "heavy_hitters": q_heavy_hitters,
         "numeric_histogram2d": q_numeric_histogram2d,
         "json_flatten": q_json_flatten,
@@ -3499,7 +3206,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "null_runs": q_null_runs,
         "pairwise_psi": q_pairwise_psi,
         "record_linkage": q_record_linkage,
-        "normalized_embeddings": q_normalized_embeddings,
         "sample_bias_check": q_sample_bias_check,
         "time_weighted_avg": q_time_weighted_avg,
         "extrema_exemplars": q_extrema_exemplars,
@@ -3527,7 +3233,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hash_uniformity": q_hash_uniformity,
         "quantile_map_accuracy": q_quantile_map_accuracy,
         "dedup_impact": q_dedup_impact,
-        "ann_recall": q_ann_recall,
         "label_entropy": q_label_entropy,
         "gap_histogram": q_gap_histogram,
         "lang_confusion": q_lang_confusion,
@@ -3601,14 +3306,13 @@ def _lang_case() -> str:
                FROM (SELECT doc_id, text, {best} AS __best FROM documents)"""
 
 
-# --- LSH near-dup family oracle generators (md5/expr modes, r4) ------------
+# --- LSH near-dup family oracle generators (md5 mode, r4) ------------------
 # These replay the ENTIRE banded-LSH pipelines in DuckDB — signatures,
 # band/chunk buckets, the bucket-size cap, candidate self-join, and the
-# exact verification — against the md5/expr-mode Spark queries above.
-# md5 and a sequential double fold are the two primitives both engines
-# compute byte-identically (same pattern as deterministic_sample /
-# winnow_fingerprints); xxhash64 / the numpy matmul stay the scale
-# defaults, pytest-covered.
+# exact verification — against the md5-mode Spark queries above. md5 is
+# a primitive both engines compute byte-identically (same pattern as
+# deterministic_sample / winnow_fingerprints); xxhash64 stays the scale
+# default, pytest-covered.
 
 def _mh_shingle_case(k: int, distinct: bool) -> str:
     """The Spark `shingles()` semantics in DuckDB: word k-grams over
@@ -3728,59 +3432,6 @@ def _simhash_near_dup_oracle() -> str:
         SELECT id_a, id_b, hamming FROM prs WHERE hamming <= 3"""
 
 
-def _lsh_bucket_list(n_tables: int, n_planes: int, dim: int,
-                     vcol: str = "v") -> str:
-    """The expr-mode hyperplane bucket keys (one int per table:
-    table*2^n_planes + sign-bit code) as generated DuckDB expressions
-    over a double[] column — the EXACT constants and sequential fold
-    `similarity.hyperplane_codes_expr` evaluates Spark-side."""
-    from schema_validata_spark.operators.similarity import lsh_planes
-    planes = lsh_planes(n_tables, n_planes, dim)
-
-    def dot(plane):
-        consts = ", ".join(f"{c:.17e}" for c in plane)
-        return (f"list_reduce(list_concat([0.0e0], "
-                f"list_transform(range(1, {dim + 1}), "
-                f"i -> {vcol}[i] * ([{consts}])[i])), (a, x) -> a + x)")
-
-    buckets = []
-    for t in range(n_tables):
-        bits = " + ".join(
-            f"(CASE WHEN {dot(planes[t * n_planes + p])} >= 0 "
-            f"THEN {1 << (n_planes - 1 - p)} ELSE 0 END)"
-            for p in range(n_planes))
-        buckets.append(f"{t} * {1 << n_planes} + ({bits})")
-    return ",\n                 ".join(buckets)
-
-
-def _embedding_lsh_oracle() -> str:
-    blist = _lsh_bucket_list(16, 4, 64)
-    return f"""
-        WITH e AS (
-          SELECT vec_id, cast(embedding as double[]) AS v
-          FROM embeddings WHERE embedding IS NOT NULL),
-        bkt AS (
-          SELECT vec_id, unnest([{blist}]) AS bk
-          FROM e WHERE len(v) = 64),
-        cap AS (
-          SELECT vec_id, bk FROM (
-            SELECT vec_id, bk, count(*) OVER (PARTITION BY bk) AS bsz
-            FROM bkt) WHERE bsz <= 10000),
-        cand AS (
-          SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-          FROM cap a JOIN cap b ON a.bk = b.bk AND a.vec_id < b.vec_id),
-        ver AS (
-          SELECT c.id_a, c.id_b,
-                 round(list_dot_product(ea.v, eb.v)
-                   / greatest(sqrt(list_dot_product(ea.v, ea.v))
-                            * sqrt(list_dot_product(eb.v, eb.v)),
-                              1e-12), 6) AS cos6
-          FROM cand c JOIN e ea ON ea.vec_id = c.id_a
-                      JOIN e eb ON eb.vec_id = c.id_b)
-        SELECT id_a, id_b, round(cos6, 4) AS cos
-        FROM ver WHERE cos6 >= 0.45"""
-
-
 def _incremental_near_dedup_oracle() -> str:
     bands = _mh_band_list(32, 8)
     return f"""
@@ -3818,86 +3469,6 @@ def _incremental_near_dedup_oracle() -> str:
         SELECT doc_id, source FROM newb
         WHERE doc_id NOT IN (SELECT new_id FROM dup)
         ORDER BY doc_id"""
-
-
-_COS6 = ("round(list_dot_product({a}, {b})"
-         " / greatest(sqrt(list_dot_product({a}, {a}))"
-         " * sqrt(list_dot_product({b}, {b})), 1e-12), 6)")
-
-
-def _lsh_ann_topk_oracle() -> str:
-    blist = _lsh_bucket_list(4, 8, 64)
-    cos = _COS6.format(a="eq.v", b="en.v")
-    return f"""
-        WITH e AS (
-          SELECT vec_id, cast(embedding as double[]) AS v
-          FROM embeddings WHERE embedding IS NOT NULL),
-        cb AS (
-          SELECT vec_id, unnest([{blist}]) AS bk
-          FROM e WHERE len(v) = 64),
-        cand AS (
-          SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
-          FROM cb c JOIN cb q ON c.bk = q.bk
-          WHERE q.vec_id < 10 AND c.vec_id != q.vec_id),
-        scored AS (
-          SELECT cand.query_id, cand.neighbor_id,
-                 {cos} AS cos6
-          FROM cand JOIN e eq ON eq.vec_id = cand.query_id
-                    JOIN e en ON en.vec_id = cand.neighbor_id),
-        ranked AS (
-          SELECT query_id, neighbor_id, cos6, row_number() OVER
-                 (PARTITION BY query_id
-                  ORDER BY cos6 DESC, neighbor_id ASC) AS rn
-          FROM scored)
-        SELECT query_id, neighbor_id, round(cos6, 4) AS cos
-        FROM ranked WHERE rn <= 5"""
-
-
-def _ann_recall_oracle() -> str:
-    blist = _lsh_bucket_list(4, 10, 64)
-    cosb = _COS6.format(a="q.v", b="c.v")
-    cosa = _COS6.format(a="eq.v", b="en.v")
-    return f"""
-        WITH e AS (
-          SELECT vec_id, cast(embedding as double[]) AS v
-          FROM embeddings WHERE embedding IS NOT NULL),
-        exact0 AS (
-          SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                 {cosb} AS cos6,
-                 row_number() OVER (PARTITION BY q.vec_id
-                   ORDER BY {cosb} DESC, c.vec_id ASC) AS rn
-          FROM e c CROSS JOIN (SELECT * FROM e WHERE vec_id % 25 = 0) q
-          WHERE c.vec_id != q.vec_id),
-        ex AS (SELECT query_id, neighbor_id, cos6 FROM exact0
-               WHERE rn <= 10),
-        cb AS (
-          SELECT vec_id, unnest([{blist}]) AS bk
-          FROM e WHERE len(v) = 64),
-        cand AS (
-          SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
-          FROM cb c JOIN cb q ON c.bk = q.bk
-          WHERE q.vec_id % 25 = 0 AND c.vec_id != q.vec_id),
-        scored AS (
-          SELECT cand.query_id, cand.neighbor_id,
-                 {cosa} AS cos6
-          FROM cand JOIN e eq ON eq.vec_id = cand.query_id
-                    JOIN e en ON en.vec_id = cand.neighbor_id),
-        ap AS (
-          SELECT query_id, neighbor_id FROM (
-            SELECT query_id, neighbor_id, row_number() OVER
-                   (PARTITION BY query_id
-                    ORDER BY cos6 DESC, neighbor_id ASC) AS rn
-            FROM scored) WHERE rn <= 10)
-        SELECT ex.query_id,
-               count(*)::bigint AS n_exact,
-               count(ap.neighbor_id)::bigint AS n_hit,
-               round(count(ap.neighbor_id)::double / count(*), 6)
-                 AS recall,
-               round(max(CASE WHEN ap.neighbor_id IS NULL
-                              THEN ex.cos6 END), 6) AS missed_best_cos
-        FROM ex LEFT JOIN ap ON ex.query_id = ap.query_id
-                            AND ex.neighbor_id = ap.neighbor_id
-        GROUP BY ex.query_id ORDER BY ex.query_id"""
 
 
 def oracle_sql() -> dict[str, str]:
@@ -4557,42 +4128,6 @@ def oracle_sql() -> dict[str, str]:
                END AS f_stat
         FROM c"""
 
-    sql["pooled_embeddings"] = """
-        WITH ex AS (
-          SELECT label AS "group", t.i AS dim,
-                 embedding[t.i + 1]::double AS val
-          FROM embeddings, unnest(range(len(embedding))) AS t(i)
-          WHERE embedding IS NOT NULL),
-        per AS (
-          SELECT "group", dim, round(avg(val), 6) AS m,
-                 count(*)::bigint AS c
-          FROM ex GROUP BY "group", dim)
-        SELECT "group", max(c)::bigint AS n_vectors,
-               list(m ORDER BY dim ASC) AS embedding
-        FROM per GROUP BY "group\""""
-
-    sql["centroid_matrix"] = """
-        WITH ex AS (
-          SELECT label AS g, t.i AS dim,
-                 embedding[t.i + 1]::double AS val
-          FROM embeddings, unnest(range(len(embedding))) AS t(i)
-          WHERE embedding IS NOT NULL),
-        per AS (
-          SELECT g, dim, round(avg(val), 6) AS m
-          FROM ex GROUP BY g, dim),
-        pairs AS (
-          -- per-dim 1:1 join, so the joined sums ARE the dots/norms
-          SELECT pa.g AS ga, pb.g AS gb,
-                 sum(pa.m * pb.m) AS dot,
-                 sqrt(sum(pa.m * pa.m)) AS na,
-                 sqrt(sum(pb.m * pb.m)) AS nb
-          FROM per pa JOIN per pb ON pa.dim = pb.dim
-           AND ((pa.g IS NULL AND pb.g IS NOT NULL) OR pa.g < pb.g)
-          GROUP BY pa.g, pb.g)
-        SELECT ga AS group_a, gb AS group_b,
-               round(dot / greatest(na * nb, 1e-12), 6) AS cos
-        FROM pairs"""
-
     sql["k_anonymity"] = """
         WITH classes AS (
           SELECT source, lang, count(*)::bigint AS n
@@ -5116,97 +4651,6 @@ def oracle_sql() -> dict[str, str]:
                round(quantile_cont(length(text), 0.99), 4) AS p_99
         FROM documents GROUP BY lang"""
 
-    sql["embedding_near_duplicates"] = """
-        WITH e AS (SELECT vec_id, cast(embedding as double[]) AS v
-                   FROM embeddings),
-        p AS (
-          SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                 round(list_dot_product(a.v, b.v)
-                 / greatest(sqrt(list_dot_product(a.v, a.v))
-                          * sqrt(list_dot_product(b.v, b.v)), 1e-12), 6)
-                   AS cos6
-          FROM e a JOIN e b ON a.vec_id < b.vec_id)
-        SELECT id_a, id_b, round(cos6, 4) AS cos
-        FROM p WHERE cos6 >= 0.45"""
-
-    sql["similarity_topk"] = """
-        WITH q AS (SELECT vec_id AS query_id,
-                          cast(embedding as double[]) AS qv
-                   FROM embeddings WHERE vec_id < 10),
-        scored AS (
-          SELECT q.query_id, c.vec_id AS neighbor_id,
-                 round(list_dot_product(q.qv, cast(c.embedding as double[]))
-                 / greatest(sqrt(list_dot_product(q.qv, q.qv))
-                          * sqrt(list_dot_product(cast(c.embedding as double[]),
-                                                  cast(c.embedding as double[]))),
-                            1e-12), 6) AS cos6
-          FROM embeddings c CROSS JOIN q
-          WHERE c.vec_id != q.query_id),
-        ranked AS (
-          SELECT query_id, neighbor_id, cos6, row_number() OVER
-                 (PARTITION BY query_id
-                  ORDER BY cos6 DESC, neighbor_id ASC) AS rn
-          FROM scored)
-        SELECT query_id, neighbor_id, round(cos6, 4) AS cos
-        FROM ranked WHERE rn <= 5"""
-
-    # ann_topk façade at fixture scale routes to brute force — the
-    # oracle is the same cross-join ranking on its query slice.
-    sql["ann_auto_topk"] = """
-        WITH q AS (SELECT vec_id AS query_id,
-                          cast(embedding as double[]) AS qv
-                   FROM embeddings WHERE vec_id >= 20 AND vec_id < 27),
-        scored AS (
-          SELECT q.query_id, c.vec_id AS neighbor_id,
-                 round(list_dot_product(q.qv, cast(c.embedding as double[]))
-                 / greatest(sqrt(list_dot_product(q.qv, q.qv))
-                          * sqrt(list_dot_product(cast(c.embedding as double[]),
-                                                  cast(c.embedding as double[]))),
-                            1e-12), 6) AS cos6
-          FROM embeddings c CROSS JOIN q
-          WHERE c.vec_id != q.query_id),
-        ranked AS (
-          SELECT query_id, neighbor_id, cos6, row_number() OVER
-                 (PARTITION BY query_id
-                  ORDER BY cos6 DESC, neighbor_id ASC) AS rn
-          FROM scored)
-        SELECT query_id, neighbor_id, round(cos6, 4) AS cos
-        FROM ranked WHERE rn <= 4"""
-
-    # Exact-mode IVF (all clusters probed) ≡ brute-force top-k: the
-    # oracle is the plain cross-join ranking — hash equality proves the
-    # train/assign/route plumbing loses no candidate.
-    sql["ivf_ann_topk"] = """
-        WITH q AS (SELECT vec_id AS query_id,
-                          cast(embedding as double[]) AS qv
-                   FROM embeddings WHERE vec_id >= 10 AND vec_id < 18),
-        scored AS (
-          SELECT q.query_id, c.vec_id AS neighbor_id,
-                 round(list_dot_product(q.qv, cast(c.embedding as double[]))
-                 / greatest(sqrt(list_dot_product(q.qv, q.qv))
-                          * sqrt(list_dot_product(cast(c.embedding as double[]),
-                                                  cast(c.embedding as double[]))),
-                            1e-12), 6) AS cos6
-          FROM embeddings c CROSS JOIN q
-          WHERE c.vec_id != q.query_id),
-        ranked AS (
-          SELECT query_id, neighbor_id, cos6, row_number() OVER
-                 (PARTITION BY query_id
-                  ORDER BY cos6 DESC, neighbor_id ASC) AS rn
-          FROM scored)
-        SELECT query_id, neighbor_id, round(cos6, 4) AS cos
-        FROM ranked WHERE rn <= 4"""
-
-    sql["ivf_route"] = """
-        WITH a AS (
-          SELECT vec_id,
-                 list_transform(cast(embedding as double[]),
-                                x -> abs(x)) AS av
-          FROM embeddings)
-        SELECT list_position(av, list_max(av))::int AS ivf_bucket,
-               count(*)::bigint AS n_vectors
-        FROM a GROUP BY 1"""
-
     sql["ngram_jaccard"] = f"""
         WITH toks AS (
           SELECT doc_id, lang,
@@ -5309,32 +4753,6 @@ def oracle_sql() -> dict[str, str]:
                             ASC, doc_id ASC) AS rn
           FROM documents)
         WHERE rn <= 10"""
-
-    sql["embedding_dispersion"] = """
-        WITH ex AS (
-          SELECT label AS grp, vec_id, t.i AS dim,
-                 embedding[t.i + 1]::double AS val
-          FROM embeddings, unnest(range(len(embedding))) AS t(i)
-          WHERE embedding IS NOT NULL),
-        cent AS (
-          SELECT grp, dim, round(avg(val), 6) AS m
-          FROM ex GROUP BY grp, dim),
-        percos AS (
-          -- integer-scaled cosines: exact, order-independent sums
-          -- (a float avg of 6dp decimals flips rounding boundaries)
-          SELECT ex.grp, ex.vec_id,
-                 cast(round(sum(ex.val * cent.m)
-                       / greatest(sqrt(sum(ex.val * ex.val))
-                                  * sqrt(sum(cent.m * cent.m)), 1e-12)
-                       * 1000000) AS bigint) AS ci
-          FROM ex JOIN cent ON ex.grp = cent.grp AND ex.dim = cent.dim
-          GROUP BY ex.grp, ex.vec_id)
-        SELECT grp AS "group", count(*)::bigint AS n_vectors,
-               round(sum(ci)::double / (count(*) * 1000000.0), 6)
-                 AS mean_cos,
-               round(min(ci) / 1000000.0, 6) AS min_cos,
-               count(CASE WHEN ci < 500000 THEN 1 END)::bigint AS n_low
-        FROM percos GROUP BY grp"""
 
     sql["quality_topk_per_lang"] = f"""
         WITH m AS (
@@ -5707,20 +5125,6 @@ def oracle_sql() -> dict[str, str]:
                round(abs(n - med) / greatest(mad, 1.0), 6) AS deviation
         FROM per, m, d
         WHERE abs(n - med) / greatest(mad, 1.0) > 3.0"""
-
-    sql["embedding_norm_stats"] = """
-        WITH n AS (
-          SELECT sqrt(list_sum(list_transform(
-                   embedding, x -> cast(x as double) * cast(x as double))))
-                 AS nm
-          FROM embeddings)
-        SELECT count(*)::bigint AS n_vectors,
-               count(CASE WHEN nm IS NULL THEN 1 END)::bigint AS n_null,
-               count(CASE WHEN nm = 0.0 THEN 1 END)::bigint AS n_zero,
-               round(min(nm), 4) AS min_norm,
-               round(max(nm), 4) AS max_norm,
-               round(avg(nm), 4) AS avg_norm
-        FROM n"""
 
     sql["distinctive_terms"] = r"""
         WITH toks AS (
@@ -6508,29 +5912,6 @@ def oracle_sql() -> dict[str, str]:
                  AS distinct_ratio
         FROM g GROUP BY source ORDER BY source"""
 
-    sql["embedding_dim_qa"] = """
-        WITH c AS (
-          SELECT CASE WHEN vec_id % 53 = 0
-                        THEN ['NaN'::FLOAT] || embedding[2:]
-                      WHEN vec_id % 59 = 0
-                        THEN list_transform(embedding,
-                                            x -> 0.0::FLOAT)
-                      WHEN vec_id % 61 = 0
-                        THEN NULL
-                      ELSE embedding END AS v
-          FROM embeddings)
-        SELECT len(v)::bigint AS dim, count(*)::bigint AS n_vectors,
-               sum(CASE WHEN len(list_filter(v, x -> isnan(x))) > 0
-                        THEN 1 ELSE 0 END)::bigint AS n_with_nan,
-               sum(CASE WHEN len(list_filter(v, x -> x IS NULL)) > 0
-                        THEN 1 ELSE 0 END)::bigint
-                 AS n_with_null_elem,
-               sum(CASE WHEN len(v) > 0
-                         AND len(list_filter(v,
-                               x -> x IS DISTINCT FROM 0.0)) = 0
-                        THEN 1 ELSE 0 END)::bigint AS n_zero_vectors
-        FROM c GROUP BY len(v) ORDER BY dim NULLS FIRST"""
-
     sql["vocab_drift"] = r"""
         WITH a AS (
           SELECT text FROM documents WHERE doc_id % 2 = 0),
@@ -6605,36 +5986,6 @@ def oracle_sql() -> dict[str, str]:
                                 ELSE 0.0 END)::double
                        / count(*)::double, 6) END AS focus_share
         FROM r GROUP BY user_id ORDER BY user_id"""
-
-    sql["centroid_drift"] = """
-        WITH a AS (
-          SELECT embedding::DOUBLE[] AS v FROM embeddings
-          WHERE vec_id % 2 = 0 AND embedding IS NOT NULL),
-        b AS (
-          SELECT CASE WHEN vec_id % 3 = 0
-                      THEN [embedding[1]::DOUBLE + 0.5]
-                           || (embedding::DOUBLE[])[2:]
-                      ELSE embedding::DOUBLE[] END AS v
-          FROM embeddings
-          WHERE vec_id % 2 = 1 AND embedding IS NOT NULL),
-        ca AS (
-          SELECT i AS dim, avg(v[i]) AS ca
-          FROM a, unnest(range(1, len(v) + 1)) AS t(i) GROUP BY i),
-        cb AS (
-          SELECT i AS dim, avg(v[i]) AS cb
-          FROM b, unnest(range(1, len(v) + 1)) AS t(i) GROUP BY i),
-        j AS (
-          SELECT coalesce(ca.ca, 0.0) AS ca, coalesce(cb.cb, 0.0) AS cb
-          FROM ca FULL OUTER JOIN cb ON ca.dim = cb.dim)
-        SELECT count(*)::bigint AS n_dims,
-               round(sqrt(sum(ca * ca)), 4) AS norm_a,
-               round(sqrt(sum(cb * cb)), 4) AS norm_b,
-               CASE WHEN sqrt(sum(ca * ca)) > 0
-                     AND sqrt(sum(cb * cb)) > 0
-                    THEN round(sum(ca * cb) / (sqrt(sum(ca * ca))
-                                               * sqrt(sum(cb * cb))), 4)
-               END AS cosine
-        FROM j"""
 
     sql["unigram_scores"] = r"""
         WITH toks AS (
@@ -8222,22 +7573,6 @@ def oracle_sql() -> dict[str, str]:
         WHERE cw > 0 AND round(mw / cw, 6) >= 1.0
         ORDER BY id_a, id_b"""
 
-    # list_reduce is a SEQUENTIAL fold like Spark's aggregate(), so the
-    # double accumulation of Σx² is bit-identical on both engines.
-    sql["normalized_embeddings"] = """
-        WITH n AS (
-          SELECT vec_id, embedding,
-                 CASE WHEN embedding IS NOT NULL
-                   AND len(embedding) > 0
-                   THEN sqrt(list_reduce(list_transform(embedding,
-                     x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),
-                     (a, b) -> a + b)) END AS nrm
-          FROM embeddings)
-        SELECT vec_id,
-               CASE WHEN nrm > 0 THEN list_transform(embedding,
-                 x -> round(CAST(x AS DOUBLE) / nrm, 6)) END AS unit
-        FROM n ORDER BY vec_id"""
-
     c20 = _hex_threshold(0.2)
     sql["sample_bias_check"] = f"""
         WITH corpus AS (
@@ -9073,47 +8408,11 @@ def oracle_sql() -> dict[str, str]:
     sql["pii_by_source"] = (" UNION ALL ".join(pii_grp_parts)
                             + ' ORDER BY "group", pii_type')
 
-    # LSH near-dup family: full-pipeline replays of the md5/expr-mode
+    # LSH near-dup family: full-pipeline replays of the md5-hashed
     # queries (generators above) — previously rows-only (VERDICT r3 #1).
     sql["minhash_near_duplicates"] = _minhash_near_dup_oracle()
     sql["simhash_near_duplicates"] = _simhash_near_dup_oracle()
-    sql["embedding_near_dup_lsh"] = _embedding_lsh_oracle()
     sql["incremental_near_dedup"] = _incremental_near_dedup_oracle()
-    sql["lsh_ann_topk"] = _lsh_ann_topk_oracle()
-    sql["ann_recall"] = _ann_recall_oracle()
-
-    # PQ exact modes (beam >= corpus, all clusters probed) reproduce
-    # brute-force top-k on the same query slice — the similarity_topk
-    # cross-join oracle IS their oracle (ivf_ann_topk precedent).
-    sql["pq_ann_topk"] = sql["similarity_topk"]
-    sql["ivf_pq_topk"] = sql["similarity_topk"]
-
-    sql["semantic_near_dup"] = """
-        WITH e AS (
-          SELECT vec_id, cast(embedding as double[]) AS v
-          FROM embeddings WHERE embedding IS NOT NULL),
-        a AS (
-          SELECT vec_id, v,
-                 CASE WHEN v[1] >= v[2] AND v[1] >= v[3]
-                           AND v[1] >= v[4] THEN 0
-                      WHEN v[2] >= v[3] AND v[2] >= v[4] THEN 1
-                      WHEN v[3] >= v[4] THEN 2
-                      ELSE 3 END AS c
-          FROM e),
-        cap AS (
-          SELECT vec_id, v, c FROM (
-            SELECT vec_id, v, c, count(*) OVER (PARTITION BY c) AS bsz
-            FROM a) WHERE bsz <= 50000),
-        p AS (
-          SELECT x.vec_id AS id_a, y.vec_id AS id_b,
-                 round(list_dot_product(x.v, y.v)
-                 / greatest(sqrt(list_dot_product(x.v, x.v))
-                          * sqrt(list_dot_product(y.v, y.v)), 1e-12), 6)
-                   AS cos6
-          FROM cap x JOIN cap y
-            ON x.c = y.c AND x.vec_id < y.vec_id)
-        SELECT id_a, id_b, round(cos6, 4) AS cos
-        FROM p WHERE cos6 >= 0.45"""
 
     sql["tool_call_pairing"] = """
         WITH t AS (

@@ -111,7 +111,7 @@ def bench_partition_verdicts_transcripts(spark):
 
 _DRIVER_TABLE_QUERIES = [
     "profile_stats", "partition_verdicts", "validate_events",
-    "drift_scores", "similarity_topk", "dedup_exact", "token_counts",
+    "drift_scores", "dedup_exact", "token_counts",
     "quality_scores", "composite_duplicates",
 ]
 

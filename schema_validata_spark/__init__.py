@@ -12,9 +12,9 @@ Public API:
     Rules / FieldRule                -> rule-table model
     datagen.gen_transcripts / gen_conversations / transcript_rules -> fixtures
 
-The dedup, similarity, text, sampling, sequence, selection and
-semistructured re-exports below are training-data operators outside the
-validation core.
+The dedup, text, sampling, sequence, selection and semistructured
+re-exports below are training-data operators outside the validation
+core.
 """
 
 from .config import (ALLOWED_CASTING, DATA_DICT_SCHEMA, NA_PATTERNS,
@@ -32,8 +32,6 @@ from .operators.integrity import (reconcile_keys,
                                   referential_violations)
 from .operators.drift import build_histograms, drift_scores
 from .operators.dedup import (dedup_exact, dedup_keep_canonical,
-                              embedding_near_duplicates,
-                              embedding_near_duplicates_lsh,
                               exact_duplicates, minhash_near_duplicates,
                               near_dup_clusters, ngram_jaccard_pairs,
                               simhash_near_duplicates)
@@ -48,8 +46,6 @@ from .operators.semistructured import (json_is_valid, json_payload_stats,
 from .operators.sequence import (consecutive_repeats, order_regressions,
                                  session_stats, sessionize,
                                  turn_conformance)
-from .operators.similarity import embedding_norm_stats
-from .operators.similarity import brute_force_topk, lsh_ann_topk
 from .operators.expectations import (ConditionalRule, Expectation,
                                      check_expectations, completeness_gaps,
                                      conditional_counts,
@@ -75,7 +71,6 @@ __all__ = [
     "referential_violations",
     "build_histograms", "drift_scores",
     "dedup_exact", "dedup_keep_canonical", "exact_duplicates",
-    "embedding_near_duplicates", "embedding_near_duplicates_lsh",
     "minhash_near_duplicates", "near_dup_clusters", "ngram_jaccard_pairs",
     "simhash_near_duplicates", "top_k_per_group",
     "deterministic_sample", "deterministic_topk_sample", "group_split",
@@ -85,8 +80,6 @@ __all__ = [
     "session_stats", "repetition_stats", "top_tokens", "gopher_rules",
     "turn_conformance", "cap_group_share",
     "json_is_valid", "json_payload_stats", "json_payload_violations",
-    "embedding_norm_stats",
-    "brute_force_topk", "lsh_ann_topk",
     "errors_overview", "write_report",
     "ConditionalRule", "Expectation", "check_expectations",
     "completeness_gaps", "conditional_counts", "conditional_violations",

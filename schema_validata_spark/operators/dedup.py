@@ -261,70 +261,6 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
              .where(F.col("jaccard") >= threshold))
 
 
-def embedding_near_duplicates_lsh(df: DataFrame, vec_col: str = "embedding",
-                                  id_col: str = "vec_id",
-                                  threshold: float = 0.9,
-                                  n_planes: int = 8, n_tables: int = 8,
-                                  max_bucket: int | None = 10_000,
-                                  telemetry_out: dict | None = None,
-                                  plane_mode: str = "numpy",
-                                  dim: int | None = None) -> DataFrame:
-    """Corpus-wide embedding near-dup pairs — the SCALE path (VERDICT r1
-    #7): random-hyperplane bucket codes (similarity.bucketize — one
-    numpy matmul per Arrow batch, deterministic fixed-seed planes, no
-    stored model) generate candidates as a
-    (table, code) self-bucket-join; exact cosine verifies candidates
-    only. Shuffle keys are (table, code) ints; vectors move once into
-    their buckets, never all-pairs.
-
-    Recall is probabilistic: a pair at angle θ collides in one table
-    with p = (1 - θ/π)^n_planes and survives iff it collides in ≥1 of
-    n_tables. Defaults (8 planes × 8 tables) give ≥0.95 recall at
-    cos ≥ 0.9; lower thresholds want fewer planes / more tables. Output
-    (id_a, id_b, cos) — a subset of ``embedding_near_duplicates`` with
-    identical cos values (verification is exact).
-
-    ``plane_mode="expr"`` (requires ``dim``) computes codes with the
-    SQL-replayable expression fold instead of the Arrow matmul —
-    verification runs only (``similarity.hyperplane_codes_expr``)."""
-    from .similarity import bucketize, cosine_expr
-    e = df.select(F.col(id_col),
-                  F.col(vec_col).cast("array<double>").alias("v"))
-    buckets = bucketize(e, id_col, n_tables, n_planes, plane_mode, dim)
-    buckets = _cap_buckets(buckets, "tc", max_bucket, telemetry_out)
-    a, b = buckets.alias("a"), buckets.alias("b")
-    cands = (a.join(b, (F.col("a.tc") == F.col("b.tc"))
-                    & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-             .select(F.col(f"a.{id_col}").alias("id_a"),
-                     F.col(f"b.{id_col}").alias("id_b"),
-                     F.col("a.v").alias("va"), F.col("b.v").alias("vb"))
-             .dropDuplicates(["id_a", "id_b"]))
-    return (cands.select("id_a", "id_b",
-                         F.round(cosine_expr(F.col("va"), F.col("vb")), 6)
-                          .alias("cos"))
-                 .where(F.col("cos") >= threshold))
-
-
-def embedding_near_duplicates(df: DataFrame, vec_col: str = "embedding",
-                              id_col: str = "vec_id",
-                              threshold: float = 0.9) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs — EXACT all-pairs baseline
-    (id_a < id_b, cos rounded to 6, ≥ threshold). This is the
-    correctness oracle; at corpus scale use
-    ``embedding_near_duplicates_lsh`` (hyperplane-bucketed candidates,
-    exact verify). Output (id_a, id_b, cos)."""
-    from .similarity import cosine_expr
-    e = df.select(F.col(id_col),
-                  F.col(vec_col).cast("array<double>").alias("v"))
-    a, b = e.alias("a"), e.alias("b")
-    return (a.join(b, F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-             .select(F.col(f"a.{id_col}").alias("id_a"),
-                     F.col(f"b.{id_col}").alias("id_b"),
-                     F.round(cosine_expr(F.col("a.v"), F.col("b.v")), 6)
-                      .alias("cos"))
-             .where(F.col("cos") >= threshold))
-
-
 def simhash(df: DataFrame, text_col: str, id_col: str,
             shingle_k: int = 2, bits: int = 64,
             hasher: str = "xxhash64") -> DataFrame:
@@ -420,9 +356,9 @@ def near_dup_clusters(pairs: DataFrame, id_a: str = "id_a",
     components): output (id, cluster_id) for every id appearing in
     ``pairs``, where cluster_id is the minimum id in the component.
 
-    This is the stage after MinHash/SimHash/embedding candidate
-    generation in a dedup pipeline — duplicates are transitive (A≈B,
-    B≈C ⇒ keep one of {A,B,C}), so pair output alone under-deduplicates.
+    This is the stage after MinHash/SimHash candidate generation in a
+    dedup pipeline — duplicates are transitive (A≈B, B≈C ⇒ keep one of
+    {A,B,C}), so pair output alone under-deduplicates.
 
     Algorithm: min-label propagation with one pointer-jumping hop per
     round (label(x) ← label(label(x))), which collapses star-shaped
@@ -510,9 +446,9 @@ def near_dup_safe_split(df: DataFrame, pairs: DataFrame, id_col: str,
     the test split inflates eval exactly like a shared user id would.
 
     Composition: ``near_dup_clusters`` resolves ``pairs`` (any
-    candidate generator's output — MinHash, SimHash, embedding LSH,
-    exact n-gram) into components; each row's split key is its
-    cluster's canonical min-id (its OWN id when unclustered), hashed
+    candidate generator's output — MinHash, SimHash, exact n-gram)
+    into components; each row's split key is its cluster's canonical
+    min-id (its OWN id when unclustered), hashed
     through the same engine-portable md5 interval rule as every other
     sampler here — so the assignment is reproducible across runs,
     partitionings, and engines, and the whole thing is
@@ -908,73 +844,6 @@ def incremental_near_dedup(new_df: DataFrame, seen_sigs: DataFrame,
                          >= F.lit(threshold))
                   .select(F.col("__new_id").alias(id_col)).distinct())
     return new_df.join(dup_ids, on=id_col, how="left_anti")
-
-
-def semantic_near_duplicates(df: DataFrame, vec_col: str = "embedding",
-                             id_col: str = "vec_id",
-                             threshold: float = 0.95,
-                             n_clusters: int = 16, n_iters: int = 5,
-                             centroids=None,
-                             max_bucket: int | None = 50_000,
-                             telemetry_out: dict | None = None
-                             ) -> DataFrame:
-    """SemDeDup-style semantic near-duplicate pairs (Abbas et al. 2023,
-    arXiv:2303.09540): cluster embeddings with the trained-IVF k-means
-    (similarity.train_ivf_centroids — deterministic, content-derived
-    init), then compare pairs only WITHIN a cluster and keep exact
-    cosine >= ``threshold``. Output (id_a, id_b, cos).
-
-    vs ``embedding_near_duplicates_lsh``: hyperplane buckets are
-    data-oblivious (recall depends on random planes); k-means buckets
-    adapt to the corpus's actual density, which is what SemDeDup
-    exploits — semantic duplicates land in the same cluster because
-    the clusters ARE the semantic structure. The trade: pairs
-    straddling a cluster boundary are missed (the documented SemDeDup
-    approximation), and one train pass is needed (reuse ``centroids``
-    from a previous run / the ANN model manifest to skip it).
-
-    SCALE: train is n_iters scans with (partitions x k x dim)-sized
-    shuffles (vectors never shuffle); assignment is map-only; the
-    within-cluster self-join shuffles each vector ONCE keyed by its
-    cluster id. A degenerate mega-cluster costs O(k^2) pairs, so
-    ``max_bucket`` caps cluster size with the standard telemetry
-    (``_cap_buckets``); raise n_clusters rather than the cap for
-    balanced loads (SemDeDup runs k ~ sqrt(n))."""
-    from .similarity import cosine_expr, ivf_assign, train_ivf_centroids
-    e = df.select(F.col(id_col),
-                  F.col(vec_col).cast("array<double>").alias("v")) \
-          .where(F.col("v").isNotNull())
-    if centroids is None:
-        centroids = train_ivf_centroids(e, "v", n_clusters=n_clusters,
-                                        n_iters=n_iters)
-    assigned = ivf_assign(e, centroids, "v", out_col="__c") \
-        .where(F.col("__c").isNotNull())
-    assigned = _cap_buckets(assigned, "__c", max_bucket, telemetry_out)
-    a, b = assigned.alias("a"), assigned.alias("b")
-    return (a.join(b, (F.col("a.__c") == F.col("b.__c"))
-                   & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-             .select(F.col(f"a.{id_col}").alias("id_a"),
-                     F.col(f"b.{id_col}").alias("id_b"),
-                     F.round(cosine_expr(F.col("a.v"), F.col("b.v")), 6)
-                      .alias("cos"))
-             .where(F.col("cos") >= threshold))
-
-
-def semantic_dedup(df: DataFrame, vec_col: str = "embedding",
-                   id_col: str = "vec_id", threshold: float = 0.95,
-                   n_clusters: int = 16, n_iters: int = 5,
-                   centroids=None,
-                   max_bucket: int | None = 50_000,
-                   telemetry_out: dict | None = None) -> DataFrame:
-    """Remove semantic near-duplicates, keeping one representative per
-    connected component (min id — the ``dedup_keep_canonical``
-    contract): the full SemDeDup pass as one composition of tested
-    operators. Same approximation contract as
-    ``semantic_near_duplicates`` (cross-cluster pairs are missed)."""
-    pairs = semantic_near_duplicates(df, vec_col, id_col, threshold,
-                                     n_clusters, n_iters, centroids,
-                                     max_bucket, telemetry_out)
-    return dedup_keep_canonical(df, pairs, id_col)
 
 
 def slice_similarity(df: DataFrame, text_col: str, group_col: str,

@@ -101,6 +101,23 @@ def data_dict_xlsx_to_json(path: str) -> dict[str, dict[str, dict]]:
     return eval_nested_string_literals(data_dict)
 
 
+def _unqualified_sheet_message(path: str, sheet: str,
+                               qualifying: list[str]) -> str:
+    from .sources.xlsx import read_xlsx_records
+
+    rows = read_xlsx_records(path).get(sheet)
+    if rows is None:
+        why = "no such sheet"
+    elif not rows:
+        why = "the sheet has no rows"
+    else:
+        missing = [c for c in DATA_DICT_SCHEMA if c not in rows[0]]
+        why = (f"it lacks the DATA_DICT_SCHEMA columns {missing}"
+               if missing else f"no row has a {DATA_DICT_PRIMARY_KEY}")
+    return (f"{path}: sheet {sheet!r} is not a data-dictionary sheet "
+            f"({why}); qualifying sheets: {qualifying}")
+
+
 def _parse_bool(v):
     if isinstance(v, str):
         s = v.strip().lower()
@@ -219,13 +236,18 @@ class Rules:
                   sheet: str | None = None) -> "dict[str, Rules] | Rules":
         """Load rule tables from an XLSX data dictionary (the reference
         user's authoring format — data_dictionary_template.xlsx). One
-        Rules per qualifying sheet; pass ``sheet`` to get exactly one."""
+        Rules per qualifying sheet; pass ``sheet`` to get exactly one.
+        A ``sheet`` that is absent or does not qualify raises
+        ``ValueError`` naming the qualifying sheets and what it lacks."""
         dd = data_dict_xlsx_to_json(path)
         all_rules = {s: cls.from_nested_dict(s, flds)
                      for s, flds in dd.items()}
-        if sheet is not None:
-            return all_rules[sheet]
-        return all_rules
+        if sheet is None:
+            return all_rules
+        if sheet not in all_rules:
+            raise ValueError(_unqualified_sheet_message(path, sheet,
+                                                        sorted(all_rules)))
+        return all_rules[sheet]
 
     @classmethod
     def from_json(cls, name: str, text: str) -> "Rules":

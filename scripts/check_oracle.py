@@ -21,7 +21,7 @@ import duckdb  # noqa: E402
 import __spark_entry__ as entrymod  # noqa: E402
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
+          "lineitem", "events", "documents"]
 
 
 def norm_val(v):
@@ -42,7 +42,8 @@ def rows_to_multiset(colnames, rows):
 
 
 # sf0.1 STRESS SUBSET (VERDICT r4 #6): the heaviest oracle queries —
-# the near-dup families, funnel/sequence windows, snapshot/sketch
+# the text near-dup families (MinHash, SimHash, winnowing) and their
+# cluster/split consumers, funnel/sequence windows, snapshot/sketch
 # merges and the validation core — promoted from the sf0.01 battery
 # to a 10x-input run. `python scripts/check_oracle.py --stress` runs
 # exactly these at /root/testdata/sf0.1; runtimes are recorded in
@@ -51,7 +52,7 @@ def rows_to_multiset(colnames, rows):
 STRESS_QUERIES = [
     "dedup_near",
     "minhash_near_duplicates", "simhash_near_duplicates",
-    "embedding_near_dup_lsh", "semantic_near_dup", "near_dup_clusters",
+    "near_dup_clusters",
     "dedup_keep_best", "near_dup_safe_split", "winnow_overlap_share",
     "funnel_stats", "session_stats", "conversation_forks",
     "snapshot_diff", "quantile_sketch_merge", "validate_events",

@@ -24,6 +24,18 @@ import os
 import sys
 
 
+def _first_dict_sheet(flag: str, path: str, sheets: dict):
+    """The first qualifying sheet of ``Rules.from_xlsx(path)``; a
+    usage exit when the workbook has none."""
+    if not sheets:
+        from schema_validata_spark.config import DATA_DICT_SCHEMA
+        raise SystemExit(
+            f"{flag}: {path} has no data-dictionary sheet (none has a "
+            f"field row under all of the DATA_DICT_SCHEMA columns "
+            f"{list(DATA_DICT_SCHEMA)})")
+    return next(iter(sheets))
+
+
 def main(argv=None):
     ap = argparse.ArgumentParser()
     ap.add_argument("--transcripts",
@@ -130,7 +142,8 @@ def main(argv=None):
             base = next(iter(get_spreadsheet_metadata(args.dataset_file)))
             sheets = Rules.from_xlsx(args.data_dict)
             mapping = [{"dataset": base,
-                        "data_dict": next(iter(sheets))}]
+                        "data_dict": _first_dict_sheet(
+                            "--data-dict", args.data_dict, sheets)}]
         report = validate_files(spark, args.dataset_file,
                                 args.data_dict, mapping,
                                 out_dir=args.out, out_name=args.name)
@@ -175,9 +188,12 @@ def main(argv=None):
                     and not rest.startswith("\\") \
                     and not any(ch in head for ch in "\\/"):
                 sheet, path = head, rest
-        rules = Rules.from_xlsx(path, sheet=sheet or None)
+        try:
+            rules = Rules.from_xlsx(path, sheet=sheet or None)
+        except ValueError as e:
+            raise SystemExit(f"--rules-xlsx: {e}") from None
         if isinstance(rules, dict):  # no sheet given: take the first
-            rules = next(iter(rules.values()))
+            rules = rules[_first_dict_sheet("--rules-xlsx", path, rules)]
     elif args.rules:
         with open(args.rules) as f:
             data = json.load(f)

@@ -1,9 +1,10 @@
-"""Driver-contract test: every oracle-checked ``queries()`` entry must
-match its ``oracle_sql()`` twin on DuckDB (row count, sorted column
-names, order-insensitive value multiset) — the same comparison the
-driver's correctness gate performs at sf0.01 (here at sf0.001 for
-speed; scripts/check_oracle.py runs the full matrix at any sf)."""
+"""Driver-contract test: every ``queries()`` entry must match its
+``oracle_sql()`` twin on DuckDB (row count, sorted column names,
+order-insensitive value multiset) — the same comparison the driver's
+correctness gate performs at sf0.01 (here at sf0.001 for speed;
+scripts/check_oracle.py runs the full matrix at any sf)."""
 
+import importlib.util
 import math
 import os
 import sys
@@ -11,16 +12,21 @@ import sys
 import duckdb
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
 
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
 
-# Approximate/hash-based ops run rows-only in the driver; the slowest two
-# are exercised in test_dedup_similarity.py on micro-frames instead.
-SLOW_ROWS_ONLY = {"minhash_near_duplicates", "simhash_near_duplicates"}
+def _check_oracle():
+    spec = importlib.util.spec_from_file_location(
+        "check_oracle", os.path.join(ROOT, "scripts", "check_oracle.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+TABLES = _check_oracle().TABLES
 
 
 def _norm(v):
@@ -42,15 +48,14 @@ def con(sf_dir):
     return c
 
 
-ORACLED = sorted(set(entrymod.queries()) & set(entrymod.oracle_sql()))
-ROWS_ONLY = sorted(set(entrymod.queries()) - set(entrymod.oracle_sql())
-                   - SLOW_ROWS_ONLY)
+ORACLED = sorted(entrymod.queries())
 
 
 def test_every_oracle_has_a_query():
-    """ORACLED is an intersection, so an oracle left behind by a deleted
-    query would otherwise be skipped without a word."""
-    assert set(entrymod.oracle_sql()) <= set(entrymod.queries())
+    """Queries and oracles pair up one to one: a query without an oracle
+    would go unchecked, and an oracle left behind by a deleted query
+    would never run."""
+    assert set(entrymod.oracle_sql()) == set(entrymod.queries())
 
 
 @pytest.mark.parametrize("name", ORACLED)
@@ -62,13 +67,6 @@ def test_query_matches_oracle(spark, sf_dir, con, name):
     assert sorted(scols) == sorted(ocols)
     assert len(srows) == len(orows)
     assert _multiset(scols, srows) == _multiset(ocols, orows)
-
-
-@pytest.mark.parametrize("name", ROWS_ONLY)
-def test_rows_only_query_runs(spark, sf_dir, name):
-    df = entrymod.queries()[name](spark, sf_dir)
-    assert df.count() >= 0
-    assert df.columns
 
 
 def test_entry_smoke(spark, monkeypatch):

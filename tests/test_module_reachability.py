@@ -33,8 +33,8 @@ KEEP = {
 
 REGISTRY_ONLY = {f"{PKG}.{m}" for m in (
     "operators.statqa", "operators.selection", "operators.sequence",
-    "operators.similarity", "operators.dedup", "operators.winnow",
-    "operators.semistructured", "functions.sampling")}
+    "operators.dedup", "operators.winnow", "operators.semistructured",
+    "functions.sampling")}
 
 
 def _modules() -> dict[str, Path]:

@@ -1,5 +1,5 @@
-"""Round-1 widening: length percentiles, embedding near-dup, rules
-bootstrap, table metadata, report sinks, stateful streaming."""
+"""Round-1 widening: length percentiles, rules bootstrap, table
+metadata, report sinks, stateful streaming."""
 
 import json
 import os
@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from schema_validata_spark.datagen import (gen_conversations, gen_transcripts,
                                            transcript_rules)
-from schema_validata_spark.operators.dedup import embedding_near_duplicates
 from schema_validata_spark.operators.profile import (length_percentiles,
                                                      profile)
 from schema_validata_spark.report import errors_overview, write_report
@@ -28,22 +27,6 @@ def test_length_percentiles_exact_vs_approx(spark, sf_dir):
         assert abs(float(approx[k]) - float(exact[k])) / float(exact[k]) < 0.1
     grouped = length_percentiles(docs, "text", group_col="lang").collect()
     assert len(grouped) == docs.select("lang").distinct().count()
-
-
-def test_embedding_near_duplicates(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    pairs = embedding_near_duplicates(emb, threshold=0.35)
-    rows = pairs.collect()
-    assert all(r["id_a"] < r["id_b"] and r["cos"] >= 0.35 for r in rows)
-    # spot-verify one pair exactly in python
-    if rows:
-        import math
-        vecs = {r["vec_id"]: r["embedding"] for r in emb.collect()}
-        r = rows[0]
-        a, b = vecs[r["id_a"]], vecs[r["id_b"]]
-        dot = sum(x * y for x, y in zip(a, b))
-        cos = dot / math.sqrt(sum(x * x for x in a) * sum(y * y for y in b))
-        assert abs(cos - r["cos"]) < 1e-4
 
 
 def test_rules_from_profile_roundtrip(spark):

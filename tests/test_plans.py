@@ -265,20 +265,6 @@ def test_ngram_diversity_shuffles_hashes_not_text(spark, tmp_path):
         assert "text" not in line, line
 
 
-def test_embedding_dim_qa_single_aggregate(spark, tmp_path):
-    """embedding_dim_qa is scan-side lambdas + ONE tiny-key hash
-    aggregate: one Exchange, no explode, no join."""
-    from schema_validata_spark.operators.similarity import embedding_dim_qa
-    src = str(tmp_path / "emb")
-    spark.range(2_000).select(
-        F.array(F.rand(1), F.rand(2), F.rand(3)).alias("embedding")) \
-        .write.parquet(src)
-    out = embedding_dim_qa(spark.read.parquet(src))
-    plan = _tree(out)
-    assert plan.count("Exchange") == 1, plan
-    assert "Generate" not in plan and "Join" not in plan, plan
-
-
 def test_vocab_drift_heap_topk_no_text_shuffle(spark, tmp_path):
     """vocab_drift's top-k must be TakeOrderedAndProject (per-task
     heaps, no global sort) and no Exchange may carry the text column —

@@ -1,7 +1,6 @@
 """Round-3 curation operators: quality-aware near-dup resolution,
-exact-n per-group sampling, per-slice embedding dispersion."""
+exact-n per-group sampling, conversation forks."""
 
-import pytest
 from pyspark.sql import Row
 
 
@@ -102,40 +101,6 @@ def test_sample_n_per_group_salt_changes_pick(spark):
     assert len(a) == len(b) == 10 and a != b
 
 
-# ------------------------------------------------------ embedding_dispersion
-
-def test_dispersion_tight_vs_spread_groups(spark):
-    from schema_validata_spark.operators.similarity import (
-        embedding_dispersion)
-    rows = (
-        # tight: identical unit vectors -> cosine 1 to centroid
-        [Row(vec_id=i, label="tight", embedding=[1.0, 0.0]) for i in range(4)]
-        # spread: orthogonal pair -> centroid (0.5,0.5), cos = ~0.7071
-        + [Row(vec_id=10, label="spread", embedding=[1.0, 0.0]),
-           Row(vec_id=11, label="spread", embedding=[0.0, 1.0])])
-    out = {r["group"]: r for r in
-           embedding_dispersion(spark.createDataFrame(rows), "label",
-                                low_cos=0.9).collect()}
-    assert out["tight"]["mean_cos"] == pytest.approx(1.0)
-    assert out["tight"]["n_low"] == 0
-    assert out["spread"]["mean_cos"] == pytest.approx(0.707107, abs=1e-4)
-    assert out["spread"]["n_low"] == 2
-    assert out["tight"]["n_vectors"] == 4
-
-
-def test_dispersion_null_vectors_excluded_null_group_kept(spark):
-    from schema_validata_spark.operators.similarity import (
-        embedding_dispersion)
-    rows = [Row(vec_id=1, label=None, embedding=[1.0, 0.0]),
-            Row(vec_id=2, label=None, embedding=[1.0, 0.0]),
-            Row(vec_id=3, label="a", embedding=None)]
-    df = spark.createDataFrame(
-        rows, "vec_id int, label string, embedding array<double>")
-    out = {r["group"]: r["n_vectors"]
-           for r in embedding_dispersion(df, "label").collect()}
-    assert out == {None: 2}  # NULL group real; NULL vector excluded
-
-
 # ---------------------------------------------------------- conversation_forks
 
 def _conv(spark, convs):
@@ -194,34 +159,3 @@ def test_min_group_threshold_and_partition_invariance(spark):
         df.repartition(5), "conv", ["idx"], "text",
         k=2, min_group=6).collect()))
     assert a == b and len(a) == 1 and a[0][1] == 6
-
-
-# ------------------------------------------------- centroid_similarity_matrix
-
-def test_centroid_matrix_hand_computed(spark):
-    from schema_validata_spark.operators.similarity import (
-        centroid_similarity_matrix)
-    rows = (
-        [Row(vec_id=i, label="x1", embedding=[1.0, 0.0]) for i in range(3)]
-        + [Row(vec_id=9, label="x2", embedding=[2.0, 0.0])]   # same dir
-        + [Row(vec_id=5, label="y", embedding=[0.0, 1.0])])   # orthogonal
-    out = {(r["group_a"], r["group_b"]): r["cos"]
-           for r in centroid_similarity_matrix(
-               spark.createDataFrame(rows), "label").collect()}
-    assert out[("x1", "x2")] == pytest.approx(1.0)
-    assert out[("x1", "y")] == pytest.approx(0.0, abs=1e-6)
-    assert out[("x2", "y")] == pytest.approx(0.0, abs=1e-6)
-    assert len(out) == 3  # unordered pairs only
-
-
-def test_centroid_matrix_null_label_slice_pairs(spark):
-    from schema_validata_spark.operators.similarity import (
-        centroid_similarity_matrix)
-    rows = [Row(vec_id=1, label=None, embedding=[1.0, 0.0]),
-            Row(vec_id=2, label="a", embedding=[1.0, 0.0])]
-    df = spark.createDataFrame(
-        rows, "vec_id int, label string, embedding array<double>")
-    out = centroid_similarity_matrix(df, "label").collect()
-    assert len(out) == 1
-    assert out[0]["group_a"] is None and out[0]["group_b"] == "a"
-    assert out[0]["cos"] == pytest.approx(1.0)

@@ -1,14 +1,11 @@
-"""Round-3dd: streaming burst alerts, embedding L2 normalization."""
+"""Round-3dd: streaming burst alerts."""
 
 from __future__ import annotations
 
 import datetime
-import math
 
 import pytest
 from pyspark.sql import functions as F
-
-from schema_validata_spark.operators.similarity import normalize_embeddings
 
 
 def _ts(s):
@@ -41,40 +38,3 @@ def test_stream_burst_alerts(spark, tmp_path):
     assert got[0]["n_events"] == 30
     with pytest.raises(ValueError):
         stream_burst_alerts(df, "u", threshold=0)
-
-
-# --------------------------------------------------- normalize_embeddings
-
-def _vecs(spark, arrs):
-    return spark.createDataFrame([(i, a) for i, a in enumerate(arrs)],
-                                 "id long, embedding array<float>")
-
-
-def test_normalize_hand_case(spark):
-    got = normalize_embeddings(_vecs(spark, [[3.0, 4.0]])).collect()[0]
-    assert got["embedding"] == [0.6, 0.8]
-
-
-def test_normalize_zero_null_empty_guarded(spark):
-    got = {r["id"]: r["embedding"] for r in normalize_embeddings(
-        _vecs(spark, [[0.0, 0.0], None, []])).collect()}
-    assert got == {0: None, 1: None, 2: None}
-
-
-def test_normalize_out_col_and_unit_norm(spark):
-    df = _vecs(spark, [[1.0, 2.0, 2.0], [5.0, 0.0, 0.0]])
-    out = normalize_embeddings(df, out_col="unit")
-    rows = out.collect()
-    assert "embedding" in out.columns and "unit" in out.columns
-    for r in rows:
-        n = math.sqrt(sum(x * x for x in r["unit"]))
-        assert abs(n - 1.0) < 1e-5
-
-
-def test_normalize_composes_with_cosine(spark):
-    """After normalization, the dot product IS the cosine."""
-    from schema_validata_spark.operators.similarity import cosine_expr
-    df = normalize_embeddings(_vecs(spark, [[3.0, 4.0], [6.0, 8.0]]))
-    a, b = [r["embedding"] for r in df.collect()]
-    dot = sum(x * y for x, y in zip(a, b))
-    assert abs(dot - 1.0) < 1e-9                 # parallel vectors

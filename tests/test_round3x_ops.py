@@ -496,32 +496,6 @@ def test_dedup_impact_cross_source_keeper_attribution(spark):
     assert clean["tokens"] == 3
 
 
-# ----------------------------------------------------- ann recall audit
-
-def test_ann_recall_audit_tight_clusters_and_misses(spark):
-    import math
-    from schema_validata_spark.operators.similarity import \
-        ann_recall_audit
-    rows = []
-    vid = 0
-    for c in range(5):
-        base = [math.sin(0.7 * c * d + c) for d in range(16)]
-        for _ in range(12):
-            v = [x + 0.001 * ((vid * 7 + d) % 5 - 2)
-                 for d, x in enumerate(base)]
-            rows.append(Row(vec_id=vid, embedding=v))
-            vid += 1
-    emb = spark.createDataFrame(rows)
-    qs = emb.where(F.col("vec_id") % 12 == 0)
-    out = ann_recall_audit(emb, qs, k=5, n_planes=8,
-                           n_tables=4).collect()
-    assert len(out) == 5
-    for r in out:
-        # tight clusters: the ANN recovers the full exact top-5
-        assert r["recall"] == 1.0 and r["n_exact"] == 5
-        assert r["missed_best_cos"] is None
-
-
 # ---------------------------------------------------- label entropy
 
 def test_label_entropy_per_key_hand_case(spark):

@@ -1,9 +1,9 @@
-"""Round-4: engine-portable (md5 / expr-plane) signature modes for the
-LSH near-dup family — the modes the DuckDB oracles replay end-to-end
-(VERDICT r3 #1). These tests pin the Spark-side semantics; cross-engine
-byte-parity is enforced by scripts/check_oracle.py on the registered
-queries (minhash_near_duplicates, simhash_near_duplicates,
-embedding_near_dup_lsh, incremental_near_dedup)."""
+"""Round-4: engine-portable (md5) signature modes for the LSH near-dup
+family — the modes the DuckDB oracles replay end-to-end (VERDICT r3 #1).
+These tests pin the Spark-side semantics; cross-engine byte-parity is
+enforced by scripts/check_oracle.py on the registered queries
+(minhash_near_duplicates, simhash_near_duplicates,
+incremental_near_dedup)."""
 
 import hashlib
 
@@ -11,7 +11,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from schema_validata_spark.operators.dedup import (
-    embedding_near_duplicates, embedding_near_duplicates_lsh,
     incremental_near_dedup, minhash_near_duplicates, minhash_signatures,
     simhash, simhash_near_duplicates, snapshot_minhash_signatures)
 
@@ -106,41 +105,6 @@ def test_md5_simhash_near_duplicates(spark):
     assert found[(1, 2)] == 0
     assert (1, 3) in found and found[(1, 3)] <= 3
     assert all(50 not in p for p in found)
-
-
-def test_expr_plane_mode_matches_numpy_buckets(spark):
-    """The expr fold and the numpy matmul disagree only when a plane
-    dot sits at float-rounding distance from 0 — on real vectors they
-    must produce identical bucket codes, hence identical pairs."""
-    import numpy as np
-    rng = np.random.default_rng(7)
-    base = rng.standard_normal(16)
-    rows = [(0, base.tolist())]
-    rows += [(i, (base + rng.standard_normal(16) * 0.05).tolist())
-             for i in range(1, 4)]
-    rows += [(10 + i, rng.standard_normal(16).tolist()) for i in range(6)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    kw = dict(threshold=0.9, n_planes=4, n_tables=8)
-    a = {(r.id_a, r.id_b): r.cos
-         for r in embedding_near_duplicates_lsh(
-             df, plane_mode="expr", dim=16, **kw).collect()}
-    b = {(r.id_a, r.id_b): r.cos
-         for r in embedding_near_duplicates_lsh(
-             df, plane_mode="numpy", **kw).collect()}
-    assert a == b
-    assert a, "expected planted near-dups to be found"
-    # and both are subsets of the exact all-pairs baseline
-    exact = {(r.id_a, r.id_b): r.cos
-             for r in embedding_near_duplicates(df, threshold=0.9).collect()}
-    for p, c in a.items():
-        assert exact[p] == c
-
-
-def test_expr_plane_mode_requires_dim(spark):
-    df = spark.createDataFrame([(1, [0.1, 0.2])],
-                               "vec_id long, embedding array<double>")
-    with pytest.raises(ValueError, match="dim"):
-        embedding_near_duplicates_lsh(df, plane_mode="expr").collect()
 
 
 def test_md5_incremental_near_dedup_screens_clones(spark):

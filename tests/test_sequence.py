@@ -41,16 +41,6 @@ def test_sessionize_and_stats(spark):
     assert stats["a"] == (2, 4) and stats["b"] == (1, 1)
 
 
-def test_embedding_norm_stats(spark):
-    from schema_validata_spark.operators.similarity import embedding_norm_stats
-    df = spark.createDataFrame(
-        [(1, [3.0, 4.0]), (2, [0.0, 0.0]), (3, None)],
-        "vec_id long, embedding array<double>")
-    r = embedding_norm_stats(df).collect()[0]
-    assert (r["n_vectors"], r["n_null"], r["n_zero"]) == (3, 1, 1)
-    assert r["max_norm"] == 5.0 and r["min_norm"] == 0.0
-
-
 def test_order_regressions(spark):
     import datetime as dt
     from schema_validata_spark.operators.sequence import order_regressions

@@ -10,6 +10,7 @@ import zipfile
 import pytest
 
 from schema_validata_spark import report as report_mod
+from schema_validata_spark.config import DATA_DICT_SCHEMA
 from schema_validata_spark.report import (schema_validation_to_xlsx,
                                           write_dataframes_to_xlsx)
 from schema_validata_spark.rules import Rules, data_dict_xlsx_to_json
@@ -331,6 +332,32 @@ def test_unparseable_allowed_value_list_stays_string():
     by_name = {f.field_name: f for f in r.fields}
     assert by_name["col"].allowed_value_list == "[red, blue]"
     assert by_name["ok"].allowed_value_list == ["a", "b"]
+
+
+def test_from_xlsx_names_what_a_bad_sheet_lacks(tmp_path):
+    """An absent or non-qualifying ``sheet`` raises a ValueError that
+    names the path, the sheet, the qualifying sheets and the missing
+    DATA_DICT_SCHEMA columns, not a bare KeyError; without ``sheet`` a
+    workbook with no qualifying sheet still loads as ``{}``."""
+    hdr = list(DATA_DICT_SCHEMA)
+    row = ["id", "True", "Integer", "False", 7, 0, 99, None, "True", None]
+    p = str(tmp_path / "dd.xlsx")
+    write_xlsx(p, {"GOOD": [hdr, row],
+                   "PARTIAL": [hdr[:3], row[:3]]})
+    with pytest.raises(ValueError) as absent:
+        Rules.from_xlsx(p, sheet="MISSING")
+    msg = str(absent.value)
+    assert p in msg and "'MISSING'" in msg and "no such sheet" in msg
+    assert "['GOOD']" in msg
+    with pytest.raises(ValueError) as partial:
+        Rules.from_xlsx(p, sheet="PARTIAL")
+    msg = str(partial.value)
+    assert "'PARTIAL'" in msg and "['GOOD']" in msg
+    assert str(hdr[3:]) in msg
+    assert Rules.from_xlsx(p, sheet="GOOD").field_names() == ["id"]
+    bare = str(tmp_path / "bare.xlsx")
+    write_xlsx(bare, {"PARTIAL": [hdr[:3], row[:3]]})
+    assert Rules.from_xlsx(bare) == {}
 
 
 def test_dataset_named_metadata_keeps_report_sheets(spark, tmp_path):
