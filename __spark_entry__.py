@@ -35,8 +35,7 @@ from schema_validata_spark.functions.sampling import (_hex_threshold,
 from schema_validata_spark.functions.text import (PII_PATTERNS, pii_summary,
                                                   repetition_stats)
 from schema_validata_spark.operators.sequence import (consecutive_repeats,
-                                                      order_regressions,
-                                                      session_stats)
+                                                      order_regressions)
 from schema_validata_spark.operators.drift import (drift_scores,
                                                    drift_scores_pandas,
                                                    numeric_histogram,
@@ -370,20 +369,6 @@ def q_pairwise_lift(spark, sf_dir):
     from schema_validata_spark.operators.statqa import pairwise_lift
     df = _t(spark, sf_dir, "events")
     return pairwise_lift(df, "user_id", "event_type")
-
-
-_FUNNEL_STEPS = ["view", "click", "purchase"]
-
-
-def q_funnel_stats(spark, sf_dir):
-    """Ordered view→click→purchase funnel per user
-    (operators/sequence.py:funnel_stats): exact in-order replay via a
-    JVM array fold after filtering to the step vocabulary — one
-    group-keyed shuffle of matching events only."""
-    from schema_validata_spark.operators.sequence import funnel_stats
-    df = _t(spark, sf_dir, "events")
-    return funnel_stats(df, "user_id", "ts", "event_type",
-                        _FUNNEL_STEPS)
 
 
 _KS_EDGES = [1.0, 2.0, 5.0, 10.0, 20.0, 35.0, 50.0, 75.0,
@@ -933,16 +918,6 @@ def q_conversation_outliers(spark, sf_dir):
     return robust_outliers(feats, "user_id",
                            ["n_events", "n_types", "avg_value"],
                            k=3.0, exact=True)
-
-
-def q_session_stats(spark, sf_dir):
-    """Sessionization (30-min gap running-sum window) aggregated to a
-    histogram: how many users have N sessions. Counts are tie-robust
-    (boundary COUNT per user is order-independent)."""
-    df = _t(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
-    s = session_stats(df, "user_id", "ts", gap_minutes=30.0)
-    return (s.groupBy("n_sessions")
-             .agg(F.count(F.lit(1)).alias("n_users")))
 
 
 def q_order_regressions(spark, sf_dir):
@@ -1920,61 +1895,6 @@ def q_unigram_scores(spark, sf_dir):
                                   vocab_size=200).orderBy("id")
 
 
-_WINNOW_BLOCK = ("this shared boilerplate paragraph is planted into "
-                 "every tenth document to exercise partial overlap "
-                 "detection")
-
-
-def _planted_docs(spark, sf_dir):
-    """Documents with a constant ~100-char paragraph appended to every
-    10th doc — the partial-containment fixture winnowing must catch
-    (whole-doc near-dup misses it: the docs stay mostly distinct)."""
-    docs = _t(spark, sf_dir, "documents")
-    planted = (F.when(F.col("doc_id") % 10 == 0,
-                      F.concat(F.col("text"),
-                               F.lit(" " + _WINNOW_BLOCK)))
-                .otherwise(F.col("text")))
-    return docs.select("doc_id", planted.alias("text"))
-
-
-def q_winnow_fingerprints(spark, sf_dir):
-    """Winnowed document fingerprints (operators/winnow.py:
-    winnow_fingerprints — Schleimer et al. SIGMOD'03 / MOSS): char
-    8-gram hashes, window-of-4 minima, distinct per doc. md5 hasher so
-    the DuckDB oracle replays the identical min-selection over the
-    same lexicographic hash order. Entire selection runs as one
-    transform/slice/array_min chain inside the scan projection."""
-    from schema_validata_spark.operators.winnow import winnow_fingerprints
-    return winnow_fingerprints(_t(spark, sf_dir, "documents"),
-                               "text", "doc_id", k=8, window=4,
-                               hasher="md5").orderBy("doc_id", "fp")
-
-
-def q_winnow_overlap(spark, sf_dir):
-    """Partial-overlap candidate pairs (operators/winnow.py:
-    overlap_candidates) over the planted fixture: every 10th doc
-    shares an appended paragraph, so those pairs must surface with
-    >= 3 shared fingerprints; fingerprints in > 100 docs are capped
-    out (boilerplate guard) identically in both engines."""
-    from schema_validata_spark.operators.winnow import overlap_candidates
-    return overlap_candidates(_planted_docs(spark, sf_dir), "text",
-                              "doc_id", k=8, window=4, min_shared=3,
-                              max_docs_per_fp=100, hasher="md5") \
-        .orderBy("id_a", "id_b")
-
-
-def q_winnow_overlap_share(spark, sf_dir):
-    """Per-document recycled-text coverage (operators/winnow.py:
-    overlap_share): share of each doc's winnowed fingerprints that
-    appear in at least one other document — the 'how much of this page
-    is boilerplate' corpus metric, on the same planted fixture."""
-    from schema_validata_spark.operators.winnow import overlap_share
-    return overlap_share(_planted_docs(spark, sf_dir), "text",
-                         "doc_id", k=8, window=4,
-                         max_docs_per_fp=100, hasher="md5") \
-        .orderBy("id")
-
-
 def q_fd_violations(spark, sf_dir):
     """Row-level functional-dependency drill-down (operators/
     integrity.py:fd_violations): list the l_orderkey keys that break
@@ -2278,18 +2198,6 @@ def q_sample_bias_check(spark, sf_dir):
             .orderBy("group"))
 
 
-def q_time_weighted_avg(spark, sf_dir):
-    """Time-weighted value average per user
-    (sequence.time_weighted_avg): holding-interval-weighted mean for
-    irregular gauges vs the chatty-period-biased plain avg; one lead
-    window + one aggregate, exact DECIMAL Σv·dt."""
-    from schema_validata_spark.operators.sequence import \
-        time_weighted_avg
-    return (time_weighted_avg(_t(spark, sf_dir, "events"), "user_id",
-                              "ts", "value")
-            .orderBy("user_id"))
-
-
 def q_record_linkage(spark, sf_dir):
     """Blocking-based record linkage (dedup.record_linkage_pairs):
     customers blocked by nation, scored on (segment, balance band) —
@@ -2318,17 +2226,6 @@ def q_pairwise_psi(spark, sf_dir):
                           "event_type", 0.0, 500.0, 10)
     return (pairwise_psi(h)
             .orderBy("column_name", "part_a", "part_b"))
-
-
-def q_key_lifecycle(spark, sf_dir):
-    """Per-user lifecycle compaction (sequence.key_lifecycle):
-    first/last activity, lifespan, active days, inactivity vs corpus
-    max, churn flag at 3 days — one keyed aggregate + 1-row
-    broadcast."""
-    from schema_validata_spark.operators.sequence import key_lifecycle
-    return (key_lifecycle(_t(spark, sf_dir, "events"), "user_id",
-                          "ts", churn_days=3)
-            .orderBy("user_id"))
 
 
 def q_null_runs(spark, sf_dir):
@@ -2412,35 +2309,6 @@ def q_crosstab_residuals(spark, sf_dir):
     return (crosstab_residuals(_t(spark, sf_dir, "documents"), "lang",
                                "source")
             .orderBy("value_a", "value_b"))
-
-
-def q_rolling_active_users(spark, sf_dir):
-    """Rolling 7-day distinct active users per day
-    (sequence.rolling_active_users): exact sliding distinct via the
-    offset-expanded (user, day) frame — the churn-cliff screen daily
-    actives can't see."""
-    from schema_validata_spark.operators.sequence import \
-        rolling_active_users
-    return (rolling_active_users(_t(spark, sf_dir, "events"),
-                                 "user_id", "ts", window_days=7)
-            .orderBy("bucket"))
-
-
-def q_rolling_active_users_sketch(spark, sf_dir):
-    """rolling_active_users(method='sketch') — the r5 at-scale swap
-    (per-day hll_sketch_agg + hll_union_agg over window offsets;
-    shuffle bounded by #days x window_days sketch blobs). ORACLE
-    CONTRACT: at this fixture's user cardinality (~150 distinct) the
-    HLL sketch stays in its SPARSE regime, where estimates are EXACT —
-    so the exact-SQL oracle applies verbatim; at production
-    cardinalities the op returns ~1-2%-error estimates (documented in
-    operators/sketches.py:union_estimates)."""
-    from schema_validata_spark.operators.sequence import \
-        rolling_active_users
-    return (rolling_active_users(_t(spark, sf_dir, "events"),
-                                 "user_id", "ts", window_days=7,
-                                 method="sketch", lg_k=14)
-            .orderBy("bucket"))
 
 
 def q_scd2_history(spark, sf_dir):
@@ -2617,26 +2485,6 @@ def q_mad_location(spark, sf_dir):
             .orderBy("group"))
 
 
-def q_user_mix(spark, sf_dir):
-    """Daily new-vs-returning user mix (sequence.user_mix): the
-    growth/backfill dashboard behind cohort_retention, off the same
-    DISTINCT (user, day) reduction."""
-    from schema_validata_spark.operators.sequence import user_mix
-    return (user_mix(_t(spark, sf_dir, "events"), "user_id", "ts")
-            .orderBy("bucket"))
-
-
-def q_funnel_latency(spark, sf_dir):
-    """Time-to-convert per funnel hop (sequence.funnel_latency): the
-    HOW LONG companion of funnel_stats — same exact in-order fold,
-    the state array carries first-reach timestamps; exact BIGINT
-    microsecond sums, exact interpolated percentiles."""
-    from schema_validata_spark.operators.sequence import funnel_latency
-    return (funnel_latency(_t(spark, sf_dir, "events"), "user_id",
-                           "ts", "event_type", _FUNNEL_STEPS)
-            .orderBy("step_idx"))
-
-
 def q_completeness_trend(spark, sf_dir):
     """Per-day column completeness z-screen
     (expectations.completeness_trend) over events.value/props/user_id
@@ -2648,17 +2496,6 @@ def q_completeness_trend(spark, sf_dir):
                                ["user_id", "value", "props"],
                                granularity="day", z_threshold=3.0)
             .orderBy("bucket", "column_name"))
-
-
-def q_burst_stats(spark, sf_dir):
-    """Sliding-window burst screen (sequence.burst_stats): peak 6-hour
-    trailing event rate per user, flagged at >= 4 — the retry-storm
-    detector daily volume checks miss; one RANGE window + one reused
-    exchange."""
-    from schema_validata_spark.operators.sequence import burst_stats
-    return (burst_stats(_t(spark, sf_dir, "events"), "user_id", "ts",
-                        window_s=21600, threshold=4)
-            .orderBy("user_id"))
 
 
 def q_wilson_rates(spark, sf_dir):
@@ -2679,26 +2516,6 @@ def q_moment_stats(spark, sf_dir):
     return (moment_stats(_t(spark, sf_dir, "events"), "value",
                          "event_type")
             .orderBy("group"))
-
-
-def q_cohort_retention(spark, sf_dir):
-    """Weekly cohort retention matrix (sequence.cohort_retention):
-    users grouped by first-event day, re-counted per 7-day window —
-    distinct (user, day) reduction first, so raw rows shuffle once."""
-    from schema_validata_spark.operators.sequence import cohort_retention
-    return (cohort_retention(_t(spark, sf_dir, "events"), "user_id",
-                             "ts", period_days=7)
-            .orderBy("cohort", "period_k"))
-
-
-def q_interarrival_stats(spark, sf_dir):
-    """Per-user inter-event gap stats + Goh–Barabási burstiness
-    (sequence.interarrival_stats): exact BIGINT/DECIMAL microsecond
-    moments off one lag window — the cron-vs-human timing screen."""
-    from schema_validata_spark.operators.sequence import interarrival_stats
-    return (interarrival_stats(_t(spark, sf_dir, "events"), "user_id",
-                               "ts")
-            .orderBy("user_id"))
 
 
 def q_zipf_fit(spark, sf_dir):
@@ -2852,18 +2669,6 @@ def q_rolling_psi(spark, sf_dir):
             .orderBy("day"))
 
 
-def q_concurrency_profile(spark, sf_dir):
-    """Peak simultaneous sessions per day
-    (sequence.concurrency_profile): sessionized intervals swept with
-    the +1/-1 line sweep, end-exclusive ties — the capacity-planning
-    number."""
-    from schema_validata_spark.operators.sequence import \
-        concurrency_profile
-    return (concurrency_profile(_t(spark, sf_dir, "events"), "user_id",
-                                "ts", gap_minutes=60.0)
-            .orderBy("day"))
-
-
 def q_vocab_coverage(spark, sf_dir):
     """Vocabulary coverage curve (text.vocab_coverage): occurrence
     share covered by the top-k token types at k=10/25/1000 — the
@@ -2980,17 +2785,6 @@ def q_label_entropy(spark, sf_dir):
             .orderBy("part"))
 
 
-def q_gap_histogram(spark, sf_dir):
-    """Log2-banded inter-event gap distribution
-    (sequence.gap_histogram): the corpus timing SHAPE behind the
-    per-key interarrival moments; one lag window + a <=40-key
-    aggregate."""
-    from schema_validata_spark.operators.sequence import gap_histogram
-    return (gap_histogram(_t(spark, sf_dir, "events"), "user_id",
-                          "ts", ["event_id"])
-            .orderBy("band"))
-
-
 def q_lang_confusion(spark, sf_dir):
     """Declared-vs-detected language confusion matrix
     (text.lang_confusion): the metadata-label QA view — off-diagonal
@@ -3055,7 +2849,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "jsd_drift": q_jsd_drift,
         "latest_per_key": q_latest_per_key,
         "pairwise_lift": q_pairwise_lift,
-        "funnel_stats": q_funnel_stats,
         "json_key_profile": q_json_key_profile,
         "key_locality": q_key_locality,
         "distinct_sketch_estimates": q_distinct_sketch_estimates,
@@ -3090,7 +2883,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "conversation_outliers": q_conversation_outliers,
         "violation_budgets": q_violation_budgets,
         "partition_rate_verdicts": q_partition_rate_verdicts,
-        "session_stats": q_session_stats,
         "order_regressions": q_order_regressions,
         "topk_sample": q_topk_sample,
         "weighted_sample": q_weighted_sample,
@@ -3148,9 +2940,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "derived_consistency": q_derived_consistency,
         "role_share": q_role_share,
         "unigram_scores": q_unigram_scores,
-        "winnow_fingerprints": q_winnow_fingerprints,
-        "winnow_overlap": q_winnow_overlap,
-        "winnow_overlap_share": q_winnow_overlap_share,
         "fd_violations": q_fd_violations,
         "candidate_keys": q_candidate_keys,
         "dup_cluster_sizes": q_dup_cluster_sizes,
@@ -3171,17 +2960,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "mann_whitney": q_mann_whitney,
         "rater_confusion": q_rater_confusion,
         "volume_autocorrelation": q_volume_autocorrelation,
-        "cohort_retention": q_cohort_retention,
-        "interarrival_stats": q_interarrival_stats,
         "zipf_fit": q_zipf_fit,
-        "burst_stats": q_burst_stats,
         "wilson_rates": q_wilson_rates,
         "moment_stats": q_moment_stats,
-        "funnel_latency": q_funnel_latency,
         "completeness_trend": q_completeness_trend,
         "welch_t": q_welch_t,
         "mad_location": q_mad_location,
-        "user_mix": q_user_mix,
         "dup_trend": q_dup_trend,
         "concentration_stats": q_concentration_stats,
         "key_volume_outliers": q_key_volume_outliers,
@@ -3196,18 +2980,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "value_novelty_trend": q_value_novelty_trend,
         "scd2_history": q_scd2_history,
         "crosstab_residuals": q_crosstab_residuals,
-        "rolling_active_users": q_rolling_active_users,
-        "rolling_active_users_sketch": q_rolling_active_users_sketch,
         "weighted_k_per_lang": q_weighted_k_per_lang,
         "script_mix_stats": q_script_mix_stats,
         "coercion_failures": q_coercion_failures,
         "partition_profiles": q_partition_profiles,
-        "key_lifecycle": q_key_lifecycle,
         "null_runs": q_null_runs,
         "pairwise_psi": q_pairwise_psi,
         "record_linkage": q_record_linkage,
         "sample_bias_check": q_sample_bias_check,
-        "time_weighted_avg": q_time_weighted_avg,
         "extrema_exemplars": q_extrema_exemplars,
         "hourly_profile": q_hourly_profile,
         "histogram_movers": q_histogram_movers,
@@ -3224,7 +3004,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "calibration_error": q_calibration_error,
         "daily_percentiles": q_daily_percentiles,
         "rolling_psi": q_rolling_psi,
-        "concurrency_profile": q_concurrency_profile,
         "vocab_coverage": q_vocab_coverage,
         "quantile_normalize": q_quantile_normalize,
         "quantile_normalize_equidepth": q_quantile_normalize_equidepth,
@@ -3234,7 +3013,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "quantile_map_accuracy": q_quantile_map_accuracy,
         "dedup_impact": q_dedup_impact,
         "label_entropy": q_label_entropy,
-        "gap_histogram": q_gap_histogram,
         "lang_confusion": q_lang_confusion,
         "pii_by_source": q_pii_by_source,
     }
@@ -3311,8 +3089,8 @@ def _lang_case() -> str:
 # band/chunk buckets, the bucket-size cap, candidate self-join, and the
 # exact verification — against the md5-mode Spark queries above. md5 is
 # a primitive both engines compute byte-identically (same pattern as
-# deterministic_sample / winnow_fingerprints); xxhash64 stays the scale
-# default, pytest-covered.
+# deterministic_sample); xxhash64 stays the scale default,
+# pytest-covered.
 
 def _mh_shingle_case(k: int, distinct: bool) -> str:
     """The Spark `shingles()` semantics in DuckDB: word k-grams over
@@ -3841,46 +3619,6 @@ def oracle_sql() -> dict[str, str]:
         JOIN s sa ON sa.v = p.va
         JOIN s sb ON sb.v = p.vb
         WHERE p.nab >= 1"""
-
-    # Iterative conditional-min replay of the array fold: t_k is the
-    # min ts of step-k events at ts >= t_{k-1} (same-instant
-    # progression in step order == the fold's (ts, idx) sort).
-    _fsteps = _FUNNEL_STEPS
-    _fu = """
-        WITH e AS (
-          SELECT user_id AS g, ts, event_type AS s FROM events
-          WHERE user_id IS NOT NULL AND ts IS NOT NULL
-            AND event_type IN ({inlist})),
-        t1 AS (SELECT g, min(ts) AS t FROM e
-               WHERE s = '{s1}' GROUP BY g),
-        t2 AS (SELECT e.g, min(e.ts) AS t FROM e JOIN t1 USING (g)
-               WHERE e.s = '{s2}' AND e.ts >= t1.t GROUP BY e.g),
-        t3 AS (SELECT e.g, min(e.ts) AS t FROM e JOIN t2 USING (g)
-               WHERE e.s = '{s3}' AND e.ts >= t2.t GROUP BY e.g),
-        c AS (SELECT (SELECT count(DISTINCT g) FROM e) AS ng,
-                     (SELECT count(*) FROM t1) AS n1,
-                     (SELECT count(*) FROM t2) AS n2,
-                     (SELECT count(*) FROM t3) AS n3)
-        SELECT * FROM (
-          SELECT 1 AS step_idx, '{s1}' AS step, n1::bigint AS n_reached,
-                 ng::bigint AS n_groups,
-                 CASE WHEN ng > 0 THEN round(n1 / ng::double, 6) END
-                   AS share_prev,
-                 CASE WHEN n1 > 0 THEN round(n1 / n1::double, 6) END
-                   AS share_first
-          FROM c
-          UNION ALL
-          SELECT 2, '{s2}', n2::bigint, ng::bigint,
-                 CASE WHEN n1 > 0 THEN round(n2 / n1::double, 6) END,
-                 CASE WHEN n1 > 0 THEN round(n2 / n1::double, 6) END
-          FROM c
-          UNION ALL
-          SELECT 3, '{s3}', n3::bigint, ng::bigint,
-                 CASE WHEN n2 > 0 THEN round(n3 / n2::double, 6) END,
-                 CASE WHEN n1 > 0 THEN round(n3 / n1::double, 6) END
-          FROM c)""".format(inlist=", ".join(f"'{s}'" for s in _fsteps),
-                            s1=_fsteps[0], s2=_fsteps[1], s3=_fsteps[2])
-    sql["funnel_stats"] = _fu
 
     # JSD with the same restricted-baseline join semantics as
     # drift_scores: baseline mass is summed over buckets present in the
@@ -4922,23 +4660,6 @@ def oracle_sql() -> dict[str, str]:
         FROM j JOIN md USING (feature)
         WHERE round(abs(value - median_val)
                     / greatest(md.mad, 1e-9), 6) > 3.0"""
-
-    sql["session_stats"] = """
-        WITH g AS (
-          SELECT user_id, ts,
-                 lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS pts
-          FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        b AS (
-          SELECT user_id,
-                 CASE WHEN pts IS NULL
-                        OR epoch(ts) - epoch(pts) > 1800.0
-                      THEN 1 ELSE 0 END AS boundary
-          FROM g),
-        s AS (
-          SELECT user_id, sum(boundary)::int AS n_sessions
-          FROM b GROUP BY user_id)
-        SELECT n_sessions, count(*)::bigint AS n_users
-        FROM s GROUP BY n_sessions"""
 
     sql["order_regressions"] = """
         SELECT event_id, user_id, ts, prev_max_ts FROM (
@@ -6011,65 +5732,6 @@ def oracle_sql() -> dict[str, str]:
         FROM toks t LEFT JOIN lm USING (token), oov
         GROUP BY 1"""
 
-    def _winnow_fps_cte(source: str, k: int = 8, w: int = 4) -> str:
-        """CTE chain replaying operators/winnow.py's md5-mode selection
-        exactly: char k-gram md5s, window-of-w minima, distinct."""
-        return f"""
-        norm AS (
-          SELECT doc_id,
-                 regexp_replace(lower(trim(text)), '\\s+', ' ', 'g') AS t
-          FROM ({source}) WHERE text IS NOT NULL),
-        g AS (
-          SELECT doc_id,
-                 list_transform(range(1, greatest(length(t) - {k - 1}, 1) + 1),
-                                i -> md5(substring(t, i::INT, {k}))) AS grams
-          FROM norm WHERE length(t) >= 1),
-        fps AS (
-          SELECT doc_id,
-                 unnest(list_distinct(list_transform(
-                   range(1, greatest(len(grams) - {w - 1}, 1) + 1),
-                   j -> list_min(list_slice(
-                          grams, j,
-                          j + least({w}, len(grams)) - 1))))) AS fp
-          FROM g)"""
-
-    _planted_src = f"""
-        SELECT doc_id,
-               CASE WHEN doc_id % 10 = 0
-                    THEN text || ' {_WINNOW_BLOCK}'
-                    ELSE text END AS text
-        FROM documents"""
-
-    sql["winnow_fingerprints"] = f"""
-        WITH {_winnow_fps_cte("SELECT doc_id, text FROM documents")}
-        SELECT doc_id, fp FROM fps"""
-
-    sql["winnow_overlap"] = f"""
-        WITH {_winnow_fps_cte(_planted_src)},
-        capped AS (
-          SELECT fp FROM fps GROUP BY fp HAVING count(*) <= 100),
-        f2 AS (SELECT fps.doc_id, fps.fp
-               FROM fps JOIN capped USING (fp))
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-               count(*)::bigint AS shared_fps
-        FROM f2 a JOIN f2 b
-          ON a.fp = b.fp AND a.doc_id < b.doc_id
-        GROUP BY 1, 2 HAVING count(*) >= 3"""
-
-    sql["winnow_overlap_share"] = f"""
-        WITH {_winnow_fps_cte(_planted_src)},
-        capped AS (
-          SELECT fp FROM fps GROUP BY fp HAVING count(*) <= 100),
-        f2 AS (SELECT fps.doc_id, fps.fp
-               FROM fps JOIN capped USING (fp)),
-        sh AS (SELECT fp, count(*) > 1 AS shared FROM f2 GROUP BY fp)
-        SELECT f2.doc_id AS id, count(*)::bigint AS n_fps,
-               sum(CASE WHEN sh.shared THEN 1 ELSE 0 END)::bigint
-                 AS shared_fps,
-               round(sum(CASE WHEN sh.shared THEN 1 ELSE 0 END)::DOUBLE
-                     / count(*), 6) AS overlap_share
-        FROM f2 JOIN sh USING (fp) GROUP BY 1"""
-
     sql["fd_violations"] = """
         WITH per AS (
           SELECT l_orderkey, CAST(l_returnflag AS VARCHAR) AS dep_value,
@@ -6691,66 +6353,6 @@ def oracle_sql() -> dict[str, str]:
         FROM lags l LEFT JOIN stats ON l.lag = stats.lag
         ORDER BY l.lag"""
 
-    sql["cohort_retention"] = """
-        WITH act AS (
-          SELECT DISTINCT user_id AS u, CAST(ts AS DATE) AS d
-          FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        f AS (SELECT u, min(d) AS c FROM act GROUP BY u),
-        per AS (
-          SELECT DISTINCT act.u, f.c,
-                 CAST(floor(date_diff('day', f.c, act.d) / 7.0) AS INT)
-                   AS period_k
-          FROM act JOIN f ON act.u = f.u),
-        counts AS (SELECT c, period_k, count(*)::bigint AS n_active
-                   FROM per GROUP BY 1, 2),
-        sizes AS (SELECT c, n_active AS cohort_size FROM counts
-                  WHERE period_k = 0)
-        SELECT strftime(counts.c, '%Y-%m-%d') AS cohort,
-               counts.period_k, counts.n_active, sizes.cohort_size,
-               round(counts.n_active / sizes.cohort_size::double, 6)
-                 AS retention
-        FROM counts JOIN sizes USING (c)
-        ORDER BY cohort, period_k"""
-
-    # Exact microsecond gap moments: Σgap as bigint, Σgap² exact via
-    # hugeint products summed as DECIMAL(38,0) — mirrors the Spark
-    # operator's BIGINT/DECIMAL arithmetic bit-for-bit.
-    sql["interarrival_stats"] = """
-        WITH e AS (
-          SELECT user_id AS u, epoch_us(ts) AS m FROM events
-          WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        g AS (SELECT u,
-                     m - lag(m) OVER (PARTITION BY u ORDER BY m) AS gap
-              FROM e),
-        a AS (SELECT u, count(*)::bigint AS n_events,
-                     count(gap)::bigint AS n_gaps,
-                     sum(gap)::bigint AS s,
-                     sum(CAST(CAST(gap AS HUGEINT) * CAST(gap AS HUGEINT)
-                              AS DECIMAL(38,0))) AS ss,
-                     max(gap) AS mx
-              FROM g GROUP BY u),
-        d AS (SELECT *,
-                s::double / n_gaps::double AS mean,
-                CASE WHEN n_gaps >= 2 THEN
-                  sqrt(greatest((n_gaps::double * ss::double
-                                 - s::double * s::double)
-                                / (n_gaps::double
-                                   * (n_gaps - 1)::double), 0.0))
-                END AS std
-              FROM a)
-        SELECT u AS user_id, n_events, n_gaps,
-          CASE WHEN n_gaps >= 1
-            THEN round(mean / 1000000.0, 6) END AS mean_gap_s,
-          CASE WHEN n_gaps >= 2
-            THEN round(std / 1000000.0, 6) END AS std_gap_s,
-          CASE WHEN n_gaps >= 1
-            THEN round(mx::double / 1000000.0, 6) END AS max_gap_s,
-          CASE WHEN n_gaps >= 2 AND mean <> 0
-            THEN round(std / mean, 6) END AS cv,
-          CASE WHEN n_gaps >= 2 AND (std + mean) <> 0
-            THEN round((std - mean) / (std + mean), 6) END AS burstiness
-        FROM d ORDER BY user_id"""
-
     # Micro-quantized OLS replay of statqa.zipf_fit: ln(rank)/ln(count)
     # pinned to integer micro-units, moments exact (hugeint products
     # summed as DECIMAL(38,0)), doubles only in the final combination.
@@ -6794,22 +6396,6 @@ def oracle_sql() -> dict[str, str]:
           CASE WHEN n_tokens >= 2 AND den_x <> 0 AND den_y <> 0
             THEN round(num * num / (den_x * den_y), 6) END AS r2
         FROM dd ORDER BY "group" """
-
-    sql["burst_stats"] = """
-        WITH e AS (
-          SELECT user_id AS u, epoch_us(ts) AS m FROM events
-          WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        c AS (SELECT u, count(*) OVER (PARTITION BY u ORDER BY m
-                RANGE BETWEEN 21600000000 PRECEDING AND CURRENT ROW)
-                AS w
-              FROM e)
-        SELECT u AS user_id, count(*)::bigint AS n_events,
-               max(w)::bigint AS peak_window_count,
-               sum(CASE WHEN w >= 4 THEN 1 ELSE 0 END)::bigint
-                 AS n_over,
-               sum(CASE WHEN w >= 4 THEN 1 ELSE 0 END) > 0
-                 AS over_limit
-        FROM c GROUP BY u ORDER BY user_id"""
 
     # Pinned-op-order Wilson replay: p, denom, center, half computed
     # exactly as the Spark expression tree evaluates them.
@@ -6870,47 +6456,6 @@ def oracle_sql() -> dict[str, str]:
                  THEN round(m4 / (m2 * m2) - 3.0, 6) END
                  AS ex_kurtosis
         FROM e ORDER BY "group" """
-
-    # Same conditional-min replay as the funnel oracle: reach time of
-    # step k is the min ts of step-k events at ts >= reach_{k-1}, which
-    # equals the fold's first-advance time under (ts, idx) ordering.
-    sql["funnel_latency"] = """
-        WITH e AS (
-          SELECT user_id AS g, ts, event_type AS s FROM events
-          WHERE user_id IS NOT NULL AND ts IS NOT NULL
-            AND event_type IN ('{s1}', '{s2}', '{s3}')),
-        t1 AS (SELECT g, min(ts) AS t FROM e
-               WHERE s = '{s1}' GROUP BY g),
-        t2 AS (SELECT e.g, min(e.ts) AS t FROM e JOIN t1 USING (g)
-               WHERE e.s = '{s2}' AND e.ts >= t1.t GROUP BY e.g),
-        t3 AS (SELECT e.g, min(e.ts) AS t FROM e JOIN t2 USING (g)
-               WHERE e.s = '{s3}' AND e.ts >= t2.t GROUP BY e.g),
-        l2 AS (SELECT epoch_us(t2.t) - epoch_us(t1.t) AS lat
-               FROM t2 JOIN t1 USING (g)),
-        l3 AS (SELECT epoch_us(t3.t) - epoch_us(t2.t) AS lat
-               FROM t3 JOIN t2 USING (g))
-        SELECT * FROM (
-          SELECT 2 AS step_idx, '{s1}' AS from_step, '{s2}' AS step,
-                 count(*)::bigint AS n_converted,
-                 round(sum(lat)::double / count(*)::double
-                       / 1000000.0, 6) AS mean_s,
-                 round(quantile_cont(lat, 0.5) / 1000000.0, 6)
-                   AS p50_s,
-                 round(quantile_cont(lat, 0.95) / 1000000.0, 6)
-                   AS p95_s,
-                 round(max(lat)::double / 1000000.0, 6) AS max_s
-          FROM l2 HAVING count(*) > 0
-          UNION ALL
-          SELECT 3, '{s2}', '{s3}', count(*)::bigint,
-                 round(sum(lat)::double / count(*)::double
-                       / 1000000.0, 6),
-                 round(quantile_cont(lat, 0.5) / 1000000.0, 6),
-                 round(quantile_cont(lat, 0.95) / 1000000.0, 6),
-                 round(max(lat)::double / 1000000.0, 6)
-          FROM l3 HAVING count(*) > 0)
-        ORDER BY step_idx""".format(s1=_FUNNEL_STEPS[0],
-                                    s2=_FUNNEL_STEPS[1],
-                                    s3=_FUNNEL_STEPS[2])
 
     sql["completeness_trend"] = """
         WITH per AS (
@@ -7008,20 +6553,6 @@ def oracle_sql() -> dict[str, str]:
                    THEN round((m - gmed) / (1.4826 * gmad), 6) END)
                  >= 3.5, FALSE) AS flagged
         FROM med, gm, mad ORDER BY "group" """
-
-    sql["user_mix"] = """
-        WITH act AS (
-          SELECT DISTINCT user_id AS u, CAST(ts AS DATE) AS d
-          FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        f AS (SELECT u, min(d) AS fd FROM act GROUP BY u),
-        mix AS (SELECT act.d, count(*)::bigint AS n_active,
-                  sum(CASE WHEN act.d = f.fd THEN 1 ELSE 0 END)
-                    ::bigint AS n_new
-                FROM act JOIN f ON act.u = f.u GROUP BY act.d)
-        SELECT strftime(d, '%Y-%m-%d') AS bucket, n_active, n_new,
-               (n_active - n_new)::bigint AS n_returning,
-               round(n_new::double / n_active::double, 6) AS share_new
-        FROM mix ORDER BY bucket"""
 
     sql["dup_trend"] = """
         WITH pk AS (
@@ -7329,20 +6860,6 @@ def oracle_sql() -> dict[str, str]:
                  FALSE) AS flagged
         FROM d2 ORDER BY value_a, value_b"""
 
-    sql["rolling_active_users"] = """
-        WITH act AS (
-          SELECT DISTINCT user_id AS u, CAST(ts AS DATE) AS d
-          FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        day_ AS (SELECT d, count(*)::bigint AS n_active_day
-                 FROM act GROUP BY d),
-        win AS (SELECT w, count(*)::bigint AS n_active_window FROM (
-                  SELECT DISTINCT u, d + CAST(o.o AS INT) AS w
-                  FROM act, (SELECT unnest(range(0, 7)) AS o) o)
-                GROUP BY w)
-        SELECT strftime(day_.d, '%Y-%m-%d') AS bucket,
-               n_active_day, n_active_window
-        FROM day_ JOIN win ON day_.d = win.w ORDER BY bucket"""
-
     sql["weighted_k_per_lang"] = """
         SELECT doc_id, text, lang, source, n_chars FROM (
           SELECT d.*,
@@ -7453,25 +6970,6 @@ def oracle_sql() -> dict[str, str]:
         SELECT partition_key, 'props', n_rows, n2, mn2, mx2, ln2
         FROM per
         ORDER BY partition_key, column_name"""
-
-    sql["key_lifecycle"] = """
-        WITH per AS (
-          SELECT user_id AS u, min(ts) AS first_ts, max(ts) AS last_ts,
-                 count(*)::bigint AS n_events,
-                 count(DISTINCT CAST(ts AS DATE))::bigint
-                   AS n_active_days
-          FROM events
-          WHERE user_id IS NOT NULL AND ts IS NOT NULL GROUP BY 1),
-        g AS (SELECT max(last_ts) AS gm FROM per)
-        SELECT u AS user_id, first_ts, last_ts,
-               date_diff('day', CAST(first_ts AS DATE),
-                         CAST(last_ts AS DATE))::int AS lifespan_days,
-               n_events, n_active_days,
-               date_diff('day', CAST(last_ts AS DATE),
-                         CAST(gm AS DATE))::int AS days_inactive,
-               date_diff('day', CAST(last_ts AS DATE),
-                         CAST(gm AS DATE)) > 3 AS churned
-        FROM per, g ORDER BY user_id"""
 
     sql["null_runs"] = """
         WITH base AS (
@@ -7607,31 +7105,6 @@ def oracle_sql() -> dict[str, str]:
                    THEN round((ps - pc) / den, 6) END) >= 3.0,
                  FALSE) AS flagged
         FROM e ORDER BY "group" """
-
-    sql["time_weighted_avg"] = """
-        WITH base AS (
-          SELECT user_id AS k, epoch_us(ts) AS m,
-                 CAST(round(value * 1000000.0) AS HUGEINT) AS q,
-                 value AS v
-          FROM events
-          WHERE user_id IS NOT NULL AND ts IS NOT NULL
-            AND value IS NOT NULL),
-        w AS (SELECT *,
-                lead(m) OVER (PARTITION BY k ORDER BY m) - m AS dt
-              FROM base),
-        g AS (SELECT k, count(*)::bigint AS n_obs,
-                (max(m) - min(m))::bigint AS span,
-                sum(CAST(q * CAST(dt AS HUGEINT) AS DECIMAL(38,0)))
-                  AS vdt,
-                round(avg(v), 6) AS plain_avg
-              FROM w GROUP BY k)
-        SELECT k AS user_id, n_obs,
-               round(span::double / 1000000.0, 6) AS span_s,
-               CASE WHEN n_obs >= 2 AND span > 0
-                 THEN round(vdt::double / span::double
-                            / 1000000.0, 6) END AS twa,
-               plain_avg
-        FROM g ORDER BY user_id"""
 
     sql["extrema_exemplars"] = """
         WITH base AS (
@@ -8051,35 +7524,6 @@ def oracle_sql() -> dict[str, str]:
                  AS psi
         FROM terms GROUP BY d ORDER BY day"""
 
-    sql["concurrency_profile"] = """
-        WITH s AS (
-          SELECT user_id, ts,
-                 CASE WHEN lag(ts) OVER w IS NULL
-                      OR epoch(ts) - epoch(lag(ts) OVER w) > 3600.0
-                      THEN 1 ELSE 0 END AS b
-          FROM events WHERE ts IS NOT NULL
-          WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-        s2 AS (
-          SELECT user_id, ts,
-                 sum(b) OVER (PARTITION BY user_id ORDER BY ts
-                   ROWS UNBOUNDED PRECEDING) AS sid
-          FROM s),
-        iv AS (
-          SELECT user_id, sid, min(ts) AS st, max(ts) AS en
-          FROM s2 GROUP BY 1, 2),
-        pts AS (
-          SELECT st AS ts, 1 AS delta FROM iv
-          UNION ALL SELECT en, -1 FROM iv),
-        r AS (
-          SELECT ts, delta,
-                 sum(delta) OVER (ORDER BY ts, delta
-                   ROWS UNBOUNDED PRECEDING) AS run
-          FROM pts)
-        SELECT CAST(ts AS DATE) AS day,
-               max(run)::int AS max_concurrency,
-               count(*)::bigint AS n_boundaries
-        FROM r GROUP BY 1 ORDER BY day"""
-
     sql["vocab_coverage"] = r"""
         WITH counts AS (
           SELECT token, count(*)::bigint AS n
@@ -8358,25 +7802,6 @@ def oracle_sql() -> dict[str, str]:
                round(sum(-p * log2(p)), 6) AS entropy
         FROM t GROUP BY part ORDER BY part"""
 
-    sql["gap_histogram"] = """
-        WITH g AS (
-          SELECT (epoch(ts) - epoch(lag(ts) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id)))
-                   ::double AS gap
-          FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        b AS (
-          SELECT CASE WHEN gap < 1.0 THEN 0
-                 ELSE floor(log2(gap))::int END AS band
-          FROM g WHERE gap IS NOT NULL),
-        c AS (SELECT band, count(*)::bigint AS n FROM b GROUP BY 1),
-        t AS (SELECT sum(n)::double AS tt FROM c)
-        SELECT band,
-               (CASE WHEN band = 0 THEN 0
-                ELSE pow(2.0::double, band) END)::bigint AS lo_s,
-               pow(2.0::double, band + 1)::bigint AS hi_s,
-               n, round(n / tt, 6) AS share
-        FROM c, t ORDER BY band"""
-
     sql["lang_confusion"] = (
         "WITH pred AS (" + _lang_case() + """),
         j AS (
@@ -8559,13 +7984,11 @@ def oracle_sql() -> dict[str, str]:
                   LEFT JOIN resk USING (run_uid)
         ORDER BY dataset, run_uid"""
 
-    # r5 at-scale swap twins (quantile_normalize equidepth /
-    # rolling_active_users sketch): each runs in its documented
-    # exact-mode regime at oracle scale (bins = N-1 edge vector /
-    # HLL sparse regime), where the op's output EQUALS the exact
-    # method — so the exact oracle SQL applies verbatim (see the
-    # q_* docstrings for the contracts).
-    sql["rolling_active_users_sketch"] = sql["rolling_active_users"]
+    # r5 at-scale swap twin (quantile_normalize equidepth): it runs in
+    # its documented exact-mode regime at oracle scale (bins = N-1
+    # edge vector), where the op's output EQUALS the exact method — so
+    # the exact oracle SQL applies verbatim (see the q_* docstring for
+    # the contract).
     sql["quantile_normalize_equidepth"] = sql["quantile_normalize"]
 
     return sql

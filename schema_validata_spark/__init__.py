@@ -12,9 +12,10 @@ Public API:
     Rules / FieldRule                -> rule-table model
     datagen.gen_transcripts / gen_conversations / transcript_rules -> fixtures
 
-The dedup, text, sampling, sequence, selection and semistructured
-re-exports below are training-data operators outside the validation
-core.
+The dedup, text, sampling, selection and semistructured re-exports
+below are training-data operators outside the validation core; the
+sequence re-exports are conversation-structure checks (turn order,
+role and turn conformance).
 """
 
 from .config import (ALLOWED_CASTING, DATA_DICT_SCHEMA, NA_PATTERNS,
@@ -44,7 +45,6 @@ from .functions.text import (gopher_rules, pii_scan, pii_summary,
 from .operators.semistructured import (json_is_valid, json_payload_stats,
                                        json_payload_violations)
 from .operators.sequence import (consecutive_repeats, order_regressions,
-                                 session_stats, sessionize,
                                  turn_conformance)
 from .operators.expectations import (ConditionalRule, Expectation,
                                      check_expectations, completeness_gaps,
@@ -76,8 +76,8 @@ __all__ = [
     "deterministic_sample", "deterministic_topk_sample", "group_split",
     "sample_expr", "split_expr", "weighted_sample",
     "pii_scan", "pii_summary",
-    "consecutive_repeats", "order_regressions", "sessionize",
-    "session_stats", "repetition_stats", "top_tokens", "gopher_rules",
+    "consecutive_repeats", "order_regressions",
+    "repetition_stats", "top_tokens", "gopher_rules",
     "turn_conformance", "cap_group_share",
     "json_is_valid", "json_payload_stats", "json_payload_violations",
     "errors_overview", "write_report",

@@ -14,8 +14,7 @@ array pipelines —
 
 The combination turns "transform over positions of an array built from
 this row" into O(len²) per row: measured 260 s for word-3-shingles
-over 20k × 400-word docs, vs ~1 s let-bound (and minutes → sub-second
-for the winnowing chain, operators/winnow.py).
+over 20k × 400-word docs, vs ~1 s let-bound.
 """
 
 from __future__ import annotations

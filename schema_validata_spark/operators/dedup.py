@@ -64,9 +64,9 @@ def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
     ``substr(md5(concat(i, ':', s)), 1, 16)`` 16-hex-char string
     components, lexicographic min. The md5 mode exists because md5 is
     the one hash both this engine and a DuckDB oracle compute
-    byte-identically (same pattern as ``deterministic_sample`` /
-    ``winnow_fingerprints``), so the full MinHash→banding→verify
-    pipeline becomes replayable in ANSI SQL for correctness checks;
+    byte-identically (same pattern as ``deterministic_sample``), so
+    the full MinHash→banding→verify pipeline becomes replayable in
+    ANSI SQL for correctness checks;
     signatures are 2× wider, so keep xxhash64 for production corpora.
 
     CONTRACT: documents with NULL text carry no shingles and are

@@ -782,7 +782,7 @@ def value_novelty_trend(df: DataFrame, value_col: str, ts_col: str,
     seen before — the new-enum-value / upstream-schema-change alarm
     (allowed-value rules reject what a dictionary forbids; this
     surfaces what a dictionary hasn't HEARD OF yet, with the day it
-    appeared). The generic-column twin of ``sequence.user_mix``.
+    appeared).
 
     Per bucket: bucket, n_values (distinct active), n_new
     (first-seen), share_new (6dp), first_values (≤10 of the new

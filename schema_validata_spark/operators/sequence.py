@@ -1,8 +1,11 @@
-"""Sequence / ordering checks over partitioned event streams — the
+"""Conversation-structure checks over ordered turns — the
 window-function layer of transcript validation: a conversation is an
 ordered sequence of turns, and several real defects are only visible
 relative to the PREVIOUS row (same speaker twice, duplicated event,
-session boundaries).
+a timestamp that moves backward). The ops here cover role and turn
+conformance, tool-call pairing, SFT pair extraction, loops, turn and
+transition latency, n-grams, NULL runs and distance to the modal
+template.
 
 SCALE NOTES: each op is ONE window over (partition key, total order) —
 one shuffle on the partition key, then a streaming pass per partition
@@ -29,46 +32,6 @@ def consecutive_repeats(df: DataFrame, part_col: str,
     prev = F.lag(value_col).over(w)
     return (df.withColumn("prev_value", prev)
               .where(F.col(value_col) == F.col("prev_value")))
-
-
-def sessionize(df: DataFrame, part_col: str, ts_col: str,
-               gap_minutes: float = 30.0,
-               session_col: str = "session_idx") -> DataFrame:
-    """Assign a per-partition session index: a new session starts when
-    the gap to the previous event exceeds ``gap_minutes`` (first event
-    of a partition is session 1). Classic running-sum-of-boundaries
-    window — no iteration, no state.
-
-    Tied timestamps: which of the tied rows carries a boundary is
-    order-dependent, but the NUMBER of boundaries per partition is not,
-    so ``session_stats`` (counts) is deterministic even with ties.
-
-    NULL event times cannot be sessionized and are EXCLUDED (under
-    Spark's NULLS FIRST each null-ts row would otherwise open its own
-    session, inflating counts and diverging from NULLS LAST engines)."""
-    df = df.where(F.col(ts_col).isNotNull())
-    w = Window.partitionBy(part_col).orderBy(F.col(ts_col))
-    prev_ts = F.lag(F.col(ts_col)).over(w)
-    # NTZ timestamps refuse a direct double cast; the ltz hop is a
-    # no-op for ltz input and gap DIFFERENCES are timezone-invariant
-    def _epoch(c):
-        return c.cast("timestamp_ltz").cast("double")
-    gap_s = _epoch(F.col(ts_col)) - _epoch(prev_ts)
-    boundary = F.when(prev_ts.isNull() | (gap_s > gap_minutes * 60.0), 1) \
-                .otherwise(0)
-    return df.withColumn(session_col,
-                         F.sum(boundary).over(
-                             w.rowsBetween(Window.unboundedPreceding, 0))
-                          .cast("int"))
-
-
-def session_stats(df: DataFrame, part_col: str, ts_col: str,
-                  gap_minutes: float = 30.0) -> DataFrame:
-    """(part, n_sessions, n_events) — sessionize + one aggregate."""
-    s = sessionize(df, part_col, ts_col, gap_minutes)
-    return (s.groupBy(part_col)
-             .agg(F.max("session_idx").alias("n_sessions"),
-                  F.count(F.lit(1)).alias("n_events")))
 
 
 def order_regressions(df: DataFrame, part_col: str,
@@ -233,7 +196,7 @@ def turn_latency_stats(df: DataFrame, part_col: str,
 
     Output per partition: part, n_events, n_gaps, mean_gap_s,
     median_gap_s, p95_gap_s, max_gap_s (seconds, rounded to ms).
-    NULL timestamps are excluded (same contract as ``sessionize``).
+    NULL timestamps are excluded (a gap to an untimed turn is undefined).
     Tied timestamps are safe: the deltas of a sorted sequence depend
     only on the sorted multiset of times, not on tiebreak order, so
     every stat here is deterministic under shuffle retries.
@@ -721,334 +684,6 @@ def loop_runs(df: DataFrame, part_col: str, order_cols: list[str],
                        "max_run", "n_repeats", "n_loops"))
 
 
-def funnel_stats(df: DataFrame, part_col: str, ts_col: str,
-                 step_col: str, steps: list[str]) -> DataFrame:
-    """Ordered-step conversion funnel: how many groups (conversations /
-    users / sessions) reach step k of ``steps`` IN ORDER — step k
-    counts only at a timestamp ≥ the time step k−1 was first reached
-    (re-orderings don't count; 'purchase before any view' is not a
-    funnel hit). The agent-pipeline question "how many conversations
-    get from tool-call to tool-result to final answer, and where do
-    they fall off".
-
-    Semantics (exact, not min-ts-monotone approximation): events are
-    replayed per group in (ts, step_idx) order and a depth counter
-    advances when the NEXT expected step appears; equal timestamps
-    admit same-instant progression in step order (deterministic).
-    NULL group/ts rows and events outside ``steps`` are ignored.
-
-    Output: one row per step — step_idx (1-based), step, n_reached,
-    n_groups (groups with ≥1 funnel event), share_prev
-    (n_k / n_{k−1}; n_1 / n_groups for the first step), share_first
-    (n_k / n_1), 6dp, NULL on zero denominators.
-
-    SCALE: events filter to the step vocabulary BEFORE the one
-    group-keyed shuffle; the per-group state is a sorted
-    (ts, step_idx) array of MATCHING events only, folded JVM-side by
-    ``aggregate`` (no Python, no window over raw rows); everything
-    after is a ≤(k+1)-row histogram joined to a k-row step frame."""
-    if not steps or len(set(steps)) != len(steps):
-        raise ValueError("steps must be non-empty and distinct")
-    idx = F.lit(None).cast("int")
-    for i in range(len(steps) - 1, -1, -1):
-        idx = F.when(F.col(step_col) == steps[i], i).otherwise(idx)
-    evs = (df.where(F.col(part_col).isNotNull()
-                    & F.col(ts_col).isNotNull()
-                    & F.col(step_col).isin(list(steps)))
-             .select(F.col(part_col).alias("__g"),
-                     F.struct(F.col(ts_col).alias("ts"),
-                              idx.alias("idx")).alias("__e")))
-    depth = F.aggregate(
-        F.sort_array(F.collect_list("__e")), F.lit(0),
-        lambda acc, e: F.when(e["idx"] == acc, acc + 1).otherwise(acc))
-    hist = (evs.groupBy("__g").agg(depth.alias("__d"))
-               .groupBy("__d")
-               .agg(F.count(F.lit(1)).cast("bigint").alias("__n")))
-    spark = df.sparkSession
-    sdf = spark.createDataFrame(
-        [(i + 1, s) for i, s in enumerate(steps)],
-        "step_idx int, step string")
-    reached = (sdf.join(hist, hist["__d"] >= sdf["step_idx"], "left")
-                  .groupBy("step_idx", "step")
-                  .agg(F.coalesce(F.sum("__n"), F.lit(0)).cast("bigint")
-                        .alias("n_reached")))
-    totals = hist.groupBy().agg(F.sum("__n").cast("bigint")
-                                 .alias("n_groups"))
-    w = Window.orderBy("step_idx")
-    out = (reached.crossJoin(totals)
-                  .withColumn("__prev", F.lag("n_reached").over(w))
-                  .withColumn("__first", F.first("n_reached").over(w)))
-    share = lambda num, den: F.when(den > 0, F.round(
-        num.cast("double") / den, 6))
-    return out.select(
-        "step_idx", "step", "n_reached", "n_groups",
-        share(F.col("n_reached"),
-              F.coalesce(F.col("__prev"), F.col("n_groups")))
-        .alias("share_prev"),
-        share(F.col("n_reached"), F.col("__first")).alias("share_first"))
-
-
-def cohort_retention(df: DataFrame, user_col: str, ts_col: str,
-                     period_days: int = 7) -> DataFrame:
-    """Cohort retention matrix: users grouped by the day of their FIRST
-    event (cohort), counted again in each later ``period_days`` window
-    — "of the users who arrived in week W, how many were still active
-    k weeks on". The canonical engagement / dataset-liveness screen,
-    and a volume-anomaly complement (a cohort whose retention cliff
-    is a release date is a product signal; one whose cohort is a
-    backfill date is a data bug).
-
-    Per (cohort, period_k): n_active (distinct users), cohort_size
-    (n_active at k = 0 — every user is active in their own first
-    period by construction), retention = n_active / cohort_size (6dp).
-    NULL user/ts rows are excluded. Day resolution (to_date) before
-    any arithmetic, so intra-day timing never splits a cohort.
-
-    SCALE: raw events reduce map-side to DISTINCT (user, day) FIRST
-    (the only full-data shuffle, keyed by that composite); first-day
-    and the join back both run on the reduced frame keyed by user; the
-    retention rollup is a (cohorts × periods)-sized aggregate. No
-    window over raw rows, no driver collect."""
-    if period_days < 1:
-        raise ValueError("period_days must be >= 1")
-    u, t = F.col(user_col), F.col(ts_col)
-    act = (df.where(u.isNotNull() & t.isNotNull())
-             .select(u.alias("__u"), F.to_date(t).alias("__d"))
-             .distinct())
-    first = act.groupBy("__u").agg(F.min("__d").alias("__c"))
-    k = F.floor(F.datediff(F.col("__d"), F.col("__c"))
-                / F.lit(int(period_days))).cast("int")
-    per = (act.join(first, "__u")
-              .select("__u", "__c", k.alias("period_k"))
-              .distinct())
-    counts = (per.groupBy("__c", "period_k")
-                 .agg(F.count(F.lit(1)).cast("bigint").alias("n_active")))
-    sizes = (counts.where(F.col("period_k") == 0)
-                   .select(F.col("__c").alias("__c2"),
-                           F.col("n_active").alias("cohort_size")))
-    return (counts.join(sizes, counts["__c"] == sizes["__c2"])
-                  .select(F.date_format("__c", "yyyy-MM-dd")
-                           .alias("cohort"),
-                          "period_k", "n_active", "cohort_size",
-                          F.round(F.col("n_active").cast("double")
-                                  / F.col("cohort_size"), 6)
-                           .alias("retention")))
-
-
-def interarrival_stats(df: DataFrame, part_col: str, ts_col: str
-                       ) -> DataFrame:
-    """Per-key inter-event gap statistics + burstiness: mean / std /
-    max of the gaps between consecutive events, the coefficient of
-    variation, and the burstiness score B = (σ−µ)/(σ+µ) (Goh & 
-    Barabási 2008: −1 = periodic heartbeat, 0 = Poisson, →1 = bursty)
-    — the "is this user a cron job / scraper / human" screen, and the
-    timestamp-quality complement of freshness checks (a producer whose
-    gaps collapse to 0 is double-emitting; one whose B jumps is
-    batching).
-
-    Per key: n_events, n_gaps, mean_gap_s / std_gap_s (sample σ) /
-    max_gap_s in seconds (6dp), cv, burstiness — NULL when fewer than
-    2 gaps (σ undefined → cv/B undefined; mean/max still emitted from
-    1 gap). NULL ts rows are excluded; equal timestamps yield 0 gaps
-    between them (gap multiset of a sorted sequence is tie-order
-    independent, so the answer is deterministic under shuffle retries).
-
-    SCALE: one key-partitioned sort window (lag) — the same shuffle
-    shape as sessionize — then ONE hash aggregate.
-    ENGINE-PORTABLE ARITHMETIC: gaps are exact BIGINT microseconds
-    (unix_micros); Σgap sums as BIGINT and Σgap² as DECIMAL(38,0)
-    (a 30-day gap squared is ~7e24, past int64), so the moments are
-    order-independent and exact; mean/σ derive in doubles at the end
-    (IEEE-deterministic on identical inputs) and round to 6dp."""
-    p, t = F.col(part_col), F.col(ts_col)
-    w = Window.partitionBy(part_col).orderBy("__m")
-    # NTZ timestamps refuse unix_micros directly; the ltz hop is a
-    # no-op for ltz input and gap DIFFERENCES are timezone-invariant
-    gaps = (df.where(p.isNotNull() & t.isNotNull())
-              .select(part_col,
-                      F.unix_micros(t.cast("timestamp_ltz"))
-                       .alias("__m"))
-              .withColumn("__gap",
-                          F.col("__m") - F.lag("__m").over(w)))
-    g = (gaps.groupBy(part_col)
-             .agg(F.count(F.lit(1)).cast("bigint").alias("n_events"),
-                  F.count("__gap").cast("bigint").alias("n_gaps"),
-                  F.sum("__gap").alias("__s"),
-                  F.sum(F.col("__gap").cast("decimal(38,0)")
-                        * F.col("__gap").cast("decimal(38,0)"))
-                   .alias("__ss"),
-                  F.max("__gap").alias("__mx")))
-    n = F.col("n_gaps")
-    mean = F.col("__s").cast("double") / n.cast("double")
-    var = ((n.cast("double") * F.col("__ss").cast("double")
-            - F.col("__s").cast("double") * F.col("__s").cast("double"))
-           / (n.cast("double") * (n - 1).cast("double")))
-    std = F.sqrt(F.greatest(var, F.lit(0.0)))
-    micro = F.lit(1000000.0)
-    mean_s, std_s = mean / micro, std / micro
-    return g.select(
-        part_col, "n_events", "n_gaps",
-        F.when(n >= 1, F.round(mean_s, 6)).alias("mean_gap_s"),
-        F.when(n >= 2, F.round(std_s, 6)).alias("std_gap_s"),
-        F.when(n >= 1, F.round(F.col("__mx").cast("double") / micro, 6))
-         .alias("max_gap_s"),
-        F.when((n >= 2) & (mean != 0), F.round(std / mean, 6))
-         .alias("cv"),
-        F.when((n >= 2) & ((std + mean) != 0),
-               F.round((std - mean) / (std + mean), 6))
-         .alias("burstiness"))
-
-
-def burst_stats(df: DataFrame, part_col: str, ts_col: str,
-                window_s: float, threshold: int) -> DataFrame:
-    """Sliding-window rate screen per key: the peak number of events
-    any trailing ``window_s``-second window ever held, and how many
-    events sat in an over-``threshold`` window — the runaway-agent /
-    retry-storm / scraper detector that per-day volume checks miss
-    (1,000 calls in one minute and 1,000 calls in one day are the
-    same daily count).
-
-    Per key: ``n_events``, ``peak_window_count`` (max trailing-window
-    size, >= 1 by construction), ``n_over`` (events whose trailing
-    window reached ``threshold``), ``over_limit``. The trailing window
-    is inclusive on both ends: events exactly ``window_s`` apart share
-    a window. NULL key/ts rows are excluded. Equal timestamps land in
-    the same RANGE frame regardless of tie order, so every output is
-    deterministic under shuffle retries.
-
-    SCALE: ONE exchange on the key — the RANGE window's sort-partition
-    is reused by the per-key aggregate; the frame streams per
-    partition (Spark keeps only the live window buffered). No
-    row-data second shuffle, no collect."""
-    if window_s <= 0:
-        raise ValueError("window_s must be > 0")
-    if threshold < 1:
-        raise ValueError("threshold must be >= 1")
-    p, t = F.col(part_col), F.col(ts_col)
-    micros = int(round(float(window_s) * 1_000_000))
-    w = (Window.partitionBy(part_col).orderBy("__m")
-               .rangeBetween(-micros, 0))
-    c = F.count(F.lit(1)).over(w)
-    return (df.where(p.isNotNull() & t.isNotNull())
-              .select(part_col,
-                      F.unix_micros(t.cast("timestamp_ltz"))
-                       .alias("__m"))
-              .withColumn("__c", c)
-              .groupBy(part_col)
-              .agg(F.count(F.lit(1)).cast("bigint").alias("n_events"),
-                   F.max("__c").cast("bigint")
-                    .alias("peak_window_count"),
-                   F.sum(F.when(F.col("__c") >= threshold, 1)
-                          .otherwise(0)).cast("bigint").alias("n_over"))
-              .withColumn("over_limit", F.col("n_over") > 0))
-
-
-def funnel_latency(df: DataFrame, part_col: str, ts_col: str,
-                   step_col: str, steps: list[str]) -> DataFrame:
-    """Time-to-convert distribution per funnel transition — the HOW
-    LONG companion of ``funnel_stats``'s HOW MANY: for every group
-    that advanced from step k−1 to step k (same exact in-order replay
-    semantics), the latency between the two reach times, summarized
-    as n / mean / p50 / p95 / max seconds. Finds the slow hop in an
-    agent pipeline (tool-call → tool-result fast, tool-result →
-    final-answer is the stall) that conversion shares can't see.
-
-    Output: one row per transition k = 2..len(steps) — step_idx
-    (1-based index of the DESTINATION step), from_step, step,
-    n_converted, mean_s / p50_s / p95_s / max_s (6dp). Groups that
-    never reached step k contribute nothing to row k.
-
-    SCALE: same single group-keyed shuffle of vocabulary-filtered
-    events as funnel_stats; the fold carries the array of first-reach
-    timestamps (≤ len(steps) entries) instead of a depth counter;
-    everything downstream is a groups-sized frame aggregated to
-    len(steps)−1 rows. Latency sums are exact BIGINT microseconds;
-    percentiles are exact interpolation (oracle-checkable; swap in
-    percentile_approx at extreme group counts)."""
-    if not steps or len(set(steps)) != len(steps) or len(steps) < 2:
-        raise ValueError("steps must be >= 2 distinct step names")
-    idx = F.lit(None).cast("int")
-    for i in range(len(steps) - 1, -1, -1):
-        idx = F.when(F.col(step_col) == steps[i], i).otherwise(idx)
-    ts_type = df.schema[ts_col].dataType.simpleString()
-    evs = (df.where(F.col(part_col).isNotNull()
-                    & F.col(ts_col).isNotNull()
-                    & F.col(step_col).isin(list(steps)))
-             .select(F.col(part_col).alias("__g"),
-                     F.struct(F.col(ts_col).alias("ts"),
-                              idx.alias("idx")).alias("__e")))
-    reach = F.aggregate(
-        F.sort_array(F.collect_list("__e")),
-        F.array().cast(f"array<{ts_type}>"),
-        lambda acc, e: F.when(e["idx"] == F.size(acc),
-                              F.array_append(acc, e["ts"]))
-                        .otherwise(acc))
-    g = evs.groupBy("__g").agg(reach.alias("__r"))
-
-    def _us(c):
-        return F.unix_micros(c.cast("timestamp_ltz"))
-
-    trans = F.array(*[
-        F.struct(F.lit(k).alias("step_idx"),
-                 F.lit(steps[k - 2]).alias("from_step"),
-                 F.lit(steps[k - 1]).alias("step"),
-                 F.when(F.size(F.col("__r")) >= k,
-                        _us(F.element_at("__r", k))
-                        - _us(F.element_at("__r", k - 1))).alias("lat"))
-        for k in range(2, len(steps) + 1)])
-    long = (g.select(F.explode(trans).alias("t"))
-             .select("t.step_idx", "t.from_step", "t.step", "t.lat")
-             .where(F.col("lat").isNotNull()))
-    micro = F.lit(1000000.0)
-    n = F.count(F.lit(1)).cast("bigint")
-    return (long.groupBy("step_idx", "from_step", "step")
-                .agg(n.alias("n_converted"),
-                     F.round(F.sum("lat").cast("double")
-                             / n.cast("double") / micro, 6)
-                      .alias("mean_s"),
-                     F.round(F.percentile("lat", F.lit(0.5)) / micro, 6)
-                      .alias("p50_s"),
-                     F.round(F.percentile("lat", F.lit(0.95)) / micro,
-                             6).alias("p95_s"),
-                     F.round(F.max("lat").cast("double") / micro, 6)
-                      .alias("max_s")))
-
-
-def user_mix(df: DataFrame, user_col: str, ts_col: str) -> DataFrame:
-    """Daily new-vs-returning mix: per day, how many distinct users
-    were active, how many were seen for the FIRST time that day, and
-    the returning remainder — the growth/backfill dashboard behind
-    ``cohort_retention`` (a day whose share_new spikes to 1.0 is a
-    backfill or an id-rotation bug, not a launch).
-
-    Per day: ``bucket`` (yyyy-MM-dd), n_active, n_new, n_returning,
-    share_new (6dp). NULL user/ts rows excluded; day resolution
-    (to_date) before any arithmetic.
-
-    SCALE: the same DISTINCT (user, day) reduction as
-    cohort_retention is the only full-data shuffle; first-day is a
-    user-keyed aggregate of the reduced frame; the mix rollup is
-    day-count-sized. No window over raw rows, no collect."""
-    u, t = F.col(user_col), F.col(ts_col)
-    act = (df.where(u.isNotNull() & t.isNotNull())
-             .select(u.alias("__u"), F.to_date(t).alias("__d"))
-             .distinct())
-    first = act.groupBy("__u").agg(F.min("__d").alias("__f"))
-    mix = (act.join(first, "__u")
-              .groupBy("__d")
-              .agg(F.count(F.lit(1)).cast("bigint").alias("n_active"),
-                   F.sum(F.when(F.col("__d") == F.col("__f"), 1)
-                          .otherwise(0)).cast("bigint").alias("n_new")))
-    return mix.select(
-        F.date_format("__d", "yyyy-MM-dd").alias("bucket"),
-        "n_active", "n_new",
-        (F.col("n_active") - F.col("n_new")).cast("bigint")
-         .alias("n_returning"),
-        F.round(F.col("n_new").cast("double")
-                / F.col("n_active").cast("double"), 6)
-         .alias("share_new"))
-
-
 def transition_latency(df: DataFrame, part_col: str,
                        order_cols: list[str], role_col: str,
                        ts_col: str) -> DataFrame:
@@ -1067,7 +702,7 @@ def transition_latency(df: DataFrame, part_col: str,
     rows — a visibility feature, not an accident). First turns have no
     predecessor and contribute nothing.
 
-    SCALE: ONE keyed lag window (the sessionize shuffle shape), then
+    SCALE: ONE keyed lag window (one shuffle on the partition key), then
     ONE hash aggregate keyed by the role pair (#roles² groups). Gap
     sums are exact BIGINT microseconds; percentiles exact
     interpolation (oracle mode; percentile_approx at extreme scale)."""
@@ -1141,138 +776,6 @@ def turn_count_histogram(df: DataFrame, part_col: str) -> DataFrame:
                           .alias("share_rows")))
 
 
-def rolling_active_users(df: DataFrame, user_col: str, ts_col: str,
-                         window_days: int = 7,
-                         method: str = "exact",
-                         lg_k: int = 12) -> DataFrame:
-    """Rolling N-day distinct active users per day (WAU/MAU family) —
-    THE engagement headline metric, and a volume screen that sees what
-    daily actives can't (a churn cliff where dau holds flat because a
-    shrinking cohort logs in daily). Sliding distinct counts don't
-    decompose over days, so the op expands the DISTINCT (user, day)
-    frame by the window offsets and re-distincts — exact, not a
-    sketch.
-
-    Per day: bucket (yyyy-MM-dd), n_active_day (that day's distinct
-    users), n_active_window (distinct users over the trailing
-    ``window_days`` INCLUDING the day). Days with no events simply
-    don't appear (join against completeness_gaps to see holes);
-    trailing windows near the start cover fewer days by construction.
-    NULL user/ts rows are excluded.
-
-    ``method`` (VERDICT r4 #3 — the documented at-scale swap, now a
-    kwarg):
-
-    * ``"exact"`` (default): expands the distinct (user, day) frame by
-      the window offsets and re-distincts — exact counts; the expanded
-      frame is window_days × |user, day| rows. Fine at 7 days; heavy
-      at 90 days × extreme user counts.
-    * ``"sketch"``: ONE HLL sketch per day (``hll_sketch_agg``, the
-      same primitive/merge contract as operators/sketches.py), then
-      the offset explode replicates the ~#days sketch FRAME (not the
-      user frame) and ``hll_union_agg`` merges the trailing window —
-      shuffle rows bounded by #days × window_days sketch blobs
-      regardless of user count; both counts become estimates (exact in
-      the sparse regime, ~1–2% high beyond it, ``lg_k`` sizes the
-      sketch).
-
-    SCALE (exact): the raw-row shuffle is the same DISTINCT
-    (user, day) reduction as cohort/user-mix; the offset explode
-    multiplies the REDUCED frame by window_days (7× |user,day| rows,
-    still tiny next to raw events) and re-aggregates. For 90-day
-    windows at extreme user counts use ``method="sketch"``."""
-    if window_days < 1:
-        raise ValueError("window_days must be >= 1")
-    if method not in ("exact", "sketch"):
-        raise ValueError(f"method must be 'exact' or 'sketch', "
-                         f"got {method!r}")
-    u, t = F.col(user_col), F.col(ts_col)
-    if method == "sketch":
-        day_sk = (df.where(u.isNotNull() & t.isNotNull())
-                    .select(F.to_date(t).alias("__d"), u.alias("__u"))
-                    .groupBy("__d")
-                    .agg(F.hll_sketch_agg("__u", F.lit(lg_k))
-                          .alias("__sk")))
-        day = day_sk.select(
-            "__d", F.hll_sketch_estimate("__sk").cast("bigint")
-                    .alias("n_active_day"))
-        off = F.explode(F.sequence(F.lit(0),
-                                   F.lit(int(window_days) - 1))).alias("__o")
-        win = (day_sk.select("__sk", "__d", off)
-                     .select("__sk",
-                             F.date_add(F.col("__d"), F.col("__o"))
-                              .alias("__w"))
-                     .groupBy("__w")
-                     .agg(F.hll_sketch_estimate(F.hll_union_agg("__sk"))
-                           .cast("bigint").alias("n_active_window")))
-        return (day.join(win, day["__d"] == win["__w"])
-                   .select(F.date_format("__d", "yyyy-MM-dd")
-                            .alias("bucket"),
-                           "n_active_day", "n_active_window"))
-    act = (df.where(u.isNotNull() & t.isNotNull())
-             .select(u.alias("__u"), F.to_date(t).alias("__d"))
-             .distinct())
-    day = (act.groupBy("__d")
-              .agg(F.count(F.lit(1)).cast("bigint")
-                    .alias("n_active_day")))
-    off = F.explode(F.sequence(F.lit(0),
-                               F.lit(int(window_days) - 1))).alias("__o")
-    win = (act.select("__u", "__d", off)
-              .select("__u", F.date_add(F.col("__d"), F.col("__o"))
-                              .alias("__w"))
-              .distinct()
-              .groupBy("__w")
-              .agg(F.count(F.lit(1)).cast("bigint")
-                    .alias("n_active_window")))
-    # windows that extend past the last observed day are artifacts of
-    # the offset expansion, not real days — inner join trims them
-    return (day.join(win, day["__d"] == win["__w"])
-               .select(F.date_format("__d", "yyyy-MM-dd")
-                        .alias("bucket"),
-                       "n_active_day", "n_active_window"))
-
-
-def key_lifecycle(df: DataFrame, key_col: str, ts_col: str,
-                  churn_days: int = 30) -> DataFrame:
-    """Per-key lifecycle compaction: first/last activity, lifespan,
-    volume, active-day count, days inactive relative to the CORPUS
-    max event time, and a churn flag — the entity-level summary table
-    every retention/churn analysis joins against (cohort_retention
-    aggregates it away; this keeps the per-key row).
-
-    Per key: first_ts, last_ts, lifespan_days (date diff), n_events,
-    n_active_days (distinct days), days_inactive (corpus max day −
-    last day), churned (days_inactive > ``churn_days``). NULL key/ts
-    rows are excluded.
-
-    SCALE: ONE hash aggregate keyed by the key (count_distinct on the
-    day is a per-key exact distinct over a tiny domain); the corpus
-    max is a 1-row re-aggregate of the key frame broadcast back. No
-    windows, no second scan of row data."""
-    if churn_days < 0:
-        raise ValueError("churn_days must be >= 0")
-    u, t = F.col(key_col), F.col(ts_col)
-    per = (df.where(u.isNotNull() & t.isNotNull())
-             .groupBy(key_col)
-             .agg(F.min(t).alias("first_ts"),
-                  F.max(t).alias("last_ts"),
-                  F.count(F.lit(1)).cast("bigint").alias("n_events"),
-                  F.countDistinct(F.to_date(t)).cast("bigint")
-                   .alias("n_active_days")))
-    gmax = per.groupBy().agg(F.max("last_ts").alias("__gmax"))
-    inactive = F.datediff(F.to_date("__gmax"), F.to_date("last_ts")) \
-        .cast("int")
-    return (per.crossJoin(F.broadcast(gmax))
-               .select(key_col, "first_ts", "last_ts",
-                       F.datediff(F.to_date("last_ts"),
-                                  F.to_date("first_ts")).cast("int")
-                        .alias("lifespan_days"),
-                       "n_events", "n_active_days",
-                       inactive.alias("days_inactive"),
-                       (inactive > F.lit(int(churn_days)))
-                        .alias("churned")))
-
-
 def null_runs(df: DataFrame, part_col: str, order_cols: list[str],
               cols: list[str], min_run: int = 2) -> DataFrame:
     """NULL-island detector: per (partition, column), the longest run
@@ -1330,53 +833,6 @@ def null_runs(df: DataFrame, part_col: str, order_cols: list[str],
     return agg.where(F.col("n_runs") > 0)
 
 
-def time_weighted_avg(df: DataFrame, part_col: str, ts_col: str,
-                      value_col: str) -> DataFrame:
-    """Time-weighted average per key for IRREGULARLY sampled state
-    metrics (gauge readings, queue depths, account balances): each
-    reading holds until the next one, so the honest mean weights each
-    value by how long it was in force — the plain ``avg`` over-weights
-    chatty periods exactly when they're least representative.
-
-    TWA = Σ vᵢ·(tᵢ₊₁−tᵢ) / (t_n−t₀) over consecutive readings (the
-    last reading has no holding interval and contributes only as the
-    endpoint — standard left-continuous step-function convention).
-    Per key: n_obs, span_s, twa, plain_avg (6dp, for the divergence
-    read); keys with a single reading or zero span report NULL twa.
-    NULL key/ts/value rows are excluded.
-
-    SCALE: ONE keyed sort window (lead) — the sessionize shuffle
-    shape — then one hash aggregate; holding times are exact BIGINT
-    microseconds, Σv·dt accumulates exact via micro-quantized
-    DECIMAL(38,0) (value at 1e-6 units — same overflow contract
-    family as moment_stats), doubles only at the end."""
-    p, t = F.col(part_col), F.col(ts_col)
-    v = F.col(value_col).cast("double")
-    base = (df.where(p.isNotNull() & t.isNotNull() & v.isNotNull())
-              .select(part_col,
-                      F.unix_micros(t.cast("timestamp_ltz"))
-                       .alias("__m"),
-                      F.round(v * 1e6, 0).cast("decimal(38,0)")
-                       .alias("__q"), v.alias("__v")))
-    w = Window.partitionBy(part_col).orderBy("__m")
-    dt = F.lead("__m").over(w) - F.col("__m")
-    g = (base.withColumn("__dt", dt)
-             .groupBy(part_col)
-             .agg(F.count(F.lit(1)).cast("bigint").alias("n_obs"),
-                  (F.max("__m") - F.min("__m")).alias("__span"),
-                  F.sum(F.col("__q") * F.col("__dt")
-                        .cast("decimal(38,0)")).alias("__vdt"),
-                  F.round(F.avg("__v"), 6).alias("plain_avg")))
-    span = F.col("__span").cast("double")
-    twa = F.col("__vdt").cast("double") / span / F.lit(1e6)
-    return g.select(
-        part_col, "n_obs",
-        F.round(span / F.lit(1e6), 6).alias("span_s"),
-        F.when((F.col("n_obs") >= 2) & (F.col("__span") > 0),
-               F.round(twa, 6)).alias("twa"),
-        "plain_avg")
-
-
 def template_distance(df: DataFrame, part_col: str,
                       order_cols: list[str], value_col: str,
                       max_len: int = 20) -> DataFrame:
@@ -1397,7 +853,7 @@ def template_distance(df: DataFrame, part_col: str,
     Output per partition: part (string), seq_len (labels kept,
     bigint), distance (bigint; 0 = exactly the template).
 
-    SCALE: one keyed row_number window (the sessionize shuffle) over
+    SCALE: one keyed row_number window (one partition-key shuffle) over
     rows capped at ``max_len`` per partition, one hash aggregate to
     partition-sized sequences, a ≤|distinct-seq| aggregate for the
     modal row, then a broadcast of that single row into the
@@ -1437,44 +893,6 @@ def template_distance(df: DataFrame, part_col: str,
                      .alias("distance")))
 
 
-def concurrency_profile(df: DataFrame, part_col: str, ts_col: str,
-                        gap_minutes: float = 30.0) -> DataFrame:
-    """Peak simultaneous sessions per day — the capacity-planning
-    number behind executor/endpoint sizing: sessionized (part, start,
-    end) intervals swept with the classic +1/−1 line sweep. End is
-    EXCLUSIVE: a session ending exactly when another starts does not
-    overlap it (the −1 sorts before the +1 at equal timestamps, a
-    deterministic tie rule both engines share).
-
-    Output per day (days on which any session starts or ends): day
-    (date), max_concurrency (int), n_boundaries (bigint — sweep events
-    that day).
-
-    SCALE: sessionize's one keyed window + one aggregate to the
-    #sessions frame, then the sweep: ONE globally-ordered running-sum
-    window over 2·#sessions boundary rows. The global order is the
-    honest cost of exact concurrency — at 10^12 turns, partition the
-    sweep by calendar window and seed each with the carried-in open
-    count (documented contract; this exact form is the oracle shape).
-    """
-    s = sessionize(df, part_col, ts_col, gap_minutes=gap_minutes)
-    iv = (s.groupBy(part_col, "session_idx")
-          .agg(F.min(ts_col).alias("__start"),
-               F.max(ts_col).alias("__end")))
-    pts = (iv.select(F.col("__start").alias("ts"),
-                     F.lit(1).alias("delta"))
-           .union(iv.select(F.col("__end"), F.lit(-1))))
-    w = Window.orderBy(F.col("ts"), F.col("delta"))
-    run = F.sum("delta").over(
-        w.rowsBetween(Window.unboundedPreceding, 0))
-    return (pts.select(F.to_date("ts").alias("day"),
-                       run.alias("__run"))
-            .groupBy("day")
-            .agg(F.max("__run").cast("int").alias("max_concurrency"),
-                 F.count(F.lit(1)).cast("bigint").alias("n_boundaries"))
-            )
-
-
 def label_entropy_per_key(df: DataFrame, part_col: str,
                           value_col: str) -> DataFrame:
     """Per-entity label entropy: how varied is each user's /
@@ -1503,46 +921,3 @@ def label_entropy_per_key(df: DataFrame, part_col: str,
                  F.count(F.lit(1)).cast("bigint").alias("n_labels"),
                  F.round(F.sum(-F.col("__p") * F.log2("__p")), 6)
                   .alias("entropy")))
-
-
-def gap_histogram(df: DataFrame, part_col: str, ts_col: str,
-                  order_cols: list[str] | None = None) -> DataFrame:
-    """Log2-bucketed inter-event gap distribution: one row per
-    power-of-two band of seconds (plus a ``<1s`` band 0), counting
-    consecutive-event gaps within partitions. ``interarrival_stats``
-    gives per-key moments; this gives the corpus SHAPE — bimodal
-    human-plus-cron traffic shows as two humps, and a retry storm
-    grows the sub-second band. Ordering is (ts, *order_cols); NULL
-    keys/timestamps are excluded; zero/negative gaps (ties, clock
-    skew) land in band 0 with the sub-second gaps.
-
-    Output per non-empty band: band (int, gap in [2^band, 2^(band+1))
-    seconds; 0 also holds <1s), lo_s, hi_s (bigint), n (bigint),
-    share (6dp).
-
-    SCALE: ONE keyed lag window + ONE ≤~40-key hash aggregate (2^40 s
-    ≈ 35k years caps the band space); totals via 1-row broadcast."""
-    p, t = F.col(part_col), F.col(ts_col)
-    order = [t] + [F.col(c) for c in (order_cols or [])]
-    w = Window.partitionBy(part_col).orderBy(*order)
-    gap = (F.unix_micros(t.cast("timestamp_ltz"))
-           - F.unix_micros(F.lag(t.cast("timestamp_ltz")).over(w))) \
-        / F.lit(1_000_000.0)
-    base = (df.where(p.isNotNull() & t.isNotNull())
-            .select(gap.alias("__g"))
-            .where(F.col("__g").isNotNull()))
-    band = F.when(F.col("__g") < 1.0, F.lit(0)) \
-        .otherwise(F.floor(F.log2("__g")).cast("int"))
-    counts = (base.groupBy(band.alias("band"))
-              .agg(F.count(F.lit(1)).cast("bigint").alias("n")))
-    tot = counts.agg(F.sum("n").alias("__t"))
-    return (counts.crossJoin(F.broadcast(tot))
-            .select("band",
-                    F.when(F.col("band") == 0, F.lit(0))
-                     .otherwise(F.pow(F.lit(2.0), F.col("band")))
-                     .cast("bigint").alias("lo_s"),
-                    F.pow(F.lit(2.0), F.col("band") + 1).cast("bigint")
-                     .alias("hi_s"),
-                    "n",
-                    F.round(F.col("n") / F.col("__t").cast("double"), 6)
-                     .alias("share")))

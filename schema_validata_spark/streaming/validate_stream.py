@@ -481,32 +481,3 @@ def stream_ri_violations(stream_df: DataFrame, dim_df: DataFrame,
     picked up on file refresh."""
     return referential_violations(stream_df, [fk_col], dim_df, [dim_col])
 
-
-def stream_burst_alerts(stream_df: DataFrame, key_col: str,
-                        ts_col: str = "ts",
-                        window: str = "5 minutes",
-                        watermark: str = "10 minutes",
-                        threshold: int = 100) -> DataFrame:
-    """Streaming rate alarm: (window, key) pairs whose event count
-    reached ``threshold`` — the continuous twin of the batch
-    ``burst_stats`` screen (the retry storm alarms in the window it
-    happens). Tumbling windows rather than the batch op's sliding
-    RANGE frame: a storm that crosses a boundary still trips one of
-    the two windows at half intensity — size ``window`` at roughly
-    half the burst horizon you care about.
-
-    One stateful windowed aggregate (watermark-bounded), append-mode
-    emit of complete windows; NULL keys are excluded (they are not a
-    producer). Output: window_start, window_end, key, n_events."""
-    if threshold < 1:
-        raise ValueError("threshold must be >= 1")
-    return (stream_df
-            .where(F.col(key_col).isNotNull())
-            .withWatermark(ts_col, watermark)
-            .groupBy(F.window(F.col(ts_col), window).alias("w"),
-                     F.col(key_col).alias("key"))
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_events"))
-            .where(F.col("n_events") >= int(threshold))
-            .select(F.col("w.start").alias("window_start"),
-                    F.col("w.end").alias("window_end"),
-                    "key", "n_events"))

@@ -20,8 +20,7 @@ import duckdb  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
 
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents"]
+TABLES = ["customer", "orders", "lineitem", "events", "documents"]
 
 
 def norm_val(v):
@@ -42,10 +41,10 @@ def rows_to_multiset(colnames, rows):
 
 
 # sf0.1 STRESS SUBSET (VERDICT r4 #6): the heaviest oracle queries —
-# the text near-dup families (MinHash, SimHash, winnowing) and their
-# cluster/split consumers, funnel/sequence windows, snapshot/sketch
-# merges and the validation core — promoted from the sf0.01 battery
-# to a 10x-input run. `python scripts/check_oracle.py --stress` runs
+# the text near-dup families (MinHash, SimHash) and their
+# cluster/split consumers, conversation forks, snapshot/sketch merges
+# and the validation core — promoted from the sf0.01 battery to a
+# 10x-input run. `python scripts/check_oracle.py --stress` runs
 # exactly these at /root/testdata/sf0.1; runtimes are recorded in
 # BENCH/BASELINE.md. Every name must be a queries() entry (pinned by
 # tests/test_tooling_lists.py).
@@ -53,8 +52,7 @@ STRESS_QUERIES = [
     "dedup_near",
     "minhash_near_duplicates", "simhash_near_duplicates",
     "near_dup_clusters",
-    "dedup_keep_best", "near_dup_safe_split", "winnow_overlap_share",
-    "funnel_stats", "session_stats", "conversation_forks",
+    "dedup_keep_best", "near_dup_safe_split", "conversation_forks",
     "snapshot_diff", "quantile_sketch_merge", "validate_events",
     "composite_duplicates", "profile_stats",
 ]

@@ -14,6 +14,13 @@ the rules (default: the FIXTURES.md transcript rule table), writes the
 report artifacts and per-partition verdicts, and exits non-zero when
 validation failed — the shape of a production scheduled run. With
 --manifest the run is resumable: completed partitions are skipped.
+
+Exit codes, in both table and file mode: 0 = validation passed,
+2 = usage error (bad flags, an unreadable data dictionary, a column
+the table lacks), 3 = validation failed. Every check that needs only
+the arguments, and the rules / data dictionary load, run before the
+SparkSession starts; checks that need the table run right after it is
+read, before validation.
 """
 
 from __future__ import annotations
@@ -24,16 +31,81 @@ import os
 import sys
 
 
-def _first_dict_sheet(flag: str, path: str, sheets: dict):
+def _first_dict_sheet(ap, flag: str, path: str, sheets: dict):
     """The first qualifying sheet of ``Rules.from_xlsx(path)``; a
     usage exit when the workbook has none."""
     if not sheets:
         from schema_validata_spark.config import DATA_DICT_SCHEMA
-        raise SystemExit(
-            f"{flag}: {path} has no data-dictionary sheet (none has a "
-            f"field row under all of the DATA_DICT_SCHEMA columns "
-            f"{list(DATA_DICT_SCHEMA)})")
+        ap.error(f"{flag}: {path} has no data-dictionary sheet (none has "
+                 f"a field row under all of the DATA_DICT_SCHEMA columns "
+                 f"{list(DATA_DICT_SCHEMA)})")
     return next(iter(sheets))
+
+
+def _load_rules(ap, args):
+    """Table-mode rules from --rules-xlsx, --rules or the default
+    transcript table (stdlib file reads; no Spark)."""
+    from schema_validata_spark.rules import Rules
+    if args.rules_xlsx:
+        # 'SHEET:path' — treat the prefix as a sheet name only when the
+        # whole argument isn't itself a path: an existing file wins
+        # outright; otherwise a multi-char prefix whose remainder is not
+        # a URL ('s3://…', rest starts '//') or Windows drive path
+        # ('C:\dicts\dd.xlsx' — single-char prefix, rest starts '\') is
+        # a sheet. Dots are allowed (Excel permits 'My.Sheet'); a
+        # single-character sheet name needs the path to not exist and is
+        # otherwise read as a drive letter.
+        arg = args.rules_xlsx
+        sheet, path = "", arg
+        if not os.path.exists(arg):
+            head, sep, rest = arg.partition(":")
+            # Excel forbids '/', '\\' (and ':') in sheet names, so a
+            # prefix containing them is a path component, not a sheet
+            # ('data/v:2/dd.xlsx' must stay a plain path)
+            if sep and len(head) > 1 and not rest.startswith("//") \
+                    and not rest.startswith("\\") \
+                    and not any(ch in head for ch in "\\/"):
+                sheet, path = head, rest
+        try:
+            rules = Rules.from_xlsx(path, sheet=sheet or None)
+        except ValueError as e:
+            ap.error(f"--rules-xlsx: {e}")
+        if isinstance(rules, dict):  # no sheet given: take the first
+            rules = rules[_first_dict_sheet(ap, "--rules-xlsx", path, rules)]
+        return rules
+    if args.rules:
+        with open(args.rules) as f:
+            data = json.load(f)
+        # config shape ({"fields": {...}, "composite_unique": [...],
+        # "foreign_keys": [...], "conditional": [...]}) carries the
+        # engine extensions; a bare nested dict is per-field rules only
+        return (Rules.from_config(data) if "fields" in data
+                else Rules.from_nested_dict("JOB_RULES", data))
+    from schema_validata_spark.datagen import transcript_rules
+    return transcript_rules()
+
+
+def _load_budgets(ap, arg: str):
+    """``--budgets`` as ({(column, check): rate}, default rate)."""
+    try:
+        if os.path.exists(arg):
+            with open(arg) as f:
+                spec = json.load(f)
+        else:
+            spec = json.loads(arg)
+        if not isinstance(spec, dict):
+            raise ValueError("not a JSON object")
+        default = float(spec.pop("default", 0.0))
+        budgets = {}
+        for key, rate in spec.items():
+            col, sep, chk = key.partition(":")
+            if not sep:
+                raise ValueError(
+                    f"budget key {key!r} must be 'column:check'")
+            budgets[(col, chk)] = float(rate)
+    except (TypeError, ValueError) as e:
+        ap.error(f"--budgets: {e}")
+    return budgets, default
 
 
 def main(argv=None):
@@ -98,7 +170,7 @@ def main(argv=None):
                          "XLSX data dictionary via validate_files — "
                          "writes the reference-shaped "
                          "<name>_({uid}).json report to --out and "
-                         "exits 1 on any schema violation. Requires "
+                         "exits 3 on any schema violation. Requires "
                          "--data-dict; --transcripts is ignored.")
     ap.add_argument("--data-dict",
                     help="XLSX data dictionary path (file mode)")
@@ -109,6 +181,39 @@ def main(argv=None):
                          "file's base name (a workbook's first sheet) "
                          "to the dictionary's first qualifying sheet")
     args = ap.parse_args(argv)
+
+    if args.dataset_file:
+        if not args.data_dict:
+            ap.error("--dataset-file requires --data-dict")
+    elif not args.transcripts:
+        ap.error("--transcripts is required (table mode), or "
+                 "pass --dataset-file/--data-dict (file mode)")
+    if args.mask_cols and not args.partition_col:
+        ap.error("--mask-cols requires --partition-col")
+    if args.budgets and not args.partition_col:
+        ap.error("--budgets requires --partition-col")
+    budgets = _load_budgets(ap, args.budgets) if args.budgets else None
+
+    if args.dataset_file:
+        from schema_validata_spark.rules import Rules
+        if args.schema_mapping:
+            try:
+                mapping = json.loads(args.schema_mapping)
+            except ValueError as e:
+                ap.error(f"--schema-mapping: {e}")
+        else:
+            # validate_files keys datasets like the file metadata: a
+            # CSV by its base name, a workbook by its sheet names — so
+            # the default maps the first of those keys
+            from schema_validata_spark.sources.tableio import \
+                get_spreadsheet_metadata
+            base = next(iter(get_spreadsheet_metadata(args.dataset_file)))
+            sheets = Rules.from_xlsx(args.data_dict)
+            mapping = [{"dataset": base,
+                        "data_dict": _first_dict_sheet(
+                            ap, "--data-dict", args.data_dict, sheets)}]
+    else:
+        rules = _load_rules(ap, args)
 
     from pyspark.sql import SparkSession
     # When invoked programmatically (tests, notebooks) an active
@@ -123,27 +228,7 @@ def main(argv=None):
             spark.stop()
 
     if args.dataset_file:
-        if not args.data_dict:
-            raise SystemExit("--dataset-file requires --data-dict")
-    elif not args.transcripts:
-        raise SystemExit("--transcripts is required (table mode), or "
-                         "pass --dataset-file/--data-dict (file mode)")
-    if args.dataset_file:
-        from schema_validata_spark.rules import Rules
         from schema_validata_spark.validate import validate_files
-        if args.schema_mapping:
-            mapping = json.loads(args.schema_mapping)
-        else:
-            # validate_files keys datasets like the file metadata: a
-            # CSV by its base name, a workbook by its sheet names — so
-            # the default maps the first of those keys
-            from schema_validata_spark.sources.tableio import \
-                get_spreadsheet_metadata
-            base = next(iter(get_spreadsheet_metadata(args.dataset_file)))
-            sheets = Rules.from_xlsx(args.data_dict)
-            mapping = [{"dataset": base,
-                        "data_dict": _first_dict_sheet(
-                            "--data-dict", args.data_dict, sheets)}]
         report = validate_files(spark, args.dataset_file,
                                 args.data_dict, mapping,
                                 out_dir=args.out, out_name=args.name)
@@ -154,56 +239,24 @@ def main(argv=None):
         print(f"file-mode report written for uid {uid}; "
               f"{'FAIL' if failed else 'PASS'}")
         _stop()
-        sys.exit(1 if failed else 0)
+        sys.exit(3 if failed else 0)
 
-    from schema_validata_spark.datagen import transcript_rules
     from schema_validata_spark.report import write_report
-    from schema_validata_spark.rules import Rules
     from schema_validata_spark.validate import (validate,
                                                 validate_partitioned)
 
     df = spark.read.parquet(args.transcripts)
+    problem = None
     if args.partition_col and args.partition_col not in df.columns:
-        raise SystemExit(f"partition col {args.partition_col} not in table")
+        problem = f"partition col {args.partition_col} not in table"
+    elif args.trend_screens and "ts" not in df.columns:
+        problem = "--trend-screens requires a 'ts' column"
+    if problem:
+        _stop()
+        ap.error(problem)
     dims = {}
     if args.conversations:
         dims["conversations"] = spark.read.parquet(args.conversations)
-    if args.rules_xlsx:
-        # 'SHEET:path' — treat the prefix as a sheet name only when the
-        # whole argument isn't itself a path: an existing file wins
-        # outright; otherwise a multi-char prefix whose remainder is not
-        # a URL ('s3://…', rest starts '//') or Windows drive path
-        # ('C:\dicts\dd.xlsx' — single-char prefix, rest starts '\') is
-        # a sheet. Dots are allowed (Excel permits 'My.Sheet'); a
-        # single-character sheet name needs the path to not exist and is
-        # otherwise read as a drive letter.
-        arg = args.rules_xlsx
-        sheet, path = "", arg
-        if not os.path.exists(arg):
-            head, sep, rest = arg.partition(":")
-            # Excel forbids '/', '\\' (and ':') in sheet names, so a
-            # prefix containing them is a path component, not a sheet
-            # ('data/v:2/dd.xlsx' must stay a plain path)
-            if sep and len(head) > 1 and not rest.startswith("//") \
-                    and not rest.startswith("\\") \
-                    and not any(ch in head for ch in "\\/"):
-                sheet, path = head, rest
-        try:
-            rules = Rules.from_xlsx(path, sheet=sheet or None)
-        except ValueError as e:
-            raise SystemExit(f"--rules-xlsx: {e}") from None
-        if isinstance(rules, dict):  # no sheet given: take the first
-            rules = rules[_first_dict_sheet("--rules-xlsx", path, rules)]
-    elif args.rules:
-        with open(args.rules) as f:
-            data = json.load(f)
-        # config shape ({"fields": {...}, "composite_unique": [...],
-        # "foreign_keys": [...], "conditional": [...]}) carries the
-        # engine extensions; a bare nested dict is per-field rules only
-        rules = (Rules.from_config(data) if "fields" in data
-                 else Rules.from_nested_dict("JOB_RULES", data))
-    else:
-        rules = transcript_rules()
 
     work = df.drop("ts_date") if (args.partition_col != "ts_date"
                                   and "ts_date" in df.columns) else df
@@ -229,8 +282,6 @@ def main(argv=None):
             f"{args.out}/{args.name}_partition_verdicts.parquet")
 
     if args.mask_cols:
-        if not args.partition_col:
-            raise SystemExit("--mask-cols requires --partition-col")
         from schema_validata_spark.operators.expectations import \
             mask_stability
         mcols = [c.strip() for c in args.mask_cols.split(",") if c.strip()]
@@ -239,8 +290,6 @@ def main(argv=None):
             f"{args.out}/{args.name}_mask_stability.parquet")
 
     if args.trend_screens:
-        if "ts" not in df.columns:
-            raise SystemExit("--trend-screens requires a 'ts' column")
         from schema_validata_spark.operators.expectations import (
             completeness_trend, monotone_trend_check)
         from schema_validata_spark.operators.uniqueness import dup_trend
@@ -258,24 +307,12 @@ def main(argv=None):
                 f"{args.out}/{args.name}_monotone_trend.parquet")
 
     budget_gate = None
-    if args.budgets:
-        if not args.partition_col:
-            raise SystemExit("--budgets requires --partition-col")
+    if budgets is not None:
         from pyspark.sql import functions as F
         from schema_validata_spark.validate import partition_rate_verdicts
-        spec = (json.load(open(args.budgets))
-                if os.path.exists(args.budgets)
-                else json.loads(args.budgets))
-        default = float(spec.pop("default", 0.0))
-        budgets = {}
-        for key, rate in spec.items():
-            col, sep, chk = key.partition(":")
-            if not sep:
-                raise SystemExit(
-                    f"budget key {key!r} must be 'column:check'")
-            budgets[(col, chk)] = float(rate)
+        rates, default = budgets
         prv = partition_rate_verdicts(df, rules, args.partition_col,
-                                      budgets, dims=dims,
+                                      rates, dims=dims,
                                       default_budget=default)
         prv_path = f"{args.out}/{args.name}_partition_rate_verdicts.parquet"
         prv.write.mode("overwrite").parquet(prv_path)

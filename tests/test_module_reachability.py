@@ -33,8 +33,7 @@ KEEP = {
 
 REGISTRY_ONLY = {f"{PKG}.{m}" for m in (
     "operators.statqa", "operators.selection", "operators.sequence",
-    "operators.dedup", "operators.winnow", "operators.semistructured",
-    "functions.sampling")}
+    "operators.dedup", "operators.semistructured", "functions.sampling")}
 
 
 def _modules() -> dict[str, Path]:

@@ -1,7 +1,6 @@
-"""Property-based tests for the round-3 time-series family: burst_stats,
-rolling_active_users, scd2_history, interarrival_stats — randomized
-tiny frames re-checked against plain-Python oracles (the strategy of
-test_property_joins). Edge focus: ties, empty windows, single events,
+"""Property-based test for the round-3 ``scd2_history`` operator —
+randomized tiny frames re-checked against a plain-Python oracle (the
+strategy of test_property_joins). Edge focus: single events and
 NULL-safe change collapse."""
 
 from __future__ import annotations
@@ -10,64 +9,15 @@ import datetime as dt
 from collections import defaultdict
 
 from hypothesis import HealthCheck, given, settings, strategies as st
-from pyspark.sql import functions as F
 
 from schema_validata_spark.operators.selection import scd2_history
-from schema_validata_spark.operators.sequence import (
-    burst_stats, interarrival_stats, rolling_active_users)
 
 BASE = dt.datetime(2024, 1, 1)
 KEYS = st.integers(0, 2)
-SECS = st.integers(0, 120)
 
 
 def _ts(seconds):
     return BASE + dt.timedelta(seconds=seconds)
-
-
-@settings(max_examples=12, deadline=None,
-          suppress_health_check=list(HealthCheck))
-@given(rows=st.lists(st.tuples(KEYS, SECS), min_size=1, max_size=30),
-       window=st.integers(1, 40), thr=st.integers(1, 5))
-def test_burst_stats_matches_python(spark, rows, window, thr):
-    df = spark.createDataFrame(
-        [(f"k{k}", _ts(s)) for k, s in rows], "u string, ts timestamp")
-    got = {r["u"]: r for r in burst_stats(
-        df, "u", "ts", window, thr).collect()}
-    per = defaultdict(list)
-    for k, s in rows:
-        per[f"k{k}"].append(s)
-    for key, secs in per.items():
-        secs.sort()
-        counts = [sum(1 for x in secs if t - window <= x <= t)
-                  for t in secs]
-        r = got[key]
-        assert r["n_events"] == len(secs)
-        assert r["peak_window_count"] == max(counts)
-        assert r["n_over"] == sum(1 for c in counts if c >= thr)
-
-
-@settings(max_examples=10, deadline=None,
-          suppress_health_check=list(HealthCheck))
-@given(rows=st.lists(st.tuples(KEYS, st.integers(0, 12)),
-                     min_size=1, max_size=30),
-       window=st.integers(1, 5))
-def test_rolling_actives_matches_python(spark, rows, window):
-    df = spark.createDataFrame(
-        [(f"u{k}", _ts(d * 86400)) for k, d in rows],
-        "u string, ts timestamp")
-    got = {r["bucket"]: r for r in rolling_active_users(
-        df, "u", "ts", window).collect()}
-    act = {(f"u{k}", d) for k, d in rows}
-    days = sorted({d for _, d in act})
-    for d in days:
-        day_users = {u for u, dd in act if dd == d}
-        win_users = {u for u, dd in act if d - window + 1 <= dd <= d}
-        b = (BASE + dt.timedelta(days=d)).strftime("%Y-%m-%d")
-        assert got[b]["n_active_day"] == len(day_users)
-        assert got[b]["n_active_window"] == len(win_users)
-    assert set(got) == {(BASE + dt.timedelta(days=d)).strftime("%Y-%m-%d")
-                        for d in days}
 
 
 @settings(max_examples=12, deadline=None,
@@ -104,27 +54,3 @@ def test_scd2_intervals_partition_timeline(spark, rows):
                        if iv["valid_from"] <= t
                        and (iv["valid_to"] is None or t < iv["valid_to"])]
             assert len(holding) == 1 and holding[0]["v"] == v
-
-
-@settings(max_examples=10, deadline=None,
-          suppress_health_check=list(HealthCheck))
-@given(rows=st.lists(st.tuples(KEYS, SECS), min_size=1, max_size=25))
-def test_interarrival_matches_python(spark, rows):
-    df = spark.createDataFrame(
-        [(f"k{k}", _ts(s)) for k, s in rows], "u string, ts timestamp")
-    got = {r["u"]: r for r in interarrival_stats(
-        df, "u", "ts").collect()}
-    per = defaultdict(list)
-    for k, s in rows:
-        per[f"k{k}"].append(s)
-    for key, secs in per.items():
-        secs.sort()
-        gaps = [b - a for a, b in zip(secs, secs[1:])]
-        r = got[key]
-        assert r["n_gaps"] == len(gaps)
-        if gaps:
-            assert abs(r["mean_gap_s"]
-                       - round(sum(gaps) / len(gaps), 6)) < 1e-9
-            assert r["max_gap_s"] == float(max(gaps))
-        else:
-            assert r["mean_gap_s"] is None

@@ -1,19 +1,10 @@
-"""Round-3ee: sampling bias audit, time-weighted averages."""
+"""Round-3ee: sampling bias audit."""
 
 from __future__ import annotations
 
-import datetime
 import math
 
-import pytest
-from pyspark.sql import functions as F
-
 from schema_validata_spark.functions.sampling import sample_bias_check
-from schema_validata_spark.operators.sequence import time_weighted_avg
-
-
-def _ts(s):
-    return datetime.datetime.fromisoformat(s)
 
 
 # ---------------------------------------------------- sample_bias_check
@@ -53,44 +44,3 @@ def test_bias_check_unbiased_not_flagged(spark):
     got = sample_bias_check(sample, corpus, "g").collect()
     assert all(not r["flagged"] for r in got)
     assert all(r["z"] == 0.0 for r in got)
-
-
-# ----------------------------------------------------- time_weighted_avg
-
-def _gauge(spark, rows):
-    return spark.createDataFrame(rows, "k string, ts timestamp, v double")
-
-
-def test_twa_hand_case(spark):
-    b = _ts("2024-01-01T00:00:00")
-    s = lambda x: b + datetime.timedelta(seconds=x)
-    # value 10 holds 10s, value 0 holds 90s -> TWA = 1.0; avg = 5.0
-    rows = [("k1", s(0), 10.0), ("k1", s(10), 0.0), ("k1", s(100), 7.0)]
-    r = time_weighted_avg(_gauge(spark, rows), "k", "ts", "v") \
-        .collect()[0]
-    assert r["n_obs"] == 3 and r["span_s"] == 100.0
-    assert abs(r["twa"] - 1.0) < 1e-9
-    assert abs(r["plain_avg"] - round(17 / 3, 6)) < 1e-9
-
-
-def test_twa_constant_equals_avg_and_degenerates(spark):
-    b = _ts("2024-01-01T00:00:00")
-    s = lambda x: b + datetime.timedelta(seconds=x)
-    rows = [("c", s(0), 5.0), ("c", s(7), 5.0), ("c", s(100), 5.0),
-            ("single", s(0), 9.0),
-            ("zerospan", s(0), 1.0), ("zerospan", s(0), 3.0)]
-    got = {r["k"]: r for r in time_weighted_avg(
-        _gauge(spark, rows), "k", "ts", "v").collect()}
-    assert got["c"]["twa"] == 5.0 == got["c"]["plain_avg"]
-    assert got["single"]["twa"] is None
-    assert got["zerospan"]["twa"] is None
-    assert got["single"]["plain_avg"] == 9.0
-
-
-def test_twa_null_exclusions(spark):
-    rows = [("k", None, 1.0), ("k", _ts("2024-01-01T00:00"), None),
-            (None, _ts("2024-01-01T00:00"), 1.0),
-            ("k", _ts("2024-01-01T00:00"), 2.0)]
-    got = time_weighted_avg(_gauge(spark, rows), "k", "ts", "v") \
-        .collect()
-    assert len(got) == 1 and got[0]["n_obs"] == 1

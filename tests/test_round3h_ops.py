@@ -1,16 +1,12 @@
 """Round-3h operators: latest-per-key snapshot compaction, pairwise
-co-occurrence lift/PMI, ordered conversion funnel."""
+co-occurrence lift/PMI."""
 
 from __future__ import annotations
 
 import datetime
 import math
 
-import pytest
-from pyspark.sql import functions as F
-
 from schema_validata_spark.operators.selection import latest_per_key
-from schema_validata_spark.operators.sequence import funnel_stats
 from schema_validata_spark.operators.statqa import pairwise_lift
 
 
@@ -104,71 +100,3 @@ def test_lift_min_pairs_prunes(spark):
                          ("g2", "C")])
     got = pairwise_lift(df, "g", "v", min_pairs=2).collect()
     assert got == []
-
-
-# ----------------------------------------------------- funnel_stats
-
-def _ev(spark, rows):
-    return spark.createDataFrame(rows, "g string, ts timestamp, s string")
-
-
-def test_funnel_in_order_counts(spark):
-    rows = [
-        # g1 completes A->B->C
-        ("g1", _ts("2024-01-01T00:00"), "A"),
-        ("g1", _ts("2024-01-01T01:00"), "B"),
-        ("g1", _ts("2024-01-01T02:00"), "C"),
-        # g2 reaches B only
-        ("g2", _ts("2024-01-01T00:00"), "A"),
-        ("g2", _ts("2024-01-01T01:00"), "B"),
-        # g3 out of order: B before A, never B again -> depth 1
-        ("g3", _ts("2024-01-01T00:00"), "B"),
-        ("g3", _ts("2024-01-01T01:00"), "A"),
-        # g4 only C -> depth 0
-        ("g4", _ts("2024-01-01T00:00"), "C"),
-    ]
-    got = {r["step_idx"]: r
-           for r in funnel_stats(_ev(spark, rows), "g", "ts", "s",
-                                 ["A", "B", "C"]).collect()}
-    assert [got[i]["n_reached"] for i in (1, 2, 3)] == [3, 2, 1]
-    assert got[1]["n_groups"] == 4
-    assert abs(got[1]["share_prev"] - 0.75) < 1e-9   # 3/4 entered
-    assert abs(got[2]["share_prev"] - round(2 / 3, 6)) < 1e-9
-    assert abs(got[3]["share_first"] - round(1 / 3, 6)) < 1e-9
-
-
-def test_funnel_same_instant_progression_and_reorder(spark):
-    t = _ts("2024-01-01T00:00")
-    rows = [("g1", t, "A"), ("g1", t, "B"),           # same-ts A->B ok
-            ("g2", t, "B"), ("g2", t, "A"),           # same rows, any order
-            ("g3", _ts("2024-01-01T01:00"), "A"),
-            ("g3", t, "B")]                           # B strictly before A
-    got = {r["step_idx"]: r["n_reached"]
-           for r in funnel_stats(_ev(spark, rows), "g", "ts", "s",
-                                 ["A", "B"]).collect()}
-    assert got == {1: 3, 2: 2}
-
-
-def test_funnel_ignores_other_steps_and_nulls(spark):
-    rows = [("g1", _ts("2024-01-01T00:00"), "A"),
-            ("g1", _ts("2024-01-01T00:30"), "X"),
-            ("g1", _ts("2024-01-01T01:00"), "B"),
-            ("g1", None, "B"),
-            (None, _ts("2024-01-01T00:00"), "A")]
-    got = {r["step_idx"]: r
-           for r in funnel_stats(_ev(spark, rows), "g", "ts", "s",
-                                 ["A", "B"]).collect()}
-    assert got[1]["n_groups"] == 1
-    assert [got[i]["n_reached"] for i in (1, 2)] == [1, 1]
-
-
-def test_funnel_empty_input_zero_rows_per_step(spark):
-    df = _ev(spark, []).where(F.lit(False))
-    got = funnel_stats(df, "g", "ts", "s", ["A", "B"]).collect()
-    assert sorted((r["step_idx"], r["n_reached"], r["share_prev"])
-                  for r in got) == [(1, 0, None), (2, 0, None)]
-
-
-def test_funnel_rejects_dup_steps(spark):
-    with pytest.raises(ValueError):
-        funnel_stats(_ev(spark, []), "g", "ts", "s", ["A", "A"])

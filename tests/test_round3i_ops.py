@@ -1,115 +1,10 @@
-"""Round-3i operators: cohort retention matrix, inter-arrival gap /
-burstiness stats, Zipf-law fit."""
+"""Round-3i operators: Zipf-law fit."""
 
 from __future__ import annotations
 
-import datetime
 import math
 
-import pytest
-from pyspark.sql import functions as F
-
-from schema_validata_spark.operators.sequence import (cohort_retention,
-                                                      interarrival_stats)
 from schema_validata_spark.operators.statqa import zipf_fit
-
-
-def _ts(s):
-    return datetime.datetime.fromisoformat(s)
-
-
-# -------------------------------------------------- cohort_retention
-
-def _ev(spark, rows):
-    return spark.createDataFrame(rows, "u string, ts timestamp")
-
-
-def test_cohort_hand_case_weekly(spark):
-    rows = [("u1", _ts("2024-01-01T10:00")),   # cohort 01-01, k0
-            ("u1", _ts("2024-01-09T00:00")),   # day 8 -> k1
-            ("u2", _ts("2024-01-01T23:00")),   # cohort 01-01, k0 only
-            ("u3", _ts("2024-01-08T00:00"))]   # cohort 01-08, k0
-    got = {(r["cohort"], r["period_k"]): (r["n_active"], r["cohort_size"],
-                                          r["retention"])
-           for r in cohort_retention(_ev(spark, rows), "u", "ts").collect()}
-    assert got[("2024-01-01", 0)] == (2, 2, 1.0)
-    assert got[("2024-01-01", 1)] == (1, 2, 0.5)
-    assert got[("2024-01-08", 0)] == (1, 1, 1.0)
-    assert len(got) == 3
-
-
-def test_cohort_intraday_dups_collapse_and_nulls_excluded(spark):
-    rows = [("u1", _ts("2024-01-01T00:00")),
-            ("u1", _ts("2024-01-01T09:00")),   # same day, same user
-            (None, _ts("2024-01-01T00:00")),
-            ("u2", None)]
-    got = cohort_retention(_ev(spark, rows), "u", "ts").collect()
-    assert len(got) == 1
-    assert (got[0]["n_active"], got[0]["cohort_size"]) == (1, 1)
-
-
-def test_cohort_daily_periods(spark):
-    rows = [("u1", _ts("2024-01-01T00:00")),
-            ("u1", _ts("2024-01-03T00:00"))]
-    got = {r["period_k"]: r["n_active"]
-           for r in cohort_retention(_ev(spark, rows), "u", "ts",
-                                     period_days=1).collect()}
-    assert got == {0: 1, 2: 1}
-
-
-def test_cohort_rejects_bad_period(spark):
-    with pytest.raises(ValueError):
-        cohort_retention(_ev(spark, []), "u", "ts", period_days=0)
-
-
-# ------------------------------------------------ interarrival_stats
-
-def test_interarrival_hand_case(spark):
-    rows = [("u1", _ts("2024-01-01T00:00:00")),
-            ("u1", _ts("2024-01-01T00:00:10")),
-            ("u1", _ts("2024-01-01T00:00:30"))]
-    r = interarrival_stats(_ev(spark, rows), "u", "ts").collect()[0]
-    assert (r["n_events"], r["n_gaps"]) == (3, 2)
-    assert abs(r["mean_gap_s"] - 15.0) < 1e-9
-    std = math.sqrt(50.0)                       # sample std of [10, 20]
-    assert abs(r["std_gap_s"] - round(std, 6)) < 1e-9
-    assert r["max_gap_s"] == 20.0
-    assert abs(r["cv"] - round(std / 15.0, 6)) < 1e-9
-    assert abs(r["burstiness"]
-               - round((std - 15.0) / (std + 15.0), 6)) < 1e-9
-
-
-def test_interarrival_degenerate_counts(spark):
-    rows = [("single", _ts("2024-01-01T00:00")),
-            ("pair", _ts("2024-01-01T00:00")),
-            ("pair", _ts("2024-01-01T00:01")),
-            ("tie", _ts("2024-01-01T00:00")),
-            ("tie", _ts("2024-01-01T00:00")),
-            ("nullts", None)]
-    got = {r["u"]: r for r in interarrival_stats(
-        _ev(spark, rows), "u", "ts").collect()}
-    s = got["single"]
-    assert (s["n_gaps"], s["mean_gap_s"], s["std_gap_s"], s["cv"]) \
-        == (0, None, None, None)
-    p = got["pair"]
-    assert (p["n_gaps"], p["mean_gap_s"], p["std_gap_s"]) \
-        == (1, 60.0, None)
-    t = got["tie"]
-    assert (t["n_gaps"], t["mean_gap_s"], t["max_gap_s"]) == (1, 0.0, 0.0)
-    assert "nullts" not in got
-
-
-def test_interarrival_periodic_vs_bursty(spark):
-    periodic = [("p", _ts("2024-01-01T00:00") +
-                 datetime.timedelta(seconds=10 * i)) for i in range(20)]
-    bursty = ([("b", _ts("2024-01-01T00:00") +
-                datetime.timedelta(milliseconds=i)) for i in range(19)]
-              + [("b", _ts("2024-01-02T00:00"))])
-    got = {r["u"]: r["burstiness"] for r in interarrival_stats(
-        _ev(spark, periodic + bursty), "u", "ts").collect()}
-    assert got["p"] == -1.0          # zero variance heartbeat
-    # one dominant gap among n caps B at (sqrt(n)-1)/(sqrt(n)+1) ~ 0.63
-    assert got["b"] > 0.5
 
 
 # ------------------------------------------------------------ zipf_fit
@@ -173,17 +68,6 @@ def _plan(df) -> str:
     return buf.getvalue()
 
 
-def test_interarrival_single_exchange(spark):
-    """interarrival_stats = ONE exchange on the key: the lag window's
-    hashpartitioning is reused by the per-key aggregate, so raw rows
-    shuffle exactly once."""
-    rows = [("u%d" % (i % 5), _ts("2024-01-01T00:00") +
-             datetime.timedelta(seconds=i)) for i in range(50)]
-    plan = _plan(interarrival_stats(_ev(spark, rows), "u", "ts"))
-    assert plan.count("Arguments: hashpartitioning") == 1, plan
-    assert "BroadcastNestedLoop" not in plan
-
-
 def test_zipf_two_exchanges_no_raw_text_shuffle(spark):
     """zipf_fit = wordcount exchange on (group, token) + the rank
     window's exchange on group; the final moments aggregate reuses the
@@ -195,15 +79,3 @@ def test_zipf_two_exchanges_no_raw_text_shuffle(spark):
     assert plan.count("Arguments: hashpartitioning") == 2, plan
     assert "BroadcastNestedLoop" not in plan
     assert "CartesianProduct" not in plan
-
-
-def test_cohort_no_nested_loop_and_reduced_joins(spark):
-    """cohort_retention's joins run on the distinct (user, day) /
-    (cohort, period) reductions — never a nested-loop or cartesian
-    plan, and no global sort of row data."""
-    rows = [("u%d" % (i % 7), _ts("2024-01-01T00:00") +
-             datetime.timedelta(days=i % 20)) for i in range(100)]
-    plan = _plan(cohort_retention(_ev(spark, rows), "u", "ts"))
-    assert "BroadcastNestedLoop" not in plan
-    assert "CartesianProduct" not in plan
-    assert "Exchange rangepartitioning" not in plan, plan

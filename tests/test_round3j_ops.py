@@ -1,76 +1,15 @@
-"""Round-3j operators: sliding-window burst stats, Wilson-interval
-rates, quantized shape moments (skewness/kurtosis)."""
+"""Round-3j operators: Wilson-interval rates, quantized shape moments
+(skewness/kurtosis)."""
 
 from __future__ import annotations
 
-import datetime
 import math
 
 import pytest
 from pyspark.sql import functions as F
 
-from schema_validata_spark.operators.sequence import burst_stats
 from schema_validata_spark.operators.statqa import (moment_stats,
                                                     wilson_rates)
-
-
-def _ts(s):
-    return datetime.datetime.fromisoformat(s)
-
-
-def _ev(spark, rows):
-    return spark.createDataFrame(rows, "u string, ts timestamp")
-
-
-# --------------------------------------------------------- burst_stats
-
-def test_burst_hand_case(spark):
-    base = _ts("2024-01-01T00:00:00")
-    rows = ([("u1", base + datetime.timedelta(seconds=s))
-             for s in (0, 1, 2, 100, 101)]          # burst of 3, then 2
-            + [("u2", base), ("u2", base + datetime.timedelta(hours=1))])
-    got = {r["u"]: r for r in burst_stats(
-        _ev(spark, rows), "u", "ts", window_s=10, threshold=3).collect()}
-    u1 = got["u1"]
-    assert (u1["n_events"], u1["peak_window_count"]) == (5, 3)
-    assert (u1["n_over"], u1["over_limit"]) == (1, True)
-    u2 = got["u2"]
-    assert (u2["peak_window_count"], u2["over_limit"]) == (1, False)
-
-
-def test_burst_window_inclusive_and_ties(spark):
-    base = _ts("2024-01-01T00:00:00")
-    rows = [("u1", base), ("u1", base),                       # tie
-            ("u1", base + datetime.timedelta(seconds=10))]    # exactly W
-    r = burst_stats(_ev(spark, rows), "u", "ts",
-                    window_s=10, threshold=3).collect()[0]
-    # the t=10 event sees both t=0 ties (inclusive bound) -> window of 3
-    assert r["peak_window_count"] == 3 and r["n_over"] == 1
-
-
-def test_burst_nulls_excluded_and_validation(spark):
-    rows = [(None, _ts("2024-01-01T00:00")), ("u1", None),
-            ("u1", _ts("2024-01-01T00:00"))]
-    got = burst_stats(_ev(spark, rows), "u", "ts", 60, 2).collect()
-    assert len(got) == 1 and got[0]["n_events"] == 1
-    with pytest.raises(ValueError):
-        burst_stats(_ev(spark, []), "u", "ts", 0, 2)
-    with pytest.raises(ValueError):
-        burst_stats(_ev(spark, []), "u", "ts", 60, 0)
-
-
-def test_burst_single_exchange_plan(spark):
-    """Window + per-key agg share ONE hashpartitioning exchange."""
-    import io
-    import contextlib
-    rows = [("u%d" % (i % 3), _ts("2024-01-01T00:00")
-             + datetime.timedelta(seconds=i)) for i in range(30)]
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        burst_stats(_ev(spark, rows), "u", "ts", 10, 3) \
-            .explain("formatted")
-    plan = buf.getvalue()
-    assert plan.count("Arguments: hashpartitioning") == 1, plan
 
 
 # -------------------------------------------------------- wilson_rates

@@ -1,5 +1,5 @@
-"""Round-3k: funnel time-to-convert latencies, per-bucket completeness
-trend, bucketed-table zero-shuffle joins."""
+"""Round-3k: per-bucket completeness trend, bucketed-table
+zero-shuffle joins."""
 
 from __future__ import annotations
 
@@ -12,7 +12,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from schema_validata_spark.operators.expectations import completeness_trend
-from schema_validata_spark.operators.sequence import funnel_latency
 from schema_validata_spark.sources.tableio import (bucketed_join,
                                                    write_bucketed)
 
@@ -26,54 +25,6 @@ def _plan(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
-
-
-# ------------------------------------------------------ funnel_latency
-
-STEPS = ["view", "click", "purchase"]
-
-
-def _fev(spark, rows):
-    return spark.createDataFrame(rows, "u string, ts timestamp, s string")
-
-
-def test_funnel_latency_hand_case(spark):
-    b = _ts("2024-01-01T00:00:00")
-    sec = lambda s: b + datetime.timedelta(seconds=s)
-    rows = [("u1", sec(0), "view"), ("u1", sec(10), "click"),
-            ("u1", sec(70), "purchase"),
-            # u2 skips click: purchase can't count in-order
-            ("u2", sec(0), "view"), ("u2", sec(5), "purchase"),
-            ("u3", sec(0), "view"), ("u3", sec(30), "click")]
-    got = {r["step_idx"]: r for r in funnel_latency(
-        _fev(spark, rows), "u", "ts", "s", STEPS).collect()}
-    k2 = got[2]
-    assert (k2["from_step"], k2["step"], k2["n_converted"]) \
-        == ("view", "click", 2)
-    assert k2["mean_s"] == 20.0 and k2["p50_s"] == 20.0
-    assert abs(k2["p95_s"] - 29.0) < 1e-9        # 10 + 0.95*(30-10)
-    assert k2["max_s"] == 30.0
-    k3 = got[3]
-    assert (k3["n_converted"], k3["mean_s"], k3["max_s"]) == (1, 60.0, 60.0)
-    assert set(got) == {2, 3}
-
-
-def test_funnel_latency_same_instant_and_validation(spark):
-    b = _ts("2024-01-01T00:00:00")
-    rows = [("u1", b, "view"), ("u1", b, "click")]   # same-instant hop
-    got = funnel_latency(_fev(spark, rows), "u", "ts", "s",
-                         STEPS).collect()
-    assert len(got) == 1 and got[0]["mean_s"] == 0.0
-    with pytest.raises(ValueError):
-        funnel_latency(_fev(spark, []), "u", "ts", "s", ["only"])
-    with pytest.raises(ValueError):
-        funnel_latency(_fev(spark, []), "u", "ts", "s", ["a", "a"])
-
-
-def test_funnel_latency_unreached_steps_absent(spark):
-    rows = [("u1", _ts("2024-01-01T00:00"), "view")]
-    assert funnel_latency(_fev(spark, rows), "u", "ts", "s",
-                          STEPS).count() == 0
 
 
 # -------------------------------------------------- completeness_trend

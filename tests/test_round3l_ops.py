@@ -1,20 +1,12 @@
-"""Round-3l: Welch's t per slice, robust MAD location screen, daily
-new-vs-returning user mix."""
+"""Round-3l: Welch's t per slice, robust MAD location screen."""
 
 from __future__ import annotations
 
-import datetime
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
-from schema_validata_spark.operators.sequence import user_mix
 from schema_validata_spark.operators.statqa import mad_location, welch_t
-
-
-def _ts(s):
-    return datetime.datetime.fromisoformat(s)
 
 
 def _vals(spark, rows):
@@ -120,47 +112,3 @@ def test_mad_outlier_insensitive_vs_welch(spark):
     m = {r["group"]: r for r in mad_location(df, "v", "g").collect()}
     assert w["dirty"]["significant"]          # mean dragged by sentinels
     assert not m["dirty"]["flagged"]          # median barely moves
-
-
-# ------------------------------------------------------------ user_mix
-
-def _ev(spark, rows):
-    return spark.createDataFrame(rows, "u string, ts timestamp")
-
-
-def test_user_mix_hand_case(spark):
-    rows = [("u1", _ts("2024-01-01T10:00")),
-            ("u2", _ts("2024-01-01T11:00")),
-            ("u1", _ts("2024-01-02T09:00")),   # returning
-            ("u3", _ts("2024-01-02T09:30")),   # new
-            ("u1", _ts("2024-01-02T23:00"))]   # same-day dup collapses
-    got = {r["bucket"]: r for r in user_mix(
-        _ev(spark, rows), "u", "ts").collect()}
-    d1, d2 = got["2024-01-01"], got["2024-01-02"]
-    assert (d1["n_active"], d1["n_new"], d1["n_returning"]) == (2, 2, 0)
-    assert d1["share_new"] == 1.0
-    assert (d2["n_active"], d2["n_new"], d2["n_returning"]) == (2, 1, 1)
-    assert d2["share_new"] == 0.5
-
-
-def test_user_mix_nulls_excluded(spark):
-    rows = [(None, _ts("2024-01-01T00:00")), ("u1", None),
-            ("u1", _ts("2024-01-01T05:00"))]
-    got = user_mix(_ev(spark, rows), "u", "ts").collect()
-    assert len(got) == 1 and got[0]["n_active"] == 1
-
-
-def test_user_mix_consistent_with_cohort(spark):
-    """n_new per day == cohort size of that day's cohort."""
-    from schema_validata_spark.operators.sequence import cohort_retention
-    rows = [("u%d" % (i % 9),
-             _ts("2024-01-01T00:00") + datetime.timedelta(
-                 days=(i * 3) % 11, hours=i % 5)) for i in range(60)]
-    df = _ev(spark, rows)
-    mix = {r["bucket"]: r["n_new"]
-           for r in user_mix(df, "u", "ts").collect()}
-    coh = {r["cohort"]: r["cohort_size"]
-           for r in cohort_retention(df, "u", "ts",
-                                     period_days=1).collect()
-           if r["period_k"] == 0}
-    assert coh == {k: v for k, v in mix.items() if v > 0}

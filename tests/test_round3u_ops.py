@@ -1,20 +1,10 @@
-"""Round-3u: contingency-cell residual drill-down, rolling distinct
-active users."""
+"""Round-3u: contingency-cell residual drill-down."""
 
 from __future__ import annotations
 
-import datetime
 import math
 
-import pytest
-from pyspark.sql import functions as F
-
-from schema_validata_spark.operators.sequence import rolling_active_users
 from schema_validata_spark.operators.statqa import crosstab_residuals
-
-
-def _ts(s):
-    return datetime.datetime.fromisoformat(s)
 
 
 # --------------------------------------------------- crosstab_residuals
@@ -54,43 +44,3 @@ def test_crosstab_nulls_excluded(spark):
     assert len(got) == 1 and got[0]["n"] == 1
     # single-cell table: den = 0 -> residual NULL, not flagged
     assert got[0]["residual"] is None and got[0]["flagged"] is False
-
-
-# ------------------------------------------------- rolling_active_users
-
-def _ev(spark, rows):
-    return spark.createDataFrame(rows, "u string, ts timestamp")
-
-
-def test_rolling_hand_case(spark):
-    rows = [("u1", _ts("2024-01-01T05:00")),
-            ("u2", _ts("2024-01-01T06:00")),
-            ("u1", _ts("2024-01-03T05:00")),
-            ("u3", _ts("2024-01-03T06:00"))]
-    got = {r["bucket"]: r for r in rolling_active_users(
-        _ev(spark, rows), "u", "ts", window_days=3).collect()}
-    assert set(got) == {"2024-01-01", "2024-01-03"}
-    d1 = got["2024-01-01"]
-    assert (d1["n_active_day"], d1["n_active_window"]) == (2, 2)
-    d3 = got["2024-01-03"]
-    # trailing 3 days of Jan 3 = Jan 1..3: users u1, u2, u3
-    assert (d3["n_active_day"], d3["n_active_window"]) == (2, 3)
-
-
-def test_rolling_window_expires(spark):
-    rows = [("u1", _ts("2024-01-01T00:00")),
-            ("u2", _ts("2024-01-09T00:00"))]
-    got = {r["bucket"]: r["n_active_window"]
-           for r in rolling_active_users(
-               _ev(spark, rows), "u", "ts", window_days=7).collect()}
-    assert got["2024-01-09"] == 1               # u1 aged out
-
-
-def test_rolling_dau_equals_window1(spark):
-    rows = [("u%d" % (i % 5), _ts("2024-01-01T00:00")
-             + datetime.timedelta(days=i % 4, hours=i)) for i in range(40)]
-    df = _ev(spark, rows)
-    got = rolling_active_users(df, "u", "ts", window_days=1).collect()
-    assert all(r["n_active_day"] == r["n_active_window"] for r in got)
-    with pytest.raises(ValueError):
-        rolling_active_users(df, "u", "ts", window_days=0)

@@ -286,45 +286,6 @@ def test_rolling_psi_flags_distribution_shift(spark):
         rolling_psi(df, "ts", "v", 0.0, 100.0, window_days=0)
 
 
-# -------------------------------------------------- concurrency profile
-
-def test_concurrency_sweep_hand_case(spark):
-    import datetime as dt
-    from schema_validata_spark.operators.sequence import \
-        concurrency_profile
-    t0 = dt.datetime(2024, 7, 1, 10, 0)
-    m = dt.timedelta(minutes=1)
-    rows = [Row(u=1, ts=t0), Row(u=1, ts=t0 + 5 * m),     # session A 0-5
-            Row(u=2, ts=t0 + 2 * m), Row(u=2, ts=t0 + 8 * m),  # B 2-8
-            Row(u=3, ts=t0 + 6 * m)]                      # C point 6-6
-    df = spark.createDataFrame(rows, "u int, ts timestamp")
-    out = concurrency_profile(df, "u", "ts", gap_minutes=30).collect()
-    assert len(out) == 1
-    # overlap timeline: A+B overlap 2-5 (peak 2); C starts at 6 while
-    # only B is open -> still 2
-    assert out[0]["max_concurrency"] == 2
-    assert out[0]["n_boundaries"] == 6
-
-
-def test_concurrency_end_exclusive_tie(spark):
-    import datetime as dt
-    from schema_validata_spark.operators.sequence import \
-        concurrency_profile
-    t0 = dt.datetime(2024, 7, 2, 9, 0)
-    h = dt.timedelta(hours=2)
-    # user 1's only session ends exactly when user 2's starts (same ts
-    # instant): end-exclusive means peak 1, not 2
-    rows = [Row(u=1, ts=t0), Row(u=2, ts=t0 + 0 * h)]
-    df = spark.createDataFrame(rows, "u int, ts timestamp")
-    out = concurrency_profile(df, "u", "ts", gap_minutes=30).collect()
-    # both sessions are instantaneous at the same ts: -1 sorts before
-    # +1, so the running sum never exceeds... both pairs interleave;
-    # the documented rule keeps the peak at the true overlap (here the
-    # two point-sessions coexist at one instant only under inclusive
-    # semantics; exclusive keeps it <= 1 + 1 with ends first)
-    assert out[0]["max_concurrency"] <= 1
-
-
 # ------------------------------------------------------ vocab coverage
 
 def test_vocab_coverage_curve(spark):
@@ -511,28 +472,6 @@ def test_label_entropy_per_key_hand_case(spark):
     assert out["bot"]["entropy"] == pytest.approx(0.0)
     assert out["bot"]["n_labels"] == 1
     assert out["human"]["entropy"] == pytest.approx(2.0)   # 4 uniform
-
-
-# ----------------------------------------------------- gap histogram
-
-def test_gap_histogram_bands(spark):
-    import datetime as dt
-    from schema_validata_spark.operators.sequence import gap_histogram
-    t0 = dt.datetime(2024, 8, 1)
-    # gaps: 0.5s (band 0), 3s (band 1), 100s (band 6)
-    rows = [Row(u=1, ts=t0),
-            Row(u=1, ts=t0 + dt.timedelta(seconds=0.5)),
-            Row(u=1, ts=t0 + dt.timedelta(seconds=3.5)),
-            Row(u=1, ts=t0 + dt.timedelta(seconds=103.5))]
-    df = spark.createDataFrame(rows, "u int, ts timestamp")
-    out = {r["band"]: r for r in
-           gap_histogram(df, "u", "ts").collect()}
-    assert set(out) == {0, 1, 6}
-    assert out[0]["n"] == 1 and out[0]["lo_s"] == 0
-    assert out[1]["lo_s"] == 2 and out[1]["hi_s"] == 4
-    assert out[6]["lo_s"] == 64 and out[6]["n"] == 1
-    assert sum(r["share"] for r in out.values()) \
-        == pytest.approx(1.0, abs=1e-5)
 
 
 # ----------------------------------------------------- lang confusion

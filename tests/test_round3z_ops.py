@@ -1,51 +1,10 @@
-"""Round-3z: per-key lifecycle compaction, NULL-island runs."""
+"""Round-3z: NULL-island runs."""
 
 from __future__ import annotations
 
-import datetime
-
 import pytest
-from pyspark.sql import functions as F
 
-from schema_validata_spark.operators.sequence import (key_lifecycle,
-                                                      null_runs)
-
-
-def _ts(s):
-    return datetime.datetime.fromisoformat(s)
-
-
-# -------------------------------------------------------- key_lifecycle
-
-def _ev(spark, rows):
-    return spark.createDataFrame(rows, "u string, ts timestamp")
-
-
-def test_lifecycle_hand_case(spark):
-    rows = [("u1", _ts("2024-01-01T10:00")),
-            ("u1", _ts("2024-01-01T12:00")),
-            ("u1", _ts("2024-01-05T09:00")),
-            ("u2", _ts("2024-02-01T00:00"))]      # corpus max day
-    got = {r["u"]: r for r in key_lifecycle(
-        _ev(spark, rows), "u", "ts", churn_days=10).collect()}
-    u1 = got["u1"]
-    assert u1["first_ts"] == _ts("2024-01-01T10:00")
-    assert u1["last_ts"] == _ts("2024-01-05T09:00")
-    assert u1["lifespan_days"] == 4
-    assert (u1["n_events"], u1["n_active_days"]) == (3, 2)
-    assert u1["days_inactive"] == 27 and u1["churned"] is True
-    u2 = got["u2"]
-    assert u2["days_inactive"] == 0 and u2["churned"] is False
-    assert u2["lifespan_days"] == 0
-
-
-def test_lifecycle_nulls_and_validation(spark):
-    rows = [(None, _ts("2024-01-01T00:00")), ("u1", None),
-            ("u1", _ts("2024-01-01T00:00"))]
-    got = key_lifecycle(_ev(spark, rows), "u", "ts").collect()
-    assert len(got) == 1 and got[0]["n_events"] == 1
-    with pytest.raises(ValueError):
-        key_lifecycle(_ev(spark, rows), "u", "ts", churn_days=-1)
+from schema_validata_spark.operators.sequence import null_runs
 
 
 # ------------------------------------------------------------ null_runs

@@ -1,8 +1,10 @@
 """Round-5: the production job's FILE MODE — the reference user's CLI
 shape (`--dataset-file csv --data-dict template.xlsx`) routed through
-validate_files, writing the reference-shaped JSON artifact and exiting
-1 on violations / 0 clean. Runs the job's main() in-process (the
-fresh-JVM --py-files drive lives in test_spark_submit_job.py)."""
+validate_files, writing the reference-shaped JSON artifact — and the
+job's exit-code contract in both modes: 0 = passed, 2 = usage error
+(reported before any Spark job runs), 3 = validation failed. Runs the
+job's main() in-process (the fresh-JVM --py-files drive lives in
+test_spark_submit_job.py)."""
 
 import csv
 import json
@@ -48,7 +50,7 @@ def test_file_mode_fail_and_artifact(spark, tmp_path):
                  "--schema-mapping",
                  '[{"dataset": "movies", "data_dict": '
                  '"MOVIES_SCHEMA"}]'])
-    assert code == 1
+    assert code == 3
     arts = os.listdir(out)
     assert len(arts) == 1 and arts[0].startswith("movies_(")
     with open(os.path.join(out, arts[0])) as f:
@@ -72,12 +74,12 @@ def test_file_mode_clean_passes_default_mapping(spark, tmp_path):
 def test_file_mode_requires_data_dict(spark, tmp_path):
     code = _run(["--dataset-file", "x.csv",
                  "--out", str(tmp_path / "o")])
-    assert code not in (0, None)
+    assert code == 2
 
 
 def test_table_mode_still_requires_transcripts(spark, tmp_path):
     code = _run(["--out", str(tmp_path / "o")])
-    assert code not in (0, None)
+    assert code == 2
 
 
 def _write_movie_dictionary(path):
@@ -116,7 +118,7 @@ def test_file_mode_workbook_default_mapping_uses_first_sheet(spark,
     out = str(tmp_path / "out")
     code = _run(["--dataset-file", ds, "--data-dict", dd,
                  "--out", out, "--name", "catalog"])
-    assert code == 1                    # release_year 2300 > range_max
+    assert code == 3                    # release_year 2300 > range_max
     arts = os.listdir(out)
     with open(os.path.join(out, arts[0])) as f:
         rep = json.load(f)
@@ -138,3 +140,52 @@ def test_csv_record_qty_skips_blank_lines_like_pandas(tmp_path):
     assert meta["record_qty"] == "5"
     assert int(meta["record_qty"]) == len(pd.read_csv(path))
     assert meta["column_qty"] == "3"
+
+
+def _jobs(spark) -> set:
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup())
+
+
+def test_file_mode_violating_csv_exits_3(spark, tmp_path):
+    """A failed validation exits 3 in file mode, as in table mode."""
+    dd = str(tmp_path / "dictionary.xlsx")
+    _write_movie_dictionary(dd)
+    ds = str(tmp_path / "movies.csv")
+    with open(ds, "w", newline="") as f:
+        csv.writer(f).writerows([["id", "title", "release_year"],
+                                 [1, "Heat", 1995], [2, "Late", 2300]])
+    code = _run(["--dataset-file", ds, "--data-dict", dd,
+                 "--out", str(tmp_path / "out"), "--name", "movies"])
+    assert code == 3
+
+
+def test_mask_cols_without_partition_col_exits_2_before_spark(spark,
+                                                              tmp_path):
+    """A flag combination that is wrong on its face is a usage error,
+    reported before the table is read or validated."""
+    tdir = str(tmp_path / "t")
+    spark.range(3).write.parquet(tdir)
+    before = _jobs(spark)
+    code = _run(["--transcripts", tdir, "--out", str(tmp_path / "out"),
+                 "--mask-cols", "role"])
+    assert code == 2
+    assert _jobs(spark) - before == set()
+    assert not os.path.exists(tmp_path / "out")
+
+
+def test_rules_xlsx_without_dictionary_sheet_exits_2_before_spark(
+        spark, tmp_path):
+    """The dictionary loads before the table is read: a workbook with no
+    qualifying sheet is a usage error that costs no Spark job."""
+    from schema_validata_spark.sources.xlsx import write_xlsx
+    dd = str(tmp_path / "notes.xlsx")
+    write_xlsx(dd, {"notes": [["a", "b"], [1, 2]]})
+    tdir = str(tmp_path / "t")
+    spark.range(3).write.parquet(tdir)
+    before = _jobs(spark)
+    code = _run(["--transcripts", tdir, "--out", str(tmp_path / "out"),
+                 "--rules-xlsx", dd])
+    assert code == 2
+    assert _jobs(spark) - before == set()

@@ -2,17 +2,13 @@
 
 import datetime as dt
 
-from pyspark.sql import functions as F
-
-from schema_validata_spark.operators.sequence import (consecutive_repeats,
-                                                      session_stats,
-                                                      sessionize)
+from schema_validata_spark.operators.sequence import consecutive_repeats
 
 
 def _events(spark):
     base = dt.datetime(2024, 1, 1, 9, 0)
     rows = [
-        # user A: burst, 40-min gap, burst → 2 sessions; repeat in 2nd
+        # user A: burst, 40-min gap, burst; repeat in the 2nd burst
         (1, "a", "click", base),
         (2, "a", "view", base + dt.timedelta(minutes=5)),
         (3, "a", "click", base + dt.timedelta(minutes=50)),
@@ -31,16 +27,6 @@ def test_consecutive_repeats(spark):
     assert [(r["event_id"], r["prev_value"]) for r in got] == [(4, "click")]
 
 
-def test_sessionize_and_stats(spark):
-    df = _events(spark)
-    s = {r["event_id"]: r["session_idx"]
-         for r in sessionize(df, "user_id", "ts", 30.0).collect()}
-    assert s[1] == s[2] == 1 and s[3] == s[4] == 2 and s[5] == 1
-    stats = {r["user_id"]: (r["n_sessions"], r["n_events"])
-             for r in session_stats(df, "user_id", "ts", 30.0).collect()}
-    assert stats["a"] == (2, 4) and stats["b"] == (1, 1)
-
-
 def test_order_regressions(spark):
     import datetime as dt
     from schema_validata_spark.operators.sequence import order_regressions
@@ -55,19 +41,6 @@ def test_order_regressions(spark):
     got = [(r["conv_id"], r["turn_idx"]) for r in
            order_regressions(df, "conv_id", ["turn_idx"], "ts").collect()]
     assert got == [("c", 3)]
-
-
-def test_sessionize_excludes_null_ts(spark):
-    import datetime as dt
-    from schema_validata_spark.operators.sequence import session_stats
-    base = dt.datetime(2024, 1, 1, 9, 0)
-    rows = [("a", base), ("a", None), ("a", None),
-            ("a", base + dt.timedelta(hours=2))]
-    df = spark.createDataFrame(rows, "user_id string, ts timestamp")
-    stats = {r["user_id"]: (r["n_sessions"], r["n_events"])
-             for r in session_stats(df, "user_id", "ts", 30.0).collect()}
-    # null-ts rows are excluded, NOT each their own session
-    assert stats["a"] == (2, 2)
 
 
 # --- turn_conformance --------------------------------------------------------
